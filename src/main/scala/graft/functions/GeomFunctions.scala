@@ -5,8 +5,15 @@ import org.apache.spark.sql.functions._
 
 /** WKT-string geometry functions re-expressing the reference's geopetl-era
   * row lambdas as pure Catalyst `Column` trees (regexp/trig over
-  * `functions._`) — codegen-able, pushdown-transparent, no UDFs, so every
-  * one of these runs inside whole-stage codegen at any scale.
+  * `functions._`) — pushdown-transparent, no UDFs. The plain column math
+  * runs inside whole-stage codegen. The per-vertex and per-ring functions
+  * (`mapVertices` and its reprojections, `lccInverse2272`'s fixed point,
+  * `ringsClosed`, `ringsMinPoints`) use `transform`, `aggregate` and
+  * `forall`, which are `CodegenFallback`: their lambda bodies are
+  * interpreted per element and get no subexpression elimination. So a
+  * lambda body reads its bound variables and never re-derives them — a
+  * value used twice is computed once into a struct (or the fold's
+  * accumulator) and read back by field.
   *
   * References (semantics only, no code reuse — the reference is Python/petl):
   *  - force2d:        databridge-etl-tools utils.py:10-26
@@ -109,13 +116,19 @@ object GeomFunctions {
     val t    = pow(rho / lit(a * bigF), lit(1.0 / n))
     val theta = atan2(x, lit(rho0) - y)
     val lon  = (theta / lit(n) + lit(lon0)) * lit(180.0 / math.Pi)
-    // iterative phi: phi = pi/2 - 2*atan(t * ((1-e sin phi)/(1+e sin phi))^(e/2))
-    var phi: Column = lit(math.Pi / 2) - lit(2.0) * atan(t)
-    for (_ <- 0 until 5) {
-      val es = lit(e) * sin(phi)
-      phi = lit(math.Pi / 2) - lit(2.0) *
-        atan(t * pow((lit(1.0) - es) / (lit(1.0) + es), lit(e / 2)))
-    }
+    // iterative phi: phi0 = pi/2 - 2*atan(t), then five steps of
+    // phi = pi/2 - 2*atan(t * ((1-e sin phi)/(1+e sin phi))^(e/2)), folded
+    // over a carried (t, phi): unrolled, each step would hold two copies
+    // of the previous one (2^5 copies of phi0 and of t's inputs)
+    val phi = aggregate(array((0 to 5).map(lit): _*),
+      struct(t.as("t"), lit(null).cast("double").as("phi")),
+      (acc, i) => {
+        val es = lit(e) * sin(acc("phi"))
+        val arg = when(i === 0, acc("t"))
+          .otherwise(acc("t") * pow((lit(1.0) - es) / (lit(1.0) + es), lit(e / 2)))
+        struct(acc("t").as("t"), (lit(math.Pi / 2) - lit(2.0) * atan(arg)).as("phi"))
+      },
+      _("phi"))
     (lon, phi * lit(180.0 / math.Pi))
   }
 
@@ -157,25 +170,28 @@ object GeomFunctions {
   /** Apply a coordinate rewrite to every "x y" vertex of a WKT value,
     * preserving ring/path structure. The body is tokenized on vertex commas
     * (each token = optional leading parens + "x y" + optional trailing
-    * parens) and a `transform` lambda rewrites the pair in place — one
+    * parens); one `transform` parses each token once into
+    * (prefix, suffix, x, y) and a second rewrites the pair in place — one
     * in-row projection, no explode, no shuffle, so whole-table
     * reprojection stays embarrassingly parallel at any scale (the
     * reference's shapely `transform` is the same per-row shape, just
-    * single-node).
+    * single-node). `<TYPE> EMPTY` passes through unchanged; a blank value,
+    * or one with any vertex lacking a numeric "x y" pair, gives null, so
+    * `f` never sees a missing coordinate.
     */
   private def mapVertices(wkt: Column)(f: (Column, Column) => Column): Column = {
+    val pair = "(-?\\d+\\.?\\d*)\\s+(-?\\d+\\.?\\d*)"
     val body = regexp_replace(wkt, "^\\s*[A-Z]+\\s+", "")
-    val toks = split(body, ",\\s*", -1)
-    val out = transform(toks, tok => {
-      val prefix = regexp_extract(tok, "^([\\s(]*)", 1)
-      val suffix = regexp_extract(tok, "([\\s)]*)$", 1)
-      val x = regexp_extract(tok, "(-?\\d+\\.?\\d*)\\s+(-?\\d+\\.?\\d*)", 1)
-        .cast("double")
-      val y = regexp_extract(tok, "(-?\\d+\\.?\\d*)\\s+(-?\\d+\\.?\\d*)", 2)
-        .cast("double")
-      concat(prefix, f(x, y), suffix)
-    })
-    concat(geomTypeOf(wkt), lit(" "), array_join(out, ", "))
+    val verts = transform(split(body, ",\\s*", -1), tok => struct(
+      regexp_extract(tok, "^([\\s(]*)", 1).as("prefix"),
+      regexp_extract(tok, "([\\s)]*)$", 1).as("suffix"),
+      regexp_extract(tok, pair, 1).try_cast("double").as("x"),
+      regexp_extract(tok, pair, 2).try_cast("double").as("y")))
+    val out = transform(verts, v => concat(v("prefix"), f(v("x"), v("y")), v("suffix")))
+    // a comma-separated token holds `pair` iff it holds \d\.?\s+-?\d
+    when(wkt.rlike("^\\s*[A-Z]+(\\s+(ZM|Z|M))?\\s+EMPTY\\s*$"), wkt)
+      .when(!wkt.rlike("(^|,)(?![^,]*\\d\\.?\\s+-?\\d)"),
+        concat(geomTypeOf(wkt), lit(" "), array_join(out, ", ")))
   }
 
   /** EPSG:2272 WKT of any shape class → 4326 WKT, every vertex through the

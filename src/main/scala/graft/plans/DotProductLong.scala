@@ -14,8 +14,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * this compiles into the whole-stage-codegen loop). Long addition is
   * exact and order-independent, so equivalence with the HOF left fold
   * holds for EQUAL-LENGTH, NON-NULL-ELEMENT arrays (the SQ8 call sites:
-  * uniform-length quantized codes); overflow wraps identically (Java long
-  * arithmetic in both paths).
+  * uniform-length quantized codes) whose products and sums fit a long.
+  * On overflow the two DIVERGE: this kernel wraps (Java long arithmetic),
+  * while the HOF's `*` and `+` throw `ARITHMETIC_OVERFLOW` under ANSI
+  * mode (Spark's default) and wrap only with ANSI off. SQ8 codes are
+  * bytes, so a 64-element product sum stays far below the long range.
   *
   * PRECONDITION (same caveat as [[DotProduct]]): on unequal lengths this
   * truncates to the shorter array, where `zip_with` null-pads and the HOF

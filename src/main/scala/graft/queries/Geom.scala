@@ -10,7 +10,7 @@ import graft.functions.GeomFunctions._
   * The testdata has no geometry column, so each query synthesizes WKT
   * deterministically from integer keys — integer coordinates only, so the
   * Spark and DuckDB string renderings are identical and the oracle compare
-  * is exact. All geometry logic is `GeomFunctions` column math (codegen).
+  * is exact. All geometry logic is `GeomFunctions` column math (no UDFs).
   */
 object Geom {
 

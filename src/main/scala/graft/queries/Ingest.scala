@@ -1212,15 +1212,16 @@ object Ingest {
       srcs: Seq[String], eq: Boolean): Unit =
     for (src <- srcs) {
       val ckpt = java.nio.file.Files.createTempDirectory("graft_upsert_ckpt")
-      val w = s.readStream.table(src)
-        .writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .option("graft.upsert.key", "o_orderkey")
-      val q = (if (eq) w.option("graft.upsert.eq", "true") else w)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .toTable(dst)
-      q.awaitTermination()
-      org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile): Unit
+      try {
+        val w = s.readStream.table(src)
+          .writeStream
+          .option("checkpointLocation", ckpt.toString)
+          .option("graft.upsert.key", "o_orderkey")
+        (if (eq) w.option("graft.upsert.eq", "true") else w)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .toTable(dst)
+          .awaitTermination()
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile): Unit
     }
 
   def streamTableUpsert(s: SparkSession, d: String): DataFrame = {

@@ -55,19 +55,27 @@ class DotProductSpec extends AnyFunSuite {
 
   // ---- DotProductLong (the SQ8 integer twin; ADVICE r13) -------------------
 
-  test("DotProductLong equals the sequential HOF fold, incl. overflow wrap") {
+  test("DotProductLong equals the HOF fold in range, wraps where the ANSI HOF throws") {
     val rnd = new scala.util.Random(13)
     val rows = (1 to 200).map { i =>
       (i.toLong, Seq.fill(64)(rnd.nextInt(255).toLong - 127),
         Seq.fill(64)(rnd.nextInt(255).toLong - 127))
-    } :+ ((0L, Seq(Long.MaxValue, 3L), Seq(2L, 5L))) // 2·MaxValue wraps
+    } :+ ((0L, Seq(Long.MaxValue, 3L), Seq(2L, 5L))) // 2·MaxValue overflows
     val df = rows.toDF("id", "a", "b")
     val hof = aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
       lit(0L), (acc, el) => acc + el)
-    val out = df.select(
-      graft.plans.DotProductLong.dot(col("a"), col("b")).as("native"),
-      hof.as("hof"))
-    assert(out.filter(col("native") =!= col("hof")).isEmpty)
+    val native = graft.plans.DotProductLong.dot(col("a"), col("b"))
+    val inRange = df.filter(col("id") =!= 0)
+    assert(inRange.select(native.as("native"), hof.as("hof"))
+      .filter(col("native") =!= col("hof")).isEmpty)
+    // the overflow row: the kernel wraps as Java long arithmetic does ...
+    val overflow = df.filter(col("id") === 0)
+    assert(overflow.select(native).as[Long].head() == Long.MaxValue * 2L + 15L)
+    // ... while the HOF's ANSI arithmetic refuses it
+    assert(spark.conf.get("spark.sql.ansi.enabled").toBoolean)
+    val err = intercept[Exception](overflow.select(hof).collect())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("ARITHMETIC_OVERFLOW")), err)
   }
 
   test("DotProductLong participates in whole-stage codegen") {

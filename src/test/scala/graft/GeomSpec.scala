@@ -190,6 +190,73 @@ class GeomSpec extends AnyFunSuite {
     assert(m.matches("LINESTRING \\(-?\\d+\\.\\d -?\\d+\\.\\d, -?\\d+\\.\\d -?\\d+\\.\\d\\)"), m)
   }
 
+  test("vertex-wise reprojection: pinned output strings, both projections") {
+    // literal strings: a rewrite of the fixed point or the tokenizer must
+    // reproduce them bit for bit. A dimension label or a missing space
+    // before '(' costs the opening paren (the first token then starts with
+    // a letter, so its paren prefix is empty) — pinned as is.
+    val golden = Seq(
+      "POINT (2694444.25 235902.5)" ->
+        ("POINT (-75.160296 39.951686)", "POINT (-8366806.1 4858925.1)"),
+      "POINT Z (2694444 235902 12.5)" ->
+        ("POINT -75.160297 39.951685)", "POINT -8366806.2 4858924.9)"),
+      "POINT(2690000.00 250000.00)" ->
+        ("POINT -75.174675 39.990726)", "POINT -8368406.7 4864595.9)"),
+      "POLYGON ((2694444 235902, 2704444 235902, 2704444 245902, 2694444 235902))" ->
+        ("POLYGON ((-75.160297 39.951685, -75.124644 39.950875, -75.123584 39.978314, -75.160297 39.951685))",
+         "POLYGON ((-8366806.2 4858924.9, -8362837.3 4858807.3, -8362719.3 4862792.6, -8366806.2 4858924.9))"),
+      "POLYGON Z ((2694444 235902 1, 2704444 235902 2, 2704444 245902 3, 2694444 235902 1))" ->
+        ("POLYGON -75.160297 39.951685, -75.124644 39.950875, -75.123584 39.978314, -75.160297 39.951685))",
+         "POLYGON -8366806.2 4858924.9, -8362837.3 4858807.3, -8362719.3 4862792.6, -8366806.2 4858924.9))"),
+      "MULTIPOLYGON (((2694444 235902, 2704444 235902, 2704444 245902, 2694444 235902)), " +
+        "((2660000.5 220000.75, 2670000 220000, 2670000 230000, 2660000.5 220000.75)))" ->
+        ("MULTIPOLYGON (((-75.160297 39.951685, -75.124644 39.950875, -75.123584 39.978314, -75.160297 39.951685)), " +
+           "((-75.284687 39.910758, -75.249056 39.909984, -75.248046 39.937424, -75.284687 39.910758)))",
+         "MULTIPOLYGON (((-8366806.2 4858924.9, -8362837.3 4858807.3, -8362719.3 4862792.6, -8366806.2 4858924.9)), " +
+           "((-8380653.2 4852983.5, -8376686.8 4852871.2, -8376574.4 4856854.2, -8380653.2 4852983.5)))"),
+      "LINESTRING M (2694444 235902 1, 2704444 245902 2)" ->
+        ("LINESTRING -75.160297 39.951685, -75.123584 39.978314)",
+         "LINESTRING -8366806.2 4858924.9, -8362719.3 4862792.6)"),
+      "POINT (-2694444.5 -235902.25)" ->
+        ("POINT (-93.895564 37.513016)", "POINT (-10452406.6 4510859.1)"))
+    val got = golden.map(_._1).toDF("w")
+      .select(col("w"), reprojectVerts2272(col("w")), reprojectVerts2272Merc(col("w")))
+      .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+    for ((w, want) <- golden) assert(got(w) == want, w)
+  }
+
+  test("vertex-wise reprojection: EMPTY passes through, blank/NULL/non-numeric give null") {
+    val empty = Seq("POINT EMPTY", "POLYGON EMPTY", "POINT Z EMPTY")
+    val bad = Seq(Some(""), Some("  "), None, Some("POINT (NaN NaN)"),
+      Some("POLYGON ((2694444 235902, NaN NaN, 2704444 245902, 2694444 235902))"),
+      Some("LINESTRING (2694444 235902, )"))
+    val good = "POINT (2694444 235902)"
+    // one job over every row: a bad row must neither abort it nor leak a
+    // made-up coordinate (format_string renders null as "null"; r6's floor
+    // turns NaN into 0). fixQnan turns a 2-D QNAN point into POINT (NaN NaN).
+    val in = (empty.map(Some(_)) ++ bad :+ Some(good)).toDF("w")
+      .withColumn("qnan", lit("POINT (1.#QNAN000 1.#QNAN000)"))
+    val rows = graft.operators.EtlOps.fixQnan(in, "qnan")
+      .select(col("w"), reprojectVerts2272(col("w")), reprojectVerts2272Merc(col("w")),
+        reprojectVerts2272(col("qnan")), reprojectVerts2272Merc(col("qnan")))
+      .collect()
+    val byIn = rows.map(r =>
+      Option(r.getString(0)) -> (Option(r.getString(1)), Option(r.getString(2)))).toMap
+    for (w <- empty) assert(byIn(Some(w)) == (Some(w), Some(w)), w)
+    for (w <- bad) assert(byIn(w) == (None, None), s"$w")
+    assert(rows.forall(r => r.isNullAt(3) && r.isNullAt(4)))
+    assert(byIn(Some(good))._1.contains("POINT (-75.160297 39.951685)"))
+  }
+
+  test("vertex-wise reprojection: expression tree stays linear in the fixed-point steps") {
+    // an unrolled fixed point holds 2^5 copies of phi0 (~7,900 nodes for the pair)
+    val plan = Seq("POINT (1 2)").toDF("c")
+      .select(reprojectVerts2272(col("c")), reprojectVerts2272Merc(col("c")))
+      .queryExecution.analyzed
+    val nodes = plan.expressions.map(_.collect { case e => e }.size).sum
+    assert(nodes < 1000, s"$nodes expression nodes")
+  }
+
   test("grid join: zone counts equal a brute-force containment recomputation") {
     val got = graft.queries.Geom.queries("geom_grid_join")(spark, TestSpark.sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
