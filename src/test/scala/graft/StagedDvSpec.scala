@@ -16,7 +16,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - later rewrites (COW UPDATE, compaction) apply the vectors — never
   *     resurrect — and compaction drops the vectors and the root flag;
   *   - `VERSION AS OF` resolves the vectors alive at each version;
-  *   - readTable (the merge/upsert read) applies vectors.
+  *   - readTable (the merge/upsert read) applies vectors;
+  *   - the DV body is `file\tstart\tend` lines sorted by file, then
+  *     start, and a statement writes ONE vector per touched directory
+  *     however many files and scan splits its matches span.
   */
 class StagedDvSpec extends AnyFunSuite {
   private lazy val spark = { graft.sources.v2.StagedParquet.ensureCatalog(TestSpark.spark); TestSpark.spark }
@@ -199,6 +202,70 @@ class StagedDvSpec extends AnyFunSuite {
       .count() == 0L)
     assert(spark.table(t).filter($"id" === 100L).select($"v").as[Double]
       .head() == 100.0)
+  }
+
+  private def dvBodies(dir: String): Seq[String] =
+    files(dir, StagedParquet.DvPrefix).keys.toSeq.sorted.map { n =>
+      val src = scala.io.Source.fromFile(new java.io.File(dir, n), "UTF-8")
+      try src.mkString finally src.close()
+    }
+
+  test("the DV body: file<TAB>start<TAB>end lines, sorted by file then start") {
+    import spark.implicits._
+    val t = tbl("m8")
+    // two single-file writes: a row's position in its file is id - base
+    (0L until 100L).map(i => (i, i * 1.0)).toDF("id", "v").coalesce(1)
+      .writeTo(t).tableProperty("delete.mode", "merge-on-read").createOrReplace()
+    val dir = StagedParquet.tableDir(spark, t)
+    val lo = files(dir).keys.toSeq match { case Seq(n) => n }
+    (100L until 200L).map(i => (i, i * 1.0)).toDF("id", "v").coalesce(1)
+      .writeTo(t).append()
+    val hi = (files(dir).keySet - lo).toSeq match { case Seq(n) => n }
+    StagedParquet.deleteWhere(spark, t, Seq(org.apache.spark.sql.sources.In("id",
+      Array(199L, 3L, 150L, 4L, 10L, 5L, 151L).map(Long.box)))): Unit
+    val lines = Map(lo -> Seq(s"$lo\t3\t6", s"$lo\t10\t11"),
+      hi -> Seq(s"$hi\t50\t52", s"$hi\t99\t100"))
+    val expected = Seq(lo, hi).sorted.flatMap(lines).mkString("\n")
+    assert(dvBodies(dir) == Seq(expected))
+    assert(spark.table(t).count() == 193L)
+  }
+
+  test("matches spanning several files and scan splits still write one DV per directory") {
+    import spark.implicits._
+    val t = tbl("m9")
+    spark.conf.set("graft.staged.rowgroup.bytes", "4096")
+    try {
+      (0L until 12000L).map(i => (i, i % 2, s"name-$i")).toDF("id", "g", "name")
+        .repartitionByRange(3, $"id")
+        .writeTo(t).tableProperty("delete.mode", "merge-on-read")
+        .partitionedBy(col("g")).option("graft.write.distribute", "none")
+        .createOrReplace()
+    } finally spark.conf.unset("graft.staged.rowgroup.bytes")
+    val dir = StagedParquet.tableDir(spark, t)
+    assert(files(s"$dir/g=0").size == 3 && files(s"$dir/g=1").size == 3)
+    // a contiguous id band plus scattered ids: every file of both dirs
+    val targets = ((3000L until 3300L) ++ (0L until 12000L by 997L)).distinct
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "8192")
+    spark.conf.set("spark.sql.files.openCostInBytes", "0")
+    val rep = try StagedParquet.deleteWhere(spark, t, Seq(
+        org.apache.spark.sql.sources.In("id", targets.map(Long.box).toArray)))
+      finally {
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+      }
+    assert(rep.map(r => (r._1, r._2, r._3)) == Seq(("g=0", "dv", 3L), ("g=1", "dv", 3L)),
+      s"one vector per directory, every file matched: $rep")
+    for (g <- 0 to 1) {
+      val bodies = dvBodies(s"$dir/g=$g")
+      assert(bodies.length == 1, s"g=$g holds ${bodies.length} vectors")
+      val runs = bodies.head.split("\n").toSeq.map(_.split("\t"))
+        .map(a => (a(0), a(1).toLong, a(2).toLong))
+      assert(runs == runs.sortBy(r => (r._1, r._2)), "lines sorted by file, then start")
+      assert(runs.forall(r => r._2 < r._3))
+      assert(runs.map(r => r._3 - r._2).sum == targets.count(_ % 2 == g).toLong)
+    }
+    assert(spark.table(t).count() == 12000L - targets.length)
+    assert(spark.table(t).filter($"id".isin(targets.map(Long.box): _*)).count() == 0L)
   }
 
   test("readTable (the merge/upsert read) applies vectors; row-group splits honor rowStart") {

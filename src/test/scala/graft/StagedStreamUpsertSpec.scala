@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Streaming UPSERT into staged tables (the `graft.upsert.key`
   * writeStream option — [[graft.sources.v2.StagedParquet]]
@@ -18,7 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *     nothing (txn short-circuit);
   *   - identity-partitioned upsert keys are rejected at plan time;
   *   - compaction settles the accumulated vectors and the result stays
-  *     latest-per-key.
+  *     latest-per-key;
+  *   - a narrow epoch's keys come from its write tasks (no job re-reads
+  *     the epoch's files), duplicates across tasks and null keys
+  *     included, and its MOR find-positions plan shuffles once.
   */
 class StagedStreamUpsertSpec extends AnyFunSuite {
   private lazy val spark = { graft.sources.v2.StagedParquet.ensureCatalog(TestSpark.spark); TestSpark.spark }
@@ -213,6 +217,107 @@ class StagedStreamUpsertSpec extends AnyFunSuite {
     assert(old.filter($"v" === -9.0).count() == 0L,
       "epoch rows must NOT appear at a version below their own add")
     assert(old.select(sum($"v")).as[Double].head() == (0L until 1000L).map(_.toDouble).sum)
+  }
+
+  test("a narrow MOR epoch reads none of its own files; find-positions shuffles once") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val src = tbl("src7")
+    val dst = tbl("dst7")
+    val dstDir = StagedParquet.tableDir(spark, dst)
+    def snap = (0L until 2000L).map(i => (i, i * 1.0)).toDF("id", "v")
+    snap.filter(lit(false)).writeTo(dst)
+      .tableProperty("delete.mode", "merge-on-read")
+      .partitionedBy(org.apache.spark.sql.functions.bucket(4, col("id")))
+      .createOrReplace()
+    val ckpt = java.nio.file.Files.createTempDirectory("ups_ckpt7").toString
+    def drain(): Unit = {
+      val q = spark.readStream.table(src)
+        .writeStream.option("checkpointLocation", ckpt)
+        .option("graft.upsert.key", "id")
+        .trigger(Trigger.AvailableNow()).toTable(dst)
+      q.awaitTermination()
+    }
+    snap.writeTo(src).createOrReplace()
+    drain()
+    val before = dataFiles(dstDir).keySet
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = plans.add(qe.executedPlan): Unit
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case o => o.children.flatMap(nodes)
+    })
+    // the find-positions plan: the DV writer over the (dir, file, pos) rows
+    def writers: Seq[MapPartitionsExec] = plans.asScala.toSeq.flatMap(nodes)
+      .collect { case m: MapPartitionsExec
+        if nodes(m).exists(_.output.exists(_.name == "__pos")) => m }
+    spark.listenerManager.register(listener)
+    try {
+      snap.filter($"id" < 50L).withColumn("v", $"v" * 10).writeTo(src).append()
+      drain()
+      // execution events arrive asynchronously, in order: once the
+      // find-positions plan is seen, every earlier plan is too
+      val deadline = System.currentTimeMillis() + 30000L
+      while (writers.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
+    } finally spark.listenerManager.unregister(listener)
+    val epochFiles = dataFiles(dstDir).keySet -- before
+    assert(epochFiles.nonEmpty)
+    val readsOwn = plans.asScala.toSeq.flatMap(nodes).collect {
+      case sc: FileSourceScanExec => sc.relation.location.inputFiles.toSeq
+        .map(p => new org.apache.hadoop.fs.Path(p).getName)
+    }.flatten.filter(epochFiles)
+    assert(readsOwn.isEmpty, s"the epoch's commit re-read its own files: $readsOwn")
+    assert(writers.length == 1, s"expected one find-positions plan, got ${writers.length}")
+    val shuffles = nodes(writers.head).count(_.isInstanceOf[ShuffleExchangeLike])
+    assert(shuffles == 1, s"find-positions plan has $shuffles shuffles:\n${writers.head}")
+    assert(spark.table(dst).count() == 2000L)
+    assert(spark.table(dst).filter($"id" < 50L && $"v" =!= $"id" * 10.0).count() == 0L)
+    assert(new java.io.File(dstDir).listFiles.filter(_.isDirectory)
+      .flatMap(_.listFiles).count(_.getName.startsWith(StagedParquet.DvPrefix)) > 0,
+      "the narrow epoch must delete by deletion vectors")
+  }
+
+  test("narrow-epoch keys: duplicates across write tasks and null keys") {
+    import spark.implicits._
+    val src = tbl("src8")
+    val dst = tbl("dst8")
+    def rows(xs: Seq[(Option[Long], String)]) = xs.toDF("id", "s")
+    rows(Nil).writeTo(dst)
+      .tableProperty("delete.mode", "merge-on-read").createOrReplace()
+    val ckpt = java.nio.file.Files.createTempDirectory("ups_ckpt8").toString
+    def drain(): Unit = {
+      val q = spark.readStream.table(src)
+        .writeStream.option("checkpointLocation", ckpt)
+        .option("graft.upsert.key", "id")
+        .trigger(Trigger.AvailableNow()).toTable(dst)
+      q.awaitTermination()
+    }
+    rows((0L until 1000L).map(i => (Some(i), s"r$i"))).writeTo(src).createOrReplace()
+    drain()
+    val dstDir = StagedParquet.tableDir(spark, dst)
+    val before = dataFiles(dstDir).keySet
+    val wide0 = StagedParquet.upsertWideEpochs.get()
+    // two source files, so two write tasks: key 5 and a null key in both
+    rows(Seq((Some(5L), "a"), (Some(6L), "b"), (None, "n1")))
+      .union(rows(Seq((Some(5L), "c"), (None, "n2"), (Some(7L), "d"))))
+      .writeTo(src).append()
+    drain()
+    assert((dataFiles(dstDir).keySet -- before).size >= 2,
+      "the wave must reach the sink through several write tasks")
+    assert(StagedParquet.upsertWideEpochs.get() == wide0, "a 3-key epoch is narrow")
+    val got = spark.table(dst).as[(Option[Long], String)].collect()
+    assert(got.length == 1003)
+    assert(got.filter(r => r._1.forall(Set(5L, 6L, 7L))).map(_._2).sorted.toSeq ==
+      Seq("a", "b", "c", "d", "n1", "n2"))
+    assert(got.count(_._2.startsWith("r")) == 997)
   }
 
   test("identity-partitioned upsert keys are rejected at plan time") {
