@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * Execution order is a deterministic name-hash interleave, NOT
   * alphabetical: the r6 driver run showed a single multi-second VM stall
   * inflating an entire alphabetically contiguous etl_* stretch 6-21×
-  * (plans identical per PlanDump). Hash order scatters each family across
+  * (executed plans identical). Hash order scatters each family across
   * the whole run, so a stall window hits a random mix of families and
   * round-over-round per-family comparisons stay meaningful. The JSON
   * output is still sorted by name.

@@ -16,41 +16,40 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      GraftExtensions.dotBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot_long"),
-      new ExpressionInfo(classOf[DotProductLong].getName, "graft_dot_long"),
-      GraftExtensions.dotLongBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_distinct_bitmap"),
-      new ExpressionInfo(classOf[BitmapDistinct].getName, "graft_distinct_bitmap"),
-      BitmapDistinct.builder))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bitmap_build"),
-      new ExpressionInfo(classOf[BitmapBuild].getName, "graft_bitmap_build"),
-      BitmapBuild.builder))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bitmap_test"),
-      new ExpressionInfo(classOf[BitmapTest].getName, "graft_bitmap_test"),
-      BitmapTest.builder))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_freq_sketch"),
-      new ExpressionInfo(classOf[MisraGries].getName, "graft_freq_sketch"),
-      MisraGries.builder))
+    GraftExtensions.functions.foreach { case (name, cls, builder) =>
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
     ext.injectPlannerStrategy(_ => TopKStrategy)
     ext.injectOptimizerRule(_ => WindowTopKRewrite)
   }
 }
 
 object GraftExtensions {
-  private[graft] val dotBuilder: Seq[Expression] => Expression =
-    children => DotProduct(children(0), children(1))
+  /** Every SQL function graft ships, as (name, expression class, builder)
+    * — the one table both registration paths read.
+    */
+  private[graft] val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", classOf[DotProduct], binary("graft_dot")(DotProduct(_, _))),
+    ("graft_dot_long", classOf[DotProductLong],
+      binary("graft_dot_long")(DotProductLong(_, _))),
+    ("graft_distinct_bitmap", classOf[BitmapDistinct], BitmapDistinct.builder),
+    ("graft_bitmap_build", classOf[BitmapBuild], BitmapBuild.builder),
+    ("graft_bitmap_test", classOf[BitmapTest], BitmapTest.builder),
+    ("graft_freq_sketch", classOf[MisraGries], MisraGries.builder),
+    ("graft_array_sub", classOf[ArraySub], binary("graft_array_sub")(ArraySub(_, _))),
+    ("graft_array_scale", classOf[ArrayScale],
+      binary("graft_array_scale")(ArrayScale(_, _))),
+    ("graft_array_quantize_sq8", classOf[ArrayQuantizeSq8],
+      binary("graft_array_quantize_sq8")(ArrayQuantizeSq8(_, _))),
+    ("graft_zorder", classOf[ZOrder], binary("graft_zorder")(ZOrder(_, _))))
 
-  private[graft] val dotLongBuilder: Seq[Expression] => Expression =
-    children => DotProductLong(children(0), children(1))
+  private def binary(name: String)(mk: (Expression, Expression) => Expression)
+      : Seq[Expression] => Expression = { children =>
+    require(children.length == 2,
+      s"$name expects 2 arguments, got ${children.length}")
+    mk(children(0), children(1))
+  }
 
   /** Register graft functions on an already-running session. Strategy +
     * optimizer rule go through the experimental hooks (the only post-build
@@ -58,18 +57,9 @@ object GraftExtensions {
     * strategy, so they travel together.
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    org.apache.spark.sql.graftbridge.Bridge
-      .registerFunction(spark, "graft_dot", dotBuilder)
-    org.apache.spark.sql.graftbridge.Bridge
-      .registerFunction(spark, "graft_dot_long", dotLongBuilder)
-    org.apache.spark.sql.graftbridge.Bridge
-      .registerFunction(spark, "graft_distinct_bitmap", BitmapDistinct.builder)
-    org.apache.spark.sql.graftbridge.Bridge
-      .registerFunction(spark, "graft_bitmap_build", BitmapBuild.builder)
-    org.apache.spark.sql.graftbridge.Bridge
-      .registerFunction(spark, "graft_bitmap_test", BitmapTest.builder)
-    org.apache.spark.sql.graftbridge.Bridge
-      .registerFunction(spark, "graft_freq_sketch", MisraGries.builder)
+    functions.foreach { case (name, _, builder) =>
+      org.apache.spark.sql.graftbridge.Bridge.registerFunction(spark, name, builder)
+    }
     if (!spark.experimental.extraStrategies.contains(TopKStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ TopKStrategy

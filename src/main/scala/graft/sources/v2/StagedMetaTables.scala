@@ -156,9 +156,7 @@ private[v2] class StagedMetaScan(kind: String, tableName: String,
       val dvFlagged = StagedParquet.hasDvFlag(new Path(prodDir))
       StagedParquet.layoutRoots(prodDir).flatMap { case (lroot, prefix, lspec) =>
         StagedScan.planPartitions(lroot.toString, tableSchema, lspec, Nil)
-          .map { case (vals, files) =>
-            val dirRel = lspec.map(_.dirName).zip(vals)
-              .map { case (n, v0) => s"$n=$v0" }.mkString("/")
+          .map { case (dirRel, vals, files) =>
             val rel = Seq(prefix, dirRel).filter(_.nonEmpty).mkString("/")
             MetaDirPartition(if (rel.isEmpty) "." else rel, vals, files,
               dvFlagged, lspec): InputPartition
@@ -257,7 +255,7 @@ private[v2] case class MetaReaderFactory(kind: String, partSpec: Seq[PartField])
         private val partVals: Seq[Any] =
           UTF8String.fromString(p.rel) +: partSpec.map { pf =>
             byDirName.get(pf.dirName) match {
-              case Some(raw) if raw != "__HIVE_DEFAULT_PARTITION__" =>
+              case Some(raw) if raw != PartitionDir.Null =>
                 UTF8String.fromString(PartSpec.unescape(raw))
               case _ => null
             }

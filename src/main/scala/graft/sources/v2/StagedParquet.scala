@@ -17,6 +17,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
+import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.write._
@@ -382,13 +383,6 @@ object StagedParquet {
       s"compact on $d: the current layout is unpartitioned and " +
         "pre-evolution generations still hold data — a root swap would " +
         "strand them; run StagedParquet.migrateLayouts first")
-    def walk(dir: Path, depth: Int, rel: String): Seq[(String, Path)] =
-      if (depth == 0) Seq((rel, dir))
-      else f.listStatus(dir).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.contains("=") &&
-          !st.getPath.getName.endsWith("__old"))
-        .flatMap(st => walk(st.getPath, depth - 1,
-          if (rel.isEmpty) st.getPath.getName else rel + "/" + st.getPath.getName))
     val staging = d + "__staging.compact-" +
       java.util.UUID.randomUUID().toString.take(8)
     val report = mutable.Buffer[(String, Long, Long, Long)]()
@@ -411,7 +405,7 @@ object StagedParquet {
       if (!tableHasDvs) Map.empty
       else dvByDir.getOrElseUpdate(p.toString, readDvs(p))
     for ((lroot, lprefix, lspec) <- layouts;
-         (rel0, dir) <- walk(lroot, lspec.length, "")) {
+         (rel0, dir, _) <- PartitionDir.walk(lroot, lspec.length)) {
       val rel = Seq(lprefix, rel0).filter(_.nonEmpty).mkString("/")
       val files = f.listStatus(dir).toSeq
         .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
@@ -695,11 +689,9 @@ object StagedParquet {
     for ((lroot, prefix, lspec) <- gens) {
       val dvFlagged = hasDvFlag(root)
       val dirs = StagedScan.planPartitions(lroot.toString, schema, lspec, Nil)
-        .map { case (vals, files) =>
+        .map { case (dirRel, vals, files) =>
           val dirPath = new Path(files.head._1).getParent
           val dvs = if (dvFlagged) readDvs(dirPath) else Map.empty[String, Seq[(Long, Long)]]
-          val dirRel = lspec.map(_.dirName).zip(vals)
-            .map { case (n, v0) => s"$n=$v0" }.mkString("/")
           SnapDir(Seq(prefix, dirRel).filter(_.nonEmpty).mkString("/"), vals,
             files.map(_._1), dvs.filter { case (n, _) =>
               files.exists(fp => new Path(fp._1).getName == n) }, lspec)
@@ -1078,8 +1070,10 @@ object StagedParquet {
     * [[StagedParquetTable]] uses (the V2 table knows its dir, not its
     * catalog-qualified name). `update` None = delete rows matching the
     * predicate; Some(set) = rewrite them with the SET columns applied.
-    */
-  /** @param excludeNames data-file NAMES the statement must not touch —
+    * Each directory is classified by [[PartitionDir.verdict]] per
+    * conjunct — the evaluator static pruning and runtime DPP use too.
+    *
+    * @param excludeNames data-file NAMES the statement must not touch —
     *        the streaming upsert's just-committed epoch files (visible in
     *        the tree before their manifest lands, but semantically the
     *        NEW rows the delete half must not see)
@@ -1169,170 +1163,6 @@ object StagedParquet {
         s"updateWhere: unknown column $c") }
     }
 
-    def canonCmp(a: Any, b: Any): Option[Int] = (a, b) match {
-      case (x: Int, y: Int)       => Some(x.compareTo(y))
-      case (x: Long, y: Long)     => Some(x.compareTo(y))
-      case (x: String, y: String) => Some(x.compareTo(y))
-      case _                      => None
-    }
-    def canon(v: Any): Any = v match {
-      case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-      case d0: java.sql.Date       => d0.toLocalDate.toEpochDay.toInt
-      case d0: java.time.LocalDate => d0.toEpochDay.toInt
-      case other                   => other
-    }
-    def dayOf(v: Any): Option[Long] = v match {
-      case t: java.sql.Timestamp  => Some(Math.floorDiv(t.getTime, 86400000L))
-      case i: java.time.Instant   => Some(Math.floorDiv(i.getEpochSecond, 86400L))
-      case d0: java.sql.Date       => Some(d0.toLocalDate.toEpochDay)
-      case d0: java.time.LocalDate => Some(d0.toEpochDay)
-      case _                      => None
-    }
-    // verdict of one conjunct against one directory's partition values
-    // UNDER THAT DIRECTORY'S SPEC (generations differ after evolution):
-    // Some(true) = true for EVERY row in the dir, Some(false) = false for
-    // every row, None = undecidable from the dir name (goes to tier 3)
-    def dirVerdict(c: Filter, vals: Seq[String],
-                   spec: Seq[PartField]): Option[Boolean] = {
-      def identVal(a: String): Option[Any] = {
-        val i = spec.indexWhere(pf => pf.kind == "identity" && pf.name == a)
-        if (i < 0) None
-        else Some(canon(StagedScan.partValue(schema(a).dataType, vals(i))))
-      }
-      def dirDay(a: String): Option[Option[Long]] = {
-        val i = spec.indexWhere(pf => pf.kind == "days" && pf.name == a)
-        if (i < 0) None
-        else Some(if (vals(i) == "__HIVE_DEFAULT_PARTITION__") None
-                  else Some(java.time.LocalDate.parse(vals(i)).toEpochDay))
-      }
-      // bucket-partition verdicts: a literal hashing to a DIFFERENT bucket
-      // is provably absent from this dir (a single-key DELETE on a
-      // bucketed 100 TB table touches 1/n of the directories); the SAME
-      // bucket proves nothing (other keys share it) → undecided
-      def dirBucket(a: String): Option[(String, Int)] = {
-        val i = spec.indexWhere(pf => pf.kind == "bucket" && pf.name == a)
-        if (i < 0) None else Some((vals(i), spec(i).buckets))
-      }
-      def bucketVerdictEq(a: String, v: Any): Option[Boolean] =
-        dirBucket(a).flatMap { case (raw, n) =>
-          if (raw == "__HIVE_DEFAULT_PARTITION__") Some(false) // `=` never matches null
-          else BucketHash.idFor(schema(a).dataType, v, n) match {
-            case Some(id) if id != raw.toInt => Some(false)
-            case _                           => None
-          }
-        }
-      def bucketVerdictIn(a: String, vs: Seq[Any]): Option[Boolean] =
-        dirBucket(a).flatMap { case (raw, n) =>
-          if (raw == "__HIVE_DEFAULT_PARTITION__") Some(false)
-          else {
-            val ids = vs.map(v => BucketHash.idFor(schema(a).dataType, v, n))
-            if (ids.forall(_.isDefined) && !ids.flatten.contains(raw.toInt)) Some(false)
-            else None
-          }
-        }
-      def onIdent(a: String)(eval: Any => Option[Boolean]): Option[Option[Boolean]] =
-        identVal(a).map(eval)
-      c match {
-        case AlwaysTrue()  => Some(true)
-        case AlwaysFalse() => Some(false)
-        case EqualTo(a, v) =>
-          onIdent(a)(t => Some(t != null && t == canon(v))).getOrElse(
-            dirDay(a) match {
-              // same-day equality is undecidable (sub-day rows differ);
-              // different-day is provably false
-              case Some(Some(dd)) => dayOf(v) match {
-                case Some(dv) if dv != dd => Some(false)
-                case _                    => None
-              }
-              case Some(None) => Some(false) // null dir: = never matches
-              case None       => bucketVerdictEq(a, v)
-            })
-        case In(a, vs) =>
-          onIdent(a)(t => Some(t != null && vs.map(canon).contains(t))).getOrElse(
-            dirDay(a) match {
-              case Some(Some(dd)) =>
-                val days = vs.toSeq.map(dayOf)
-                if (days.forall(_.isDefined) && !days.flatten.contains(dd)) Some(false)
-                else None
-              case Some(None) => Some(false)
-              case None       => bucketVerdictIn(a, vs.toSeq)
-            })
-        case GreaterThan(a, v) =>
-          onIdent(a)(t => canonCmp(t, canon(v)).map(_ > 0)).getOrElse(
-            dirDay(a) match {
-              case Some(Some(dd)) => dayOf(v) match {
-                case Some(dv) if dd > dv => Some(true)  // whole dir after v's day
-                case Some(dv) if dd < dv => Some(false) // whole dir before
-                case _                   => None        // boundary day
-              }
-              case Some(None) => Some(false) // null ts: comparison never true
-              case None       => None
-            })
-        case GreaterThanOrEqual(a, v) =>
-          onIdent(a)(t => canonCmp(t, canon(v)).map(_ >= 0)).getOrElse(
-            dirDay(a) match {
-              case Some(Some(dd)) => dayOf(v) match {
-                case Some(dv) if dd > dv => Some(true)
-                case Some(dv) if dd < dv => Some(false)
-                case _                   => None
-              }
-              case Some(None) => Some(false)
-              case None       => None
-            })
-        case LessThan(a, v) =>
-          onIdent(a)(t => canonCmp(t, canon(v)).map(_ < 0)).getOrElse(
-            dirDay(a) match {
-              case Some(Some(dd)) => dayOf(v) match {
-                case Some(dv) if dd < dv => Some(true)
-                case Some(dv) if dd > dv => Some(false)
-                case _                   => None
-              }
-              case Some(None) => Some(false)
-              case None       => None
-            })
-        case LessThanOrEqual(a, v) =>
-          onIdent(a)(t => canonCmp(t, canon(v)).map(_ <= 0)).getOrElse(
-            dirDay(a) match {
-              case Some(Some(dd)) => dayOf(v) match {
-                case Some(dv) if dd < dv => Some(true)
-                case Some(dv) if dd > dv => Some(false)
-                case _                   => None
-              }
-              case Some(None) => Some(false)
-              case None       => None
-            })
-        case IsNull(a) =>
-          onIdent(a)(t => Some(t == null)).getOrElse(
-            dirDay(a) match { case Some(od) => Some(od.isEmpty); case None => None })
-        case IsNotNull(a) =>
-          onIdent(a)(t => Some(t != null)).getOrElse(
-            dirDay(a) match { case Some(od) => Some(od.nonEmpty); case None => None })
-        // Some(false) means "no row SATISFIES the predicate" (it is false
-        // or NULL everywhere), so disjunction/negation fold carefully:
-        // Or is true-for-all if EITHER side is, unsatisfiable if both
-        // are; Not(f) is unsatisfiable where f is true-for-all, but an
-        // unsatisfiable f proves NOTHING for Not(f) — f may be NULL, and
-        // NOT(NULL) is NULL, which DELETE must keep
-        case And(l, r) => // nested under Or/Not (top-level Ands are flattened)
-          (dirVerdict(l, vals, spec), dirVerdict(r, vals, spec)) match {
-            case (Some(true), Some(true))            => Some(true)
-            case (Some(false), _) | (_, Some(false)) => Some(false)
-            case _                                   => None
-          }
-        case Or(l, r) =>
-          (dirVerdict(l, vals, spec), dirVerdict(r, vals, spec)) match {
-            case (Some(true), _) | (_, Some(true))   => Some(true)
-            case (Some(false), Some(false))          => Some(false)
-            case _                                   => None
-          }
-        case Not(f0) =>
-          dirVerdict(f0, vals, spec) match {
-            case Some(true) => Some(false)
-            case _          => None
-          }
-        case _ => None
-      }
-    }
     def toCol(c: Filter): org.apache.spark.sql.Column = c match {
       case AlwaysTrue()             => lit(true)
       case AlwaysFalse()            => lit(false)
@@ -1361,15 +1191,6 @@ object StagedParquet {
     def fileMayMatch(st: org.apache.hadoop.fs.FileStatus, rem: Seq[Filter]): Boolean =
       blocksOf(st).exists { case (_, _, b) =>
         StagedScan.blockSurvives(b, schema, rem) }
-
-    def walk(dir: Path, depth: Int, rel: String): Seq[(String, Path, Seq[String])] =
-      if (depth == 0) Seq((rel, dir, rel.split("/").toSeq.filter(_.nonEmpty)
-        .map(_.split("=", 2)(1))))
-      else f.listStatus(dir).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.contains("=") &&
-          !st.getPath.getName.endsWith("__old"))
-        .flatMap(st => walk(st.getPath, depth - 1,
-          if (rel.isEmpty) st.getPath.getName else rel + "/" + st.getPath.getName))
 
     val staging = d + "__staging.cow-" +
       java.util.UUID.randomUUID().toString.take(8)
@@ -1402,20 +1223,18 @@ object StagedParquet {
                        unconditional: Boolean, spec: Seq[PartField])
     val work = mutable.Buffer[DirWork]()
     for ((lroot, lprefix, lspec) <- layouts;
-         (rel0, dir, vals) <- walk(lroot, lspec.length, "")) {
+         (rel0, dir, vals) <- PartitionDir.walk(lroot, lspec.length)) {
       // rel is TABLE-relative (generation prefix included) — version
       // deltas, retained trees, and swap targets all key on it
       val rel = Seq(lprefix, rel0).filter(_.nonEmpty).mkString("/")
-      val verdicts = conjuncts.map(c => dirVerdict(c, vals, lspec))
+      val verdicts = conjuncts.map(PartitionDir.verdict(_, vals, lspec, schema))
       // key-set dir prune: a bucket(key) dir whose id is outside the key
       // set's bucket ids — or a null-key dir (IN never matches null) —
       // provably holds no matching row
       val keyPruned = keySet.exists { case (kc, kdf) =>
-        lspec.zipWithIndex.exists { case (pf, i) =>
-          pf.kind == "bucket" && pf.name == kc && {
-            vals(i) == "__HIVE_DEFAULT_PARTITION__" ||
-              !keyBucketIds(kc, kdf, pf.buckets).contains(vals(i).toInt)
-          }
+        lspec.zip(vals).exists { case (pf, raw) =>
+          pf.kind == "bucket" && pf.name == kc && PartitionDir.bucket(raw)
+            .forall(id => !keyBucketIds(kc, kdf, pf.buckets).contains(id))
         }
       }
       if (!keyPruned && !verdicts.contains(Some(false))) {
@@ -1534,22 +1353,7 @@ object StagedParquet {
       // evolution history, never the directory count
       for ((gspec, gwork) <- work.toSeq.groupBy(_.spec)) {
       val gDataSchema = StructType(PartSpec.dataFields(schema, gspec).map(_._1))
-      val identIdx = gspec.zipWithIndex.filter(_._1.kind == "identity")
-      val identFields = identIdx.map { case (pf, _) =>
-        schema(pf.name).copy(nullable = true) }
-      def identExternal(vals: Seq[String]): Seq[Any] =
-        identIdx.map { case (pf, i) =>
-          val raw = vals(i)
-          if (raw == "__HIVE_DEFAULT_PARTITION__") null
-          else schema(pf.name).dataType match {
-            case StringType  => PartSpec.unescape(raw)
-            case IntegerType => Int.box(raw.toInt)
-            case LongType    => Long.box(raw.toLong)
-            case DateType    => java.sql.Date.valueOf(raw)
-            case t => throw new UnsupportedOperationException(
-              s"staged COW: unsupported identity partition type $t")
-          }
-        }
+      val (identFields, identExternal) = PartitionDir.identityColumns(gspec, schema)
       val infoSchema = StructType(
         StructField("__src", StringType, nullable = false) +:
         StructField("__dir", StringType, nullable = false) +: identFields)
@@ -1673,22 +1477,7 @@ object StagedParquet {
       for (((gspec, gwork), gi) <- work.toSeq.groupBy(_.spec).toSeq.zipWithIndex) {
       val gDataSchema = StructType(PartSpec.dataFields(schema, gspec).map(_._1))
       val gStaging = s"$staging/w$gi"
-      val identIdx = gspec.zipWithIndex.filter(_._1.kind == "identity")
-      val identFields = identIdx.map { case (pf, _) =>
-        schema(pf.name).copy(nullable = true) }
-      def identExternal(vals: Seq[String]): Seq[Any] =
-        identIdx.map { case (pf, i) =>
-          val raw = vals(i)
-          if (raw == "__HIVE_DEFAULT_PARTITION__") null
-          else schema(pf.name).dataType match {
-            case StringType  => PartSpec.unescape(raw)
-            case IntegerType => Int.box(raw.toInt)
-            case LongType    => Long.box(raw.toLong)
-            case DateType    => java.sql.Date.valueOf(raw)
-            case t => throw new UnsupportedOperationException(
-              s"staged COW: unsupported identity partition type $t")
-          }
-        }
+      val (identFields, identExternal) = PartitionDir.identityColumns(gspec, schema)
       // join key: the file path in its URI-RAW form — input_file_name()
       // reports the Hadoop Path's URI encoding (a `%` in an escaped
       // partition dir name arrives as `%25`), and getRawPath is that same
@@ -2394,9 +2183,7 @@ object StagedParquet {
       // an evolved table is a MIXED-layout state
       for ((lroot, prefix, lspec) <- layoutRoots(baseRoot))
         StagedScan.planPartitions(lroot.toString, StructType(Nil), lspec, Nil)
-          .foreach { case (vals, files) =>
-            val dirRel = lspec.map(_.dirName).zip(vals)
-              .map { case (n, v0) => s"$n=$v0" }.mkString("/")
+          .foreach { case (dirRel, _, files) =>
             val rel = sentinel(
               Seq(prefix, dirRel).filter(_.nonEmpty).mkString("/"))
             val dirPath = files.headOption
@@ -3354,11 +3141,12 @@ object PartSpec {
       }
     }
 
+  // (Expressions parses a column name, so one that needs quoting is quoted)
   def toTransforms(spec: Seq[PartField]): Array[Transform] =
     spec.map {
-      case PartField(n, "identity", _) => Expressions.identity(n)
-      case PartField(n, "days", _)     => Expressions.days(n)
-      case PartField(n, "bucket", b)   => Expressions.bucket(b, n)
+      case PartField(n, "identity", _) => Expressions.identity(QuotingUtils.quoteIfNeeded(n))
+      case PartField(n, "days", _)     => Expressions.days(QuotingUtils.quoteIfNeeded(n))
+      case PartField(n, "bucket", b)   => Expressions.bucket(b, QuotingUtils.quoteIfNeeded(n))
       case PartField(n, k, _) =>
         throw new IllegalStateException(s"bad partition kind $k for $n")
     }.toArray
@@ -3446,7 +3234,7 @@ object PartSpec {
           s"staged catalog: cannot $k-partition on ${pf.name}: $t")
       }
       (r: InternalRow) =>
-        s"${pf.dirName}=${if (r.isNullAt(ord)) "__HIVE_DEFAULT_PARTITION__" else render(r)}"
+        s"${pf.dirName}=${if (r.isNullAt(ord)) PartitionDir.Null else render(r)}"
     }
 }
 

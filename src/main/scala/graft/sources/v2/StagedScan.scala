@@ -11,6 +11,7 @@ import org.apache.parquet.schema.MessageType
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.connector.expressions.Expressions
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
@@ -36,11 +37,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *     requested subset of the file schema, and files predating an ADD
   *     COLUMN null-fill absent fields at materialization (the read half of
   *     metadata-only schema evolution);
-  *   - PARTITION pruning ([[SupportsPushDownFilters]]): EqualTo/In
-  *     predicates on identity partition columns drop whole directories at
-  *     plan time, before any file is opened. All filters are returned as
-  *     residuals — Spark re-checks rows, the scan only skips I/O, so a
-  *     miscast literal can never produce wrong rows, only wasted reads.
+  *   - PARTITION pruning ([[SupportsPushDownFilters]]): every filter
+  *     [[PartitionDir.verdict]] can decide for a column of the spec drops
+  *     the directories it proves hold no matching row, at plan time,
+  *     before any file is opened — the same evaluator the DELETE/UPDATE
+  *     directory tiers use. All filters are returned as residuals — Spark
+  *     re-checks rows, the scan only skips I/O, so a miscast literal can
+  *     never produce wrong rows, only wasted reads.
   *
   * Below the partition grain the scan keeps a ZONE MAP: comparison
   * predicates on stored numeric/temporal data columns are checked against
@@ -77,26 +80,7 @@ class StagedScanBuilder(tableName: String, prodDir: String,
     required = requiredSchema
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val identityCols = partSpec.filter(_.kind == "identity").map(_.name).toSet
-    // range predicates on a days-transform SOURCE column prune day
-    // directories: day() is monotone in ts, so ts >= T can only land in
-    // dirs with day >= day(T) — the time-travel pattern every day-
-    // partitioned event table lives on
-    val daysCols = partSpec.filter(_.kind == "days").map(_.name).toSet
-    // point predicates on a bucket-transform SOURCE column prune to the
-    // literal's bucket directory — the same hash the writer routed with,
-    // so a key lookup on a 100 TB bucketed fact opens 1/n of the table
-    val bucketCols = partSpec.filter(_.kind == "bucket").map(_.name).toSet
-    partPruning = filters.filter {
-      case EqualTo(a, _)             => identityCols(a) || daysCols(a) || bucketCols(a)
-      case In(a, _)                  => identityCols(a) || bucketCols(a)
-      case IsNotNull(a)              => identityCols(a)
-      case GreaterThan(a, _)         => daysCols(a)
-      case GreaterThanOrEqual(a, _)  => daysCols(a)
-      case LessThan(a, _)            => daysCols(a)
-      case LessThanOrEqual(a, _)     => daysCols(a)
-      case _                         => false
-    }
+    partPruning = filters.filter(PartitionDir.decides(_, partSpec))
     // ZONE-MAP data skipping: comparison predicates on stored DATA columns
     // whose parquet statistics are trustworthy bounds (the same numeric/
     // temporal set the aggregate pushdown trusts — binary/decimal stats
@@ -109,7 +93,8 @@ class StagedScanBuilder(tableName: String, prodDir: String,
     val statTypes: Set[DataType] =
       Set(IntegerType, LongType, FloatType, DoubleType, DateType, TimestampType)
     val statCols: Set[String] = tableSchema.fields
-      .filter(f => statTypes(f.dataType)).map(_.name).toSet -- identityCols
+      .filter(f => statTypes(f.dataType)).map(_.name).toSet --
+      partSpec.filter(_.kind == "identity").map(_.name)
     dataSkip = filters.filter {
       case EqualTo(a, v)            => statCols(a) && v != null
       case In(a, _)                 => statCols(a)
@@ -322,8 +307,7 @@ class StagedScan(tableName: String, prodDir: String, tableSchema: StructType,
       val dirIdentity = spec.filter(_.kind == "identity").map(_.name).toSet
       val dirSkip =
         if (dirIdentity.isEmpty) dataSkip
-        else dataSkip.filterNot(f =>
-          StagedScan.filterAttr(f).exists(dirIdentity))
+        else dataSkip.filterNot(_.references.exists(dirIdentity))
       files.flatMap { case (f, len) =>
         val dv = dirDv.getOrElse(new Path(f).getName, Nil)
         val eqf = eqOf(f)
@@ -370,12 +354,12 @@ class StagedScan(tableName: String, prodDir: String, tableSchema: StructType,
   // key is one of filterAttributes(); at execution it calls filter() with
   // the collected build-side values, and planInputPartitions is re-planned
   // against them — fact partitions a selective dim filter eliminated are
-  // never opened. Same conservative contract as static pruning: an
-  // unrecognized predicate shape prunes NOTHING. Days-transform SOURCE
-  // columns participate too: a runtime `ts IN (...)` can only match rows
-  // in the literals' UTC days, so every other day directory closes — the
-  // events⋈dim pattern on the 100 TB day-partitioned shape.
-  private var runtime: Seq[org.apache.spark.sql.connector.expressions.filter.Predicate] = Nil
+  // never opened. Each predicate converts to its V1 form through Spark's
+  // own converter and is judged by the static pruning's evaluator
+  // ([[PartitionDir.verdict]]), so identity, days and bucket directories
+  // close exactly as they would for the same literal in the query text;
+  // a predicate without a V1 form prunes NOTHING.
+  private var runtime: Seq[Filter] = Nil
 
   // only columns present in the scan OUTPUT: Spark's PartitionPruning rule
   // resolves these against the (column-pruned) scan relation and THROWS on
@@ -383,79 +367,17 @@ class StagedScan(tableName: String, prodDir: String, tableSchema: StructType,
   // runtime filter anyway
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     partSpec.filter(p => required.fieldNames.contains(p.name))
-      .map(p => Expressions.column(p.name)).toArray
+      .map(p => Expressions.column(QuotingUtils.quoteIfNeeded(p.name))).toArray
 
   override def filter(predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit =
-    runtime = predicates.toSeq
+    runtime = predicates.toSeq.flatMap(org.apache.spark.sql.graftbridge.Bridge.toV1)
 
-  /** Does this partition's key survive every recognized runtime predicate?
-    * Recognizes `IN(col, lits...)` and `=(col, lit)` over one identity
-    * column (typed value equality) or one days SOURCE column (the
-    * literal's UTC day vs the directory day); anything else — including a
-    * literal whose day cannot be derived — keeps the partition.
-    */
-  private def runtimeSurvives(p: StagedInputPartition): Boolean = {
-    import org.apache.spark.sql.connector.expressions.{Literal, NamedReference}
-    // the SPLIT's own spec, not the scan's: under partition-spec
-    // evolution an old-generation split stores today's partition column
-    // in its data files — its spec has no entry for it, so every lookup
-    // below misses and the split conservatively survives
-    val spec = p.partSpec
-    def dirValue(name: String): Option[Any] = {
-      val i = spec.indexWhere(pf => pf.kind == "identity" && pf.name == name)
-      if (i < 0) None
-      else Some(StagedScan.partValue(tableSchema(spec(i).name).dataType,
-        p.rawValues(i)))
-    }
-    // directory day for a days-transform SOURCE column; None = not days
-    // partitioned on it / null dir (keep)
-    def dirDay(name: String): Option[Long] = {
-      val i = spec.indexWhere(pf => pf.kind == "days" && pf.name == name)
-      if (i < 0 || p.rawValues(i) == "__HIVE_DEFAULT_PARTITION__") None
-      else Some(java.time.LocalDate.parse(p.rawValues(i)).toEpochDay)
-    }
-    // UTC day of a runtime literal (internal representations: micros for
-    // timestamps, epoch days for dates); None = unrecognized (keep)
-    def litDay(l: Literal[_]): Option[Long] = l.dataType() match {
-      case TimestampType => Some(Math.floorDiv(l.value().asInstanceOf[Long], 86400000000L))
-      case DateType      => Some(l.value().asInstanceOf[Int].toLong)
-      case _             => None
-    }
-    // bucket id of the dir + the literal's bucket under the same hash;
-    // runtime `key IN (dim keys)` closes every other bucket directory
-    def dirBucket(name: String): Option[(Int, Int)] = {
-      val i = spec.indexWhere(pf => pf.kind == "bucket" && pf.name == name)
-      if (i < 0 || p.rawValues(i) == "__HIVE_DEFAULT_PARTITION__") None
-      else Some((p.rawValues(i).toInt, spec(i).buckets))
-    }
-    def litBucket(name: String, l: Literal[_], n: Int): Option[Int] =
-      BucketHash.idFor(tableSchema(name).dataType, l.value(), n)
-    def survivesEq(name: String, l: Literal[_]): Boolean =
-      dirValue(name).forall(_ == l.value) &&
-        dirDay(name).forall(dd => litDay(l).forall(_ == dd)) &&
-        dirBucket(name).forall { case (dirId, n) =>
-          litBucket(name, l, n).forall(_ == dirId) }
-    def survivesIn(name: String, lits: Seq[Literal[_]]): Boolean =
-      dirValue(name).forall(v => lits.exists(_.value == v)) &&
-        dirDay(name).forall(dd => lits.exists(l => litDay(l).forall(_ == dd))) &&
-        dirBucket(name).forall { case (dirId, n) =>
-          val ids = lits.map(l => litBucket(name, l, n))
-          ids.exists(_.isEmpty) || ids.flatten.contains(dirId) }
-    runtime.forall { pred =>
-      (pred.name(), pred.children().toSeq) match {
-        case ("IN", (f: NamedReference) +: lits)
-            if f.fieldNames().length == 1 && lits.forall(_.isInstanceOf[Literal[_]]) =>
-          survivesIn(f.fieldNames()(0), lits.map(_.asInstanceOf[Literal[_]]))
-        case ("=", Seq(f: NamedReference, l: Literal[_]))
-            if f.fieldNames().length == 1 =>
-          survivesEq(f.fieldNames()(0), l)
-        case _ => true
-      }
-    }
-  }
-
+  // judged under the SPLIT's own spec, not the scan's: under partition-
+  // spec evolution an old-generation split stores today's partition column
+  // in its data files, so no predicate on it decides and the split survives
   override def planInputPartitions(): Array[InputPartition] =
-    planned.filter(runtimeSurvives).toArray[InputPartition]
+    planned.filter(p => PartitionDir.mayMatch(runtime, p.rawValues,
+      p.partSpec, tableSchema)).toArray[InputPartition]
 
   override def createReaderFactory(): PartitionReaderFactory =
     StagedReaderFactory(tableSchema.json, partSpec, required.fieldNames.toSeq)
@@ -710,29 +632,6 @@ object StagedScan {
     }
   }
 
-  /** Typed (internal-representation) value of an identity partition
-    * directory segment — inverse of [[PartSpec.partEvaluators]].
-    */
-  def partValue(dt: DataType, raw: String): Any =
-    if (raw == "__HIVE_DEFAULT_PARTITION__") null
-    else dt match {
-      case StringType  => UTF8String.fromString(PartSpec.unescape(raw))
-      case IntegerType => raw.toInt
-      case LongType    => raw.toLong
-      case DateType    => java.time.LocalDate.parse(raw).toEpochDay.toInt
-      case other => throw new UnsupportedOperationException(
-        s"staged scan: unsupported identity partition type $other")
-    }
-
-  /** Committed (partition dir values, (file, length) pairs) under
-    * `prodDir`, pruned by the pushed identity-column predicates —
-    * CONSERVATIVELY: a residual filter cannot resurrect skipped I/O, so
-    * any comparison this code cannot canonicalize with certainty keeps the
-    * partition (a wasted read, never a lost row). Lengths come free from
-    * the directory listing and gate the row-group split decision without
-    * a footer read. Shared by the row scan and the aggregate-pushdown
-    * scan.
-    */
   /** Layout-aware partition planning across SPEC GENERATIONS
     * ([[StagedParquet.layoutRoots]] — partition-spec evolution): every
     * generation root is planned with ITS OWN spec, the current layout
@@ -746,101 +645,35 @@ object StagedScan {
       : Seq[(Seq[String], Seq[(String, Long)], Seq[PartField])] =
     StagedParquet.layoutRoots(prodDir).flatMap { case (lroot, _, spec) =>
       planPartitions(lroot.toString, tableSchema, spec, pruning)
-        .map { case (vals, files) => (vals, files, spec) }
+        .map { case (_, vals, files) => (vals, files, spec) }
     }
 
-  /** The single attribute a pushed skip filter references; None for
-    * shapes pushFilters never admits.
+  /** Committed (relative dir path, dir values, (file, length) pairs) under
+    * `prodDir`, keeping each directory some row of which may satisfy every
+    * `pruning` filter ([[PartitionDir.mayMatch]]) — a residual filter
+    * cannot resurrect skipped I/O, so anything the evaluator cannot decide
+    * keeps the partition (a wasted read, never a lost row). Lengths come
+    * free from the directory listing and gate the row-group split decision
+    * without a footer read. Shared by the row scan and the
+    * aggregate-pushdown scan.
     */
-  private[v2] def filterAttr(f: Filter): Option[String] = f match {
-    case EqualTo(a, _) => Some(a); case In(a, _) => Some(a)
-    case IsNotNull(a) => Some(a); case GreaterThan(a, _) => Some(a)
-    case GreaterThanOrEqual(a, _) => Some(a); case LessThan(a, _) => Some(a)
-    case LessThanOrEqual(a, _) => Some(a); case _ => None
-  }
-
   private[v2] def planPartitions(prodDir: String, tableSchema: StructType,
-      partSpec: Seq[PartField], pruning: Seq[Filter]): Seq[(Seq[String], Seq[(String, Long)])] = {
-    def canon(v: Any): Any = v match {
-      case u: UTF8String          => u.toString
-      case d: java.sql.Date       => d.toLocalDate.toEpochDay.toInt
-      case d: java.time.LocalDate => d.toEpochDay.toInt
-      case other                  => other
-    }
-    // identity-partition dir value, canonicalized; None = not identity
-    def typed(vals: Seq[String], name: String): Option[Any] = {
-      val i = partSpec.indexWhere(pf => pf.kind == "identity" && pf.name == name)
-      if (i < 0) None
-      else Some(canon(partValue(tableSchema(partSpec(i).name).dataType, vals(i))))
-    }
-    // days-partition dir value as epoch day; None = not days / null dir
-    def dirDay(vals: Seq[String], name: String): Option[Long] = {
-      val i = partSpec.indexWhere(pf => pf.kind == "days" && pf.name == name)
-      if (i < 0 || vals(i) == "__HIVE_DEFAULT_PARTITION__") None
-      else Some(java.time.LocalDate.parse(vals(i)).toEpochDay)
-    }
-    // UTC day of a pushed ts/date literal; None = unrecognized (keep)
-    def dayOf(v: Any): Option[Long] = v match {
-      case t: java.sql.Timestamp  => Some(Math.floorDiv(t.getTime, 86400000L))
-      case i: java.time.Instant   => Some(Math.floorDiv(i.getEpochSecond, 86400L))
-      case d: java.sql.Date       => Some(d.toLocalDate.toEpochDay)
-      case d: java.time.LocalDate => Some(d.toEpochDay)
-      case _                      => None
-    }
-    def dayCmp(vals: Seq[String], a: String, v: Any)(keep: (Long, Long) => Boolean): Boolean =
-      dirDay(vals, a).forall(dd => dayOf(v).forall(dv => keep(dd, dv)))
-    // bucket-partition dir id; None = not bucket-partitioned on it / null dir
-    def dirBucket(vals: Seq[String], name: String): Option[(Int, Int)] = {
-      val i = partSpec.indexWhere(pf => pf.kind == "bucket" && pf.name == name)
-      if (i < 0 || vals(i) == "__HIVE_DEFAULT_PARTITION__") None
-      else Some((vals(i).toInt, partSpec(i).buckets))
-    }
-    def bucketEq(vals: Seq[String], a: String, v: Any): Boolean =
-      dirBucket(vals, a).forall { case (dirId, n) =>
-        BucketHash.idFor(tableSchema(a).dataType, v, n).forall(_ == dirId) }
-    def bucketIn(vals: Seq[String], a: String, vs: Seq[Any]): Boolean =
-      dirBucket(vals, a).forall { case (dirId, n) =>
-        val ids = vs.map(v => BucketHash.idFor(tableSchema(a).dataType, v, n))
-        ids.exists(_.isEmpty) || ids.flatten.contains(dirId) }
-    def survives(vals: Seq[String]): Boolean = pruning.forall {
-      case EqualTo(a, v) =>
-        typed(vals, a).forall(t => t != null && t == canon(v)) &&
-          dayCmp(vals, a, v)(_ == _) && bucketEq(vals, a, v)
-      case In(a, vs)                =>
-        typed(vals, a).forall(t => vs.map(canon).contains(t)) &&
-          bucketIn(vals, a, vs.toSeq)
-      case IsNotNull(a)             => typed(vals, a).forall(_ != null)
-      case GreaterThan(a, v)        => dayCmp(vals, a, v)(_ >= _)
-      case GreaterThanOrEqual(a, v) => dayCmp(vals, a, v)(_ >= _)
-      case LessThan(a, v)           => dayCmp(vals, a, v)(_ <= _)
-      case LessThanOrEqual(a, v)    => dayCmp(vals, a, v)(_ <= _)
-      case _                        => true
-    }
+      partSpec: Seq[PartField], pruning: Seq[Filter])
+      : Seq[(String, Seq[String], Seq[(String, Long)])] = {
     val root = new Path(prodDir)
     val f = StagedParquet.fs(root)
     if (!f.exists(root)) Seq.empty
-    else {
-      // `k=v__old` is swap debris (a dynamic overwrite / compaction whose
-      // best-effort old-delete failed), never a partition — reading it
-      // would duplicate the partition's rows
-      def walk(dir: Path, depth: Int, values: List[String]): Seq[(List[String], Path)] =
-        if (depth == 0) Seq((values.reverse, dir))
-        else f.listStatus(dir).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.contains("=") &&
-            !st.getPath.getName.endsWith("__old"))
-          .flatMap(st => walk(st.getPath, depth - 1,
-            st.getPath.getName.split("=", 2)(1) :: values))
-      walk(root, partSpec.length, Nil)
-        .filter { case (vals, _) => survives(vals) }
-        .map { case (vals, dir) =>
-          val files = f.listStatus(dir).toSeq
-            .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
-              !st.getPath.getName.startsWith("_"))
-            .map(st => (st.getPath.toString, st.getLen)).sortBy(_._1)
-          (vals: Seq[String], files)
-        }
-        .filter(_._2.nonEmpty).sortBy(_._1.mkString("/")): Seq[(Seq[String], Seq[(String, Long)])]
-    }
+    else PartitionDir.walk(root, partSpec.length)
+      .filter { case (_, _, vals) =>
+        PartitionDir.mayMatch(pruning, vals, partSpec, tableSchema) }
+      .map { case (rel, dir, vals) =>
+        val files = f.listStatus(dir).toSeq
+          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
+            !st.getPath.getName.startsWith("_"))
+          .map(st => (st.getPath.toString, st.getLen)).sortBy(_._1)
+        (rel, vals, files)
+      }
+      .filter(_._3.nonEmpty).sortBy(_._2.mkString("/"))
   }
 }
 
@@ -871,7 +704,7 @@ class StagedAggScan(tableName: String, prodDir: String,
 
   override def planInputPartitions(): Array[InputPartition] =
     StagedScan.planPartitions(prodDir, tableSchema, partSpec, pruning)
-      .flatMap { case (vals, files) =>
+      .flatMap { case (_, vals, files) =>
         // per-file splits: footer reads parallelize; partial mode merges
         files.map { case (f, _) => StagedInputPartition(vals, Seq(f),
           tableSchema.json, partSpec, groups) }
@@ -942,7 +775,7 @@ case class StagedAggReaderFactory(schemaJson: String, partSpec: Seq[PartField],
         }
         val groupVals = groups.map { g =>
           val gi = partSpec.indexWhere(_.name == g)
-          StagedScan.partValue(schema(g).dataType, p.rawValues(gi))
+          PartitionDir.partValue(schema(g).dataType, p.rawValues(gi))
         }
         val aggVals = funcs.zipWithIndex.map {
           case (StagedAggScan.Cnt, _) => count
@@ -1033,14 +866,9 @@ case class StagedInputPartition(rawValues: Seq[String], files: Seq[String],
     val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
     new GenericInternalRow(partSpec.zip(rawValues).map { case (pf, raw) =>
       pf.kind match {
-        case "days" =>
-          if (raw == "__HIVE_DEFAULT_PARTITION__") null
-          else java.lang.Integer.valueOf(
-            java.time.LocalDate.parse(raw).toEpochDay.toInt)
-        case "bucket" =>
-          if (raw == "__HIVE_DEFAULT_PARTITION__") null
-          else java.lang.Integer.valueOf(raw.toInt)
-        case _ => StagedScan.partValue(schema(pf.name).dataType, raw)
+        case "days"   => PartitionDir.day(raw).map(d => Int.box(d.toInt)).orNull
+        case "bucket" => PartitionDir.bucket(raw).map(Int.box).orNull
+        case _ => PartitionDir.partValue(schema(pf.name).dataType, raw)
       }
     }.toArray[Any])
   }
@@ -1144,7 +972,7 @@ class StagedPartitionReader(p: StagedInputPartition, schemaJson: String,
   // output ordinal -> Left(constant) | Right(index into the data array)
   private val slots: Array[Either[Any, Int]] = requiredCols.map { n =>
     val pi = partSpec.indexWhere(pf => pf.kind == "identity" && pf.name == n)
-    if (pi >= 0) Left(StagedScan.partValue(schema(n).dataType, p.rawValues(pi)))
+    if (pi >= 0) Left(PartitionDir.partValue(schema(n).dataType, p.rawValues(pi)))
     else Right(dataFields.indexWhere(_.name == n))
   }.toArray
 
@@ -1175,7 +1003,7 @@ class StagedPartitionReader(p: StagedInputPartition, schemaJson: String,
     eqLoaded.map { case (k, set) =>
       val pi = partSpec.indexWhere(pf => pf.kind == "identity" && pf.name == k)
       val acc: Either[Any, Int] =
-        if (pi >= 0) Left(StagedScan.partValue(schema(k).dataType, p.rawValues(pi)))
+        if (pi >= 0) Left(PartitionDir.partValue(schema(k).dataType, p.rawValues(pi)))
         else Right(dataFields.indexWhere(_.name == k))
       (set, acc)
     }.toArray

@@ -31,6 +31,14 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** A DSv2 predicate in its V1 [[org.apache.spark.sql.sources.Filter]]
+    * form, through Spark's own (`private[sql]`) converter; None = the
+    * predicate has no V1 form.
+    */
+  def toV1(p: org.apache.spark.sql.connector.expressions.filter.Predicate)
+      : Option[org.apache.spark.sql.sources.Filter] =
+    org.apache.spark.sql.internal.connector.PredicateUtils.toV1(p)
+
   /** Register a function builder on an already-running session (for
     * environments that don't control session construction; the
     * `spark.sql.extensions=graft.plans.GraftExtensions` config path uses
