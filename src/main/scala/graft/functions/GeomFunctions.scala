@@ -181,7 +181,9 @@ object GeomFunctions {
     */
   private def mapVertices(wkt: Column)(f: (Column, Column) => Column): Column = {
     val pair = "(-?\\d+\\.?\\d*)\\s+(-?\\d+\\.?\\d*)"
-    val body = regexp_replace(wkt, "^\\s*[A-Z]+\\s+", "")
+    // the type token, an optional dimension label and the space after
+    // them — `POINT(`, `POINT Z (` and `POINT (` all leave `(x y …)`
+    val body = regexp_replace(wkt, "^\\s*[A-Z]+(\\s+(ZM|Z|M))?\\s*", "")
     val verts = transform(split(body, ",\\s*", -1), tok => struct(
       regexp_extract(tok, "^([\\s(]*)", 1).as("prefix"),
       regexp_extract(tok, "([\\s)]*)$", 1).as("suffix"),

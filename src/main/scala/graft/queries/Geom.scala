@@ -888,7 +888,7 @@ object Geom {
              trim(regexp_extract(wkt, '^\\s*([A-Z]+)', 1)) AS typ,
              generate_subscripts(arr, 1) AS i, unnest(arr) AS tok
            FROM (SELECT id, wkt,
-             string_split_regex(regexp_replace(wkt, '^\\s*[A-Z]+\\s+', ''), ',\\s*') AS arr
+             string_split_regex(regexp_replace(wkt, '^\\s*[A-Z]+(\\s+(ZM|Z|M))?\\s*', ''), ',\\s*') AS arr
            FROM src)),
          verts AS (SELECT id * 4096 + i AS pid, id AS doc_id, i, typ,
              regexp_extract(tok, '^([\\s(]*)', 1) AS pre,

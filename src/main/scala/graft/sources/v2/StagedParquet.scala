@@ -5,7 +5,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
@@ -162,8 +162,8 @@ object StagedParquet {
     * post-rename files reconstitutes every row (Spark's by-name parquet
     * resolution alone would null the renamed column in pre-rename files;
     * compaction and COW rewrites run through this pair so a rewrite can
-    * never null history). Split in two because the rewrite sites attach
-    * `_metadata.row_index` / input_file_name() between the scan and the
+    * never null history). Split in two because [[StagedRewrite.scan]]
+    * attaches the source file and row index between the read and the
     * fold. Alias collisions are rejected at rename time, so the widened
     * schema is unambiguous; on tables never renamed both are identity.
     */
@@ -338,21 +338,26 @@ object StagedParquet {
 
   /** COMPACT — the small-file maintenance rung (the lakehouse OPTIMIZE):
     * per partition directory, folds the committed data files into
-    * `ceil(bytes / targetBytes)` files and swaps the directory atomically
-    * (same checked-rename dance as the dynamic overwrite, so a crash at
-    * any point leaves either the old file set or the new one, never a
-    * mix; an abandoned staging sibling is vacuum's dead_staging class).
-    * Directories already at or under the target file count are never
-    * read, rewritten, or touched — compaction cost scales with the
-    * SMALL-FILE DEBT, not the table. The rewrite goes through
-    * `coalesce` (no shuffle) with the DECLARED data schema, so
-    * pre-evolution files come out null-filled at the evolved width —
-    * compaction is also schema-evolution settlement. At 100 TB this is
-    * the operation that keeps a streaming-ingested day from fragmenting
-    * into thousands of per-trigger files (the layout etl_compact_bins
-    * PLANS; this executes it on the real table). Concurrent appends to a
-    * directory being swapped can be lost — run per-table in the
-    * maintenance window, like any dir-swap OPTIMIZE.
+    * `ceil(bytes / targetBytes)` files. The three steps of
+    * [[cowWhereDir]], over the same shared parts:
+    *   1. VERDICT, from driver metadata only: which directories carry
+    *      small-file debt (or deletion vectors to settle), and each file's
+    *      output bin. Directories already at or under the target file
+    *      count are never read, rewritten, or touched — compaction cost
+    *      scales with the SMALL-FILE DEBT, not the table.
+    *   2. REWRITE through [[StagedRewrite.scan]], one job per layout
+    *      generation, at the DECLARED data width: pre-evolution files come
+    *      out null-filled (compaction is also schema-evolution
+    *      settlement), and deletion vectors and renamed columns
+    *      materialize.
+    *   3. COMMIT through one [[DirCommit]]: each directory swaps
+    *      atomically, so a crash leaves either the old file set or the new
+    *      one, never a mix.
+    * At 100 TB this is the operation that keeps a streaming-ingested day
+    * from fragmenting into thousands of per-trigger files (the layout
+    * etl_compact_bins PLANS; this executes it on the real table).
+    * Concurrent appends to a directory being swapped can be lost — run
+    * per-table in the maintenance window, like any dir-swap OPTIMIZE.
     * Returns (partition dir or "." for the root, files before, files
     * after, bytes) per compacted directory, sorted.
     */
@@ -386,30 +391,23 @@ object StagedParquet {
     val staging = d + "__staging.compact-" +
       java.util.UUID.randomUUID().toString.take(8)
     val report = mutable.Buffer[(String, Long, Long, Long)]()
-    val v = currentVersion(d) + 1
-    val versionSwaps = mutable.Buffer[String]()
-    // PASS 1 (driver metadata only): which dirs carry small-file debt, and
-    // each file's output BIN (first-fit-decreasing into ceil(bytes/target)
-    // bins per dir). Dirs at target are never read, listed into the job,
-    // or touched.
-    case class DirWork(rel: String, dir: Path, bins: Seq[(String, String, Int)],
+    val commit = new DirCommit(d)
+    // which dirs carry small-file debt, and each file's output BIN
+    // (first-fit-decreasing into ceil(bytes/target) bins per dir), from
+    // driver metadata only. Dirs at target are never read, listed into
+    // the job, or touched.
+    case class DirWork(rel: String, dir: Path, bins: Seq[(FileStatus, Int)],
                        nFiles: Long, nOut: Long, bytes: Long,
                        spec: Seq[PartField])
     val work = mutable.Buffer[DirWork]()
     // compaction MATERIALIZES deletion vectors: a dir carrying any DV is
     // rewritten even at target size (its files shed the deleted rows and
     // the vector), so OPTIMIZE doubles as the delete-settling pass
-    val tableHasDvs = hasDvFlag(root)
-    val dvByDir = mutable.Map.empty[String, Map[String, Seq[(Long, Long)]]]
-    def dirDvs(p: Path): Map[String, Seq[(Long, Long)]] =
-      if (!tableHasDvs) Map.empty
-      else dvByDir.getOrElseUpdate(p.toString, readDvs(p))
+    val dirDvs = new StagedRewrite.DirDvs(root)
     for ((lroot, lprefix, lspec) <- layouts;
          (rel0, dir, _) <- PartitionDir.walk(lroot, lspec.length)) {
-      val rel = Seq(lprefix, rel0).filter(_.nonEmpty).mkString("/")
-      val files = f.listStatus(dir).toSeq
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
-          !st.getPath.getName.startsWith("_"))
+      val rel = sentinel(Seq(lprefix, rel0).filter(_.nonEmpty).mkString("/"))
+      val files = dataFilesOf(dir)
       val bytes = files.map(_.getLen).sum
       val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes)
       val hasDv = files.exists(st => dirDvs(dir).contains(st.getPath.getName))
@@ -419,73 +417,36 @@ object StagedParquet {
         val bins = files.sortBy(-_.getLen).map { st =>
           val b = fill.indices.minBy(fill)
           fill(b) += st.getLen
-          (st.getPath.toUri.getRawPath, st.getPath.toString, b)
+          (st, b)
         }
-        work += DirWork(if (rel.isEmpty) "." else rel, dir, bins,
-          files.length.toLong, nOut, bytes, spec = lspec)
+        work += DirWork(rel, dir, bins, files.length.toLong, nOut, bytes, lspec)
       }
     }
-    // PASS 2: ONE Spark job folds every debt-carrying directory — each
-    // scanned row joins (broadcast) its file's (dir, bin), rows
+    // ONE Spark job per layout generation with debt (stored column subsets
+    // differ per generation — bounded by the evolution history, never the
+    // directory count) folds every debt-carrying directory: each live row
+    // of the shared rewrite scan carries its file's (dir, bin), rows
     // repartition by (dir, bin) so each bin becomes (at most) one output
     // file, and `partitionBy` routes them back to their directory in the
     // staging tree. Compacting 3,000 fragmented day dirs schedules ONE
     // job, not 3,000 (wall-clock ∝ debt bytes, not dir count).
-    if (work.nonEmpty) {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.functions.{broadcast, col, input_file_name, regexp_replace}
-      // one fold job PER LAYOUT GENERATION with debt (stored column
-      // subsets differ per generation) — bounded by the evolution
-      // history, never the directory count
-      for (((gspec, gwork), gi) <- work.toSeq.groupBy(_.spec).toSeq.zipWithIndex) {
-      val gIdentity = gspec.filter(_.kind == "identity").map(_.name).toSet
-      val gDataSchema =
-        StructType(schema.fields.filterNot(fd => gIdentity(fd.name)))
+    val staged = work.toSeq.groupBy(_.spec).toSeq.zipWithIndex.flatMap { case ((gspec, gwork), gi) =>
+      import org.apache.spark.sql.functions.col
+      val gDataSchema = StructType(PartSpec.dataFields(schema, gspec).map(_._1))
       val gStaging = s"$staging/w$gi"
-      val infoSchema = StructType(Seq(
-        StructField("__src", StringType, nullable = false),
-        StructField("__dir", StringType, nullable = false),
-        StructField("__bin", IntegerType, nullable = false)))
-      val info = s.createDataFrame(
-        gwork.flatMap(w => w.bins.map { case (raw, _, b) =>
-          Row(raw, w.rel, b) }).asJava, infoSchema)
-      val allFiles = gwork.flatMap(_.bins.map(_._2))
-      val totalBins = math.max(1, gwork.map(_.nOut).sum.toInt)
-      var scan = s.read.schema(widenForAliases(gDataSchema))
-        .parquet(allFiles: _*)
-        .withColumn("__src",
-          regexp_replace(input_file_name(), "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"))
-      // deletion vectors materialize here: DV'd positions are dropped and
-      // the compacted files carry no vectors
-      val priorDv = gwork.flatMap { w =>
-        val dvs = dirDvs(w.dir)
-        w.bins.flatMap { case (raw, full, _) =>
-          dvs.getOrElse(new Path(full).getName, Nil).map { case (s0, e0) =>
-            Row(raw, Long.box(s0), Long.box(e0)) } }
-      }
-      if (priorDv.nonEmpty) {
-        val dvDf = s.createDataFrame(priorDv.asJava, StructType(Seq(
-          StructField("__dvsrc", StringType, nullable = false),
-          StructField("__dvs", LongType, nullable = false),
-          StructField("__dve", LongType, nullable = false))))
-        val withPos = scan.withColumn("__pos",
-          col("_metadata.row_index"))
-        scan = withPos.join(broadcast(dvDf),
-          withPos("__src") === dvDf("__dvsrc") &&
-            col("__pos") >= col("__dvs") && col("__pos") < col("__dve"),
-          "left_anti").drop("__pos")
-      }
-      // RENAMED columns reconstitute here (compaction settles the bytes
-      // to the current name — post-compaction files need no aliases)
-      scan = coalesceAliases(scan, gDataSchema)
+      val scan = StagedRewrite.scan(s, schema, gspec,
+        gwork.flatMap(w => w.bins.map { case (st, b) =>
+          StagedRewrite.RewriteFile(st, w.rel,
+            dirDvs(w.dir).getOrElse(st.getPath.getName, Nil), Seq(b)) }),
+        Seq(StructField("__bin", IntegerType, nullable = false)), withPos = false)
       // OPTIMIZE re-sorts a sorted table's bins (merging two sorted files
       // would otherwise break the declared order and silently withdraw
       // the scan's sort-free plans)
       val binSort = sortColsOf(tableProperties(root))
         .filter(gDataSchema.fieldNames.contains)
       withMicrosTimestamps(s) {
-        val binned = scan.join(broadcast(info), Seq("__src"))
-          .repartition(totalBins, col("__dir"), col("__bin"))
+        val binned = scan.repartition(
+          math.max(1, gwork.map(_.nOut).sum.toInt), col("__dir"), col("__bin"))
         val sorted =
           if (binSort.isEmpty) binned
           else binned.sortWithinPartitions(
@@ -493,38 +454,18 @@ object StagedParquet {
         sorted.select((gDataSchema.fieldNames.map(col) :+ col("__dir")).toSeq: _*)
           .write.partitionBy("__dir").mode("overwrite").parquet(gStaging)
       }
-      for (w <- gwork) {
-        val escaped = org.apache.spark.sql.catalyst.catalog
-          .ExternalCatalogUtils.escapePathName(w.rel)
-        val stagePart = new Path(s"$gStaging/__dir=$escaped")
-        // the swap replaces the whole directory — for an unpartitioned
-        // table's ROOT the catalog metadata (manifest log included: a
-        // caught-up tail survives a compaction; a behind one fails loudly
-        // on the renamed files) must ride along
-        if (w.rel == ".") {
-          writeString(stagePart, SchemaFile, schema.json)
-          writeString(stagePart, SuccessFile, "")
-          readString(new Path(root, DroppedFile)).foreach(
-            writeString(stagePart, DroppedFile, _))
-          readString(new Path(root, PropertiesFile)).foreach(
-            writeString(stagePart, PropertiesFile, _))
-          copyManifests(root, stagePart)
-        } else if (!w.rel.contains("="))
-          // an unpartitioned GENERATION root: its pinned spec rides the swap
-          writeString(stagePart, PartitionFile, PartSpec.serialize(w.spec))
-        swapDirs(stagePart.toString, w.dir.toString,
-          Some(retainedPath(d, v, w.rel))): Unit
-        versionSwaps += w.rel
-        report += ((w.rel, w.nFiles, w.nOut, w.bytes))
-      }
-      }
+      gwork.map(w => (w, stagedDir(gStaging, w.rel)))
     }
-    if (versionSwaps.nonEmpty) recordVersion(d, v, Nil, versionSwaps.toSeq): Unit
+    for ((w, stage) <- staged) {
+      commit.promote(stage, w.rel, w.dir): Unit
+      report += ((w.rel, w.nFiles, w.nOut, w.bytes))
+    }
+    if (!commit.isEmpty) commit.record()
     f.delete(new Path(staging), true): Unit
     // every DV'd dir was force-included above, so post-compaction the LIVE
     // table holds no vectors — drop the flag and the agg pushdown returns
     // (retained version trees keep theirs for time travel)
-    if (tableHasDvs) f.delete(new Path(root, DvFlagFile), false): Unit
+    if (dirDvs.flagged) f.delete(new Path(root, DvFlagFile), false): Unit
     report.sortBy(_._1).toSeq
   }
 
@@ -585,8 +526,7 @@ object StagedParquet {
       f.listStatus(lroot).exists { st =>
         (st.isDirectory && st.getPath.getName.contains("=") &&
           !st.getPath.getName.endsWith("__old")) ||
-        (st.isFile && st.getPath.getName.endsWith(".parquet") &&
-          !st.getPath.getName.startsWith("_"))
+        (st.isFile && isDataFile(st.getPath.getName))
       }
     }
   }
@@ -945,8 +885,7 @@ object StagedParquet {
       // unpartitioned: loose root data files (and their deletion vectors)
       f.listStatus(root).foreach { st =>
         val n = st.getPath.getName
-        if (st.isFile && ((n.endsWith(".parquet") && !n.startsWith("_")) ||
-            n.startsWith(DvPrefix))) {
+        if (st.isFile && (isDataFile(n) || n.startsWith(DvPrefix))) {
           if (!f.rename(st.getPath, new Path(gen, n)))
             throw new java.io.IOException(
               s"evolvePartitioning: cannot move $n under $gen")
@@ -1065,13 +1004,27 @@ object StagedParquet {
                   filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[(String, String, Long, Long)] =
     cowWhereDir(s, tableDir(s, table), filters, Some(set))
 
-  /** The shared copy-on-write core of [[deleteWhere]] / [[updateWhere]]
-    * against a resolved prod directory — the entry point
-    * [[StagedParquetTable]] uses (the V2 table knows its dir, not its
-    * catalog-qualified name). `update` None = delete rows matching the
-    * predicate; Some(set) = rewrite them with the SET columns applied.
-    * Each directory is classified by [[PartitionDir.verdict]] per
-    * conjunct — the evaluator static pruning and runtime DPP use too.
+  /** The shared core of [[deleteWhere]] / [[updateWhere]] against a
+    * resolved prod directory — the entry point [[StagedParquetTable]] uses
+    * (the V2 table knows its dir, not its catalog-qualified name).
+    * `update` None = delete rows matching the predicate; Some(set) =
+    * rewrite them with the SET columns applied. Three steps, each over
+    * every layout generation at once ([[RowRewrite]]):
+    *   1. VERDICT, from driver metadata only: each directory is classified
+    *      by [[PartitionDir.verdict]] per conjunct (the evaluator static
+    *      pruning and runtime DPP use too) and each file by its footer zone
+    *      map. A DELETE dir every row of which matches becomes a DROP; dirs
+    *      that need rows rewritten form one work list.
+    *   2. REWRITE: on a `delete.mode=merge-on-read` table a DELETE first
+    *      finds the matching row positions in one plan with one shuffle;
+    *      sparse directories commit them as deletion vectors, dense ones
+    *      fall through. Then ONE copy-on-write job per layout generation
+    *      rewrites the remaining work into a staging tree — so a retention
+    *      DELETE touching thousands of day directories schedules one job,
+    *      not one per directory. Both read through [[StagedRewrite.scan]],
+    *      the scan [[compact]] uses.
+    *   3. COMMIT: drops and rewritten directories swap through one
+    *      [[DirCommit]] (also [[compact]]'s), under one version.
     *
     * @param excludeNames data-file NAMES the statement must not touch —
     *        the streaming upsert's just-committed epoch files (visible in
@@ -1096,55 +1049,54 @@ object StagedParquet {
                   excludeNames: Set[String] = Set.empty,
                   keySet: Option[(String, org.apache.spark.sql.DataFrame)] = None,
                   skipEqSettle: Boolean = false): Seq[(String, String, Long, Long)] = {
-    import org.apache.spark.sql.sources._
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
     // live equality deletes settle FIRST (skipEqSettle = the settle's own
     // group deletes): a COW rewrite copies raw rows into fresh files, and
     // a fresh file's add version would wrongly re-expose it to every
     // older eq filter — materialize, then mutate
     if (!skipEqSettle) materializeEqDeletes(s, d)
-    val root = new Path(d)
-    val f = fs(root)
-    val sj = readString(new Path(root, SchemaFile)).getOrElse(
-      throw new IllegalArgumentException(s"no committed table at $d"))
-    val schema = DataType.fromJson(sj).asInstanceOf[StructType]
-    val partSpec: Seq[PartField] = readString(new Path(root, PartitionFile))
+    val stmt = new RowRewrite(s, d, filters, update, excludeNames, keySet)
+    val (drops, work) = stmt.verdict()
+    stmt.commit(drops, stmt.rewrite(work))
+  }
+
+  /** One [[cowWhereDir]] statement: its table, predicate and the state its
+    * three steps share. Construction validates the statement (rejected at
+    * analysis, never half-applied).
+    */
+  private final class RowRewrite(s: SparkSession, d: String,
+      filters: Seq[org.apache.spark.sql.sources.Filter],
+      update: Option[Seq[(String, org.apache.spark.sql.Column)]],
+      excludeNames: Set[String],
+      keySet: Option[(String, org.apache.spark.sql.DataFrame)]) {
+    import org.apache.spark.sql.sources._
+    import org.apache.spark.sql.functions.{coalesce, col, lit, not, when}
+
+    /** A directory none of whose rows survives a DELETE. */
+    case class Drop(rel: String, dir: Path)
+    /** A directory whose `affected` files are rewritten; `untouched`
+      * siblings are byte-copied at the swap. */
+    case class DirWork(rel: String, dir: Path, vals: Seq[String],
+                       affected: Seq[FileStatus], untouched: Seq[FileStatus],
+                       unconditional: Boolean, spec: Seq[PartField])
+
+    private val root = new Path(d)
+    private val f = fs(root)
+    private val schema = DataType.fromJson(readString(new Path(root, SchemaFile))
+      .getOrElse(throw new IllegalArgumentException(s"no committed table at $d")))
+      .asInstanceOf[StructType]
+    private val partSpec: Seq[PartField] = readString(new Path(root, PartitionFile))
       .map(PartSpec.deserialize).getOrElse(Seq.empty)
-    val dataSchema = StructType(PartSpec.dataFields(schema, partSpec).map(_._1))
-    val conjuncts = flattenAnd(filters)
+    private val conjuncts = flattenAnd(filters)
     require(canDelete(conjuncts), s"unsupported DELETE/UPDATE predicate: $filters")
     require(keySet.isEmpty || update.isEmpty,
       "keySet form is DELETE-only (the upsert epoch's replace half)")
-    // distinct bucket ids of the key set, per bucket count — the metadata
-    // dir-prune for bucket(key) layouts, computed executor-side (the ids
-    // collected are ≤ n, never the keys)
-    val bucketIdCache = mutable.Map.empty[Int, Set[Int]]
-    def keyBucketIds(kc: String, kdf: org.apache.spark.sql.DataFrame,
-                     n: Int): Set[Int] =
-      bucketIdCache.getOrElseUpdate(n, {
-        import s.implicits._
-        val one = kdf.select(org.apache.spark.sql.functions.col(kc))
-        schema(kc).dataType match {
-          case IntegerType => one.as[Int]
-            .map(v => BucketHash.id(BucketHash.ofLong(v.toLong), n))
-            .distinct().collect().toSet
-          case LongType => one.as[Long]
-            .map(v => BucketHash.id(BucketHash.ofLong(v), n))
-            .distinct().collect().toSet
-          case StringType => one.as[String]
-            .map(v => BucketHash.id(BucketHash.ofBytes(v.getBytes("UTF-8")), n))
-            .distinct().collect().toSet
-          case _ => (0 until n).toSet // unbucketable type: keep every dir
-        }
-      })
     // every layout generation participates (partition-spec evolution):
     // rows matching the predicate must go whether they live in the
     // current layout or a pre-evolution one
-    val layouts = layoutRoots(d)
+    private val layouts = layoutRoots(d)
     // an UNPARTITIONED current layout mutates by ROOT swap, and a root
     // swap would carry the live generations into the retained tree —
-    // rejected at analysis (never half-applied): settle the generations
-    // first, then the root swap is safe again
+    // settle the generations first, then the root swap is safe again
     require(partSpec.nonEmpty || layouts.length == 1 || !oldLayoutsHoldData(d),
       s"DELETE/UPDATE on $d: the current layout is unpartitioned and " +
         "pre-evolution generations still hold data — a root swap would " +
@@ -1162,8 +1114,15 @@ object StagedParquet {
         schema.fieldNames.contains(c) && !partRefs(c),
         s"updateWhere: unknown column $c") }
     }
+    private val staging = d + "__staging.cow-" +
+      java.util.UUID.randomUUID().toString.take(8)
+    private val report = mutable.Buffer[(String, String, Long, Long)]()
+    private val dirDvs = new StagedRewrite.DirDvs(root)
+    // one VERSION for the whole statement: every swapped/dropped dir
+    // retains its pre-state under the version tree (time travel)
+    private val dirCommit = new DirCommit(d)
 
-    def toCol(c: Filter): org.apache.spark.sql.Column = c match {
+    private def toCol(c: Filter): org.apache.spark.sql.Column = c match {
       case AlwaysTrue()             => lit(true)
       case AlwaysFalse()            => lit(false)
       case EqualTo(a, v)            => col(a) === lit(v)
@@ -1179,443 +1138,273 @@ object StagedParquet {
       case Not(f0)                  => !toCol(f0)
       case other => throw new UnsupportedOperationException(s"DELETE: $other")
     }
+    // the FULL conjunction evaluates correctly on every rewritten row
+    // (per-dir all-true conjuncts are simply true there; identity
+    // references resolve through the materialized columns)
+    private lazy val fullPred = conjuncts.map(toCol).reduce(_ && _)
+
+    // distinct bucket ids of the key set, per bucket count — the metadata
+    // dir-prune for bucket(key) layouts, computed executor-side (the ids
+    // collected are ≤ n, never the keys)
+    private val bucketIdCache = mutable.Map.empty[Int, Set[Int]]
+    private def keyBucketIds(kc: String, kdf: org.apache.spark.sql.DataFrame,
+                             n: Int): Set[Int] =
+      bucketIdCache.getOrElseUpdate(n, {
+        import s.implicits._
+        val one = kdf.select(col(kc))
+        schema(kc).dataType match {
+          case IntegerType => one.as[Int]
+            .map(v => BucketHash.id(BucketHash.ofLong(v.toLong), n))
+            .distinct().collect().toSet
+          case LongType => one.as[Long]
+            .map(v => BucketHash.id(BucketHash.ofLong(v), n))
+            .distinct().collect().toSet
+          case StringType => one.as[String]
+            .map(v => BucketHash.id(BucketHash.ofBytes(v.getBytes("UTF-8")), n))
+            .distinct().collect().toSet
+          case _ => (0 until n).toSet // unbucketable type: keep every dir
+        }
+      })
     // one footer read per file per statement: the zone-map tier and the
     // MOR dense-dir live-row count both consult it
-    val footers = mutable.Map.empty[Path,
+    private val footers = mutable.Map.empty[Path,
       Seq[(Long, Long, org.apache.parquet.hadoop.metadata.BlockMetaData)]]
-    def blocksOf(st: org.apache.hadoop.fs.FileStatus) =
+    private def blocksOf(st: FileStatus) =
       footers.getOrElseUpdate(st.getPath,
         StagedScan.blockRanges(st.getPath.toString, st.getLen))
-    // may this FILE hold a matching row? — the scan's zone map, pointed at
-    // the delete predicate; any block the footer cannot clear keeps it
-    def fileMayMatch(st: org.apache.hadoop.fs.FileStatus, rem: Seq[Filter]): Boolean =
-      blocksOf(st).exists { case (_, _, b) =>
-        StagedScan.blockSurvives(b, schema, rem) }
 
-    val staging = d + "__staging.cow-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    val report = mutable.Buffer[(String, String, Long, Long)]()
-    // one VERSION for the whole statement: every swapped/dropped dir
-    // retains its pre-state under the version tree (time travel)
-    val cowVersion = currentVersion(d) + 1
-    val versionSwaps = mutable.Buffer[String]()
-    // one listing per directory: (data files the statement may touch,
-    // excluded epoch files). The excluded files must ride every swap as
-    // byte-copied siblings — a dir swap replaces the WHOLE directory, and
-    // a file in neither the rewrite nor the copy list would vanish
-    def filesOf(dir: Path): (Seq[org.apache.hadoop.fs.FileStatus],
-                             Seq[org.apache.hadoop.fs.FileStatus]) =
-      f.listStatus(dir).toSeq
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
-          !st.getPath.getName.startsWith("_"))
-        .partition(st => !excludeNames(st.getPath.getName))
-
-    // PASS 1 (driver metadata only): classify every directory. Tier-1
-    // DELETE dirs drop immediately (no byte read); dirs needing a rewrite
-    // — tier-1 UPDATE (unconditional SET) and tier-3 (predicate COW) —
-    // are collected into one work list for a SINGLE batched Spark job,
-    // so a retention DELETE touching thousands of day directories
-    // schedules ONE rewrite, not one job per directory (wall-clock ∝
-    // matching data, not ∝ affected-dir count).
-    case class DirWork(rel: String, dir: Path, vals: Seq[String],
-                       affected: Seq[org.apache.hadoop.fs.FileStatus],
-                       untouched: Seq[org.apache.hadoop.fs.FileStatus],
-                       unconditional: Boolean, spec: Seq[PartField])
-    val work = mutable.Buffer[DirWork]()
-    for ((lroot, lprefix, lspec) <- layouts;
-         (rel0, dir, vals) <- PartitionDir.walk(lroot, lspec.length)) {
-      // rel is TABLE-relative (generation prefix included) — version
-      // deltas, retained trees, and swap targets all key on it
-      val rel = Seq(lprefix, rel0).filter(_.nonEmpty).mkString("/")
-      val verdicts = conjuncts.map(PartitionDir.verdict(_, vals, lspec, schema))
-      // key-set dir prune: a bucket(key) dir whose id is outside the key
-      // set's bucket ids — or a null-key dir (IN never matches null) —
-      // provably holds no matching row
-      val keyPruned = keySet.exists { case (kc, kdf) =>
-        lspec.zip(vals).exists { case (pf, raw) =>
-          pf.kind == "bucket" && pf.name == kc && PartitionDir.bucket(raw)
-            .forall(id => !keyBucketIds(kc, kdf, pf.buckets).contains(id))
+    /** VERDICT (driver metadata only): tier 1 — every conjunct all-true for
+      * the dir — DROPS it on DELETE (no byte read; the root of an
+      * unpartitioned table swaps in an empty committed table) and rewrites
+      * every file with the SET applied UNCONDITIONALLY on UPDATE; tier 2 —
+      * a conjunct provably false for the dir, or every file cleared by the
+      * zone map — leaves it untouched; tier 3 rewrites only the files the
+      * zone map cannot clear.
+      */
+    def verdict(): (Seq[Drop], Seq[DirWork]) = {
+      val drops = mutable.Buffer[Drop]()
+      val work = mutable.Buffer[DirWork]()
+      for ((lroot, lprefix, lspec) <- layouts;
+           (rel0, dir, vals) <- PartitionDir.walk(lroot, lspec.length)) {
+        // rel is TABLE-relative (generation prefix included) — version
+        // deltas, retained trees, and swap targets all key on it
+        val rel = sentinel(Seq(lprefix, rel0).filter(_.nonEmpty).mkString("/"))
+        val verdicts = conjuncts.map(PartitionDir.verdict(_, vals, lspec, schema))
+        // key-set dir prune: a bucket(key) dir whose id is outside the key
+        // set's bucket ids — or a null-key dir (IN never matches null) —
+        // provably holds no matching row
+        val keyPruned = keySet.exists { case (kc, kdf) =>
+          lspec.zip(vals).exists { case (pf, raw) =>
+            pf.kind == "bucket" && pf.name == kc && PartitionDir.bucket(raw)
+              .forall(id => !keyBucketIds(kc, kdf, pf.buckets).contains(id))
+          }
         }
-      }
-      if (!keyPruned && !verdicts.contains(Some(false))) {
-        val remaining = conjuncts.zip(verdicts).collect { case (c, None) => c }
-        // listed on first use: a tier-1 metadata drop never lists
-        lazy val (files, epochFiles) = filesOf(dir)
-        if (remaining.isEmpty && keySet.isDefined) {
-          // all conjuncts hold for the dir, but key MEMBERSHIP of every
-          // row is never provable from metadata — the row tiers decide
-          if (files.nonEmpty)
-            work += DirWork(rel, dir, vals, files, epochFiles,
-              unconditional = false, spec = lspec)
-        } else if (remaining.isEmpty) {
-          // tier 1: every conjunct all-true. DELETE drops the directory
-          // without reading a byte (root of an unpartitioned table: swap
-          // in an empty committed table); UPDATE rewrites every file with
-          // the SET applied UNCONDITIONALLY
-          update match {
-            case Some(_) =>
-              if (files.nonEmpty)
-                work += DirWork(rel, dir, vals, files, epochFiles,
-                  unconditional = true, spec = lspec)
+        if (!keyPruned && !verdicts.contains(Some(false))) {
+          val remaining = conjuncts.zip(verdicts).collect { case (c, None) => c }
+          // listed on first use: a tier-1 metadata drop never lists. The
+          // excluded epoch files ride every swap as byte-copied siblings —
+          // a file in neither the rewrite nor the copy list would vanish
+          lazy val (files, epochFiles) =
+            dataFilesOf(dir).partition(st => !excludeNames(st.getPath.getName))
+          def rewrite(affected: Seq[FileStatus], untouched: Seq[FileStatus],
+                      unconditional: Boolean): Unit =
+            if (affected.nonEmpty)
+              work += DirWork(rel, dir, vals, affected, untouched, unconditional, lspec)
+          if (remaining.isEmpty && keySet.isDefined)
+            // all conjuncts hold for the dir, but key MEMBERSHIP of every
+            // row is never provable from metadata — the row tiers decide
+            rewrite(files, epochFiles, unconditional = false)
+          else if (remaining.isEmpty) update match {
+            case Some(_) => rewrite(files, epochFiles, unconditional = true)
             case None if excludeNames.nonEmpty && epochFiles.nonEmpty =>
               // the dir holds just-committed epoch files the statement
               // must not touch — no metadata drop; rewrite the OLD files
               // to nothing and carry the epoch files as copied siblings
-              if (files.nonEmpty)
-                work += DirWork(rel, dir, vals, files, epochFiles,
-                  unconditional = false, spec = lspec)
-            case None if rel.isEmpty =>
-              val st = new Path(staging)
-              f.mkdirs(st): Unit
-              writeString(st, SchemaFile, schema.json)
-              writeString(st, SuccessFile, "")
-              if (f.exists(new Path(root, PartitionFile)))
-                writeString(st, PartitionFile, PartSpec.serialize(partSpec))
-              readString(new Path(root, DroppedFile)).foreach(
-                writeString(st, DroppedFile, _))
-              readString(new Path(root, PropertiesFile)).foreach(
-                writeString(st, PropertiesFile, _))
-              copyManifests(root, st)
-              swapDirs(staging, d, Some(retainedPath(d, cowVersion, "."))): Unit
-              versionSwaps += "."
-              report += ((".", "dropped", 0L, 0L))
-            case None if rel0.isEmpty =>
-              // an UNPARTITIONED generation root: retain it wholesale and
-              // re-pin its spec in place (snapshot lookups need it)
-              val keep = retainedPath(d, cowVersion, rel)
-              f.mkdirs(keep.getParent): Unit
-              if (!f.rename(dir, keep))
-                throw new java.io.IOException(
-                  s"DELETE: cannot retain dropped generation $dir at $keep")
-              f.mkdirs(dir): Unit
-              writeString(dir, PartitionFile, PartSpec.serialize(lspec))
-              versionSwaps += rel
-              report += ((rel, "dropped", 0L, 0L))
-            case None =>
-              val keep = retainedPath(d, cowVersion, rel)
-              f.mkdirs(keep.getParent): Unit
-              if (!f.rename(dir, keep))
-                throw new java.io.IOException(
-                  s"DELETE: cannot retain dropped dir $dir at $keep")
-              versionSwaps += rel
-              report += ((rel, "dropped", 0L, 0L))
+              rewrite(files, epochFiles, unconditional = false)
+            case None => drops += Drop(rel, dir)
+          } else {
+            // tier 3: the zone map — the scan's, pointed at the delete
+            // predicate — clears a file when no footer block can match
+            val (affected, untouched) = files.partition(st =>
+              blocksOf(st).exists { case (_, _, b) =>
+                StagedScan.blockSurvives(b, schema, remaining) })
+            rewrite(affected, untouched ++ epochFiles, unconditional = false)
           }
-        } else {
-          // tier 3: only files the zone map cannot clear are rewritten;
-          // cleared siblings — and any excluded epoch files — are
-          // byte-copied at swap time (tier 2: the zone map cleared every
-          // file — the dir is never touched)
-          val (affected, untouched) =
-            files.partition(st => fileMayMatch(st, remaining))
-          if (affected.nonEmpty)
-            work += DirWork(rel, dir, vals, affected, untouched ++ epochFiles,
-              unconditional = false, spec = lspec)
         }
-      } // tier 2: a conjunct is provably false for the dir — untouched
+      }
+      (drops.toSeq, work.toSeq)
     }
 
-    // Per-dir DV lookups, memoized and guarded by the root flag: a table
-    // that never had a deletion vector pays ZERO extra listings here.
-    val tableHasDvs = hasDvFlag(root)
-    val dvCache = mutable.Map.empty[String, Map[String, Seq[(Long, Long)]]]
-    def dirDvs(p: Path): Map[String, Seq[(Long, Long)]] =
-      if (!tableHasDvs) Map.empty
-      else dvCache.getOrElseUpdate(p.toString, readDvs(p))
-    val versionAdds = mutable.Buffer[String]()
+    /** REWRITE: the merge-on-read position pass, then the copy-on-write
+      * job over the dirs it left. Returns each rewritten dir with its
+      * staged replacement.
+      */
+    def rewrite(work: Seq[DirWork]): Seq[(DirWork, Path)] = {
+      val morMode = update.isEmpty &&
+        tableProperties(root).get("delete.mode").contains("merge-on-read")
+      copyOnWrite(if (morMode && work.nonEmpty) positions(work) else work)
+    }
 
-    // PASS 1.5 — MERGE-ON-READ tier (DELETE on a table with
-    // `delete.mode=merge-on-read`): instead of rewriting tier-3 files,
-    // ONE plan with ONE shuffle finds the matching ROW POSITIONS per file
-    // (`_metadata.row_index`) and writes each directory's deletion vector
-    // executor-side — a point delete on a 1 GB file costs a metadata
-    // write, not a rewrite. The driver only commits (renames) the vectors
-    // of sparse directories. DENSE directories (matched fraction above
-    // `graft.staged.dv.maxFraction`, default 0.1) fall through to the COW
-    // rewrite: once most rows go, a clean rewrite reads cheaper than a
-    // scan that skips most positions. Directories with ZERO matches drop
-    // out entirely (COW would have rewritten them identically).
-    val morMode = update.isEmpty &&
-      tableProperties(root).get("delete.mode").contains("merge-on-read")
-    if (morMode && work.nonEmpty) morDriverRows.set(0L)
-    if (morMode && work.nonEmpty) {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.functions.{broadcast, input_file_name, regexp_replace}
+    /** One generation's files of `gwork` through the shared rewrite scan,
+      * with each dir's tier-1 UPDATE flag (`__uncond`) and its IDENTITY
+      * partition values materialized as real columns (they are not stored
+      * in the data files) so predicates and SET expressions may reference
+      * them.
+      */
+    private def scanOf(gspec: Seq[PartField], gwork: Seq[DirWork], withPos: Boolean) = {
+      val (identFields, identExternal) = PartitionDir.identityColumns(gspec, schema)
+      StagedRewrite.scan(s, schema, gspec, gwork.flatMap { w =>
+        val dvs = dirDvs(w.dir)
+        val info = Boolean.box(w.unconditional) +: identExternal(w.vals)
+        w.affected.map(st => StagedRewrite.RewriteFile(st, w.rel,
+          dvs.getOrElse(st.getPath.getName, Nil), info))
+      }, StructField("__uncond", BooleanType, nullable = false) +: identFields, withPos)
+    }
+
+    /** MERGE-ON-READ (DELETE on a `delete.mode=merge-on-read` table):
+      * instead of rewriting files, ONE plan with ONE shuffle per layout
+      * generation finds the matching ROW POSITIONS per file and writes each
+      * directory's deletion vector executor-side — a point delete on a 1 GB
+      * file costs a metadata write, not a rewrite. The driver only commits
+      * (renames) the vectors of sparse directories. DENSE directories
+      * (matched fraction above `graft.staged.dv.maxFraction`, default 0.1)
+      * are returned for the COW rewrite: once most rows go, a clean
+      * rewrite reads cheaper than a scan that skips most positions.
+      * Directories with ZERO matches drop out entirely (COW would have
+      * rewritten them identically).
+      */
+    private def positions(work: Seq[DirWork]): Seq[DirWork] = {
       import s.implicits._
+      morDriverRows.set(0L)
       val maxFraction =
         try s.conf.get("graft.staged.dv.maxFraction").toDouble
         catch { case _: Throwable => 0.1 }
-      def sentinel(rel: String): String = if (rel.isEmpty) "." else rel
       val dense = mutable.Set.empty[String]
-      var flagged = tableHasDvs
-      // one find-positions job PER LAYOUT GENERATION with affected files
-      // (each generation stores a different column subset in its files);
-      // generations are few, so the job count stays bounded by the
-      // evolution history, never the directory count
-      for ((gspec, gwork) <- work.toSeq.groupBy(_.spec)) {
-      val gDataSchema = StructType(PartSpec.dataFields(schema, gspec).map(_._1))
-      val (identFields, identExternal) = PartitionDir.identityColumns(gspec, schema)
-      val infoSchema = StructType(
-        StructField("__src", StringType, nullable = false) +:
-        StructField("__dir", StringType, nullable = false) +: identFields)
-      val info = s.createDataFrame(gwork.flatMap { w =>
-        val iv = identExternal(w.vals)
-        w.affected.map(st => Row.fromSeq(
-          st.getPath.toUri.getRawPath +: sentinel(w.rel) +: iv))
-      }.asJava, infoSchema)
-      val allAffected = gwork.flatMap(_.affected).map(_.getPath.toString)
-      var scan = s.read.schema(widenForAliases(gDataSchema))
-        .parquet(allAffected: _*)
-        .withColumn("__src",
-          regexp_replace(input_file_name(), "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"))
-        .withColumn("__pos", col("_metadata.row_index"))
-      scan = coalesceAliases(scan, gDataSchema)
-      // rows an earlier DV already deleted must not match (or count) again
-      val priorDv = gwork.flatMap { w =>
-        val dvs = dirDvs(w.dir)
-        w.affected.flatMap(st => dvs.getOrElse(st.getPath.getName, Nil)
-          .map { case (s0, e0) =>
-            Row(st.getPath.toUri.getRawPath, Long.box(s0), Long.box(e0)) })
-      }
-      if (priorDv.nonEmpty) {
-        val dvDf = s.createDataFrame(priorDv.asJava, StructType(Seq(
-          StructField("__dvsrc", StringType, nullable = false),
-          StructField("__dvs", LongType, nullable = false),
-          StructField("__dve", LongType, nullable = false))))
-        scan = scan.join(broadcast(dvDf),
-          scan("__src") === dvDf("__dvsrc") &&
-            col("__pos") >= col("__dvs") && col("__pos") < col("__dve"),
-          "left_anti")
-      }
-      val fullPred = conjuncts.map(toCol).reduce(_ && _)
-      // The matched (dir, file, position) triples shuffle ONCE, by
-      // directory, and sort within each partition by (dir, file,
-      // position); the task then streams each directory's run of rows,
-      // coalescing positions to [start, end) runs as they pass, into ONE
-      // `_tmp-dv-*` file per directory (r11 VERDICT #3). Only (dirRel,
-      // tmpName, matched, fileCount) comes back — the driver materializes
-      // O(touched dirs), never O(deleted runs), and the statement-wide
-      // write fan-out is the cluster's, not one process's. A GDPR-shaped
-      // sparse DELETE over thousands of directories costs the driver one
-      // short name list. Tmp files from failed/speculative attempts are
-      // `_tmp-` debris (invisible to readers, vacuumable); only the names
-      // the successful tasks return get COMMITTED below by rename to
-      // `_dv-*` — the same two-phase shape as the data writes.
-      val dirAbsByRel: Map[String, String] = gwork.map(w =>
-        sentinel(w.rel) -> w.dir.toString).toMap
-      val serConf = new SerializableHadoopConf(hadoopConf)
-      val morMatched0 = scan.join(broadcast(info), Seq("__src"))
-        .filter(coalesce(fullPred, lit(false)))
-      // wide-epoch form: key membership is a DISTRIBUTED semi-join (AQE
-      // broadcasts a small key relation on its own) — no literal list
-      val morMatched = keySet.fold(morMatched0) { case (kc, kdf) =>
-        morMatched0.join(kdf.select(col(kc)).distinct(), Seq(kc), "left_semi")
-      }
-      val morRows: Seq[(String, String, Long, Long)] =
-        morMatched.select(col("__dir"), col("__src"), col("__pos"))
-          .repartition(col("__dir"))
-          .sortWithinPartitions(col("__dir"), col("__src"), col("__pos"))
-          .as[(String, String, Long)]
-          .mapPartitions(rows => writeDvRuns(rows, dirAbsByRel, serConf.value))
-          .collect().toSeq
-      morDriverRows.addAndGet(morRows.length.toLong): Unit
-      val byDir: Map[String, (String, Long, Long)] = morRows
-        .map { case (rel, tmp, matched, nf) => (rel, (tmp, matched, nf)) }.toMap
-      for (w <- gwork) {
-        val rel = sentinel(w.rel)
-        byDir.get(rel) match {
-          case None => // zero matches: neither a DV nor a rewrite
-          case Some((tmpName, matched, nFiles)) =>
-            val dvs = dirDvs(w.dir)
-            val live = w.affected.map { st =>
-              val rows = blocksOf(st).map(_._3.getRowCount).sum
-              rows - deletedWithin(dvs.getOrElse(st.getPath.getName, Nil),
-                0L, rows)
-            }.sum
-            if (live > 0 && matched.toDouble / live > maxFraction) {
-              dense += rel
-              f.delete(new Path(w.dir, tmpName), false): Unit
-            } else {
-              // COMMIT the task-written vector: rename into the `_dv-*`
-              // namespace readers union (O(1) metadata per dir)
-              val dvName = DvPrefix + tmpName.stripPrefix("_tmp-dv-")
-              if (!f.rename(new Path(w.dir, tmpName), new Path(w.dir, dvName)))
-                throw new java.io.IOException(
-                  s"MOR DELETE: cannot commit deletion vector $tmpName in ${w.dir}")
-              if (!flagged) { writeString(root, DvFlagFile, ""); flagged = true }
-              dvCache.remove(w.dir.toString): Unit
-              versionAdds += (if (w.rel.isEmpty) dvName else s"${w.rel}/$dvName")
-              report += ((rel, "dv", nFiles, matched))
-            }
+      var flagged = dirDvs.flagged
+      for ((gspec, gwork) <- work.groupBy(_.spec)) {
+        val matched0 = scanOf(gspec, gwork, withPos = true)
+          .filter(coalesce(fullPred, lit(false)))
+        // wide-epoch form: key membership is a DISTRIBUTED semi-join (AQE
+        // broadcasts a small key relation on its own) — no literal list
+        val matched = keySet.fold(matched0) { case (kc, kdf) =>
+          matched0.join(kdf.select(col(kc)).distinct(), Seq(kc), "left_semi")
+        }
+        // The matched (dir, file, position) triples shuffle ONCE, by
+        // directory, and sort within each partition by (dir, file,
+        // position); the task then streams each directory's run of rows,
+        // coalescing positions to [start, end) runs as they pass, into ONE
+        // `_tmp-dv-*` file per directory (r11 VERDICT #3). Only (dirRel,
+        // tmpName, matched, fileCount) comes back — the driver materializes
+        // O(touched dirs), never O(deleted runs), and the statement-wide
+        // write fan-out is the cluster's, not one process's. Tmp files from
+        // failed/speculative attempts are `_tmp-` debris (invisible to
+        // readers, vacuumable); only the names the successful tasks return
+        // get COMMITTED below by rename to `_dv-*` — the same two-phase
+        // shape as the data writes.
+        val dirAbsByRel: Map[String, String] =
+          gwork.map(w => w.rel -> w.dir.toString).toMap
+        val serConf = new SerializableHadoopConf(hadoopConf)
+        val morRows: Seq[(String, String, Long, Long)] =
+          matched.select(col("__dir"), col("__src"), col("__pos"))
+            .repartition(col("__dir"))
+            .sortWithinPartitions(col("__dir"), col("__src"), col("__pos"))
+            .as[(String, String, Long)]
+            .mapPartitions(rows => writeDvRuns(rows, dirAbsByRel, serConf.value))
+            .collect().toSeq
+        morDriverRows.addAndGet(morRows.length.toLong): Unit
+        val byDir = morRows.map { case (rel, tmp, n, nf) => (rel, (tmp, n, nf)) }.toMap
+        for (w <- gwork; (tmpName, n, nFiles) <- byDir.get(w.rel)) {
+          val dvs = dirDvs(w.dir)
+          val live = w.affected.map { st =>
+            val rows = blocksOf(st).map(_._3.getRowCount).sum
+            rows - deletedWithin(dvs.getOrElse(st.getPath.getName, Nil), 0L, rows)
+          }.sum
+          if (live > 0 && n.toDouble / live > maxFraction) {
+            dense += w.rel
+            f.delete(new Path(w.dir, tmpName), false): Unit
+          } else {
+            // COMMIT the task-written vector: rename into the `_dv-*`
+            // namespace readers union (O(1) metadata per dir)
+            val dvName = DvPrefix + tmpName.stripPrefix("_tmp-dv-")
+            if (!f.rename(new Path(w.dir, tmpName), new Path(w.dir, dvName)))
+              throw new java.io.IOException(
+                s"MOR DELETE: cannot commit deletion vector $tmpName in ${w.dir}")
+            if (!flagged) { writeString(root, DvFlagFile, ""); flagged = true }
+            dirDvs.forget(w.dir)
+            dirCommit.add(if (w.rel == ".") dvName else s"${w.rel}/$dvName")
+            report += ((w.rel, "dv", nFiles, n))
+          }
         }
       }
-      }
-      // only DENSE dirs proceed to the COW rewrite
-      val kept = work.filter(w => dense.contains(sentinel(w.rel)))
-      work.clear()
-      work ++= kept
+      work.filter(w => dense(w.rel))
     }
 
-    // PASS 2: ONE partitioned rewrite job over every affected file of
-    // every directory. Each scanned row joins (broadcast, constant-size)
-    // its file's metadata — target directory and the dir's IDENTITY
-    // partition values, materialized as real columns so predicates and
-    // SET expressions may reference identity-partitioned columns (they
-    // are not stored in the data files) — then the predicate applies
-    // per-row and the output routes back to its source directory via
-    // `partitionBy`. Rows never move across directories (partition-
-    // referenced SET targets are rejected above), so the source file's
-    // directory IS the destination.
-    if (work.nonEmpty) {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.functions.{broadcast, input_file_name, regexp_replace, when}
-      // rel "" (unpartitioned root) needs a non-empty partition value —
-      // "." can never collide with a real `k=v/...` rel path
-      def sentinel(rel: String): String = if (rel.isEmpty) "." else rel
-      // one rewrite job PER LAYOUT GENERATION with affected files (the
-      // stored column subset differs per generation); bounded by the
-      // evolution history, never the directory count
-      for (((gspec, gwork), gi) <- work.toSeq.groupBy(_.spec).toSeq.zipWithIndex) {
-      val gDataSchema = StructType(PartSpec.dataFields(schema, gspec).map(_._1))
-      val gStaging = s"$staging/w$gi"
-      val (identFields, identExternal) = PartitionDir.identityColumns(gspec, schema)
-      // join key: the file path in its URI-RAW form — input_file_name()
-      // reports the Hadoop Path's URI encoding (a `%` in an escaped
-      // partition dir name arrives as `%25`), and getRawPath is that same
-      // encoding minus the scheme, so both sides match byte-for-byte
-      val infoSchema = StructType(
-        StructField("__src", StringType, nullable = false) +:
-        StructField("__dir", StringType, nullable = false) +:
-        StructField("__uncond", BooleanType, nullable = false) +:
-        identFields)
-      val infoRows: Seq[Row] = gwork.flatMap { w =>
-        val iv = identExternal(w.vals)
-        w.affected.map(st => Row.fromSeq(
-          st.getPath.toUri.getRawPath +: sentinel(w.rel) +:
-            Boolean.box(w.unconditional) +: iv))
-      }
-      val info = s.createDataFrame(infoRows.asJava, infoSchema)
-      val allAffected = gwork.flatMap(_.affected).map(_.getPath.toString)
-      var scan = s.read.schema(widenForAliases(gDataSchema))
-        .parquet(allAffected: _*)
-        .withColumn("__src",
-          regexp_replace(input_file_name(), "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"))
-      // rows a deletion vector already removed must not survive the
-      // rewrite (the raw file read would resurrect them); the rewrite
-      // MATERIALIZES the deletes — rewritten files carry no DV entries
-      val priorDv = gwork.flatMap { w =>
-        val dvs = dirDvs(w.dir)
-        w.affected.flatMap(st => dvs.getOrElse(st.getPath.getName, Nil)
-          .map { case (s0, e0) =>
-            Row(st.getPath.toUri.getRawPath, Long.box(s0), Long.box(e0)) })
-      }
-      if (priorDv.nonEmpty) {
-        val dvDf = s.createDataFrame(priorDv.asJava, StructType(Seq(
-          StructField("__dvsrc", StringType, nullable = false),
-          StructField("__dvs", LongType, nullable = false),
-          StructField("__dve", LongType, nullable = false))))
-        val withPos = scan.withColumn("__pos",
-          col("_metadata.row_index"))
-        scan = withPos.join(broadcast(dvDf),
-          withPos("__src") === dvDf("__dvsrc") &&
-            col("__pos") >= col("__dvs") && col("__pos") < col("__dve"),
-          "left_anti").drop("__pos")
-      }
-      // RENAMED columns reconstitute before predicates/updates touch them
-      // (the rewrite writes current names — it settles the aliases)
-      scan = coalesceAliases(scan, gDataSchema)
-      // LEFT join + loud per-row guard: a scanned row that matched no
-      // metadata row (an encoding mismatch between input_file_name() and
-      // the listing) must FAIL the job, never silently drop the row —
-      // a dropped row here would be an unintended delete
-      val joined = scan.join(broadcast(info), Seq("__src"), "left")
-        .withColumn("__dir", when(col("__dir").isNull,
-          org.apache.spark.sql.functions.raise_error(
-            org.apache.spark.sql.functions.concat(
-              lit("staged COW: unmatched source file "), col("__src"))))
-          .otherwise(col("__dir")))
-      // the FULL conjunction evaluates correctly on every rewritten row
-      // (per-dir all-true conjuncts are simply true there; identity
-      // references resolve through the materialized columns)
-      val fullPred = conjuncts.map(toCol).reduce(_ && _)
-      val out = update match {
-        case None if keySet.isDefined =>
-          // keep rows where NOT (conjuncts AND key ∈ set): a left join
-          // against the distinct keys marks membership without ever
-          // collecting them (the dense-dir fallback of the wide epoch)
-          val (kc, kdf) = keySet.get
-          val marked = kdf.select(col(kc)).distinct()
-            .withColumn("__khit", lit(true))
-          joined.join(marked, Seq(kc), "left")
-            .filter(not(coalesce(fullPred, lit(false)) &&
-              coalesce(col("__khit"), lit(false))))
-            .drop("__khit")
-        case None => joined.filter(not(coalesce(fullPred, lit(false))))
-        case Some(set) =>
-          val cond = coalesce(col("__uncond"), lit(false)) ||
-            coalesce(fullPred, lit(false))
-          set.foldLeft(joined) { case (df0, (c, v)) =>
-            df0.withColumn(c,
-              when(cond, v.cast(gDataSchema(c).dataType)).otherwise(col(c)))
-          }
-      }
-      // a sorted table's rewrite re-sorts (the declared order is a table
-      // invariant); identity columns live in the dir name, so only data
-      // columns participate
-      val cowSort = sortColsOf(tableProperties(root))
-        .filter(gDataSchema.fieldNames.contains)
-      val outSorted =
-        if (cowSort.isEmpty) out
-        else out.sortWithinPartitions((col("__dir") +: cowSort.map(col)): _*)
-      withMicrosTimestamps(s) {
-        outSorted.select((gDataSchema.fieldNames.map(col) :+ col("__dir")).toSeq: _*)
-          .write.partitionBy("__dir").mode("overwrite").parquet(gStaging)
-      }
-      // per-dir promotion (driver metadata only, never a Spark job):
-      // byte-copy the zone-map-cleared siblings beside the rewritten
-      // files and swap each directory atomically — a crash leaves the
-      // old rows or the new ones, never a half-deleted directory
-      for (w <- gwork) {
-        val escaped = org.apache.spark.sql.catalyst.catalog
-          .ExternalCatalogUtils.escapePathName(sentinel(w.rel))
-        val stagePart = new Path(s"$gStaging/__dir=$escaped")
-        if (!f.exists(stagePart)) f.mkdirs(stagePart): Unit // all rows deleted
-        w.untouched.foreach { st =>
-          FileUtil.copy(f, st.getPath, f,
-            new Path(stagePart, st.getPath.getName), false, hadoopConf): Unit
+    /** COPY-ON-WRITE: one partitioned rewrite job per layout generation
+      * over every affected file. The predicate applies per row and the
+      * output routes back to its source directory via `partitionBy` —
+      * rows never move across directories (partition-referenced SET
+      * targets are rejected), so the source file's directory IS the
+      * destination.
+      */
+    private def copyOnWrite(work: Seq[DirWork]): Seq[(DirWork, Path)] =
+      work.groupBy(_.spec).toSeq.zipWithIndex.flatMap { case ((gspec, gwork), gi) =>
+        val gDataSchema = StructType(PartSpec.dataFields(schema, gspec).map(_._1))
+        val gStaging = s"$staging/w$gi"
+        val joined = scanOf(gspec, gwork, withPos = false)
+        val out = update match {
+          case None if keySet.isDefined =>
+            // keep rows where NOT (conjuncts AND key ∈ set): a left join
+            // against the distinct keys marks membership without ever
+            // collecting them (the dense-dir fallback of the wide epoch)
+            val (kc, kdf) = keySet.get
+            val marked = kdf.select(col(kc)).distinct()
+              .withColumn("__khit", lit(true))
+            joined.join(marked, Seq(kc), "left")
+              .filter(not(coalesce(fullPred, lit(false)) &&
+                coalesce(col("__khit"), lit(false))))
+              .drop("__khit")
+          case None => joined.filter(not(coalesce(fullPred, lit(false))))
+          case Some(set) =>
+            val cond = coalesce(col("__uncond"), lit(false)) ||
+              coalesce(fullPred, lit(false))
+            set.foldLeft(joined) { case (df0, (c, v)) =>
+              df0.withColumn(c,
+                when(cond, v.cast(gDataSchema(c).dataType)).otherwise(col(c)))
+            }
         }
-        // byte-copied siblings keep their deletion vectors — one carried
-        // DV file scoped to exactly the untouched names (rewritten files
-        // materialized theirs); on a ROOT swap the flag must ride the
-        // staging dir (the old root — flag included — is retained away)
-        val carried = dirDvs(w.dir).filter { case (n, _) =>
-          w.untouched.exists(_.getPath.getName == n) }
-        if (carried.nonEmpty)
-          writeDv(if (w.rel.isEmpty) stagePart else root, stagePart, carried): Unit
-        if (w.rel.isEmpty) {
-          writeString(stagePart, SchemaFile, schema.json)
-          writeString(stagePart, SuccessFile, "")
-          if (f.exists(new Path(root, PartitionFile)))
-            writeString(stagePart, PartitionFile, PartSpec.serialize(partSpec))
-          readString(new Path(root, DroppedFile)).foreach(
-            writeString(stagePart, DroppedFile, _))
-          readString(new Path(root, PropertiesFile)).foreach(
-            writeString(stagePart, PropertiesFile, _))
-          copyManifests(root, stagePart)
-        } else if (!w.rel.contains("="))
-          // an unpartitioned GENERATION root: its pinned spec rides the swap
-          writeString(stagePart, PartitionFile, PartSpec.serialize(w.spec))
-        swapDirs(stagePart.toString, w.dir.toString,
-          Some(retainedPath(d, cowVersion, sentinel(w.rel)))): Unit
-        versionSwaps += sentinel(w.rel)
-        report += ((sentinel(w.rel), "rewritten",
-          w.affected.length.toLong, w.untouched.length.toLong))
+        // a sorted table's rewrite re-sorts (the declared order is a table
+        // invariant); identity columns live in the dir name, so only data
+        // columns participate
+        val cowSort = sortColsOf(tableProperties(root))
+          .filter(gDataSchema.fieldNames.contains)
+        val outSorted =
+          if (cowSort.isEmpty) out
+          else out.sortWithinPartitions((col("__dir") +: cowSort.map(col)): _*)
+        withMicrosTimestamps(s) {
+          outSorted.select((gDataSchema.fieldNames.map(col) :+ col("__dir")).toSeq: _*)
+            .write.partitionBy("__dir").mode("overwrite").parquet(gStaging)
+        }
+        gwork.map(w => (w, stagedDir(gStaging, w.rel)))
       }
+
+    /** COMMIT: every drop and rewritten dir swaps under the statement's
+      * one version (driver metadata only, never a Spark job); the staging
+      * tree goes.
+      */
+    def commit(drops: Seq[Drop], staged: Seq[(DirWork, Path)]): Seq[(String, String, Long, Long)] = {
+      for (Drop(rel, dir) <- drops) {
+        if (rel == ".") dirCommit.promote(new Path(staging, "drop"), rel, dir): Unit
+        else dirCommit.retain(rel, dir)
+        report += ((rel, "dropped", 0L, 0L))
       }
+      for ((w, stage) <- staged) {
+        dirCommit.promote(stage, w.rel, w.dir, w.untouched, dirDvs(w.dir)): Unit
+        report += ((w.rel, "rewritten", w.affected.length.toLong, w.untouched.length.toLong))
+      }
+      if (!dirCommit.isEmpty) dirCommit.record()
+      f.delete(new Path(staging), true): Unit
+      report.sortBy(_._1).toSeq
     }
-    if (versionSwaps.nonEmpty || versionAdds.nonEmpty)
-      recordVersion(d, cowVersion, versionAdds.toSeq, versionSwaps.toSeq): Unit
-    f.delete(new Path(staging), true): Unit
-    report.sortBy(_._1).toSeq
   }
 
   /** Conjunct shapes [[deleteWhere]] supports — everything it can BOTH
@@ -1812,6 +1601,28 @@ object StagedParquet {
       .map(_.getPath.getName).filter(_.startsWith("s-"))
       .map(_.stripPrefix("s-").toLong).maxOption.getOrElse(0L)
   }
+
+  /** A directory's table-relative rel with the root as "." — the form
+    * version deltas, retained trees, rewrite reports and a rewrite's
+    * `__dir` staging partitions use ("" is no partition value, and "." can
+    * never collide with a real `k=v/...` rel path).
+    */
+  private[v2] def sentinel(rel: String): String = if (rel.isEmpty) "." else rel
+
+  /** The directory a `partitionBy("__dir")` rewrite staged for `rel`. */
+  private[v2] def stagedDir(staging: String, rel: String): Path =
+    new Path(s"$staging/__dir=" + org.apache.spark.sql.catalyst.catalog
+      .ExternalCatalogUtils.escapePathName(rel))
+
+  /** Is this file NAME a live data file? Underscore-prefixed parquet files
+    * (equality deletes, in-flight task files) are not.
+    */
+  private[graft] def isDataFile(name: String): Boolean =
+    name.endsWith(".parquet") && !name.startsWith("_")
+
+  /** The live data files directly in `dir`. */
+  private[graft] def dataFilesOf(dir: Path): Seq[FileStatus] =
+    fs(dir).listStatus(dir).toSeq.filter(st => st.isFile && isDataFile(st.getPath.getName))
 
   /** The retained pre-state of `dirRel` ("." = root) for the swap recorded
     * at version `v` (the state AS OF version v-1).
@@ -2047,10 +1858,7 @@ object StagedParquet {
           tableProperties(sp).get(SortOrderProp).contains(so)),
           s"publish_appends: $dstTable declares a sort order the audit " +
             "table does not share")
-        val rels = listRelative(sp).filter { rel =>
-          val n = rel.split('/').last
-          n.endsWith(".parquet") && !n.startsWith("_")
-        }
+        val rels = listRelative(sp).filter(rel => isDataFile(rel.split('/').last))
         require(rels.nonEmpty, s"publish_appends: $srcTable has no data files")
         val m = rels.map { rel =>
           val tgt = if (!f.exists(new Path(dp, rel))) rel
@@ -2153,7 +1961,6 @@ object StagedParquet {
     def specOf(dir: String): Seq[PartField] =
       readString(new Path(dir, PartitionFile))
         .map(PartSpec.deserialize).getOrElse(Seq.empty)
-    def sentinel(rel: String) = if (rel.isEmpty) "." else rel
     var baseRoot = d
     var baseSpec = specOf(d)
     // full rel (any `_layouts/g-<n>/` prefix included) ->
@@ -2230,8 +2037,7 @@ object StagedParquet {
         } else {
           // the retained tree rode a RENAME, deletion vectors included
           val names = f.listStatus(retained).toSeq.filter(st => st.isFile &&
-            ((st.getPath.getName.endsWith(".parquet") &&
-              !st.getPath.getName.startsWith("_")) ||
+            (isDataFile(st.getPath.getName) ||
              st.getPath.getName.startsWith(DvPrefix))).map(_.getPath.getName)
           state(dirRel) = (retained, mutable.Set(names: _*), specFor(dirRel))
         }
@@ -2585,10 +2391,10 @@ object StagedParquet {
     name
   }
 
-  /** Executor half of the MOR find-positions plan ([[cowWhereDir]] PASS
-    * 1.5): `rows` are one task's matched (dirRel, file, position) triples,
-    * sorted by all three, so every directory is one contiguous run and
-    * each file one contiguous run inside it. Streams each directory into
+  /** Executor half of the MOR find-positions plan ([[cowWhereDir]]'s
+    * rewrite step): `rows` are one task's matched (dirRel, file, position)
+    * triples, sorted by all three, so every directory is one contiguous
+    * run and each file one contiguous run inside it. Streams each directory into
     * ONE `_tmp-dv-*` file in that directory — the [[writeDv]] body, lines
     * sorted by file, then runs ascending — and returns
     * (dirRel, tmpName, matched rows, files with a match) per directory.
@@ -2688,7 +2494,7 @@ object StagedParquet {
       d + "__staging.eq-" + java.util.UUID.randomUUID().toString.take(8))
     keyDf.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = f.listStatus(tmp).map(_.getPath)
-      .find(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_"))
+      .find(p => isDataFile(p.getName))
       .getOrElse(throw new IllegalStateException(
         s"equality-delete write produced no parquet under $tmp"))
     val name = EqPrefix + boundary + "-" +
@@ -2727,10 +2533,7 @@ object StagedParquet {
     if (eqs.isEmpty) { f.delete(new Path(root, EqFlagFile), false): Unit; return }
     val addV = addVersionsSince(d, eqs.map(_._2).min - 1, currentVersion(d))
     val boundaries = eqs.map(_._2)
-    val rels = listRelative(root).filter { rel =>
-      val n = rel.split('/').last
-      n.endsWith(".parquet") && !n.startsWith("_")
-    }
+    val rels = listRelative(root).filter(rel => isDataFile(rel.split('/').last))
     val allNames = rels.map(_.split('/').last).toSet
     // group index = how many boundaries the file's add version has passed;
     // eq files at indices >= that apply to it
@@ -2916,8 +2719,7 @@ object StagedParquet {
     // rows stay reachable through time travel at the re-keyed version.)
     val adds: Seq[String] =
       if (hadProd) Nil
-      else listRelative(new Path(prodDir)).filter(rel =>
-        rel.endsWith(".parquet") && !rel.split('/').last.startsWith("_"))
+      else listRelative(new Path(prodDir)).filter(rel => isDataFile(rel.split('/').last))
     var id = v
     var done = false
     while (!done) {
@@ -4135,7 +3937,7 @@ class StagedParquetBatchWrite(targetDir: String, promoteTo: Option[String],
   *        narrow epoch's replace half never re-reads its own files and
   *        the driver holds O(keyInMax) keys at most. On a merge-on-read
   *        table that half is then one find-positions plan with one
-  *        shuffle ([[StagedParquet.cowWhereDir]] PASS 1.5).
+  *        shuffle ([[StagedParquet.cowWhereDir]]'s rewrite step).
   */
 /** @param upsertEq with [[upsertKey]]: the epoch's replace half writes an
   *        EQUALITY-DELETE file instead of running the find-positions scan
@@ -4229,7 +4031,7 @@ class StagedStreamingWrite(prodDir: String, schema: StructType,
       val epochNames = committed.map(_.split('/').last)
       allRel.exists { rel =>
         val n = rel.split('/').last
-        n.endsWith(".parquet") && !n.startsWith("_") && !epochNames(n)
+        isDataFile(n) && !epochNames(n)
       }
     }
     committed.foreach { rel =>

@@ -155,57 +155,42 @@ class RowLevelReplaceBatchWrite(staging: String, prodDir: String,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     super.commit(messages) // staging now holds exactly the replacement files
-    val root = new Path(prodDir)
-    val f = fs(root)
-    val v = currentVersion(prodDir) + 1
-    if (partSpec.isEmpty) {
-      // unpartitioned: the root is the single group — catalog metadata and
-      // the manifest log ride the swap (same contract as compaction)
-      val sp = new Path(staging)
-      readString(new Path(root, DroppedFile)).foreach(
-        writeString(sp, DroppedFile, _))
-      readString(new Path(root, PropertiesFile)).foreach(
-        writeString(sp, PropertiesFile, _))
-      copyManifests(root, sp)
-      swapDirs(staging, prodDir, Some(retainedPath(prodDir, v, "."))): Unit
-      recordVersion(prodDir, v, Nil, Seq(".")): Unit
-    } else {
+    val f = fs(new Path(prodDir))
+    val commit = new DirCommit(prodDir)
+    if (partSpec.isEmpty)
+      // unpartitioned: the root is the single group
+      commit.promote(new Path(staging), ".", new Path(prodDir)): Unit
+    else {
       val committed = messages.flatMap(_.asInstanceOf[StagedFilesCommit].files)
       val stagingDirs = committed
         .map(rel => rel.split('/').dropRight(1).mkString("/"))
         .filter(_.nonEmpty).distinct
       val scannedSet = scanned().toSet
-      val versionSwaps = scala.collection.mutable.Buffer[String]()
-      val versionAdds = scala.collection.mutable.Buffer[String]()
       for (rel <- (scannedSet ++ stagingDirs).toSeq.sorted) {
         val stagePart = new Path(s"$staging/$rel")
-        if (!f.exists(stagePart)) f.mkdirs(stagePart): Unit // group emptied
-        if (!scannedSet.contains(rel)) {
+        val prodPart = new Path(s"$prodDir/$rel")
+        if (!scannedSet.contains(rel) && f.exists(prodPart)) {
           // insert-only group (MERGE insert, or an UPDATE that moved rows
           // across partitions): its existing rows were never scanned —
           // byte-copy them beside the inserts before the swap. Deletion
           // vectors ride along: the copied files keep their deleted
           // positions, so a vector left behind would RESURRECT those rows
-          val prodPart = new Path(s"$prodDir/$rel")
-          if (f.exists(prodPart)) f.listStatus(prodPart).foreach { st =>
+          f.mkdirs(stagePart): Unit
+          f.listStatus(prodPart).foreach { st =>
             val n = st.getPath.getName
-            if (st.isFile && ((n.endsWith(".parquet") && !n.startsWith("_")) ||
-                n.startsWith(StagedParquet.DvPrefix)))
+            if (st.isFile && (isDataFile(n) || n.startsWith(StagedParquet.DvPrefix)))
               FileUtil.copy(f, st.getPath, f,
                 new Path(stagePart, n), false, hadoopConf): Unit
           }
         }
-        if (swapDirs(stagePart.toString, s"$prodDir/$rel",
-            Some(retainedPath(prodDir, v, rel)))) versionSwaps += rel
-        else {
-          // fresh dir (no pre-state): its files record as version adds
-          versionAdds ++= committed.filter(c =>
-            c.split('/').dropRight(1).mkString("/") == rel)
-        }
+        // a fresh dir (no pre-state) records its files as version adds
+        if (!commit.promote(stagePart, rel, prodPart))
+          committed.filter(c => c.split('/').dropRight(1).mkString("/") == rel)
+            .foreach(commit.add)
       }
-      recordVersion(prodDir, v, versionAdds.toSeq, versionSwaps.toSeq): Unit
       f.delete(new Path(staging), true): Unit
     }
+    commit.record()
   }
 }
 

@@ -460,13 +460,22 @@ case class StagedManifestOffset(last: Long)
 class StagedMicroBatchStream(tableName: String, prodDir: String,
                              tableSchema: StructType, partSpec: Seq[PartField],
                              required: StructType)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
+    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
+    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
+  import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 
   private val root = new Path(prodDir)
+  // Trigger.AvailableNow: the last manifest at query start bounds every
+  // batch of the run, so a restart re-runs an uncommitted batch and then
+  // still reads every manifest committed before the query started
+  @volatile private var availableNowEnd = Long.MaxValue
 
+  private def lastManifest: Long =
+    StagedParquet.manifestIds(root).lastOption.getOrElse(-1L)
+  override def prepareForTriggerAvailableNow(): Unit = availableNowEnd = lastManifest
   override def latestOffset(): Offset =
-    StagedManifestOffset(StagedParquet.manifestIds(root).lastOption.getOrElse(-1L))
+    StagedManifestOffset(math.min(lastManifest, availableNowEnd))
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = latestOffset()
   override def initialOffset(): Offset = StagedManifestOffset(-1L)
   override def deserializeOffset(json: String): Offset =
     StagedManifestOffset(json.trim.toLong)
@@ -667,9 +676,7 @@ object StagedScan {
       .filter { case (_, _, vals) =>
         PartitionDir.mayMatch(pruning, vals, partSpec, tableSchema) }
       .map { case (rel, dir, vals) =>
-        val files = f.listStatus(dir).toSeq
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
-            !st.getPath.getName.startsWith("_"))
+        val files = StagedParquet.dataFilesOf(dir)
           .map(st => (st.getPath.toString, st.getLen)).sortBy(_._1)
         (rel, vals, files)
       }

@@ -193,21 +193,20 @@ class GeomSpec extends AnyFunSuite {
   test("vertex-wise reprojection: pinned output strings, both projections") {
     // literal strings: a rewrite of the fixed point or the tokenizer must
     // reproduce them bit for bit. A dimension label or a missing space
-    // before '(' costs the opening paren (the first token then starts with
-    // a letter, so its paren prefix is empty) — pinned as is.
+    // before '(' keeps the opening paren, and Z/M values drop (2D output).
     val golden = Seq(
       "POINT (2694444.25 235902.5)" ->
         ("POINT (-75.160296 39.951686)", "POINT (-8366806.1 4858925.1)"),
       "POINT Z (2694444 235902 12.5)" ->
-        ("POINT -75.160297 39.951685)", "POINT -8366806.2 4858924.9)"),
+        ("POINT (-75.160297 39.951685)", "POINT (-8366806.2 4858924.9)"),
       "POINT(2690000.00 250000.00)" ->
-        ("POINT -75.174675 39.990726)", "POINT -8368406.7 4864595.9)"),
+        ("POINT (-75.174675 39.990726)", "POINT (-8368406.7 4864595.9)"),
       "POLYGON ((2694444 235902, 2704444 235902, 2704444 245902, 2694444 235902))" ->
         ("POLYGON ((-75.160297 39.951685, -75.124644 39.950875, -75.123584 39.978314, -75.160297 39.951685))",
          "POLYGON ((-8366806.2 4858924.9, -8362837.3 4858807.3, -8362719.3 4862792.6, -8366806.2 4858924.9))"),
       "POLYGON Z ((2694444 235902 1, 2704444 235902 2, 2704444 245902 3, 2694444 235902 1))" ->
-        ("POLYGON -75.160297 39.951685, -75.124644 39.950875, -75.123584 39.978314, -75.160297 39.951685))",
-         "POLYGON -8366806.2 4858924.9, -8362837.3 4858807.3, -8362719.3 4862792.6, -8366806.2 4858924.9))"),
+        ("POLYGON ((-75.160297 39.951685, -75.124644 39.950875, -75.123584 39.978314, -75.160297 39.951685))",
+         "POLYGON ((-8366806.2 4858924.9, -8362837.3 4858807.3, -8362719.3 4862792.6, -8366806.2 4858924.9))"),
       "MULTIPOLYGON (((2694444 235902, 2704444 235902, 2704444 245902, 2694444 235902)), " +
         "((2660000.5 220000.75, 2670000 220000, 2670000 230000, 2660000.5 220000.75)))" ->
         ("MULTIPOLYGON (((-75.160297 39.951685, -75.124644 39.950875, -75.123584 39.978314, -75.160297 39.951685)), " +
@@ -215,8 +214,8 @@ class GeomSpec extends AnyFunSuite {
          "MULTIPOLYGON (((-8366806.2 4858924.9, -8362837.3 4858807.3, -8362719.3 4862792.6, -8366806.2 4858924.9)), " +
            "((-8380653.2 4852983.5, -8376686.8 4852871.2, -8376574.4 4856854.2, -8380653.2 4852983.5)))"),
       "LINESTRING M (2694444 235902 1, 2704444 245902 2)" ->
-        ("LINESTRING -75.160297 39.951685, -75.123584 39.978314)",
-         "LINESTRING -8366806.2 4858924.9, -8362719.3 4862792.6)"),
+        ("LINESTRING (-75.160297 39.951685, -75.123584 39.978314)",
+         "LINESTRING (-8366806.2 4858924.9, -8362719.3 4862792.6)"),
       "POINT (-2694444.5 -235902.25)" ->
         ("POINT (-93.895564 37.513016)", "POINT (-10452406.6 4510859.1)"))
     val got = golden.map(_._1).toDF("w")

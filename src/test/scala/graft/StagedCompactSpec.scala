@@ -119,6 +119,62 @@ class StagedCompactSpec extends AnyFunSuite {
     assert(StagedParquet.readTable(spark, t).count() == 100L)
   }
 
+  test("every root swap hands on the catalog and a live tail: compact, delete-all, COW and SQL UPDATE") {
+    import spark.implicits._
+    import org.apache.spark.sql.sources.{AlwaysTrue, EqualTo, GreaterThanOrEqual}
+    type Rows = Seq[(Long, Double)]
+    def set(v: Double)(rows: Rows): Rows =
+      rows.map { case (id, x) => (id, if (id >= 95L) v else x) }
+    val callers: Seq[(String, String => Unit, Rows => Rows)] = Seq(
+      ("compact", t => StagedParquet.compact(spark, t): Unit, rows => rows),
+      ("delete all", t => StagedParquet.deleteWhere(spark, t, Seq(AlwaysTrue())): Unit,
+        _ => Nil),
+      ("cow update", t => StagedParquet.updateWhere(spark, t, Seq("v" -> lit(-1.0)),
+        Seq(GreaterThanOrEqual("id", 95L))): Unit, set(-1.0)),
+      ("sql update", t => spark.sql(s"UPDATE $t SET v = -2.0 WHERE id >= 95"): Unit,
+        set(-2.0)))
+    for (((name, op, expect), i) <- callers.zipWithIndex) {
+      val t = tbl(s"root$i")
+      // six id-ranged files, so a COW rewrite of the top ids leaves five
+      // siblings (one with a deletion vector) to byte-copy
+      (0L until 100L).map(id => (id, id * 1.0, s"x$id")).toDF("id", "v", "gone")
+        .repartitionByRange(6, $"id")
+        .writeTo(t).tableProperty("delete.mode", "merge-on-read")
+        .tableProperty("graft.test.tag", "root-swap").createOrReplace()
+      spark.sql(s"ALTER TABLE $t DROP COLUMN gone")
+      assert(StagedParquet.deleteWhere(spark, t, Seq(EqualTo("id", 3L))).map(_._2) ==
+        Seq("dv"), name)
+      val ckpt = java.nio.file.Files.createTempDirectory("root_swap_ckpt").toString
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      def drain(): Seq[Long] = {
+        seen.clear()
+        spark.readStream.table(t).writeStream
+          .foreachBatch((df: org.apache.spark.sql.DataFrame, _: Long) =>
+            df.select($"id").as[Long].collect().foreach(seen.add))
+          .option("checkpointLocation", ckpt)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start().awaitTermination()
+        seen.toArray.map(_.asInstanceOf[Long]).sorted.toSeq
+      }
+      assert(drain() == (0L until 100L), name) // the tail ignores vectors
+      op(t)
+      // a fresh session re-instantiates the catalog from the files alone
+      val s2 = spark.newSession()
+      StagedParquet.ensureCatalog(s2)
+      val want = expect((0L until 100L).filter(_ != 3L).map(id => (id, id * 1.0)))
+      assert(s2.table(t).select($"id", $"v").as[(Long, Double)].collect().sortBy(_._1)
+        .toSeq == want, name)
+      assert(s2.table(t).schema.fieldNames.toSeq == Seq("id", "v"), name)
+      val props = s2.sql(s"SHOW TBLPROPERTIES $t").as[(String, String)].collect().toMap
+      assert(props.get("graft.test.tag").contains("root-swap") &&
+        props.get("delete.mode").contains("merge-on-read"), s"$name: $props")
+      // the dropped name is still tombstoned
+      intercept[Exception](s2.sql(s"ALTER TABLE $t ADD COLUMN gone STRING"))
+      Seq((200L, 1.0), (201L, 2.0)).toDF("id", "v").writeTo(t).append()
+      assert(drain() == Seq(200L, 201L), name)
+    }
+  }
+
   test("compaction settles schema evolution: pre-ALTER files come out null-filled") {
     import spark.implicits._
     val t = tbl("c3")

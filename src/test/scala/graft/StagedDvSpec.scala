@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** MERGE-ON-READ deletes (deletion vectors) on staged tables — the
   * `delete.mode=merge-on-read` table property
-  * ([[graft.sources.v2.StagedParquet]] PASS 1.5). Contracts under test:
+  * ([[graft.sources.v2.StagedParquet.cowWhereDir]]). Contracts under test:
   *   - a sparse DELETE writes a tiny `_dv-*` positions file and leaves
   *     every data file BYTE-UNTOUCHED (name, length, mtime);
   *   - the V2 scan skips deleted positions on both the row path and the

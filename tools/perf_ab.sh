@@ -6,8 +6,8 @@
 #   tools/perf_ab.sh HEAD~1 etl_load 1-6
 #   tools/perf_ab.sh main llm_iterative 1,3,5
 #
-# The parent is checked out into a temporary `git worktree` outside the
-# repository. For each seed, `perfbench/run.py --trace 0` runs once on each
+# The parent's committed files are extracted (`git archive <sha> | tar -x`)
+# into a temporary directory outside the repository. For each seed, `perfbench/run.py --trace 0` runs once on each
 # side; the side that runs first alternates from seed to seed, so a slow
 # spell on the host does not always land on the same side. Every run lasts
 # BENCHMARK.json's `run_seconds`, the length its bounds were set for.
@@ -18,7 +18,7 @@
 # and each pair's ratio. Effects smaller than a metric's bound need this
 # pairing (perfbench/LAYERS.md).
 #
-# The worktree and every temp dir are removed on exit. Exit code 0 only when
+# Every temp dir is removed on exit. Exit code 0 only when
 # every run was correct.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -33,12 +33,7 @@ REPO="$PWD"
 SHA="$(git rev-parse --verify "$REV^{commit}")"
 
 TMP="$(mktemp -d "${TMPDIR:-/tmp}/graft_perf_ab.XXXXXX")"
-cleanup() {
-  git -C "$REPO" worktree remove --force "$TMP/parent" >/dev/null 2>&1 || true
-  git -C "$REPO" worktree prune >/dev/null 2>&1 || true
-  rm -rf "$TMP"
-}
-trap cleanup EXIT
+trap 'rm -rf "$TMP"' EXIT
 trap 'exit 130' INT TERM
 
 # the seed-range parser and the median/quartile summary come from
@@ -50,8 +45,8 @@ print(" ".join(map(str, seeds(sys.argv[1]))))
 EOF
 )"
 
-git worktree add --quiet --detach "$TMP/parent" "$SHA"
-mkdir -p "$TMP/out"
+mkdir -p "$TMP/parent" "$TMP/out"
+git archive "$SHA" | tar -x -C "$TMP/parent"
 
 run_side() { # side dir seed
   local side="$1" dir="$2" seed="$3" rc=0
