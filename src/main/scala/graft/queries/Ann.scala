@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.core.Iterate
 import graft.core.Tables._
 import graft.functions.HashFunctions._
 
@@ -845,12 +846,11 @@ object Ann {
       .select(col("u").as("src"), col("w").as("dst"), cosCols(
         graft.plans.DotProduct.dot(col("pv"), col("cv")),
         col("pn"), col("cn")).as("cos"))
-    // each round references the graph four times — truncate lineage per hop
-    var graph = graft.plans.TopK.perKey(seedScored, Seq("src"),
+    val graph0 = graft.plans.TopK.perKey(seedScored, Seq("src"),
         Seq(col("cos").desc, col("dst").asc), NND_WORKK)
       .select("src", "dst", "cos")
       .localCheckpoint()
-    for (t <- 1 to iters) {
+    Iterate(graph0, iters) { (graph, t, _) =>
       val und = graph.unionByName(graph.select(col("dst").as("src"),
           col("src").as("dst"), col("cos")))
         .distinct() // a pair present in both directions carries the same cos
@@ -877,12 +877,10 @@ object Ann {
         .select(col("u").as("src"), col("w").as("dst"), cosCols(
           graft.plans.DotProduct.dot(col("pv"), col("cv")),
           col("pn"), col("cn")).as("cos"))
-      graph = graft.plans.TopK.perKey(rescored, Seq("src"),
+      graft.plans.TopK.perKey(rescored, Seq("src"),
           Seq(col("cos").desc, col("dst").asc), NND_WORKK)
         .select("src", "dst", "cos")
-        .localCheckpoint()
-    }
-    graph
+    }.last
   }
 
   /** Recall@k gate for the refined graph, evaluated on the probe panel —
@@ -895,12 +893,12 @@ object Ann {
   // ---- greedy beam search over the refined k-NN graph ---------------------
   private[graft] val GS_ENTRIES = 4 // fixed entry-point panel
   private[graft] val GS_BEAM = 4    // beam width
-  private[graft] val GS_HOPS = 3    // unrolled expansion rounds
+  private[graft] val GS_HOPS = 3    // expansion rounds (bound)
 
   /** Greedy beam search over the NN-descent graph — the query-time idiom of
     * every graph ANN index (HNSW/NSG: hop from fixed entry points toward
     * the probe, keeping a best-so-far pool). Entry points are a fixed
-    * salted-hash panel ([[GS_ENTRIES]] vertices); each of the [[GS_HOPS]]
+    * salted-hash panel ([[GS_ENTRIES]] vertices); each of up to [[GS_HOPS]]
     * rounds takes the pool's top-[[GS_BEAM]] per probe, walks one hop on
     * the symmetrized graph, exactly scores only the NOT-yet-visited
     * candidates (the visited-set anti-join every implementation keeps),
@@ -946,10 +944,15 @@ object Ann {
       .select(col("probe_id"), col("cand"), cosCols(
         graft.plans.DotProduct.dot(col("pv"), col("cv")),
         col("pn"), col("cn")).as("cos"))
-    var visited = scoredPairs(
+    val visited0 = scoredPairs(
         entries.crossJoin(broadcast(probes.select("probe_id"))))
       .localCheckpoint()
-    for (_ <- 1 to GS_HOPS) {
+    val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val broadcastLimit = if (threshold.startsWith("-")) -1L
+      else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(threshold)
+    // a hop adds only rows anti-joined against visited, so a hop that added
+    // none leaves the next beam and frontier identical: stop there
+    val hops = Iterate(visited0, GS_HOPS, Seq(count(lit(1)))) { (visited, _, seen) =>
       val beam = graft.plans.TopK.perKey(visited, Seq("probe_id"),
           Seq(col("cos").desc, col("cand").asc), GS_BEAM)
         .select("probe_id", "cand")
@@ -958,12 +961,16 @@ object Ann {
       val nbrs = broadcast(beam).join(und.toDF("cand", "nxt"), "cand")
         .select(col("probe_id"), col("nxt").as("cand")).distinct()
       // the visited-set anti-join: visited is probes·pool-sized (ids only)
-      // — broadcast the build side instead of shuffling both
-      val fresh = nbrs.join(broadcast(visited.select("probe_id", "cand")),
+      // — broadcast the build side while its observed rows (two longs
+      // each) fit the session's broadcast threshold; round 1's visited is
+      // at most the probe × entry panel
+      val rows = seen.fold(PROBE_COUNT.toLong * GS_ENTRIES)(_.getLong(0))
+      val ids = visited.select("probe_id", "cand")
+      val fresh = nbrs.join(if (rows * 16 <= broadcastLimit) broadcast(ids) else ids,
         Seq("probe_id", "cand"), "left_anti")
-      visited = visited.unionByName(scoredPairs(fresh)).localCheckpoint()
+      visited.unionByName(scoredPairs(fresh))
     }
-    rankTop(visited.select(col("probe_id"),
+    rankTop(hops.last.select(col("probe_id"),
       col("cand").as("neighbor_id"), col("cos")), CAND_TOPK)
   }
 

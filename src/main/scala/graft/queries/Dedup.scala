@@ -934,6 +934,8 @@ object Dedup {
        ORDER BY a_id, b_id"""
 
   // ---- pair → keep/drop resolution ---------------------------------------
+  val ResolveMaxPasses = 50
+
   /** Connected-components-style keep-min-id resolution (§3): iterative
     * min-label propagation over the near-dup pair graph, run to a fixed
     * point. Convergence is detected by the label-sum: labels only ever
@@ -942,25 +944,19 @@ object Dedup {
     * + one min-aggregation + one POINTER-DOUBLING self-join (labels jump to
     * their label's label), so a chain of length L converges in O(log L)
     * passes — one-hop propagation alone would need diameter passes and a
-    * long dup chain would exhaust the bound. `maxIterations` is a runaway
-    * bound: hitting it without convergence throws rather than silently
-    * returning partial labels.
+    * long dup chain would exhaust the bound. The sum rides each pass's own
+    * checkpoint job ([[graft.core.Iterate]]). [[ResolveMaxPasses]] is a
+    * runaway bound: hitting it without convergence throws rather than
+    * silently returning partial labels.
     */
-  def resolveKeepMin(pairs: DataFrame, maxIterations: Int = 50): DataFrame = {
+  def resolveKeepMin(pairs: DataFrame): DataFrame = {
     val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
       .unionByName(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
       .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
+    val labels0 = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
-      .localCheckpoint()
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val s = df.agg(sum(col("label").cast("decimal(38,0)"))).head.getDecimal(0)
-      if (s == null) java.math.BigDecimal.ZERO else s // empty pair set
-    }
-    var prevSum = labelSum(labels)
-    var converged = false
-    var iters = 0
-    while (!converged && iters < maxIterations) {
+    val passes = graft.core.Iterate(labels0, ResolveMaxPasses,
+        Seq(sum(col("label").cast("decimal(38,0)")))) { (labels, _, _) =>
       val prop = edges.join(labels, edges("dst") === labels("id"))
         .select(edges("src").as("id"), col("label"))
       val hop = labels.unionByName(prop)
@@ -970,19 +966,12 @@ object Dedup {
       // hits; coalesce only guards the theoretical miss. label2 <= label,
       // so monotone decrease — and the sum-based convergence test — hold.
       val jump = hop.select(col("id").as("jid"), col("label").as("jlabel"))
-      // localCheckpoint truncates lineage: each iteration references the
-      // previous labels several times, so without it the plan doubles per hop
-      labels = hop.join(jump, hop("label") === jump("jid"), "left")
+      hop.join(jump, hop("label") === jump("jid"), "left")
         .select(hop("id"), coalesce(col("jlabel"), hop("label")).as("label"))
-        .localCheckpoint()
-      val s = labelSum(labels)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      iters += 1
     }
-    require(converged,
-      s"resolveKeepMin did not converge within $maxIterations iterations")
-    labels
+    require(passes.fixpoint,
+      s"resolveKeepMin did not converge within $ResolveMaxPasses iterations")
+    passes.last
   }
 
   /** Candidate→verify: LSH candidate pairs re-scored with TRUE shingle

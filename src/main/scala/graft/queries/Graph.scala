@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Iterate
 import graft.core.Tables._
 
 /** Graph analytics over the trade graph (SURVEY.md §2 "Graph analytics").
@@ -100,8 +101,8 @@ object Graph {
     * shortest paths: each iteration relaxes dist(v) = min(dist(v),
     * min_{u→v} dist(u)+1) with one join + one aggregate, so [[BfsHops]]
     * iterations is a fixed plan (no driver-side convergence loop — the
-    * pagerank/resolve ops show the converging variant). Unreached nodes
-    * report −1.
+    * k-core, graph-search and resolver loops stop at their fixpoints).
+    * Unreached nodes report −1.
     */
   def shortestPath(s: SparkSession, d: String): DataFrame = {
     val verts = nation(s, d).select(col("n_nationkey").as("id"), col("n_name"))
@@ -210,23 +211,16 @@ object Graph {
       .localCheckpoint()
     val edges = rawEdges(s, d).localCheckpoint()
     val r0 = verts.select(col("id"), lit(Scale).as("r"))
-    val rN = (1 to Iters).foldLeft(r0) { (ranks, _) =>
+    val rN = Iterate(r0, Iters) { (ranks, _, _) =>
       val contrib = edges
         .join(ranks.withColumnRenamed("id", "src"), "src")
         .select(col("dst").as("id"), expr("r div deg").as("c"))
         .groupBy(col("id")).agg(sum(col("c")).as("c"))
-      // checkpoint each iteration's (vertex-sized) rank relation: folding
-      // all three iterations into ONE tree duplicates the edge scan, and
-      // the dedup re-aliasing loses its preserved partitioning (the edge
-      // side then re-exchanges per iteration); a cut tree references the
-      // edge RDD once per job, so its partitioning is always reused —
-      // the same per-iteration materialization Pregel-style loops do
       verts.select(col("id")).join(contrib, Seq("id"), "left")
         .select(col("id"),
           (lit(Scale * 15 / 100) +
             expr("(85 * coalesce(c, CAST(0 AS BIGINT))) div 100")).as("r"))
-        .localCheckpoint()
-    }
+    }.last
     verts.join(rN, "id")
       .select(col("id"), col("kind"), col("r").as("rank_scaled"))
       .orderBy("id")
@@ -260,33 +254,24 @@ object Graph {
     * Scale shape per round: one edges⋈labels hash join + ONE
     * (src, label)-keyed count (map-side partial — hub fan-in combines
     * before the shuffle) + one per-src argmax window over ≤ degree-many
-    * label rows; the label relation is vertex-sized and localCheckpointed
-    * per round like the PageRank loop, so edge data crosses the network
-    * once per iteration.
+    * label rows; the label relation is vertex-sized and each round is an
+    * [[Iterate]] checkpoint, so edge data crosses the network once per
+    * iteration.
     */
   /** The thresholded undirected customer–supplier graph label propagation
     * runs on (both edge directions present) — extracted so
     * [[modularity]] scores communities over EXACTLY the same edge set.
     */
-  private def lpUnd(s: SparkSession, d: String): DataFrame = {
-    val pairs = lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
-      .join(orders(s, d).select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-      .agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= CcMinTrades)
+  private def lpUnd(s: SparkSession, d: String): DataFrame =
     // explode-mirror (see cosim): one threshold-agg pass, both directions.
-    // No distinct (guide §2.4, round r14): pairs is keyed by (c, s) — one
-    // row per group — and c (even) ≠ s (odd), so neither direction can
-    // collide with the other or with a different pair's mirror; the old
-    // .distinct() re-shuffled the whole edge set once more before the
-    // checkpoint for nothing.
-    pairs.select(explode(array(
-        struct(col("c").as("src"), col("s").as("dst")),
-        struct(col("s").as("src"), col("c").as("dst")))).as("e"))
+    // No distinct: the pairs are distinct and u (max) ≠ v (min), so
+    // neither direction can collide with the other or with a different
+    // pair's mirror.
+    tradePairEdges(s, d, CcMinTrades).select(explode(array(
+        struct(col("u").as("src"), col("v").as("dst")),
+        struct(col("v").as("src"), col("u").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .localCheckpoint()
-  }
 
   def labelProp(s: SparkSession, d: String): DataFrame =
     lpaLabels(s, d).orderBy("id")
@@ -305,7 +290,7 @@ object Graph {
       val und = lpUnd(s, d)
       val l0 = und.select(col("src").as("id")).distinct()
         .withColumn("label", col("id")).localCheckpoint()
-      (1 to LpaRounds).foldLeft(l0) { (labels, _) =>
+      Iterate(l0, LpaRounds) { (labels, _, _) =>
         val votes = und
           .join(labels.select(col("id").as("dst"), col("label")), "dst")
           .groupBy(col("src"), col("label")).agg(count(lit(1)).as("n"))
@@ -314,8 +299,7 @@ object Graph {
         votes.withColumn("rn", row_number().over(byVotes))
           .filter(col("rn") === 1)
           .select(col("src").as("id"), col("label"))
-          .localCheckpoint()
-      }
+      }.last
     }
 
   /** Newman–Girvan modularity of the label-propagation communities — the
@@ -364,7 +348,8 @@ object Graph {
   /** Alternating large-star/small-star rounds; measured convergence on the
     * thresholded graph is ≤ 4 rounds at every sf (sf0.01 needs exactly 4)
     * and a converged star edge set is a fixpoint of both operators, so the
-    * fifth round is pure safety margin.
+    * fifth round is pure safety margin. The count stays fixed: an exact
+    * "no edge moved" test would cost a join against the previous round.
     */
   val CcRounds = 5
 
@@ -382,32 +367,20 @@ object Graph {
     * Scale shapes: every step is a key-grouped aggregate or a
     * co-partitioned join on the current edge set (never a cross product);
     * the neighborhood minimum is a partial-agged min, so hub fan-in
-    * combines map-side; each round's edge set is localCheckpointed — the
-    * per-iteration tree cut of [[pagerankRaw]] — so a round's plan
-    * references one RDD, not the whole prior chain. Determinism: every
-    * relation is a distinct SET of integer pairs; no floats anywhere.
+    * combines map-side; each round's edge set is an [[Iterate]]
+    * checkpoint, so a round's plan references one RDD, not the whole prior
+    * chain. Determinism: every relation is a distinct SET of integer
+    * pairs; no floats anywhere.
     *
     * Output: one row per engaged vertex (id, kind, component label = the
     * component's minimum vertex id, component size).
     */
   def ccRaw(s: SparkSession, d: String): DataFrame = {
-    val pairs = lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
-      .join(orders(s, d).select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-      .agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= CcMinTrades)
-    // no distinct: pairs is keyed by (c, s) — one row per group — and
-    // c (even) can never equal s (odd), so (greatest, least) is injective
-    // on the group keys; the old .distinct() was a full extra exchange +
-    // aggregate on an already-distinct set (guide §2.4, round r14)
-    val e0 = pairs
-      .select(greatest(col("c"), col("s")).as("u"), least(col("c"), col("s")).as("v"))
-      .localCheckpoint()
+    val e0 = tradePairEdges(s, d, CcMinTrades).localCheckpoint()
     // the engaged vertex domain, pinned BEFORE the rounds mutate the edges
     val verts = e0.select(col("u")).unionAll(e0.select(col("v").as("u")))
       .distinct().localCheckpoint()
-    val stars = (1 to CcRounds).foldLeft(e0) { (e, _) =>
+    val stars = Iterate(e0, CcRounds) { (e, _, _) =>
       // large-star: symmetric neighborhoods; larger neighbors re-hang on
       // the neighborhood minimum
       // no distinct on the mirror (guide §2.4, round r14): every round's
@@ -432,8 +405,7 @@ object Graph {
         .unionAll(ms.select(col("u"), col("m")))
         .filter(col("u") =!= col("m"))
         .select(col("u"), col("m").as("v")).distinct()
-        .localCheckpoint()
-    }
+    }.last
     val lab = stars.select(col("u"), col("v").as("lbl"))
     val labeled = verts.join(lab, Seq("u"), "left")
       .select(col("u").as("id"),
@@ -456,16 +428,15 @@ object Graph {
     */
   val KcoreMinTrades = 2
 
-  /** Peeling rounds. Measured convergence on the repeat-trade graph is ≤ 4
-    * rounds at every sf (sf0.1 needs exactly 4; the spec asserts one more
-    * round is a fixpoint), so rounds 5-6 are safety margin, same policy as
-    * [[CcRounds]].
+  /** Runaway bound on peeling rounds. [[kcoreEdges]] stops at the
+    * fixpoint, which the repeat-trade graph reaches within 4 rounds at
+    * every sf (sf0.1 needs exactly 4, confirmed by a fifth equal round).
     */
   val KcoreRounds = 6
 
   /** Trade graph thresholded at `minTrades` lineitems per pair: canonical
-    * (u = max, v = min) distinct integer pairs — [[ccRaw]]'s derivation
-    * with the threshold as a parameter.
+    * (u = max, v = min) distinct integer pairs — the base edge set of
+    * [[ccRaw]], [[labelProp]] and [[kcore]].
     */
   private def tradePairEdges(s: SparkSession, d: String, minTrades: Int): DataFrame =
     lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
@@ -503,8 +474,8 @@ object Graph {
     * combined, so hub fan-in never concentrates) plus TWO semi-joins on the
     * edge relation, all keyed on vertex id; edges are distinct integer
     * pairs, so counts are degrees and every round is engine-deterministic
-    * set algebra. Each round's (shrinking) edge set is localCheckpointed —
-    * the per-iteration tree cut of [[pagerankRaw]].
+    * set algebra. Each round's (shrinking) edge set is an [[Iterate]]
+    * checkpoint.
     *
     * Output: one row per k-core vertex (id, kind, core_deg = its degree
     * inside the core), ordered by id. Dense-subgraph extraction is the
@@ -512,19 +483,18 @@ object Graph {
     * entities form a tightly-interlocked cluster" before more expensive
     * community detection.
     */
-  /** The fully-peeled k-core edge set (exposed so the spec can assert one
-    * further peel is a no-op — i.e. [[KcoreRounds]] rounds reach the true
-    * fixpoint, not an arbitrary prefix).
+  /** The peeling rounds; `.last` is the k-core edge set. A peel only
+    * removes edges, so a round whose edge count did not fall left the set
+    * unchanged and every later round is the identity: the loop stops there
+    * (exposed so the spec can check the stop against a fixed-count fold).
     */
-  def kcoreEdges(s: SparkSession, d: String): DataFrame = {
+  def kcoreEdges(s: SparkSession, d: String): Iterate.Rounds = {
     val e0 = tradePairEdges(s, d, KcoreMinTrades).localCheckpoint()
-    (1 to KcoreRounds).foldLeft(e0) { (e, _) =>
-      kcorePeel(e, KcoreK).localCheckpoint()
-    }
+    Iterate(e0, KcoreRounds, Seq(count(lit(1))))((e, _, _) => kcorePeel(e, KcoreK))
   }
 
   def kcore(s: SparkSession, d: String): DataFrame = {
-    val eN = kcoreEdges(s, d)
+    val eN = kcoreEdges(s, d).last
     val sym = eN.select(explode(array(col("u"), col("v"))).as("u"))
     sym.groupBy(col("u")).agg(count(lit(1)).as("core_deg"))
       .select(col("u").as("id"),

@@ -712,8 +712,7 @@ object Text {
     * sequential left-to-right scan — "aaaa" merges at positions {0, 2},
     * never the overlapping {0, 1}. All arithmetic is integer (counts and
     * positions); the oracle unrolls the identical six steps in SQL.
-    * Per-step symbol relations are localCheckpointed like the LPA rounds
-    * to cut the 6-deep window+join lineage.
+    * Each step is one [[graft.core.Iterate]] round.
     */
   def bpeTrain(s: SparkSession, d: String): DataFrame =
     bpeMerges(s, d).orderBy("step")
@@ -755,39 +754,41 @@ object Text {
         col("word").substr(col("i"), lit(1)).as("sym"))
       .localCheckpoint()
     val wOrd = Window.partitionBy("word").orderBy("pos")
-    val (symFinal, steps) = (1 to BpeMerges)
-      .foldLeft((sym0, List.empty[DataFrame])) { case ((syms, acc), step) =>
-        val adj = syms.withColumn("nxt", lead(col("sym"), 1).over(wOrd))
-        val best = adj.filter(col("nxt").isNotNull)
-          .groupBy(col("sym").as("lft"), col("nxt").as("rgt"))
-          .agg(sum(col("freq")).as("pair_count"))
-          .orderBy(col("pair_count").desc, col("lft"), col("rgt")).limit(1)
-        val cand = adj
-          .join(broadcast(best), col("sym") === col("lft") &&
-            col("nxt") === col("rgt"))
-          .select(col("word"), col("pos"))
-        // greedy left-to-right: odd ranks within consecutive-candidate runs
-        val sel = cand
-          .withColumn("grp", col("pos") - row_number().over(wOrd))
-          .withColumn("rr",
-            row_number().over(Window.partitionBy("word", "grp").orderBy("pos")))
-          .filter(col("rr") % 2 === 1).select(col("word"), col("pos"))
-        val merged = adj
-          .join(sel.withColumn("hit", lit(1)), Seq("word", "pos"), "left")
-          .join(sel.select(col("word"), (col("pos") + 1).as("pos"),
-            lit(1).as("consumed")), Seq("word", "pos"), "left")
-          .filter(col("consumed").isNull)
-          .select(col("word"), col("freq"), col("pos"),
-            when(col("hit").isNotNull, concat(col("sym"), col("nxt")))
-              .otherwise(col("sym")).as("sym"))
-          .select(col("word"), col("freq"),
-            (row_number().over(wOrd) - 1).as("pos"), col("sym"))
-          .localCheckpoint()
-        val stepRow = best.select(lit(step).as("step"), col("lft"), col("rgt"),
-          concat(col("lft"), col("rgt")).as("merged"), col("pair_count"))
-        (merged, stepRow :: acc)
-      }
-    (symFinal, steps.reverse)
+    def adjOf(syms: DataFrame) = syms.withColumn("nxt", lead(col("sym"), 1).over(wOrd))
+    def bestOf(adj: DataFrame) = adj.filter(col("nxt").isNotNull)
+      .groupBy(col("sym").as("lft"), col("nxt").as("rgt"))
+      .agg(sum(col("freq")).as("pair_count"))
+      .orderBy(col("pair_count").desc, col("lft"), col("rgt")).limit(1)
+    val rounds = graft.core.Iterate(sym0, BpeMerges) { (syms, _, _) =>
+      val adj = adjOf(syms)
+      val best = bestOf(adj)
+      val cand = adj
+        .join(broadcast(best), col("sym") === col("lft") &&
+          col("nxt") === col("rgt"))
+        .select(col("word"), col("pos"))
+      // greedy left-to-right: odd ranks within consecutive-candidate runs
+      val sel = cand
+        .withColumn("grp", col("pos") - row_number().over(wOrd))
+        .withColumn("rr",
+          row_number().over(Window.partitionBy("word", "grp").orderBy("pos")))
+        .filter(col("rr") % 2 === 1).select(col("word"), col("pos"))
+      adj
+        .join(sel.withColumn("hit", lit(1)), Seq("word", "pos"), "left")
+        .join(sel.select(col("word"), (col("pos") + 1).as("pos"),
+          lit(1).as("consumed")), Seq("word", "pos"), "left")
+        .filter(col("consumed").isNull)
+        .select(col("word"), col("freq"), col("pos"),
+          when(col("hit").isNotNull, concat(col("sym"), col("nxt")))
+            .otherwise(col("sym")).as("sym"))
+        .select(col("word"), col("freq"),
+          (row_number().over(wOrd) - 1).as("pos"), col("sym"))
+    }
+    // step i merged the best pair of the symbols round i started from
+    val steps = rounds.states.init.zipWithIndex.map { case (syms, i) =>
+      bestOf(adjOf(syms)).select(lit(i + 1).as("step"), col("lft"), col("rgt"),
+        concat(col("lft"), col("rgt")).as("merged"), col("pair_count"))
+    }
+    (rounds.last, steps.toList)
   }
 
   /** Train→apply closure for the BPE loop: score the corpus with the

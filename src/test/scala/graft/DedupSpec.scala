@@ -87,8 +87,11 @@ class DedupSpec extends AnyFunSuite {
     // keep going until labels stop moving) plus isolated pair 100-101
     val chain = (1L until 9L).map(i => (i, i + 1))
     val pairs = (chain :+ (100L, 101L)).toDF("a_id", "b_id")
-    val labels = Dedup.resolveKeepMin(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (resolved, jobs) = TestSpark.jobsDuring(Dedup.resolveKeepMin(pairs))
+    val labels = resolved.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the convergence sum rides each pass's checkpoint job: no separate
+    // aggregate per pass
+    assert(jobs == 18, s"resolveKeepMin ran $jobs Spark jobs")
     val expected = (1L to 9L).map(_ -> 1L).toMap ++ Map(100L -> 100L, 101L -> 100L)
     assert(labels == expected)
   }

@@ -190,9 +190,17 @@ class GraphSpec extends AnyFunSuite {
     // every surviving vertex meets the core threshold — the defining property
     assert(rows.forall(_._3 >= Graph.KcoreK))
     assert(rows.forall(r => (r._1 % 2 == 0) == (r._2 == "c")))
-    // KcoreRounds reaches the true fixpoint: one further peel is a no-op
-    val eN = Graph.kcoreEdges(spark, sf)
+    // the loop stops at the true fixpoint, before the runaway bound: one
+    // further peel is a no-op, and the edges equal a fixed-count fold's
+    val rounds = Graph.kcoreEdges(spark, sf)
+    val eN = rounds.last
+    assert(rounds.fixpoint && rounds.states.length - 1 < Graph.KcoreRounds,
+      s"stopped after ${rounds.states.length - 1} rounds")
     assert(Graph.kcorePeel(eN, Graph.KcoreK).count() == eN.count())
+    val fixed = (1 to Graph.KcoreRounds).foldLeft(rounds.states.head)(
+      (e, _) => Graph.kcorePeel(e, Graph.KcoreK).localCheckpoint())
+    def edgeSet(e: org.apache.spark.sql.DataFrame) = e.collect().map(_.toSeq).toSet
+    assert(edgeSet(eN) == edgeSet(fixed))
     val again = Graph.queries("graph_kcore")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     assert(rows.sameElements(again)) // determinism
