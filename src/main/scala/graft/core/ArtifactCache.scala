@@ -14,9 +14,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the whole bench suite spent rebuilding one identical graph.
   *
   * Keying: md5 of (logical tag + parameter string + a FINGERPRINT of every
-  * input path: file names, lengths, mtimes). Regenerated testdata changes
+  * input path: file names, lengths, mtimes + the same fingerprint of the
+  * running code's classes directory or jar). Regenerated testdata changes
   * the fingerprint and invalidates the entry — no stale reads across
-  * rounds. The build is fully deterministic (left-folded dots, id
+  * rounds — and so does a rebuilt builder, since the cache root outlives
+  * a checkout. The build is fully deterministic (left-folded dots, id
   * tie-breaks), so a cache hit is value-identical to a rebuild by
   * construction; doubles round-trip bit-exactly through parquet.
   *
@@ -66,6 +68,12 @@ object ArtifactCache {
     f.delete(): Unit
   }
 
+  /** Fingerprint of the running code: the classes directory or jar this
+    * class loaded from, walked once per JVM.
+    */
+  private lazy val codeFingerprint: String = md5hex(fingerprint(
+    new File(getClass.getProtectionDomain.getCodeSource.getLocation.toURI).getPath))
+
   private def cacheRoot: File =
     new File(sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_artifacts")
 
@@ -74,10 +82,16 @@ object ArtifactCache {
     * the cache bypassed the builder's DataFrame is returned as-is.
     */
   def getOrBuild(s: SparkSession, tag: String, params: String,
-                 inputPaths: Seq[String])(build: => DataFrame): DataFrame = {
+                 inputPaths: Seq[String])(build: => DataFrame): DataFrame =
+    getOrBuildAs(codeFingerprint, s, tag, params, inputPaths)(build)
+
+  /** [[getOrBuild]] keyed under the code fingerprint `code`. */
+  private[graft] def getOrBuildAs(code: String, s: SparkSession, tag: String,
+                                  params: String, inputPaths: Seq[String])(
+      build: => DataFrame): DataFrame = {
     if (!enabled) return build
     val key = md5hex(
-      (tag +: params +: inputPaths.map(p => s"$p=${fingerprint(p)}"))
+      (tag +: params +: code +: inputPaths.map(p => s"$p=${fingerprint(p)}"))
         .mkString("\u0000"))
     val target = new File(cacheRoot, key)
     val done = new File(target, "_SUCCESS")

@@ -1376,13 +1376,8 @@ object Ingest {
       afterFiles.count(_.getName.startsWith("_dv-"))
     val keys = afterFiles
       .filter(f => f.getName.startsWith("_eq-") && f.getName.endsWith(".parquet"))
-      .map { f =>
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f.getPath),
-            new org.apache.hadoop.conf.Configuration()))
-        try rd.getRecordCount finally rd.close()
-      }.sum
+      .map(f => graft.sources.v2.StagedScan.withFooter(f.getPath)(_.getRecordCount))
+      .sum
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt)): Unit
     val res = (touched.toLong, keys)
     eqProbeMemo.put(d, res): Unit

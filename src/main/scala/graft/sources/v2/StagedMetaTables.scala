@@ -268,10 +268,7 @@ private[v2] case class MetaReaderFactory(kind: String, partSpec: Seq[PartField])
             else StagedParquet.readDvs(new Path(p.files.head._1).getParent)
           val conf = StagedScan.freshConf()
           p.files.map { case (path, len) =>
-            val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                new Path(path), conf))
-            val rows = try fr.getRecordCount finally fr.close()
+            val rows = StagedScan.withFooter(path, conf)(_.getRecordCount)
             val name = new Path(path).getName
             val deleted = dvs.getOrElse(name, Nil).map(r => r._2 - r._1).sum
             (name, len, rows - deleted, deleted)

@@ -6,21 +6,20 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
-import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.api.WriteSupport
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.api.{Binary, RecordConsumer}
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type => PType, Types => PTypes}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.hadoop.ParquetOutputFormat
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
-import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -44,9 +43,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * The task-level protocol is the classic two-phase file commit:
   *  - each [[StagedParquetDataWriter]] writes its partition to
-  *    `_tmp-<token>-` prefixed parquet files (via a hand-rolled
-  *    [[InternalRowWriteSupport]] — public parquet-hadoop API, no Spark
-  *    internals) and renames them to their final names only in task
+  *    `_tmp-<token>-` prefixed parquet files (through Spark's own parquet
+  *    writer, prepared once per write on the driver — the same encoder as
+  *    compaction and copy-on-write rewrites, so every file of a table is
+  *    encoded one way) and renames them to their final names only in task
   *    commit(); `token` is the write's queryId, embedded in BOTH the temp
   *    prefix and the final file name, so two applications appending to the
   *    same table can never clobber each other's files (their task-id
@@ -208,26 +208,32 @@ object StagedParquet {
     // one side only), push the union of values instead of falling back to
     // a shuffle — required for day-partitioned SPJ over unaligned ranges
     s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-    // Spark's parquet writer defaults to INT96 timestamps (Impala-era
-    // compat); the staged sink writes INT64 micros, and the V2 reader's
-    // converters expect them — every Spark-writer rewrite in this
-    // catalog's orbit (COW, compaction) must match the sink's encoding
-    s.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    s.conf.set(MicrosTimestamps._1, MicrosTimestamps._2)
   }
 
-  /** Run `body` with the Spark parquet writer emitting INT64-micros
-    * timestamps (the staged sink's own encoding), restoring the session
-    * conf after. COW/compaction rewrites go through Spark's writer, whose
-    * INT96 default the V2 reader deliberately does not decode on the hot
-    * path — without this a rewritten table's timestamp columns would
-    * throw on the next V2 read ([[FlatRowReadSupport]] keeps an INT96
-    * fallback for externally-written files, but the engine's own
-    * rewrites must produce canonical files, not rely on it).
+  /** The one writer setting every staged-table file is encoded under:
+    * INT64 UTC-micros timestamps, the encoding [[FlatRowReadSupport]]
+    * decodes on its hot path (Spark's default is INT96, Impala-era
+    * compat). The sink's prepared writer
+    * ([[StagedParquetWriterFactory.prepare]]), the catalog session
+    * ([[ensureCatalog]]) and [[withMicrosTimestamps]] all take it from
+    * here.
     */
-  private[v2] def withMicrosTimestamps[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.parquet.outputTimestampType"
+  private[v2] val MicrosTimestamps =
+    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"
+
+  /** Run `body` with the session's parquet writer under
+    * [[MicrosTimestamps]], restoring the session conf after. Compaction
+    * and copy-on-write rewrites write through `DataFrameWriter` on the
+    * session; without this a rewritten table's timestamp columns would be
+    * INT96 ([[FlatRowReadSupport]] keeps an INT96 fallback for
+    * externally-written files, but the engine's own rewrites must produce
+    * canonical files, not rely on it).
+    */
+  private[graft] def withMicrosTimestamps[T](s: SparkSession)(body: => T): T = {
+    val (key, micros) = MicrosTimestamps
     val prev = try Some(s.conf.get(key)) catch { case _: Throwable => None }
-    s.conf.set(key, "TIMESTAMP_MICROS")
+    s.conf.set(key, micros)
     try body finally prev match {
       case Some(v) => s.conf.set(key, v)
       case None    => s.conf.unset(key)
@@ -3796,20 +3802,14 @@ class StagedParquetBatchWrite(targetDir: String, promoteTo: Option[String],
   protected val token: String = StagedParquetWriterFactory.sanitize(queryId)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
+    val factory = StagedParquetWriterFactory.prepare(targetDir, schema, partSpec, token)
     // the write root is created ONCE, driver-side, before any task launches;
     // task writers treat a missing root as "this write was aborted" instead
     // of mkdirs-ing it back into existence (the resurrection race a driver
     // abort would otherwise lose against dying tasks)
     val p = new Path(targetDir)
     fs(p).mkdirs(p): Unit
-    // row-group size resolved DRIVER-side (task threads may not see an
-    // active session) and shipped in the factory; parquet default when
-    // unset. Smaller groups = finer row-group splits on read, at footer
-    // metadata cost — a tuning knob, not a correctness one.
-    val rowGroupBytes: Option[Long] =
-      try Some(SparkSession.active.conf.get("graft.staged.rowgroup.bytes").toLong)
-      catch { case _: Throwable => None }
-    StagedParquetWriterFactory(targetDir, schema, partSpec, token, rowGroupBytes)
+    factory
   }
 
   private def isStagingTarget: Boolean =
@@ -3959,20 +3959,18 @@ class StagedStreamingWrite(prodDir: String, schema: StructType,
   private def cursorPath(p: Path): Path = new Path(p, s"_stream-$qid.txt")
 
   override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
-    val p = new Path(prodDir)
-    fs(p).mkdirs(p): Unit
-    val rowGroupBytes: Option[Long] =
-      try Some(SparkSession.active.conf.get("graft.staged.rowgroup.bytes").toLong)
-      catch { case _: Throwable => None }
+      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
     // narrow-epoch key collection: (ordinal, type, per-task share)
     val keyShare = upsertKey.filterNot(_ => upsertEq).map { k =>
       val parts = math.max(1, info.numPartitions)
       (schema.fieldIndex(k), schema(k).dataType,
         ((keyInMax(SparkSession.active) + parts - 1) / parts).max(1))
     }
-    StagedStreamingWriterFactory(prodDir, schema, partSpec,
-      s"${qid.take(8)}$runNonce", rowGroupBytes, keyShare)
+    val factory = StagedParquetWriterFactory.prepare(prodDir, schema, partSpec,
+      s"${qid.take(8)}$runNonce", keyShare)
+    val p = new Path(prodDir)
+    fs(p).mkdirs(p): Unit
+    factory
   }
 
   private def keyInMax(s: SparkSession): Int =
@@ -4131,21 +4129,6 @@ class StagedStreamingWrite(prodDir: String, schema: StructType,
   }
 }
 
-/** @param keyShare upsert mode: (key ordinal, key type, per-task share of
-  *        keyInMax) — each writer reports its distinct keys up to the share
-  */
-case class StagedStreamingWriterFactory(targetDir: String, schema: StructType,
-                                        partSpec: Seq[PartField],
-                                        tokenBase: String,
-                                        rowGroupBytes: Option[Long],
-                                        keyShare: Option[(Int, DataType, Int)] = None)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] =
-    new StagedParquetDataWriter(targetDir, partitionId, taskId, schema,
-      partSpec, s"${tokenBase}e$epochId", rowGroupBytes, keyShare)
-}
-
 /** Dynamic partition overwrite: data stages under `stagingDir`, and commit
   * swaps ONLY the partition directories that received rows (per-partition
   * [[StagedParquet.swapDirs]] — each swap is an atomic rename pair;
@@ -4200,13 +4183,24 @@ class DynamicOverwriteBatchWrite(stagingDir: String, prodDir: String,
     deleteStaging(stagingDir) // staging only; prod untouched
 }
 
-case class StagedParquetWriterFactory(targetDir: String, schema: StructType,
-                                      partSpec: Seq[PartField], token: String,
-                                      rowGroupBytes: Option[Long] = None)
-    extends DataWriterFactory {
+/** The task-side factory of every staged V2 write, batch and streaming:
+  * `parquet` is Spark's own parquet writer, prepared once per write on the
+  * driver ([[StagedParquetWriterFactory.prepare]]) into `conf`. A
+  * streaming epoch's writers append `e<epoch>` to `token`.
+  * @param keyShare upsert mode: (key ordinal, key type, per-task share of
+  *        keyInMax) — each writer reports its distinct keys up to the share
+  */
+private[v2] case class StagedParquetWriterFactory(
+    targetDir: String, schema: StructType, partSpec: Seq[PartField],
+    token: String, parquet: OutputWriterFactory,
+    conf: StagedParquet.SerializableHadoopConf,
+    keyShare: Option[(Int, DataType, Int)])
+    extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new StagedParquetDataWriter(targetDir, partitionId, taskId, schema,
-      partSpec, token, rowGroupBytes)
+    new StagedParquetDataWriter(this, partitionId, taskId, token)
+  override def createWriter(partitionId: Int, taskId: Long,
+                            epochId: Long): DataWriter[InternalRow] =
+    new StagedParquetDataWriter(this, partitionId, taskId, s"${token}e$epochId")
 }
 
 object StagedParquetWriterFactory {
@@ -4219,6 +4213,43 @@ object StagedParquetWriterFactory {
       case "" => java.util.UUID.randomUUID.toString.replace("-", "").take(12)
       case t  => t
     }
+
+  /** Driver side, once per write, before any task launches. First the
+    * gate: the write accepts exactly the stored column types the V2 scan
+    * decodes ([[FlatRowReadSupport.converterFor]]) — Spark's encoder
+    * would also write e.g. tinyint or decimal(38,0), leaving files no
+    * staged read can open. Then Spark's parquet writer is prepared for
+    * the data columns (identity-partition columns live in the directory
+    * names) with snappy — the `.snappy.parquet` file names promise it —
+    * [[StagedParquet.MicrosTimestamps]], and `graft.staged.rowgroup.bytes`
+    * as the row-group size when set (smaller groups = finer row-group
+    * splits on read, at footer metadata cost). The session's Hadoop conf,
+    * `spark.hadoop.*` settings included, reaches the task writers.
+    */
+  private[v2] def prepare(targetDir: String, schema: StructType,
+                          partSpec: Seq[PartField], token: String,
+                          keyShare: Option[(Int, DataType, Int)] = None): StagedParquetWriterFactory = {
+    val dataSchema = StructType(PartSpec.dataFields(schema, partSpec).map(_._1))
+    dataSchema.foreach { f =>
+      try FlatRowReadSupport.converterFor(f.dataType, _ => ()): Unit
+      catch { case e: UnsupportedOperationException =>
+        throw new UnsupportedOperationException(
+          s"staged table $targetDir: column ${f.name} has type " +
+            s"${f.dataType.sql}, which staged tables cannot store", e)
+      }
+    }
+    val session = SparkSession.active
+    val sqlConf = session.sessionState.conf.clone()
+    sqlConf.setConfString(StagedParquet.MicrosTimestamps._1,
+      StagedParquet.MicrosTimestamps._2)
+    val job = Job.getInstance(session.sessionState.newHadoopConf())
+    val parquet = ParquetUtils.prepareWrite(sqlConf, job, dataSchema,
+      new ParquetOptions(Map("compression" -> "snappy"), sqlConf))
+    session.conf.getOption("graft.staged.rowgroup.bytes").foreach(n =>
+      job.getConfiguration.setLong(ParquetOutputFormat.BLOCK_SIZE, n.toLong))
+    StagedParquetWriterFactory(targetDir, schema, partSpec, token, parquet,
+      new StagedParquet.SerializableHadoopConf(job.getConfiguration), keyShare)
+  }
 }
 
 /** One task's writer: parquet rows stream to `<part-dir>/_tmp-<token>-<file>`;
@@ -4231,18 +4262,20 @@ object StagedParquetWriterFactory {
   * epoch) the commit message also carries the distinct non-null keys
   * written, or None once they exceed the share.
   */
-class StagedParquetDataWriter(targetDir: String, partitionId: Int, taskId: Long,
-                              schema: StructType, partSpec: Seq[PartField],
-                              token: String,
-                              rowGroupBytes: Option[Long] = None,
-                              keyShare: Option[(Int, DataType, Int)] = None)
+private[v2] class StagedParquetDataWriter(factory: StagedParquetWriterFactory,
+                                          partitionId: Int, taskId: Long,
+                                          token: String)
     extends DataWriter[InternalRow] {
+  import factory.{keyShare, targetDir}
   private val fileName = f"part-$partitionId%05d-$taskId-$token.snappy.parquet"
-  private val conf = new Configuration()
-  private val dataFields = PartSpec.dataFields(schema, partSpec)
-  private val partEvals = PartSpec.partEvaluators(schema, partSpec)
+  private val conf = factory.conf.value
+  private val dataFields = PartSpec.dataFields(factory.schema, factory.partSpec)
+  private val dataSchema = StructType(dataFields.map(_._1))
+  // the incoming row's stored columns, in file order
+  private val dataRow = ProjectingInternalRow(dataSchema, dataFields.map(_._2))
+  private val partEvals = PartSpec.partEvaluators(factory.schema, factory.partSpec)
   // partition rel-dir ("" when unpartitioned) -> open writer on its tmp file
-  private val writers = mutable.LinkedHashMap.empty[String, ParquetWriter[InternalRow]]
+  private val writers = mutable.LinkedHashMap.empty[String, OutputWriter]
   private var rows = 0L
   private var closed = false
   // None once the distinct keys exceed the share
@@ -4255,7 +4288,7 @@ class StagedParquetDataWriter(targetDir: String, partitionId: Int, taskId: Long,
   private def tmpPath(dir: String): Path =
     new Path(if (dir.isEmpty) targetDir else s"$targetDir/$dir", s"_tmp-$token-$fileName")
 
-  private def openWriter(dir: String): ParquetWriter[InternalRow] = {
+  private def openWriter(dir: String): OutputWriter = {
     val tmp = tmpPath(dir)
     val f = tmp.getFileSystem(conf)
     // the root was created driver-side before task launch; if it is GONE
@@ -4265,13 +4298,8 @@ class StagedParquetDataWriter(targetDir: String, partitionId: Int, taskId: Long,
         s"write root $targetDir vanished — write aborted")
     f.mkdirs(tmp.getParent): Unit
     f.delete(tmp, false): Unit // stale attempt leftovers
-    try {
-      val b = new InternalRowParquetBuilder(tmp, dataFields)
-        .withConf(conf)
-        .withCompressionCodec(CompressionCodecName.SNAPPY)
-      rowGroupBytes.foreach(n => b.withRowGroupSize(n): Unit)
-      b.build()
-    }
+    try factory.parquet.newInstance(tmp.toString, dataSchema,
+      new TaskAttemptContextImpl(conf, new TaskAttemptID()))
     catch { case e: Throwable =>
       // a kill-interrupted create must not strand a file the task's abort
       // doesn't know about (the writer never reached the map)
@@ -4282,7 +4310,8 @@ class StagedParquetDataWriter(targetDir: String, partitionId: Int, taskId: Long,
 
   override def write(row: InternalRow): Unit = {
     val dir = relDir(row)
-    writers.getOrElseUpdate(dir, openWriter(dir)).write(row)
+    dataRow.project(row)
+    writers.getOrElseUpdate(dir, openWriter(dir)).write(dataRow)
     rows += 1
     for (ks <- keys; (ord, dt, share) <- keyShare if !row.isNullAt(ord)) {
       val k = row.get(ord, dt)
@@ -4329,195 +4358,4 @@ class StagedParquetDataWriter(targetDir: String, partitionId: Int, taskId: Long,
 
   override def close(): Unit =
     if (!closed) { closed = true; writers.values.foreach(_.close()) }
-}
-
-// ---------------------------------------------------------------------------
-// InternalRow -> parquet, via public parquet-hadoop API only
-// ---------------------------------------------------------------------------
-
-private[v2] class InternalRowParquetBuilder(path: Path,
-                                            fields: Seq[(StructField, Int)])
-    extends ParquetWriter.Builder[InternalRow, InternalRowParquetBuilder](path) {
-  override def self(): InternalRowParquetBuilder = this
-  override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
-    new InternalRowWriteSupport(fields)
-}
-
-/** WriteSupport over the engine's scalar types plus arrays, structs and
-  * maps. The physical encodings mirror Spark's own non-legacy writer so a
-  * read-back through spark.read.parquet reproduces the logical types
-  * bit-for-bit: strings as UTF8 binary, decimals ≤9/≤18 digits as
-  * annotated INT32/INT64 unscaled values, timestamps as UTC-adjusted
-  * INT64 micros, dates as INT32 days, arrays as 3-level LIST groups
-  * (`list` repetition wrapper, `element` field), structs as plain groups,
-  * maps as MAP `key_value` groups with required keys.
-  *
-  * `fields` carries (field, ordinal-in-incoming-row) so identity-partition
-  * columns can be dropped from the file while the writer still reads them
-  * from the unprojected row.
-  */
-private[v2] class InternalRowWriteSupport(fields: Seq[(StructField, Int)])
-    extends WriteSupport[InternalRow] {
-
-  private var consumer: RecordConsumer = _
-
-  private def toParquet(name: String, dt: DataType,
-                        rep: PType.Repetition = PType.Repetition.OPTIONAL): PType = {
-    def prim(t: PrimitiveTypeName, ann: LogicalTypeAnnotation = null): PType = {
-      val b = PTypes.primitive(t, rep)
-      (if (ann == null) b else b.as(ann)).named(name)
-    }
-    dt match {
-      case BooleanType => prim(PrimitiveTypeName.BOOLEAN)
-      case IntegerType => prim(PrimitiveTypeName.INT32)
-      case LongType    => prim(PrimitiveTypeName.INT64)
-      case FloatType   => prim(PrimitiveTypeName.FLOAT)
-      case DoubleType  => prim(PrimitiveTypeName.DOUBLE)
-      case StringType  => prim(PrimitiveTypeName.BINARY, LogicalTypeAnnotation.stringType())
-      case BinaryType  => prim(PrimitiveTypeName.BINARY)
-      case d: DecimalType if d.precision <= 9 =>
-        prim(PrimitiveTypeName.INT32, LogicalTypeAnnotation.decimalType(d.scale, d.precision))
-      case d: DecimalType if d.precision <= 18 =>
-        prim(PrimitiveTypeName.INT64, LogicalTypeAnnotation.decimalType(d.scale, d.precision))
-      case DateType => prim(PrimitiveTypeName.INT32, LogicalTypeAnnotation.dateType())
-      case TimestampType => prim(PrimitiveTypeName.INT64,
-        LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS))
-      case ArrayType(el, _) =>
-        PTypes.buildGroup(rep).as(LogicalTypeAnnotation.listType())
-          .addField(PTypes.repeatedGroup()
-            .addField(toParquet("element", el)).named("list"))
-          .named(name)
-      case StructType(fs) =>
-        fs.foldLeft(PTypes.buildGroup(rep)) { (g, f) =>
-          g.addField(toParquet(f.name, f.dataType))
-        }.named(name)
-      case MapType(kt, vt, _) =>
-        PTypes.buildGroup(rep).as(LogicalTypeAnnotation.mapType())
-          .addField(PTypes.repeatedGroup()
-            // keys are REQUIRED in the parquet MAP spec
-            .addField(toParquet("key", kt, PType.Repetition.REQUIRED))
-            .addField(toParquet("value", vt)).named("key_value"))
-          .named(name)
-      case other => throw new UnsupportedOperationException(
-        s"StagedParquet sink: unsupported column type $other for $name")
-    }
-  }
-
-  private val parquetType: MessageType = {
-    val b = PTypes.buildMessage()
-    fields.foreach { case (f, _) => b.addField(toParquet(f.name, f.dataType)) }
-    b.named("spark_schema")
-  }
-
-  /** Emitter for a VALUE of type `dt` read from getters at ordinal i —
-    * resolved once per schema, recursive for nested types.
-    */
-  private def emitterOf(dt: DataType): (SpecializedGetters, Int) => Unit = dt match {
-    case BooleanType => (r, i) => consumer.addBoolean(r.getBoolean(i))
-    case IntegerType | DateType => (r, i) => consumer.addInteger(r.getInt(i))
-    case LongType | TimestampType => (r, i) => consumer.addLong(r.getLong(i))
-    case FloatType => (r, i) => consumer.addFloat(r.getFloat(i))
-    case DoubleType => (r, i) => consumer.addDouble(r.getDouble(i))
-    case StringType => (r, i) =>
-      consumer.addBinary(Binary.fromReusedByteArray(r.getUTF8String(i).getBytes))
-    case BinaryType => (r, i) =>
-      consumer.addBinary(Binary.fromReusedByteArray(r.getBinary(i)))
-    case d: DecimalType if d.precision <= 9 => (r, i) =>
-      consumer.addInteger(r.getDecimal(i, d.precision, d.scale).toUnscaledLong.toInt)
-    case d: DecimalType if d.precision <= 18 => (r, i) =>
-      consumer.addLong(r.getDecimal(i, d.precision, d.scale).toUnscaledLong)
-    case ArrayType(el, _) =>
-      val elEmit = emitterOf(el)
-      (r, i) => {
-        val arr = r.getArray(i)
-        consumer.startGroup()
-        if (arr.numElements() > 0) {
-          consumer.startField("list", 0)
-          var j = 0
-          while (j < arr.numElements()) {
-            consumer.startGroup()
-            if (!arr.isNullAt(j)) {
-              consumer.startField("element", 0)
-              elEmit(arr, j)
-              consumer.endField("element", 0)
-            }
-            consumer.endGroup()
-            j += 1
-          }
-          consumer.endField("list", 0)
-        }
-        consumer.endGroup()
-      }
-    case st: StructType =>
-      val fs = st.fields
-      val emits = fs.map(f => emitterOf(f.dataType))
-      (r, i) => {
-        val row = r.getStruct(i, fs.length)
-        consumer.startGroup()
-        var j = 0
-        while (j < fs.length) {
-          if (!row.isNullAt(j)) {
-            consumer.startField(fs(j).name, j)
-            emits(j)(row, j)
-            consumer.endField(fs(j).name, j)
-          }
-          j += 1
-        }
-        consumer.endGroup()
-      }
-    case MapType(kt, vt, _) =>
-      val kEmit = emitterOf(kt)
-      val vEmit = emitterOf(vt)
-      (r, i) => {
-        val m = r.getMap(i)
-        consumer.startGroup()
-        if (m.numElements() > 0) {
-          consumer.startField("key_value", 0)
-          val ks = m.keyArray(); val vs = m.valueArray()
-          var j = 0
-          while (j < m.numElements()) {
-            consumer.startGroup()
-            consumer.startField("key", 0)
-            kEmit(ks, j)
-            consumer.endField("key", 0)
-            if (!vs.isNullAt(j)) {
-              consumer.startField("value", 1)
-              vEmit(vs, j)
-              consumer.endField("value", 1)
-            }
-            consumer.endGroup()
-            j += 1
-          }
-          consumer.endField("key_value", 0)
-        }
-        consumer.endGroup()
-      }
-    case other => throw new UnsupportedOperationException(other.toString)
-  }
-
-  // per-field (emitter, row-ordinal) resolved once, not per row
-  private val emitters: Array[((SpecializedGetters, Int) => Unit, Int)] =
-    fields.map { case (f, ord) => (emitterOf(f.dataType), ord) }.toArray
-
-  override def init(conf: Configuration): WriteSupport.WriteContext =
-    new WriteSupport.WriteContext(parquetType,
-      Map.empty[String, String].asJava)
-
-  override def prepareForWrite(rc: RecordConsumer): Unit = consumer = rc
-
-  override def write(row: InternalRow): Unit = {
-    consumer.startMessage()
-    var i = 0
-    while (i < emitters.length) {
-      val (emit, ord) = emitters(i)
-      if (!row.isNullAt(ord)) {
-        val n = fields(i)._1.name
-        consumer.startField(n, i)
-        emit(row, ord)
-        consumer.endField(n, i)
-      }
-      i += 1
-    }
-    consumer.endMessage()
-  }
 }

@@ -4,8 +4,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
 import org.apache.parquet.schema.MessageType
 
@@ -56,10 +57,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * conservative rule as above: only a provably-empty group is skipped.
   *
   * Decoding goes through a hand-rolled parquet-hadoop [[ReadSupport]]
-  * (public API only, mirroring the sink's WriteSupport) covering the full
-  * sink type surface — scalars plus the nested encodings (3-level LIST,
-  * struct groups, MAP key_value groups), so every table the sink writes
-  * reads back through the scan with SPJ/pruning/DPP intact. One input
+  * (public API only) that decodes Spark's own non-legacy parquet encoding,
+  * the one every staged-table file is written in — scalars plus the nested
+  * encodings (3-level LIST, struct groups, MAP key_value groups), so every
+  * table the sink writes reads back through the scan with SPJ/pruning/DPP
+  * intact. It stays hand-rolled because the scan needs each row's file
+  * position (deletion vectors, equality-delete probes). One input
   * split per FILE with the partition values attached — and per ROW GROUP
   * within large files — so an unpartitioned or hot-partition table reads
   * with real parallelism, and Spark's key-grouped planner re-groups
@@ -537,6 +540,15 @@ object StagedScan {
   private[graft] lazy val baseHadoopConf = new Configuration()
   private[graft] def freshConf(): Configuration = new Configuration(baseHadoopConf)
 
+  /** `f` over an open footer reader of the parquet file at `path`,
+    * closed after.
+    */
+  private[graft] def withFooter[T](path: String, conf: Configuration = freshConf())(
+      f: ParquetFileReader => T): T = {
+    val fr = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
+    try f(fr) finally fr.close()
+  }
+
   /** Byte ranges covering each row group of `file` (footer starting
     * positions; last range closes at the file length) with the group's
     * footer metadata: one range per row group, chosen so each group's
@@ -544,15 +556,10 @@ object StagedScan {
     * falls in exactly one range.
     */
   private[graft] def blockRanges(file: String, len: Long): Seq[(Long, Long, org.apache.parquet.hadoop.metadata.BlockMetaData)] = {
-    val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new Path(file), freshConf()))
-    try {
-      val blocks = fr.getFooter.getBlocks.asScala.toSeq
-      val starts = blocks.map(_.getStartingPos)
-      starts.zip(starts.drop(1) :+ len).zip(blocks)
-        .map { case ((s, e), b) => (s, e, b) }
-    } finally fr.close()
+    val blocks = withFooter(file)(_.getFooter.getBlocks.asScala.toSeq)
+    val starts = blocks.map(_.getStartingPos)
+    starts.zip(starts.drop(1) :+ len).zip(blocks)
+      .map { case ((s, e), b) => (s, e, b) }
   }
 
   /** Can any row of this row group satisfy every pushed data-column
@@ -748,10 +755,7 @@ case class StagedAggReaderFactory(schemaJson: String, partSpec: Seq[PartField],
         val acc = new Array[Any](funcs.length)
         val needStats = funcs.exists(_ != StagedAggScan.Cnt)
         for (file <- p.files) {
-          val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new Path(file), conf))
-          try {
+          StagedScan.withFooter(file, conf) { fr =>
             count += fr.getRecordCount
             if (needStats) {
               val blocks = fr.getFooter.getBlocks.asScala
@@ -778,7 +782,7 @@ case class StagedAggReaderFactory(schemaJson: String, partSpec: Seq[PartField],
                   }
               }
             }
-          } finally fr.close()
+          }
         }
         val groupVals = groups.map { g =>
           val gi = partSpec.indexWhere(_.name == g)
@@ -927,11 +931,8 @@ object StagedEqSets {
     loads.incrementAndGet(): Unit
     val p = new Path(path)
     val conf = StagedScan.freshConf()
-    val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-    val key =
-      try fr.getFooter.getFileMetaData.getSchema.getFields.get(0).getName
-      finally fr.close()
+    val key = StagedScan.withFooter(path, conf)(
+      _.getFooter.getFileMetaData.getSchema.getFields.get(0).getName)
     val field = tableSchema(key)
     val set = new java.util.HashSet[Any]()
     val reader = ParquetReader
@@ -1037,13 +1038,10 @@ class StagedPartitionReader(p: StagedInputPartition, schemaJson: String,
     if (reader != null) { reader.close(); reader = null }
     if (!fileIter.hasNext) false
     else if (dataFields.isEmpty) {
-      val f = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new Path(fileIter.next()), StagedScan.freshConf()))
       // a range split counts only its own row groups (midpoint rule —
       // the same criterion parquet-hadoop's range filter applies); DV'd
       // positions subtract per block so footer counts stay exact
-      try p.range match {
+      StagedScan.withFooter(fileIter.next())(f => p.range match {
         case None =>
           val n = f.getRecordCount
           pendingRows += n - StagedParquet.deletedWithin(p.dv, 0L, n)
@@ -1056,7 +1054,7 @@ class StagedPartitionReader(p: StagedInputPartition, schemaJson: String,
                 StagedParquet.deletedWithin(p.dv, off, off + b.getRowCount)
             off += b.getRowCount
           }
-      } finally f.close()
+      })
       true
     } else {
       val builder = ParquetReader
@@ -1102,20 +1100,21 @@ class StagedPartitionReader(p: StagedInputPartition, schemaJson: String,
 }
 
 // ---------------------------------------------------------------------------
-// parquet -> values, via public parquet-hadoop API only (read twin of
-// InternalRowWriteSupport)
+// parquet -> values, via public parquet-hadoop API only
 // ---------------------------------------------------------------------------
 
 /** Materializes each record as an Array[Any] in `requested` order using
   * Spark internal value representations (UTF8String, epoch-day ints, UTC
   * micros, Decimal, GenericArrayData / GenericInternalRow /
   * ArrayBasedMapData for nested types). Fields absent from the file
-  * (pre-evolution files) stay null. The nested converters are the exact
-  * read twins of the sink's encodings: 3-level LIST groups (`list`
-  * repetition wrapper, `element` field), plain struct groups, MAP
-  * `key_value` groups with required keys — so every table the staged sink
-  * can write reads back through the V2 scan (and keeps SPJ / pruning /
-  * DPP / agg pushdown), not just flat-scalar ones.
+  * (pre-evolution files) stay null. The nested converters decode Spark's
+  * non-legacy writer encodings: 3-level LIST groups (`list` repetition
+  * wrapper, `element` field), plain struct groups, MAP `key_value` groups
+  * with required keys — so every table the staged sink can write reads
+  * back through the V2 scan (and keeps SPJ / pruning / DPP / agg
+  * pushdown), not just flat-scalar ones. The types [[converterFor]]
+  * accepts are also the only ones a staged write accepts
+  * ([[StagedParquetWriterFactory.prepare]]).
   */
 private[v2] class FlatRowReadSupport(requested: Seq[StructField])
     extends ReadSupport[Array[Any]] {
@@ -1180,7 +1179,7 @@ private[v2] object FlatRowReadSupport {
   /** Converter for a VALUE of type `dt` delivering through `update` —
     * recursive for nested types. Parquet calls converters only on
     * NON-NULL values; absent optional fields keep whatever the enclosing
-    * start() reset their slot to (null), which is exactly the sink's
+    * start() reset their slot to (null), which is exactly parquet's
     * encoding of nulls.
     */
   private[v2] def converterFor(dt: DataType, update: Any => Unit): Converter = dt match {
@@ -1191,7 +1190,7 @@ private[v2] object FlatRowReadSupport {
     case LongType => new PrimitiveConverter {
       override def addLong(v: Long): Unit = update(v) }
     case TimestampType => new PrimitiveConverter {
-      // the sink writes INT64 UTC micros; addBinary is the INT96 fallback
+      // staged tables store INT64 UTC micros; addBinary is the INT96 fallback
       // for files a legacy Spark writer produced (12 bytes little-endian:
       // 8-byte nanos-of-day + 4-byte Julian day; 2440588 = epoch day 0)
       override def addLong(v: Long): Unit = update(v)

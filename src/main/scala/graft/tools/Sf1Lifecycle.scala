@@ -144,11 +144,14 @@ object Sf1Lifecycle {
       drain()
       require(StagedParquet.upsertWideEpochs.get() == wide0 + 1,
         "the wave must take the WIDE (distributed keySet) form")
+      // each double is cast to decimal BEFORE summing: a double sum's last
+      // cent depends on the order the partial sums merge in, and the two
+      // sides read different layouts
       val expect = orders.agg(sum(when($"o_orderkey" % 5 === 0,
-          col("o_totalprice") * 2).otherwise(col("o_totalprice")))
-        .cast("decimal(28,2)")).head().getDecimal(0)
-      val got = spark.table(dst).agg(sum(col("o_totalprice"))
-        .cast("decimal(28,2)")).head().getDecimal(0)
+          col("o_totalprice") * 2).otherwise(col("o_totalprice"))
+        .cast("decimal(38,10)"))).head().getDecimal(0)
+      val got = spark.table(dst).agg(sum(col("o_totalprice")
+        .cast("decimal(38,10)"))).head().getDecimal(0)
       require(spark.table(dst).count() == orders.count(), "key set must not grow")
       require(got.compareTo(expect) == 0, s"latest-per-key sum drifted: $got vs $expect")
       spark.conf.unset("graft.staged.upsert.keyInMax")

@@ -64,4 +64,17 @@ class ArtifactCacheEvictSpec extends AnyFunSuite {
     // restore the others' mtimes to keep the shared cache realistic
     entries.diff(refreshed).foreach(f => f.setLastModified(before(f)): Unit)
   }
+
+  test("an artifact published under one code fingerprint is rebuilt under another") {
+    import org.apache.spark.sql.functions._
+    var builds = 0
+    def get(code: String) = graft.core.ArtifactCache.getOrBuildAs(code, spark,
+      "evict_spec_code", "v1", Nil) { builds += 1; spark.range(0, 4).select(col("id")) }
+    val run = System.nanoTime
+    assert(get(s"code-a-$run").count() == 4)
+    assert(get(s"code-a-$run").count() == 4) // hit: same code
+    assert(builds == 1)
+    assert(get(s"code-b-$run").count() == 4) // changed code: rebuilt
+    assert(builds == 2)
+  }
 }

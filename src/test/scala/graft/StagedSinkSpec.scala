@@ -35,6 +35,9 @@ class StagedSinkSpec extends AnyFunSuite {
     val d = new java.io.File(prodDir(t), sub)
     Option(d.listFiles()).getOrElse(Array.empty).map(_.getName).toSet
   }
+  private def listFilesRec(dir: String): Set[String] =
+    org.apache.commons.io.FileUtils.listFiles(new java.io.File(dir), null, true)
+      .toArray.map(_.toString).toSet
   private def dropAll(t: String): Unit = {
     val parent = new java.io.File(s"$root/$ns")
     Option(parent.listFiles()).getOrElse(Array.empty)
@@ -330,6 +333,82 @@ class StagedSinkSpec extends AnyFunSuite {
     edge.writeTo(s"graft_staged.$ns.t12").createOrReplace()
     val eb = spark.read.parquet(prodDir("t12")).orderBy("id").collect()
     assert(eb.forall(r => r.getSeq[String](1).isEmpty && r.getMap[String, Int](2).isEmpty))
+  }
+
+  test("one encoder: the sink's files carry the parquet schema Spark's writer gives the same rows") {
+    dropAll("tenc")
+    // every type the V2 scan decodes, nested types, nulls at each level,
+    // and the non-nullable `id` (REQUIRED in both files)
+    val src = spark.range(0, 40).select(col("id"),
+      (col("id") % 2 === 0).as("b"),
+      col("id").cast("int").as("i"),
+      col("id").cast("float").as("f"),
+      (col("id") * 0.5).as("d"),
+      when(col("id") % 5 =!= 0, concat(lit("s"), col("id"))).as("s"),
+      col("id").cast("string").cast("binary").as("bin"),
+      col("id").cast("decimal(9,2)").as("dec9"),
+      col("id").cast("decimal(18,4)").as("dec18"),
+      date_add(to_date(lit("2024-01-01")), col("id").cast("int")).as("dt"),
+      to_timestamp(lit("2024-01-01 00:00:00")).as("ts"),
+      when(col("id") % 3 =!= 0, array(col("id"), lit(null).cast("bigint"))).as("arr"),
+      when(col("id") % 4 =!= 0, struct(col("id").as("a"),
+        lit(null).cast("string").as("n"), array(col("id").cast("int")).as("inner"))).as("st"),
+      when(col("id") % 6 =!= 0, map(concat(lit("k"), col("id")),
+        when(col("id") % 2 === 0, col("id")))).as("m"))
+      .repartition(1)
+    src.writeTo(s"graft_staged.$ns.tenc").createOrReplace()
+    val viaSpark = java.nio.file.Files.createTempDirectory("one_encoder").toString
+    graft.sources.v2.StagedParquet.withMicrosTimestamps(spark) {
+      src.write.mode("overwrite").parquet(viaSpark)
+    }
+    def schemaOf(dir: String) = {
+      val f = new java.io.File(dir).listFiles
+        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).head
+      graft.sources.v2.StagedScan.withFooter(f.getPath)(_.getFooter.getFileMetaData.getSchema)
+    }
+    val sink = schemaOf(prodDir("tenc"))
+    assert(sink == schemaOf(viaSpark), s"sink:\n$sink\nspark:\n${schemaOf(viaSpark)}")
+    assert(sink.getType(sink.getFieldIndex("id")).isRepetition(
+      org.apache.parquet.schema.Type.Repetition.REQUIRED))
+    // and the V2 scan decodes it back to the rows written
+    val back = spark.table(s"graft_staged.$ns.tenc").orderBy("id").collect()
+    assert(back.toSeq == src.orderBy("id").collect().toSeq)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(viaSpark))
+  }
+
+  test("a write of a type the V2 scan cannot decode fails before any task, table untouched") {
+    // a task that ran would fail on raise_error instead of the gate
+    val bad = spark.range(0, 20).select(col("id"),
+      when(col("id") >= 0, raise_error(lit("a write task ran")))
+        .cast("tinyint").as("tiny"),
+      col("id").cast("decimal(38,0)").as("wide"))
+    def rejected(t: String)(write: String => Unit): Unit = {
+      val tbl = s"graft_staged.$ns.$t"
+      val dir = prodDir(t)
+      def state = (spark.table(tbl).orderBy("id").collect().toSeq,
+        listFilesRec(dir), graft.sources.v2.StagedParquet.currentVersion(dir))
+      val before = state
+      val e = intercept[Exception](write(tbl))
+      val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" / ")
+      assert(msg.contains("column tiny has type TINYINT"), msg)
+      assert(!msg.contains("a write task ran"), msg)
+      assert(state == before)
+      assert(listDirs(t) == Seq(t), s"staging leftovers: ${listDirs(t)}")
+    }
+    // a replace of a populated table
+    dropAll("tgate1")
+    spark.range(0, 20).select(col("id"), lit("v1").as("tag"))
+      .writeTo(s"graft_staged.$ns.tgate1").createOrReplace()
+    rejected("tgate1")(bad.writeTo(_).createOrReplace())
+    // an append to a table declared with those types; decimal(38,0) alone
+    // is refused too
+    dropAll("tgate2")
+    spark.sql(s"CREATE TABLE graft_staged.$ns.tgate2 (${bad.schema.toDDL})")
+    rejected("tgate2")(bad.writeTo(_).append())
+    val e = intercept[Exception](bad.drop("tiny").writeTo(s"graft_staged.$ns.tgate1").createOrReplace())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("column wide has type DECIMAL(38,0)")))
   }
 
   test("staged MERGE upserts atomically; a crash mid-merge leaves prod pre-merge") {
