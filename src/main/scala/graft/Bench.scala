@@ -24,6 +24,12 @@ import org.apache.spark.sql.SparkSession
   * blocks pile up in the block manager and mid-bench queries pay their GC
   * bill — each measurement must see the same clean executor state.
   *
+  * Every timed run goes through `graft.tools.Leg.run`, and the artifact
+  * carries each leg's best-sample record under `layers` (probe rows and
+  * the sf1 section carry theirs): jobs, job wall, driver gap, stages,
+  * tasks, shuffle bytes, and a failed leg's cause. The compact stdout line
+  * keeps seconds only.
+  *
   * The artifact is TIMEOUT-SURVIVABLE (r9 VERDICT #2): after every
   * completed query/probe/sf1 leg the JSON is atomically re-published
   * (write-temp + rename) with the completed prefix and `"partial":true`,
@@ -41,10 +47,15 @@ import org.apache.spark.sql.SparkSession
   * that not happen.
   */
 object Bench {
-  private def clearState(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-  }
+  import graft.tools.Leg
+  import graft.tools.Leg.{fmt, obj}
+
+  private def rmTree(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+        .iterator().asScala.foreach(q => java.nio.file.Files.deleteIfExists(q): Unit)
+    }
 
   /** Drop the staged-table trees a data dir's queries accumulate under
     * /tmp/graft_stage (V2 lifecycle tables retain every replaced prod
@@ -55,19 +66,12 @@ object Bench {
     * BETWEEN queries is free: the next run rebuilds exactly what it times
     * anyway, minus the retain-old-version step it no longer needs.
     */
-  private def cleanStaging(dataDirs: String*): Unit = {
-    def rmTree(p: java.nio.file.Path): Unit =
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(q => java.nio.file.Files.deleteIfExists(q): Unit)
-      }
+  private def cleanStaging(dataDirs: String*): Unit =
     for (d <- dataDirs; hex = java.lang.Integer.toHexString(d.hashCode)) {
       rmTree(java.nio.file.Paths.get("/tmp/graft_stage/v2", "x" + hex))
       rmTree(java.nio.file.Paths.get("/tmp/graft_stage/v2", "probe" + hex))
       rmTree(java.nio.file.Paths.get("/tmp/graft_stage", hex))
     }
-  }
 
   /** One-time start-of-run sweep of the SHARED `sh*` fixture namespaces
     * (r12 ADVICE): they are keyed by a fingerprint of the source parquet, so
@@ -85,22 +89,15 @@ object Bench {
     val v2 = new java.io.File("/tmp/graft_stage/v2")
     Option(v2.listFiles).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("sh"))
-      .foreach(f => cleanStagingTree(f.toPath))
+      .foreach(f => rmTree(f.toPath))
   }
-
-  private def cleanStagingTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(q => java.nio.file.Files.deleteIfExists(q): Unit)
-    }
 
   /** Best-of-N sample count (N timed runs after one warm-up). Default 5:
     * the driver's re-run previously defaulted to 3 while the committed
     * artifact used 5, and the protocol mismatch alone read as a 1.39×
     * "regression" (r7 VERDICT #2) — both paths now sample identically.
     */
-  private val bestOf: Int =
+  private[graft] val bestOf: Int =
     sys.env.get("SPARK_GRAFT_BENCH_BEST").map(_.trim.toInt).filter(_ > 0).getOrElse(5)
 
   /** Wall-clock budget (seconds). When the elapsed clock runs hot against
@@ -146,34 +143,18 @@ object Bench {
       case _                              => n
     }
 
-  /** 4-dp seconds for the JSON artifact: full nanosecond noise in ~220
-    * values doubles the line size for no information, and the driver
-    * tail-parses the artifact out of a bounded stdout window.
-    */
-  private def fmt(v: Double): Double = math.round(v * 10000.0) / 10000.0
+  /** `num / den` to 2 dp, or -1 when either side failed. */
+  private def ratio(num: Double, den: Double): Double =
+    if (den > 0 && num >= 0) math.round(num / den * 100.0) / 100.0 else -1.0
 
-  /** Best-of-N timing of one query: warm run, then N timed runs keeping
-    * the minimum. Returns (best seconds or -1 on failure, output rows of
-    * the last successful run — the free scale signal every probe row
-    * reports).
+  /** `"queries":{name:seconds},"layers":{name:record}` over completed legs,
+    * and their total seconds (a failed leg's -1 stays visible per leg but
+    * never deflates the total).
     */
-  private def timeQuery(spark: SparkSession, q: String, d: String,
-                        samples: Int = bestOf): (Double, Long) = {
-    var rows = -1L
-    def run(): Boolean =
-      try { rows = SparkEntry.queries(q)(spark, d).count(); true }
-      catch { case _: Throwable => false }
-    run(); clearState(spark) // warm
-    val times = (1 to samples).map { _ =>
-      val t0 = System.nanoTime()
-      val ok = run()
-      val t = (System.nanoTime() - t0) / 1e9
-      clearState(spark)
-      if (ok) t else -1.0
-    }
-    // a failed run poisons the whole sample: report BOTH sentinels so the
-    // probe JSON never shows a stale positive row count next to time=-1
-    if (times.exists(_ < 0)) (-1.0, -1L) else (times.min, rows)
+  private def legsJson(done: Seq[(String, Leg.Record)]): (Double, String) = {
+    val secs = done.map { case (k, r) => k -> fmt(r.seconds) }
+    (fmt(secs.map(_._2).filter(_ >= 0).sum),
+      s""""queries":${obj(secs)},"layers":${obj(done.map { case (k, r) => k -> r.json })}""")
   }
 
   /** Atomically (write-temp + rename) publish `json` to `path`: a reader —
@@ -190,6 +171,42 @@ object Bench {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
+
+  /** The sf1 section's heavy queries, timed on the full 10x corpus;
+    * `tools/sf1check.sh` hash-checks the same set (its `HEAVY`, kept equal
+    * by `BenchBudgetSpec`). The heavy-12 plus the round-8/9 lifecycle
+    * heavies (staged V2 write path etl_rename_replace, streaming dedup index
+    * stream_dedup_index) plus the round-9 V2 READ trio (VERDICT r9 #8): the
+    * read path's pruning arithmetic verified at a second scale.
+    */
+  private[graft] val Sf1Heavies: Seq[String] = Seq(
+    "ann_nndescent", "ann_graph_search", "ann_recall_gsearch",
+    "ann_recall_nnd", "graph_pagerank_raw", "graph_cosim", "graph_cc_raw",
+    "dedup_minhash_lsh", "dedup_winnowing", "etl_profile",
+    "etl_cdc_apply", "q18_running_total",
+    "etl_rename_replace", "stream_dedup_index",
+    "etl_spj_join", "etl_stats_scan", "etl_days_prune",
+    // round-10 lifecycle rungs at 10x: compaction, DELETE, bucket SPJ,
+    // UPDATE, streaming tail
+    "etl_compact_files", "etl_delete_rows", "etl_bucket_join",
+    "etl_update_rows", "stream_table_tail",
+    // round-11 additions at 10x: runtime day pruning (dim-driven day
+    // closure — the opened-splits == dim-days invariant needs a second
+    // scale point), streaming write ingest, time travel, merge-on-read
+    // deletes, and the change data feed
+    "etl_days_dpp", "stream_table_ingest", "etl_time_travel",
+    "etl_delete_vectors", "etl_change_feed", "etl_sort_order",
+    // round-11 rungs at 10x: partition-spec evolution, the migrate
+    // settle pass, and the inspection relations
+    "etl_partition_evolve", "etl_layout_migrate",
+    "etl_meta_partitions", "etl_meta_files", "etl_meta_history",
+    "stream_table_upsert",
+    // round-13: the equality-delete upsert at 10x (epoch cost must
+    // stay ∝ the wave while the destination grows), then the
+    // wall-clock/refs/WAP/rollback lifecycle rungs
+    "stream_table_upsert_eq",
+    "etl_time_travel_ts", "etl_table_tag", "etl_wap_publish",
+    "etl_rollback")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -232,17 +249,18 @@ object Bench {
       s""","budget":{"limit_s":$b,"degraded_best3":$nBest3,"degraded_best1":$nBest1}"""
     }.getOrElse("")
 
-    val resultsBuf = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    // extraBuf accumulates completed probe/sf1 JSON fragments so partial
-    // flushes carry everything finished so far
+    // one timed leg: a query's best-of-n record at data dir d
+    def leg(q: String, d: String, n: Int): Leg.Record =
+      Leg.run(spark, n)(SparkEntry.queries(q)(spark, d).count())
+    val resultsBuf = scala.collection.mutable.ArrayBuffer.empty[(String, Leg.Record)]
+    // every flush carries the completed probe/sf1 fragments (`extra`) so a
+    // partial artifact holds everything finished so far
     def flushPartial(extra: String): Unit = {
-      val done = resultsBuf.sortBy(_._1)
-      val qsJ = done.map { case (k, v) => s"\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      val tot = fmt(done.map(_._2).filter(_ >= 0).sum)
-      val nf = done.count(_._2 < 0)
+      val done = resultsBuf.sortBy(_._1).toSeq
+      val (tot, legs) = legsJson(done)
+      val nf = done.count(_._2.seconds < 0)
       publish(outPath,
-        s"""{"metric":"total","value":$tot,"unit":"sec","failed":$nf,"partial":true,"completed":${done.length},"of":${selected.length},"queries":$qsJ$extra$budgetJson,"sf":"$sfDir"}""")
+        s"""{"metric":"total","value":$tot,"unit":"sec","failed":$nf,"partial":true,"completed":${done.length},"of":${selected.length},$legs$extra$budgetJson,"sf":"$sfDir"}""")
     }
     // SECTION ORDER (r12 VERDICT #1b): probes, then sf1, then the per-query
     // legs. The probe work-ratios and the sf1 anchor are the run's
@@ -276,13 +294,22 @@ object Bench {
       // probes measure the BUILD's scaling — a cached NND graph would
       // report a constant read and defeat the probe's purpose. The finally
       // below guarantees the flag is restored even if a probe throws
-      // outside timeQuery's per-run catch, so the sf1 section (which
+      // outside Leg.run's per-run catch, so the sf1 section (which
       // measures the cache ON) can never silently run with it off.
       graft.core.ArtifactCache.bypass = true
       val probeRows = scala.collection.mutable.ArrayBuffer.empty[String]
       def flushProbes(): Unit = flushPartial(
         s""","scale_probes":[${probeRows.mkString(",")}]""")
       try {
+      // one probe row: both scales' seconds, rows and records, plus `work`
+      def probeRow(q: String, base: Leg.Record, scaled: Leg.Record,
+                   work: String): String = {
+        val (baseSec, scaledSec) = (fmt(base.seconds), fmt(scaled.seconds))
+        val row = s"""{"query":"$q","factor":10,"base_sec":$baseSec,"scaled_sec":$scaledSec,"ratio":${ratio(scaledSec, baseSec)},"base_rows":${base.rows},"scaled_rows":${scaled.rows}$work,"layers":${obj(Seq("base" -> base.json, "scaled" -> scaled.json))}}"""
+        probeRows += row
+        flushProbes()
+        row
+      }
       def probeOf(q: String): String = {
         ensureAlive()
         // probes cap at best-of-2 by design: their certified metric is the
@@ -290,26 +317,17 @@ object Bench {
         // every sample shed from the heavy 10x legs buys wall back for
         // the sections whose numbers ARE the timings
         val n = math.min(2, nextSamples())
-        val (baseSec0, baseRows) = timeQuery(spark, q, sfDir, n)
-        val (scaledSec0, scaledRows) = timeQuery(spark, q, scaleDir, n)
-        val (baseSec, scaledSec) = (fmt(baseSec0), fmt(scaledSec0))
-        val ratio = if (baseSec > 0 && scaledSec > 0)
-          math.round(scaledSec / baseSec * 100.0) / 100.0 else -1.0
+        val (base, scaled) = (leg(q, sfDir, n), leg(q, scaleDir, n))
         def workOf(m: Map[String, (String, (org.apache.spark.sql.SparkSession, String) => Long)],
                    pfx: String): String =
           m.get(q).map { case (label, f) =>
             val wb = try f(spark, sfDir) catch { case _: Throwable => -1L }
             val ws = try f(spark, scaleDir) catch { case _: Throwable => -1L }
-            clearState(spark)
-            val wr = if (wb > 0 && ws >= 0)
-              math.round(ws.toDouble / wb * 100.0) / 100.0 else -1.0
-            s""","${pfx}metric":"$label","${pfx}base":$wb,"${pfx}scaled":$ws,"${pfx}ratio":$wr"""
+            Leg.clearState(spark)
+            s""","${pfx}metric":"$label","${pfx}base":$wb,"${pfx}scaled":$ws,"${pfx}ratio":${ratio(ws.toDouble, wb.toDouble)}"""
           }.getOrElse("")
-        val work = workOf(graft.tools.ProbeWork.counters, "work_") +
-          workOf(graft.tools.ProbeWork.counters2, "work2_")
-        val row = s"""{"query":"$q","factor":10,"base_sec":$baseSec,"scaled_sec":$scaledSec,"ratio":$ratio,"base_rows":$baseRows,"scaled_rows":$scaledRows$work}"""
-        probeRows += row
-        flushProbes()
+        val row = probeRow(q, base, scaled, workOf(graft.tools.ProbeWork.counters, "work_") +
+          workOf(graft.tools.ProbeWork.counters2, "work2_"))
         // each probe row's staging debris is dropped as soon as its work
         // counters have read it — r11's executor death came mid-probe with
         // the full 247-query surface's staged trees still on /tmp
@@ -343,27 +361,19 @@ object Bench {
         import org.apache.spark.sql.functions.col
         graft.sources.v2.StagedParquet.ensureCatalog(spark)
         val wrSamples = math.min(3, nextSamples())
-        def leg(d: String): (Double, Long, Long) = {
+        // the warm run makes every timed run a steady-state REPLACE; the
+        // record's rows and the bytes are read back from the committed table
+        def writeLeg(d: String): (Leg.Record, Long) = {
           val ns = "probe" + java.lang.Integer.toHexString(d.hashCode)
           val tbl = s"graft_staged.$ns.write_probe"
-          def run(): Boolean =
-            try {
-              graft.core.Tables.lineitem(spark, d)
-                .select(col("l_orderkey"), col("l_quantity"),
-                  col("l_extendedprice"))
-                .writeTo(tbl).createOrReplace()
-              true
-            } catch { case _: Throwable => false }
-          run(); clearState(spark) // warm: steady-state REPLACE from here on
-          val times = (1 to wrSamples).map { _ =>
-            val t0 = System.nanoTime()
-            val ok = run()
-            val t = (System.nanoTime() - t0) / 1e9
-            clearState(spark)
-            if (ok) t else -1.0
+          val rec = Leg.run(spark, wrSamples) {
+            graft.core.Tables.lineitem(spark, d)
+              .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
+              .writeTo(tbl).createOrReplace()
+            -1L
           }
           var rows = -1L; var bytes = -1L
-          if (times.forall(_ >= 0)) {
+          if (rec.seconds >= 0) {
             val dir = graft.sources.v2.StagedParquet.tableDir(spark, tbl)
             val p = new org.apache.hadoop.fs.Path(dir)
             val hfs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -375,22 +385,15 @@ object Bench {
                 if (!f.getPath.getName.startsWith("_")) bytes += f.getLen
               }
               rows = spark.read.parquet(dir).count()
-              clearState(spark)
+              Leg.clearState(spark)
             }
           }
-          (if (times.exists(_ < 0)) -1.0 else times.min, rows, bytes)
+          (rec.copy(rows = rows), bytes)
         }
-        val (bs, br, bb) = leg(sfDir)
-        val (ss, sr, sb) = leg(scaleDir)
-        val (baseSec, scaledSec) = (fmt(bs), fmt(ss))
-        val ratio = if (baseSec > 0 && scaledSec > 0)
-          math.round(scaledSec / baseSec * 100.0) / 100.0 else -1.0
-        val workRatio = if (bb > 0 && sb >= 0)
-          math.round(sb.toDouble / bb * 100.0) / 100.0 else -1.0
-        val row = s"""{"query":"v2_staged_write","factor":10,"base_sec":$baseSec,"scaled_sec":$scaledSec,"ratio":$ratio,"base_rows":$br,"scaled_rows":$sr,"work_metric":"bytes_written","work_base":$bb,"work_scaled":$sb,"work_ratio":$workRatio}"""
-        probeRows += row
-        flushProbes()
-        row
+        val (base, bb) = writeLeg(sfDir)
+        val (scaled, sb) = writeLeg(scaleDir)
+        probeRow("v2_staged_write", base, scaled,
+          s""","work_metric":"bytes_written","work_base":$bb,"work_scaled":$sb,"work_ratio":${ratio(sb.toDouble, bb.toDouble)}""")
       }
       // relational/ETL anchors: a second scale point for the heavy core so
       // super-linear regressions surface before a real cluster would.
@@ -428,53 +431,18 @@ object Bench {
     // semantics (amortized index builds) at a second real scale point, the
     // "2x of baseline" bar's missing anchor (VERDICT r6 next-round #3).
     val sf1Json = if (!runProbe) "" else {
-      // the heavy-12 plus the round-8/9 lifecycle heavies (staged V2 write
-      // path etl_rename_replace, streaming dedup index stream_dedup_index)
-      // plus the round-9 V2 READ trio (VERDICT r9 #8): the read path's
-      // pruning arithmetic verified at a second scale, not just sf0.1
-      val heavies = Seq(
-        "ann_nndescent", "ann_graph_search", "ann_recall_gsearch",
-        "ann_recall_nnd", "graph_pagerank_raw", "graph_cosim", "graph_cc_raw",
-        "dedup_minhash_lsh", "dedup_winnowing", "etl_profile",
-        "etl_cdc_apply", "q18_running_total",
-        "etl_rename_replace", "stream_dedup_index",
-        "etl_spj_join", "etl_stats_scan", "etl_days_prune",
-        // round-10 lifecycle rungs at 10x: compaction, DELETE, bucket SPJ,
-        // UPDATE, streaming tail (sf1check.sh hash-checks the same list)
-        "etl_compact_files", "etl_delete_rows", "etl_bucket_join",
-        "etl_update_rows", "stream_table_tail",
-        // round-11 additions at 10x: runtime day pruning (dim-driven day
-        // closure — the opened-splits == dim-days invariant needs a second
-        // scale point), streaming write ingest, time travel, merge-on-read
-        // deletes, and the change data feed
-        "etl_days_dpp", "stream_table_ingest", "etl_time_travel",
-        "etl_delete_vectors", "etl_change_feed", "etl_sort_order",
-        // round-11 rungs at 10x: partition-spec evolution, the migrate
-        // settle pass, and the inspection relations
-        "etl_partition_evolve", "etl_layout_migrate",
-        "etl_meta_partitions", "etl_meta_files", "etl_meta_history",
-        "stream_table_upsert",
-        // round-13: the equality-delete upsert at 10x (epoch cost must
-        // stay ∝ the wave while the destination grows), then the
-        // wall-clock/refs/WAP/rollback lifecycle rungs
-        "stream_table_upsert_eq",
-        "etl_time_travel_ts", "etl_table_tag", "etl_wap_publish",
-        "etl_rollback")
-      val timedBuf = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+      val timedBuf = scala.collection.mutable.ArrayBuffer.empty[(String, Leg.Record)]
       def sf1Fragment(): String = {
-        val qj = timedBuf.map { case (k, v) => s"\"" + k + "\":" + v }
-          .mkString("{", ",", "}")
-        val tot = fmt(timedBuf.map(_._2).filter(_ >= 0).sum)
-        s""","sf1":{"dir":"$scaleDir","factor":10,"total_sec":$tot,"queries":$qj}"""
+        val (tot, legs) = legsJson(timedBuf.toSeq)
+        s""","sf1":{"dir":"$scaleDir","factor":10,"total_sec":$tot,$legs}"""
       }
-      for (q <- heavies) {
+      for (q <- Sf1Heavies) {
         ensureAlive()
         // best-of-3 cap, like the probes: the sf1 anchor's job is the
         // second scale point, not noise-immunity — two fewer samples of
         // 35 10x heavies buy back several hundred wall seconds for the
         // arbiter's budget (r12 VERDICT #1)
-        timedBuf += q -> fmt(timeQuery(spark, q, scaleDir,
-          math.min(3, nextSamples()))._1)
+        timedBuf += q -> leg(q, scaleDir, math.min(3, nextSamples()))
         flushPartial(probeJson + sf1Fragment())
         // the sf1 lifecycle queries stage GENUINE 10× V2 tables (plus their
         // retained versions) per run — without per-query cleanup the tree
@@ -490,19 +458,15 @@ object Bench {
     // leg leaves an artifact whose only gap is the untimed leg suffix
     for (name <- selected) {
       ensureAlive()
-      resultsBuf += name -> fmt(timeQuery(spark, name, sfDir, nextSamples())._1)
+      resultsBuf += name -> leg(name, sfDir, nextSamples())
       flushPartial(probeJson + sf1Json)
       cleanStaging(sfDir)
     }
     val results = resultsBuf.sortBy(_._1).toSeq
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // -1 marks a failed query; keep it visible per-query but never let the
-    // sentinel deflate the total
-    val total = fmt(results.map(_._2).filter(_ >= 0).sum)
-    val nFailed = results.count(_._2 < 0)
+    val (total, legs) = legsJson(results)
+    val nFailed = results.count(_._2.seconds < 0)
 
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","failed":$nFailed,"queries":$qs$probeJson$sf1Json$budgetJson,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","failed":$nFailed,$legs$probeJson$sf1Json$budgetJson,"sf":"$sfDir"}"""
     // The driver keeps only the last few KB of sbt stdout and parses the
     // JSON line out of that tail. With ~200 queries the full line is >6 KB,
     // so for five rounds the driver recorded "parsed": null (r5 VERDICT's
@@ -517,8 +481,7 @@ object Bench {
       "ann_ivf", "text_tokens", "text_quality", "text_langid", "sample_dsir",
       "stream_window_agg", "etl_cdc_apply", "etl_profile",
       "graph_pagerank_raw", "mm_phash_dedup")
-    val qsHead = results.filter(r => headline(r._1))
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val qsHead = obj(results.collect { case (k, r) if headline(k) => k -> fmt(r.seconds) })
     val ratioRe = """"query":"([a-z0-9_]+)".*?"ratio":(-?[0-9.]+)""".r
     val probeHead =
       if (probeJson.isEmpty) ""

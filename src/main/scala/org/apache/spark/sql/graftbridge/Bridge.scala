@@ -39,6 +39,15 @@ object Bridge {
       : Option[org.apache.spark.sql.sources.Filter] =
     org.apache.spark.sql.internal.connector.PredicateUtils.toV1(p)
 
+  /** Block until the context's asynchronous listener bus has delivered
+    * every event posted so far (`private[spark]`
+    * `LiveListenerBus.waitUntilEmpty`; a `TimeoutException` after 10 s).
+    * Job, stage and SQL-execution events for an action that has returned
+    * are then in every `SparkListener` and `QueryExecutionListener`.
+    */
+  def drainListeners(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Register a function builder on an already-running session (for
     * environments that don't control session construction; the
     * `spark.sql.extensions=graft.plans.GraftExtensions` config path uses

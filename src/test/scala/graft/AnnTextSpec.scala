@@ -649,24 +649,13 @@ class AnnTextSpec extends AnyFunSuite {
   }
 
   test("graph search: the visited anti-join broadcasts only within the session threshold") {
-    import org.apache.spark.sql.execution.QueryExecution
     val key = "spark.sql.autoBroadcastJoinThreshold"
     def hopPlans(): (Seq[(Long, Int, Long, Double)], Seq[String]) = {
-      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-          if (f == "localCheckpoint") plans.add(qe.executedPlan.toString): Unit
-        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-      }
-      spark.listenerManager.register(listener)
-      try {
-        val rows = Ann.queries("ann_graph_search")(spark, sf).collect()
-          .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-          .toSeq.sortBy(r => (r._1, r._2))
-        TestSpark.settled(plans.size)
-        import scala.jdk.CollectionConverters._
-        (rows, plans.asScala.toSeq.filter(_.contains("LeftAnti")))
-      } finally spark.listenerManager.unregister(listener)
+      val (rows, plans) = TestSpark.plansDuring(Ann.queries("ann_graph_search")(spark, sf)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+        .toSeq.sortBy(r => (r._1, r._2)))
+      (rows, plans.collect { case ("localCheckpoint", qe) => qe.executedPlan.toString }
+        .filter(_.contains("LeftAnti")))
     }
     def broadcastsVisited(p: String) =
       p.linesIterator.exists(l => l.contains("BroadcastHashJoin") && l.contains("LeftAnti"))

@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench budget-degrade policy (r9 VERDICT #2): sample counts shed
   * monotonically as the elapsed clock runs hot against the budget, and a
-  * run with no budget never degrades. Pure function — no Spark needed.
+  * run with no budget never degrades. Also: the sf1 heavy list that the
+  * bench times is the one `tools/sf1check.sh` hash-checks. No Spark needed.
   */
 class BenchBudgetSpec extends AnyFunSuite {
 
@@ -32,5 +33,14 @@ class BenchBudgetSpec extends AnyFunSuite {
     val pts = Seq(0.0, 300.0, 650.0, 800.0, 900.0, 2000.0)
       .map(t => Bench.samplesFor(5, t, b))
     assert(pts == pts.sorted.reverse)
+  }
+
+  test("the sf1 heavy list is the one tools/sf1check.sh hash-checks") {
+    val script = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("tools/sf1check.sh")), "UTF-8")
+    val heavy = """(?m)^HEAVY="([^"]*)"""".r.findFirstMatchIn(script)
+      .map(_.group(1).split(",").toSeq).getOrElse(fail("no HEAVY= line"))
+    assert(heavy.distinct.length == heavy.length && heavy.toSet == Bench.Sf1Heavies.toSet,
+      s"only in sf1check.sh: ${heavy.diff(Bench.Sf1Heavies)}; only in Bench: ${Bench.Sf1Heavies.diff(heavy)}")
   }
 }

@@ -57,29 +57,13 @@ class StagedCompactSpec extends AnyFunSuite {
       .repartition(6) // 6 small files land in every one of the 8 dirs
       .writeTo(t).option("graft.write.distribute", "none")
       .partitionedBy(col("k")).createOrReplace()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val rep = StagedParquet.compact(spark, t)
-      assert(rep.length == 8 && rep.forall(_._3 == 1L), rep.toString)
-      var last = -1; var stable = 0
-      while (stable < 2) {
-        Thread.sleep(150)
-        val now = jobs.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      // the batched fold is one logical query; AQE materializes its
-      // broadcast + shuffle + write stages as separate JOBS, so the count
-      // is a small CONSTANT (4 here) independent of directory count — the
-      // old per-dir loop ran >= 8 for this fixture and O(dirs) in general
-      assert(jobs.get() <= 4,
-        s"8-dir compaction must run a constant job count, ran ${jobs.get()}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (rep, jobs) = TestSpark.jobsDuring(StagedParquet.compact(spark, t))
+    assert(rep.length == 8 && rep.forall(_._3 == 1L), rep.toString)
+    // the batched fold is one logical query; AQE materializes its
+    // broadcast + shuffle + write stages as separate JOBS, so the count
+    // is a small CONSTANT (4 here) independent of directory count — the
+    // old per-dir loop ran >= 8 for this fixture and O(dirs) in general
+    assert(jobs <= 4, s"8-dir compaction must run a constant job count, ran $jobs")
     val dir = StagedParquet.tableDir(spark, t)
     assert((0 to 7).forall(k => dataFiles(s"$dir/k=$k").length == 1))
     assert(spark.table(t).count() == 800L)

@@ -270,30 +270,12 @@ class StagedDeleteSpec extends AnyFunSuite {
     val t = tbl("d11")
     (0L until 800L).map(i => (i % 8, i, i * 1.0)).toDF("k", "id", "v")
       .writeTo(t).partitionedBy(col("k")).createOrReplace()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // v >= 10 is undecidable for every one of the 8 directories ->
-      // all 8 rewrite, but through ONE batched partitioned write
-      val rep = StagedParquet.deleteWhere(spark, t,
-        Seq(org.apache.spark.sql.sources.GreaterThanOrEqual("v", 10.0)))
-      assert(rep.length == 8 && rep.forall(_._2 == "rewritten"), rep.toString)
-      // listener delivery is async: poll until the count is stable
-      var last = -1
-      var stable = 0
-      while (stable < 2) {
-        Thread.sleep(150)
-        val now = jobs.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      assert(jobs.get() <= 2,
-        s"8-dir COW must batch into <=2 Spark jobs, ran ${jobs.get()}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // v >= 10 is undecidable for every one of the 8 directories ->
+    // all 8 rewrite, but through ONE batched partitioned write
+    val (rep, jobs) = TestSpark.jobsDuring(StagedParquet.deleteWhere(spark, t,
+      Seq(org.apache.spark.sql.sources.GreaterThanOrEqual("v", 10.0))))
+    assert(rep.length == 8 && rep.forall(_._2 == "rewritten"), rep.toString)
+    assert(jobs <= 2, s"8-dir COW must batch into <=2 Spark jobs, ran $jobs")
     assert(spark.table(t).count() == 10L)
     assert(spark.table(t).agg(max($"v")).as[Double].head() == 9.0)
   }

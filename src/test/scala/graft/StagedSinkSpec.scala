@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicReference
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The DataSource V2 staged write path: atomic createOrReplace through the
@@ -66,26 +63,11 @@ class StagedSinkSpec extends AnyFunSuite {
 
   test("the write plans as an ATOMIC replace through our BatchWrite") {
     dropAll("t2")
-    val captured = new AtomicReference[String]("")
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        captured.getAndUpdate(_ + qe.executedPlan.toString): Unit
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      spark.range(0, 50).select(col("id")).writeTo(s"graft_staged.$ns.t2")
-        .createOrReplace()
-      // listener delivery is async AND the inner (data-writing) plan can
-      // arrive before the outer atomic-replace one; poll for the outer
-      val deadline = System.nanoTime + 10000000000L
-      while (!captured.get().contains("AtomicReplaceTableAsSelect")
-          && System.nanoTime < deadline)
-        Thread.sleep(50)
-      val plan = captured.get()
-      // the atomic (staged-catalog) exec node, not the drop-then-create one
-      assert(plan.contains("AtomicReplaceTableAsSelect"), plan.take(1500))
-    } finally spark.listenerManager.unregister(listener)
+    val (_, plans) = TestSpark.plansDuring(spark.range(0, 50).select(col("id"))
+      .writeTo(s"graft_staged.$ns.t2").createOrReplace())
+    val plan = plans.map(_._2.executedPlan.toString).mkString
+    // the atomic (staged-catalog) exec node, not the drop-then-create one
+    assert(plan.contains("AtomicReplaceTableAsSelect"), plan.take(1500))
   }
 
   test("a write that fails mid-query leaves prod untouched (staging aborted)") {

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** Streaming UPSERT into staged tables (the `graft.upsert.key`
   * writeStream option — [[graft.sources.v2.StagedParquet]]
@@ -243,34 +242,23 @@ class StagedStreamUpsertSpec extends AnyFunSuite {
     snap.writeTo(src).createOrReplace()
     drain()
     val before = dataFiles(dstDir).keySet
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             ns: Long): Unit = plans.add(qe.executedPlan): Unit
-      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             e: Exception): Unit = ()
+    val (_, executions) = TestSpark.plansDuring {
+      snap.filter($"id" < 50L).withColumn("v", $"v" * 10).writeTo(src).append()
+      drain()
     }
+    val plans = executions.map(_._2.executedPlan)
     def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
       case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
       case q: QueryStageExec => nodes(q.plan)
       case o => o.children.flatMap(nodes)
     })
     // the find-positions plan: the DV writer over the (dir, file, pos) rows
-    def writers: Seq[MapPartitionsExec] = plans.asScala.toSeq.flatMap(nodes)
+    val writers = plans.flatMap(nodes)
       .collect { case m: MapPartitionsExec
         if nodes(m).exists(_.output.exists(_.name == "__pos")) => m }
-    spark.listenerManager.register(listener)
-    try {
-      snap.filter($"id" < 50L).withColumn("v", $"v" * 10).writeTo(src).append()
-      drain()
-      // execution events arrive asynchronously, in order: once the
-      // find-positions plan is seen, every earlier plan is too
-      val deadline = System.currentTimeMillis() + 30000L
-      while (writers.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
-    } finally spark.listenerManager.unregister(listener)
     val epochFiles = dataFiles(dstDir).keySet -- before
     assert(epochFiles.nonEmpty)
-    val readsOwn = plans.asScala.toSeq.flatMap(nodes).collect {
+    val readsOwn = plans.flatMap(nodes).collect {
       case sc: FileSourceScanExec => sc.relation.location.inputFiles.toSeq
         .map(p => new org.apache.hadoop.fs.Path(p).getName)
     }.flatten.filter(epochFiles)

@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 /** One shared local session for all suites (sbt forks one test JVM). */
 object TestSpark {
@@ -19,32 +23,27 @@ object TestSpark {
   }
   val sf: String = "/root/testdata/sf0.001"
 
-  /** Reads `probe` until asynchronous listener delivery has settled: the
-    * same value on three polls 150 ms apart.
-    */
-  def settled(probe: => Int): Int = {
-    var last = -1
-    var stable = 0
-    while (stable < 2) {
-      Thread.sleep(150)
-      val now = probe
-      if (now == last) stable += 1 else { stable = 0; last = now }
-    }
-    last
-  }
-
   /** `f`'s result and the number of Spark jobs started while it ran. */
   def jobsDuring[A](f: => A): (A, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
+    val (out, jobs) = graft.tools.Leg.observe(spark)(f)
+    (out, jobs.size)
+  }
+
+  /** `f`'s result and the (action name, execution) of every query that
+    * succeeded while it ran, read once the listener bus has drained.
+    */
+  def plansDuring[A](f: => A): (A, Seq[(String, QueryExecution)]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(f -> qe): Unit
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    settled(0) // let earlier work's job events drain first
-    spark.sparkContext.addSparkListener(listener)
+    Bridge.drainListeners(spark) // earlier work's executions reach no one
+    spark.listenerManager.register(listener)
     try {
       val out = f
-      (out, settled(jobs.get()))
-    } finally spark.sparkContext.removeSparkListener(listener)
+      Bridge.drainListeners(spark)
+      (out, seen.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
   }
 }

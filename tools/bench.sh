@@ -9,6 +9,11 @@
 # "parsed": null because of this). Tail-parsing THIS script's output always
 # yields the bench JSON.
 #
+# The artifact also carries a `layers` object: per leg (and per probe
+# row and sf1 query) the best sample's jobs, job wall, driver gap, stages,
+# tasks and shuffle bytes, plus the cause of a failed leg. The compact line
+# graft.Bench prints before it keeps seconds only.
+#
 # Env (all optional, passed through to graft.Bench):
 #   SPARK_GRAFT_SF_DIR      testdata dir (default /root/testdata/sf0.1)
 #   SPARK_GRAFT_BENCH_ONLY  comma-separated query-name prefixes to run
