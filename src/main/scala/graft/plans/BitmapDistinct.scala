@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 
 /** Exact distinct count over a bounded non-negative integer id domain via a
   * dense bitmap — the custom AGGREGATE rung of the extension ladder
-  * (alongside the DotProduct expression, the TopKPerKey plan+strategy and
+  * (alongside the ArrayKernel expressions, the TopKPerKey plan+strategy and
   * the WindowTopKRewrite optimizer rule). The engine pattern behind
   * Druid/ClickHouse-style distinct-count columns: each partition builds a
   * local bitmap (map-side partial), partials OR-merge across ONE exchange,

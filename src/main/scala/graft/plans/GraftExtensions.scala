@@ -29,20 +29,14 @@ object GraftExtensions {
   /** Every SQL function graft ships, as (name, expression class, builder)
     * — the one table both registration paths read.
     */
-  private[graft] val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
-    ("graft_dot", classOf[DotProduct], binary("graft_dot")(DotProduct(_, _))),
-    ("graft_dot_long", classOf[DotProductLong],
-      binary("graft_dot_long")(DotProductLong(_, _))),
-    ("graft_distinct_bitmap", classOf[BitmapDistinct], BitmapDistinct.builder),
-    ("graft_bitmap_build", classOf[BitmapBuild], BitmapBuild.builder),
-    ("graft_bitmap_test", classOf[BitmapTest], BitmapTest.builder),
-    ("graft_freq_sketch", classOf[MisraGries], MisraGries.builder),
-    ("graft_array_sub", classOf[ArraySub], binary("graft_array_sub")(ArraySub(_, _))),
-    ("graft_array_scale", classOf[ArrayScale],
-      binary("graft_array_scale")(ArrayScale(_, _))),
-    ("graft_array_quantize_sq8", classOf[ArrayQuantizeSq8],
-      binary("graft_array_quantize_sq8")(ArrayQuantizeSq8(_, _))),
-    ("graft_zorder", classOf[ZOrder], binary("graft_zorder")(ZOrder(_, _))))
+  private[graft] val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] =
+    ArrayKernel.Ops.map(op =>
+      (op.name, classOf[ArrayKernel], binary(op.name)(ArrayKernel(op, _, _)))) ++ Seq(
+      ("graft_distinct_bitmap", classOf[BitmapDistinct], BitmapDistinct.builder),
+      ("graft_bitmap_build", classOf[BitmapBuild], BitmapBuild.builder),
+      ("graft_bitmap_test", classOf[BitmapTest], BitmapTest.builder),
+      ("graft_freq_sketch", classOf[MisraGries], MisraGries.builder),
+      ("graft_zorder", classOf[ZOrder], binary("graft_zorder")(ZOrder(_, _))))
 
   private def binary(name: String)(mk: (Expression, Expression) => Expression)
       : Seq[Expression] => Expression = { children =>

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.core.Iterate
 import graft.core.Tables._
 import graft.functions.HashFunctions._
+import graft.plans.ArrayKernel.{Dot, DotLong, QuantizeSq8, Sub}
 
 /** Approximate-nearest-neighbor search over the embedding column
   * (SURVEY.md §2 "similarity search").
@@ -70,20 +71,14 @@ object Ann {
 
   // ---- exact top-k cosine neighbors for the probe set ---------------------
   def bruteforce(s: SparkSession, d: String): DataFrame = {
-    val all = vecs(s, d)
-    // materialized once: feeds BOTH the probe and corpus branches — without
-    // it Catalyst re-runs the scan+norm pipeline per branch
-    val norms = all.select(col("vec_id"),
-      graft.plans.DotProduct.dot(col("v"), col("v")).as("nrm"))
-      .join(all, "vec_id")
-      .localCheckpoint()
+    val norms = withNorms(s, d)
     val probes = norms.join(broadcast(panel(norms, "probe:", PROBE_COUNT)), "vec_id")
-      .toDF("probe_id", "pnrm", "pv")
-    val corpus = norms.toDF("neighbor_id", "cnrm", "cv")
+      .toDF("probe_id", "pv", "pnrm")
+    val corpus = norms.toDF("neighbor_id", "cv", "cnrm")
     val scored = corpus.join(broadcast(probes),
         col("probe_id") =!= col("neighbor_id"))
       .withColumn("cos", cosCols(
-        graft.plans.DotProduct.dot(col("pv"), col("cv")),
+        Dot(col("pv"), col("cv")),
         col("pnrm"), col("cnrm")))
       .select("probe_id", "neighbor_id", "cos")
     rankTop(scored, TOPK)
@@ -103,17 +98,13 @@ object Ann {
     * full scored relation out of any sort and orders only the survivors.
     */
   def rangeSearch(s: SparkSession, d: String): DataFrame = {
-    val all = vecs(s, d)
-    val norms = all.select(col("vec_id"),
-      graft.plans.DotProduct.dot(col("v"), col("v")).as("nrm"))
-      .join(all, "vec_id")
-      .localCheckpoint()
+    val norms = withNorms(s, d)
     val probes = norms.join(broadcast(panel(norms, "probe:", PROBE_COUNT)), "vec_id")
-      .toDF("probe_id", "pnrm", "pv")
-    val corpus = norms.toDF("neighbor_id", "cnrm", "cv")
+      .toDF("probe_id", "pv", "pnrm")
+    val corpus = norms.toDF("neighbor_id", "cv", "cnrm")
     corpus.join(broadcast(probes), col("probe_id") =!= col("neighbor_id"))
       .withColumn("cos", cosCols(
-        graft.plans.DotProduct.dot(col("pv"), col("cv")),
+        Dot(col("pv"), col("cv")),
         col("pnrm"), col("cnrm")))
       .filter(col("cos") >= RangeTau)
       .select(col("probe_id"), col("neighbor_id"),
@@ -135,7 +126,7 @@ object Ann {
       col("embedding").cast("array<double>").as("v"), // codegen cast, see vecs
       col("label").cast("int").as("label")))
     val norms = v.select(col("vec_id"),
-      graft.plans.DotProduct.dot(col("v"), col("v")).as("nrm"))
+      Dot(col("v"), col("v")).as("nrm"))
       .join(v, "vec_id").localCheckpoint() // vec_id, nrm, v, label
     val probes = norms.join(broadcast(panel(norms, "probe:", PROBE_COUNT)), "vec_id")
       .toDF("probe_id", "pnrm", "pv", "plabel")
@@ -143,7 +134,7 @@ object Ann {
     val scored = corpus.join(broadcast(probes),
         col("probe_id") =!= col("neighbor_id") && col("clabel") === col("plabel"))
       .withColumn("cos", cosCols(
-        graft.plans.DotProduct.dot(col("pv"), col("cv")),
+        Dot(col("pv"), col("cv")),
         col("pnrm"), col("cnrm")))
       .select(col("probe_id"), col("plabel").as("label"),
         col("neighbor_id"), col("cos"))
@@ -217,7 +208,7 @@ object Ann {
                              multiprobe: Boolean): DataFrame = {
     val all = vecs(s, d)
     val norms = all.select(col("vec_id"),
-      graft.plans.DotProduct.dot(col("v"), col("v")).as("nrm"))
+      Dot(col("v"), col("v")).as("nrm"))
     // materialized once: probe and corpus branches would otherwise each
     // recompute the norm + hyperplane-bucket pipelines
     val withB = all.join(norms, "vec_id").join(bucketsOf(all), "vec_id")
@@ -237,7 +228,7 @@ object Ann {
     val cand = corpus.join(broadcast(probes), Seq("bucket"))
       .filter(col("probe_id") =!= col("neighbor_id"))
       .withColumn("cos", cosCols(
-        graft.plans.DotProduct.dot(col("pv"), col("cv")),
+        Dot(col("pv"), col("cv")),
         col("pnrm"), col("cnrm")))
       .select("probe_id", "neighbor_id", "cos")
     rankTop(cand, CAND_TOPK)
@@ -267,7 +258,7 @@ object Ann {
   private def withNorms(s: SparkSession, d: String): DataFrame = {
     val all = vecs(s, d)
     val norms = all.select(col("vec_id"),
-      graft.plans.DotProduct.dot(col("v"), col("v")).as("nrm"))
+      Dot(col("v"), col("v")).as("nrm"))
     all.join(norms, "vec_id").select("vec_id", "v", "nrm").localCheckpoint()
   }
 
@@ -277,7 +268,7 @@ object Ann {
     // similarity of every vector to every centroid (centroids broadcast)
     val sims = withN.join(broadcast(cents), lit(true))
       .select(col("vec_id"), col("cent_id"),
-        cosCols(graft.plans.DotProduct.dot(col("v"), col("cv")),
+        cosCols(Dot(col("v"), col("cv")),
           col("nrm"), col("cnrm")).as("csim"))
     val byVec = Window.partitionBy(col("vec_id"))
       .orderBy(col("csim").desc, col("cent_id"))
@@ -310,7 +301,7 @@ object Ann {
     corpus.join(broadcast(probes), Seq("cell"))
       .filter(col("probe_id") =!= col("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"),
-        cosCols(graft.plans.DotProduct.dot(col("pv"), col("cv2")),
+        cosCols(Dot(col("pv"), col("cv2")),
           col("pnrm"), col("cnrm2")).as("cos"))
   }
 
@@ -359,7 +350,7 @@ object Ann {
     val pairs = withN.select(col("vec_id"), col("v"), subs)
       .join(broadcast(pqCents(withN)), lit(true))
       .select(col("vec_id"), col("sub"), col("cent_id"),
-        graft.plans.DotProduct.dot(subvec(col("v"), col("sub")),
+        Dot(subvec(col("v"), col("sub")),
           subvec(col("cv"), col("sub"))).as("subdot"))
     val bySub = Window.partitionBy(col("vec_id"), col("sub"))
       .orderBy(col("subdot").desc, col("cent_id"))
@@ -380,7 +371,7 @@ object Ann {
       .select(col("vec_id").as("probe_id"), col("v").as("pv"), subs)
       .join(broadcast(cents), lit(true))
       .select(col("probe_id"), col("sub"), col("cent_id").as("code"),
-        floor(graft.plans.DotProduct.dot(subvec(col("pv"), col("sub")),
+        floor(Dot(subvec(col("pv"), col("sub")),
           subvec(col("cv"), col("sub"))) * 1e9).cast("long").as("pdot"))
     val scored = codes.join(broadcast(lut), Seq("sub", "code"))
       .filter(col("probe_id") =!= col("neighbor_id"))
@@ -398,7 +389,7 @@ object Ann {
       .join(broadcast(shortlist), Seq("neighbor_id"))
       .join(broadcast(probeVecs), Seq("probe_id"))
       .select(col("probe_id"), col("neighbor_id"),
-        graft.plans.DotProduct.dot(col("pv"), col("nv")).as("dot"))
+        Dot(col("pv"), col("nv")).as("dot"))
     val w = Window.partitionBy(col("probe_id"))
       .orderBy(col("dot").desc, col("neighbor_id"))
     reranked.withColumn("rk", row_number().over(w))
@@ -444,13 +435,13 @@ object Ann {
         // guide §4): same per-element arithmetic — floor(x·127/mx + 0.5)
         // with the mx=0 guard — compiled into the whole-stage span instead
         // of one interpreted lambda per element over every corpus vector
-        graft.plans.ArrayQuantizeSq8.quantize(col("v"), col("mx")).as("qv"))
+        QuantizeSq8(col("v"), col("mx")).as("qv"))
     val probes = q.join(broadcast(panel(base, "probe:", PROBE_COUNT)), "vec_id")
       .toDF("probe_id", "qp")
     val scored = q.toDF("neighbor_id", "qn")
       .join(broadcast(probes), col("probe_id") =!= col("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"),
-        graft.plans.DotProductLong.dot(col("qp"), col("qn")).as("iscore"))
+        DotLong(col("qp"), col("qn")).as("iscore"))
     val shortlist = graft.plans.TopK.perKey(scored, Seq("probe_id"),
       Seq(col("iscore").desc, col("neighbor_id").asc), SQ_SHORTLIST)
       .select(col("probe_id"), col("neighbor_id"))
@@ -460,7 +451,7 @@ object Ann {
       .join(broadcast(shortlist), Seq("neighbor_id"))
       .join(broadcast(probeVecs), Seq("probe_id"))
       .select(col("probe_id"), col("neighbor_id"),
-        graft.plans.DotProduct.dot(col("pv"), col("nv")).as("dot"))
+        Dot(col("pv"), col("nv")).as("dot"))
     val w = Window.partitionBy(col("probe_id"))
       .orderBy(col("dot").desc, col("neighbor_id"))
     reranked.withColumn("rk", row_number().over(w))
@@ -499,7 +490,7 @@ object Ann {
         // codegen residual instead of zip_with (round r14, guide §4): one
         // interpreted lambda per element over every corpus vector, and it
         // broke the projection out of whole-stage codegen
-        graft.plans.ArraySub.sub(col("v"), col("cv")).as("rv"))
+        Sub(col("v"), col("cv")).as("rv"))
     // residual codebook: the ivfpq: panel's own residuals (fixed PQ_K size)
     val cb = resid.join(broadcast(panel(withN, "ivfpq:", PQ_K)), "vec_id")
       .select(col("vec_id").as("cent_id"), col("rv").as("cbv"))
@@ -509,7 +500,7 @@ object Ann {
     val cpairs = resid.select(col("vec_id"), col("cell"), col("rv"), subs)
       .join(broadcast(cb), lit(true))
       .select(col("vec_id"), col("cell"), col("sub"), col("cent_id"),
-        graft.plans.DotProduct.dot(subvec(col("rv"), col("sub")),
+        Dot(subvec(col("rv"), col("sub")),
           subvec(col("cbv"), col("sub"))).as("subdot"))
     val bySub = Window.partitionBy(col("vec_id"), col("sub"))
       .orderBy(col("subdot").desc, col("cent_id"))
@@ -523,14 +514,14 @@ object Ann {
     val pres = probes.join(broadcast(probeCells), "probe_id")
       .join(broadcast(cents), "cell")
       .select(col("probe_id"), col("cell"),
-        graft.plans.ArraySub.sub(col("pv"), col("cv")).as("rp"),
-        floor(graft.plans.DotProduct.dot(col("pv"), col("cv")) * 1e9)
+        Sub(col("pv"), col("cv")).as("rp"),
+        floor(Dot(col("pv"), col("cv")) * 1e9)
           .cast("long").as("coarse"))
     val lut = pres.select(col("probe_id"), col("cell"), col("coarse"), col("rp"), subs)
       .join(broadcast(cb), lit(true))
       .select(col("probe_id"), col("cell"), col("coarse"), col("sub"),
         col("cent_id").as("code"),
-        floor(graft.plans.DotProduct.dot(subvec(col("rp"), col("sub")),
+        floor(Dot(subvec(col("rp"), col("sub")),
           subvec(col("cbv"), col("sub"))) * 1e9).cast("long").as("pdot"))
     val scored = codes.join(broadcast(lut), Seq("cell", "sub", "code"))
       .filter(col("probe_id") =!= col("neighbor_id"))
@@ -543,7 +534,7 @@ object Ann {
       .join(broadcast(shortlist), Seq("neighbor_id"))
       .join(broadcast(probes), Seq("probe_id"))
       .select(col("probe_id"), col("neighbor_id"),
-        graft.plans.DotProduct.dot(col("pv"), col("nv")).as("dot"))
+        Dot(col("pv"), col("nv")).as("dot"))
     val w = Window.partitionBy(col("probe_id"))
       .orderBy(col("dot").desc, col("neighbor_id"))
     reranked.withColumn("rk", row_number().over(w))
@@ -614,7 +605,7 @@ object Ann {
                                        tag: String): DataFrame = {
     val sims = df.join(broadcast(cents), lit(true))
       .select(col("vec_id"), col("cent_id"),
-        cosCols(graft.plans.DotProduct.dot(col("v"), col("cv")),
+        cosCols(Dot(col("v"), col("cv")),
           col("nrm"), col("cnrm")).as("csim"))
     val byVec = Window.partitionBy(col("vec_id"))
       .orderBy(col("csim").desc, col("cent_id"))
@@ -677,7 +668,7 @@ object Ann {
     // broadcast map pass feeding the merged assignment and the probe cells
     val sims = withN.join(broadcast(cents), lit(true))
       .select(col("vec_id"), col("cent_id"),
-        cosCols(graft.plans.DotProduct.dot(col("v"), col("cv")),
+        cosCols(Dot(col("v"), col("cv")),
           col("nrm"), col("cnrm")).as("csim"))
     val byVec = Window.partitionBy(col("vec_id"))
       .orderBy(col("csim").desc, col("cent_id"))
@@ -696,7 +687,7 @@ object Ann {
     val cand = corpus.join(broadcast(probes), Seq("cell"))
       .filter(col("probe_id") =!= col("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"),
-        cosCols(graft.plans.DotProduct.dot(col("pv"), col("cv2")),
+        cosCols(Dot(col("pv"), col("cv2")),
           col("pnrm"), col("cnrm2")).as("cos"))
     rankTop(cand, CAND_TOPK)
   }
@@ -836,7 +827,7 @@ object Ann {
   private def nndGraphBuild(s: SparkSession, d: String, iters: Int): DataFrame = {
     val all = vecs(s, d)
     val norms = all.select(col("vec_id"),
-      graft.plans.DotProduct.dot(col("v"), col("v")).as("nrm"))
+      Dot(col("v"), col("v")).as("nrm"))
     // zero-norm guard as in the embedding dedup: cos would be NaN
     val ok = all.join(norms, "vec_id").filter(col("nrm") > 0)
     val cu = ok.toDF("u", "pv", "pn").localCheckpoint()
@@ -844,7 +835,7 @@ object Ann {
     val seedPairs = nndSeedPairsOf(all)
     val seedScored = seedPairs.join(cu, "u").join(cw, "w")
       .select(col("u").as("src"), col("w").as("dst"), cosCols(
-        graft.plans.DotProduct.dot(col("pv"), col("cv")),
+        Dot(col("pv"), col("cv")),
         col("pn"), col("cn")).as("cos"))
     val graph0 = graft.plans.TopK.perKey(seedScored, Seq("src"),
         Seq(col("cos").desc, col("dst").asc), NND_WORKK)
@@ -875,7 +866,7 @@ object Ann {
           col("dst").as("w"))).unionByName(fresh).distinct()
       val rescored = cand.join(cu, "u").join(cw, "w")
         .select(col("u").as("src"), col("w").as("dst"), cosCols(
-          graft.plans.DotProduct.dot(col("pv"), col("cv")),
+          Dot(col("pv"), col("cv")),
           col("pn"), col("cn")).as("cos"))
       graft.plans.TopK.perKey(rescored, Seq("src"),
           Seq(col("cos").desc, col("dst").asc), NND_WORKK)
@@ -914,7 +905,7 @@ object Ann {
   def graphSearch(s: SparkSession, d: String): DataFrame = {
     val all = vecs(s, d)
     val norms = all.select(col("vec_id"),
-      graft.plans.DotProduct.dot(col("v"), col("v")).as("nrm"))
+      Dot(col("v"), col("v")).as("nrm"))
     val withN = all.join(norms, "vec_id")
     val ok = withN.filter(col("nrm") > 0)
     val g = nndGraph(s, d, NND_ITERS)
@@ -942,7 +933,7 @@ object Ann {
       .join(broadcast(probes), "probe_id")
       .filter(col("cand") =!= col("probe_id"))
       .select(col("probe_id"), col("cand"), cosCols(
-        graft.plans.DotProduct.dot(col("pv"), col("cv")),
+        Dot(col("pv"), col("cv")),
         col("pn"), col("cn")).as("cos"))
     val visited0 = scoredPairs(
         entries.crossJoin(broadcast(probes.select("probe_id"))))
@@ -1107,7 +1098,7 @@ object Ann {
       // unit vectors the two orders coincide, so the gate measures index
       // quality, not the norm confound
       raw.select(col("vec_id"),
-          sqrt(graft.plans.DotProduct.dot(col("v"), col("v"))).as("nrm"),
+          sqrt(Dot(col("v"), col("v"))).as("nrm"),
           col("v"))
         .select(col("vec_id"),
           transform(col("v"), e => e / col("nrm")).as("embedding"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables._
 import graft.functions.HashFunctions._
+import graft.plans.ArrayKernel.{Dot, Scale}
 
 /** LLM-pipeline deduplication family (SURVEY.md §2).
   *
@@ -872,7 +873,7 @@ object Dedup {
       col("embedding").cast("array<double>").as("v"))
     val planted = base.filter(col("vec_id") % 10 === 0)
       .select((col("vec_id") + ExactOffset).as("vec_id"),
-        graft.plans.ArrayScale.scale(col("v"), lit(0.5)).as("v"))
+        Scale(col("v"), lit(0.5)).as("v"))
     spread(base.unionByName(planted))
   }
 
@@ -885,7 +886,7 @@ object Dedup {
 
   /** LSH-blocked near-dup pass: candidate pairs come only from matching
     * hyperplane-sign buckets (Ann.bucketsOf), then get deterministic
-    * sequential-double cosine scoring (DotProduct.dot). At cos ≥ 0.99 true near-dups are virtually
+    * sequential-double cosine scoring (ArrayKernel.Dot). At cos ≥ 0.99 true near-dups are virtually
     * sign-identical (a positively-scaled copy is *exactly* sign-identical),
     * so recall is preserved while candidate volume drops from N²/2 to
     * Σ_bucket C(n_b, 2) — the shape that survives a 100 TB corpus.
@@ -896,12 +897,12 @@ object Dedup {
     // hyperplane-bucket pipeline (vecs itself is a cheap scan — not worth one)
     val withB = vecs.join(Ann.bucketsOf(vecs), "vec_id").localCheckpoint()
     val norms = vecs.select(col("vec_id"),
-      graft.plans.DotProduct.dot(col("v"), col("v")).as("nrm"))
+      Dot(col("v"), col("v")).as("nrm"))
     val a = withB.toDF("a_id", "va", "bucket")
     val b = withB.toDF("b_id", "vb", "bucket")
     val pairs = a.join(b, Seq("bucket")).filter(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"),
-        graft.plans.DotProduct.dot(col("va"), col("vb")).as("dot"))
+        Dot(col("va"), col("vb")).as("dot"))
     // zero-norm guard: cos would be 0/0 = NaN, and both engines order NaN
     // ABOVE every double, so it would pass >= τ — exclude degenerate vectors
     val na = norms.filter(col("nrm") > 0).toDF("a_id", "na")

@@ -232,7 +232,7 @@ object StagedParquet {
     */
   private[graft] def withMicrosTimestamps[T](s: SparkSession)(body: => T): T = {
     val (key, micros) = MicrosTimestamps
-    val prev = try Some(s.conf.get(key)) catch { case _: Throwable => None }
+    val prev = s.conf.getOption(key)
     s.conf.set(key, micros)
     try body finally prev match {
       case Some(v) => s.conf.set(key, v)
@@ -240,14 +240,24 @@ object StagedParquet {
     }
   }
 
+  /** The session's value of `key` parsed by `parse`, or `default` when the
+    * key is unset. A value `parse` rejects fails, naming the key.
+    */
+  private[v2] def confValue[T](s: SparkSession, key: String, default: T)(parse: String => T): T =
+    s.conf.getOption(key).fold(default) { v =>
+      try parse(v)
+      catch { case e: NumberFormatException =>
+        throw new IllegalArgumentException(s"$key: malformed value '$v'", e) }
+    }
+
   /** Prod directory of a `graft_staged.<ns...>.<name>` table, resolved from
     * the catalog's root conf.
     */
   def tableDir(s: SparkSession, table: String): String = {
     val parts = table.split('.')
     require(parts.head == CatalogName, s"not a $CatalogName table: $table")
-    val root = try s.conf.get(s"spark.sql.catalog.$CatalogName.root")
-               catch { case _: Throwable => "/tmp/graft_stage/v2" }
+    val root = s.conf.getOption(s"spark.sql.catalog.$CatalogName.root")
+      .getOrElse("/tmp/graft_stage/v2")
     (root +: parts.tail.toSeq).mkString("/")
   }
 
@@ -1065,6 +1075,11 @@ object StagedParquet {
     stmt.commit(drops, stmt.rewrite(work))
   }
 
+  /** Matched-row fraction above which a merge-on-read DELETE rewrites a
+    * directory (copy-on-write) instead of writing its deletion vector.
+    */
+  private val DvMaxFraction = 0.1
+
   /** One [[cowWhereDir]] statement: its table, predicate and the state its
     * three steps share. Construction validates the statement (rejected at
     * analysis, never half-applied).
@@ -1273,18 +1288,14 @@ object StagedParquet {
       * directory's deletion vector executor-side — a point delete on a 1 GB
       * file costs a metadata write, not a rewrite. The driver only commits
       * (renames) the vectors of sparse directories. DENSE directories
-      * (matched fraction above `graft.staged.dv.maxFraction`, default 0.1)
-      * are returned for the COW rewrite: once most rows go, a clean
-      * rewrite reads cheaper than a scan that skips most positions.
-      * Directories with ZERO matches drop out entirely (COW would have
-      * rewritten them identically).
+      * (matched fraction above [[DvMaxFraction]]) are returned for the
+      * COW rewrite: once most rows go, a clean rewrite reads cheaper than
+      * a scan that skips most positions. Directories with ZERO matches
+      * drop out entirely (COW would have rewritten them identically).
       */
     private def positions(work: Seq[DirWork]): Seq[DirWork] = {
       import s.implicits._
       morDriverRows.set(0L)
-      val maxFraction =
-        try s.conf.get("graft.staged.dv.maxFraction").toDouble
-        catch { case _: Throwable => 0.1 }
       val dense = mutable.Set.empty[String]
       var flagged = dirDvs.flagged
       for ((gspec, gwork) <- work.groupBy(_.spec)) {
@@ -1325,7 +1336,7 @@ object StagedParquet {
             val rows = blocksOf(st).map(_._3.getRowCount).sum
             rows - deletedWithin(dvs.getOrElse(st.getPath.getName, Nil), 0L, rows)
           }.sum
-          if (live > 0 && n.toDouble / live > maxFraction) {
+          if (live > 0 && n.toDouble / live > DvMaxFraction) {
             dense += w.rel
             f.delete(new Path(w.dir, tmpName), false): Unit
           } else {
@@ -3974,8 +3985,7 @@ class StagedStreamingWrite(prodDir: String, schema: StructType,
   }
 
   private def keyInMax(s: SparkSession): Int =
-    try s.conf.get("graft.staged.upsert.keyInMax").toInt
-    catch { case _: Throwable => 10000 }
+    StagedParquet.confValue(s, "graft.staged.upsert.keyInMax", 10000)(_.toInt)
 
   /** The epoch's distinct keys, unioned from its write tasks and
     * converted to external values; None when a task overflowed its share

@@ -245,10 +245,8 @@ class StagedScan(tableName: String, prodDir: String, tableSchema: StructType,
     */
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): java.util.OptionalLong = {
-      val factor =
-        try org.apache.spark.sql.SparkSession.active.conf
-          .get("spark.sql.sources.fileCompressionFactor").toDouble
-        catch { case _: Throwable => 1.0 }
+      val factor = StagedParquet.confValue(org.apache.spark.sql.SparkSession.active,
+        "spark.sql.sources.fileCompressionFactor", 1.0)(_.toDouble)
       java.util.OptionalLong.of(math.max(1L, (plannedBytes * factor).toLong))
     }
     override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
@@ -268,10 +266,8 @@ class StagedScan(tableName: String, prodDir: String, tableSchema: StructType,
   private lazy val plannedDirs: Seq[(Seq[String], Seq[(String, Long)], Seq[PartField])] =
     StagedScan.planLayoutDirs(prodDir, tableSchema, partSpec, pruning)
 
-  private lazy val splitBytes: Long =
-    try org.apache.spark.sql.SparkSession.active.conf
-      .get("graft.staged.split.bytes").toLong
-    catch { case _: Throwable => 128L * 1024 * 1024 }
+  private lazy val splitBytes: Long = StagedParquet.confValue(
+    org.apache.spark.sql.SparkSession.active, "graft.staged.split.bytes", 128L * 1024 * 1024)(_.toLong)
 
   private def planned: Array[StagedInputPartition] = plannedPair._1
   private def plannedBytes: Long = plannedPair._2

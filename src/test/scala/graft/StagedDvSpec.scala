@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - the V2 scan skips deleted positions on both the row path and the
   *     footer count-star path; aggregate pushdown stands down while
   *     vectors live (footer stats would count deleted rows);
-  *   - a DENSE delete (matched fraction above graft.staged.dv.maxFraction)
-  *     falls back to the COW rewrite;
+  *   - a DENSE delete (matched fraction above `StagedParquet`'s
+  *     `DvMaxFraction`, 0.1) falls back to the COW rewrite;
   *   - later rewrites (COW UPDATE, compaction) apply the vectors — never
   *     resurrect — and compaction drops the vectors and the root flag;
   *   - `VERSION AS OF` resolves the vectors alive at each version;
@@ -83,7 +83,7 @@ class StagedDvSpec extends AnyFunSuite {
       org.apache.spark.sql.sources.GreaterThan("id", 5000L)))
     assert(rep0.isEmpty && files(dir) == before)
     assert(files(dir, StagedParquet.DvPrefix).isEmpty)
-    // 60% of rows: far above maxFraction — COW rewrites
+    // 60% of rows: far above DvMaxFraction — COW rewrites
     val rep = StagedParquet.deleteWhere(spark, t, Seq(
       org.apache.spark.sql.sources.LessThan("id", 600L)))
     assert(rep.map(_._2) == Seq("rewritten"), s"dense delete must COW, got $rep")

@@ -104,6 +104,14 @@ class StagedSkipSpec extends AnyFunSuite {
     }
   }
 
+  test("a malformed graft.staged.split.bytes fails the scan, naming the key") {
+    val t = seedRange()
+    spark.conf.set("graft.staged.split.bytes", "abc")
+    val err = try intercept[Exception](spark.table(t).select("id").collect())
+              finally spark.conf.unset("graft.staged.split.bytes")
+    assert(err.getMessage.contains("graft.staged.split.bytes"), err)
+  }
+
   test("pre-evolution files skip under a comparison on the added column") {
     import spark.implicits._
     val t = tbl("skip_evolve")

@@ -43,7 +43,7 @@ class StagedStreamUpsertSpec extends AnyFunSuite {
     val dst = tbl("dst1")
     val dstDir = StagedParquet.tableDir(spark, dst)
     // wave size well under the DV density threshold (50/2000 = 2.5% —
-    // hash skew across buckets cannot push any dir past maxFraction 0.1)
+    // hash skew across buckets cannot push any dir past DvMaxFraction 0.1)
     def snap = (0L until 2000L).map(i => (i, i * 1.0)).toDF("id", "v")
     snap.filter(lit(false)).writeTo(dst)
       .tableProperty("delete.mode", "merge-on-read")
