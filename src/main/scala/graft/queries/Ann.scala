@@ -32,15 +32,15 @@ object Ann {
     * spread: the single-row-group source otherwise serializes every dot
     * product onto one scan task (see Tables.spread).
     */
-  private def vecs(s: SparkSession, d: String): DataFrame =
+  private def vecs(s: SparkSession, d: String, extra: Column*): DataFrame =
     graft.core.Tables.spread(
-      embeddings(s, d).select(col("vec_id"),
+      embeddings(s, d).select(col("vec_id") +:
         // array cast, not transform(_.cast): the HOF is CodegenFallback
         // (one boxed lambda per element, and it breaks the whole-stage
         // span feeding every graft_dot); Cast(array<float>→array<double>)
         // is the same element-wise widening inside codegen (round r14,
         // guide §4 — the class r13 purged from the dot products)
-        col("embedding").cast("array<double>").as("v")))
+        col("embedding").cast("array<double>").as("v") +: extra: _*))
 
   /** Fixed-size deterministic hash panel: the `n` vec_ids with the smallest
     * salted md5 (vec_id tie-break). `orderBy + limit` compiles to
@@ -71,7 +71,7 @@ object Ann {
 
   // ---- exact top-k cosine neighbors for the probe set ---------------------
   def bruteforce(s: SparkSession, d: String): DataFrame = {
-    val norms = withNorms(s, d)
+    val norms = withNorms(vecs(s, d))
     val probes = norms.join(broadcast(panel(norms, "probe:", PROBE_COUNT)), "vec_id")
       .toDF("probe_id", "pv", "pnrm")
     val corpus = norms.toDF("neighbor_id", "cv", "cnrm")
@@ -98,7 +98,7 @@ object Ann {
     * full scored relation out of any sort and orders only the survivors.
     */
   def rangeSearch(s: SparkSession, d: String): DataFrame = {
-    val norms = withNorms(s, d)
+    val norms = withNorms(vecs(s, d))
     val probes = norms.join(broadcast(panel(norms, "probe:", PROBE_COUNT)), "vec_id")
       .toDF("probe_id", "pv", "pnrm")
     val corpus = norms.toDF("neighbor_id", "cv", "cnrm")
@@ -122,15 +122,10 @@ object Ann {
     * selective predicates).
     */
   def filterSearch(s: SparkSession, d: String): DataFrame = {
-    val v = graft.core.Tables.spread(embeddings(s, d).select(col("vec_id"),
-      col("embedding").cast("array<double>").as("v"), // codegen cast, see vecs
-      col("label").cast("int").as("label")))
-    val norms = v.select(col("vec_id"),
-      Dot(col("v"), col("v")).as("nrm"))
-      .join(v, "vec_id").localCheckpoint() // vec_id, nrm, v, label
+    val norms = withNorms(vecs(s, d, col("label").cast("int").as("label")))
     val probes = norms.join(broadcast(panel(norms, "probe:", PROBE_COUNT)), "vec_id")
-      .toDF("probe_id", "pnrm", "pv", "plabel")
-    val corpus = norms.toDF("neighbor_id", "cnrm", "cv", "clabel")
+      .toDF("probe_id", "pv", "plabel", "pnrm")
+    val corpus = norms.toDF("neighbor_id", "cv", "clabel", "cnrm")
     val scored = corpus.join(broadcast(probes),
         col("probe_id") =!= col("neighbor_id") && col("clabel") === col("plabel"))
       .withColumn("cos", cosCols(
@@ -249,17 +244,16 @@ object Ann {
     * map-side work (centroids broadcast).
     */
   private[graft] def ivfCells(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    ivfCells(withNorms(s, d))
+    ivfCells(withNorms(vecs(s, d)))
 
-  /** (vec_id, v, nrm), materialized once per query — shared by the
-    * codebook, the coarse assignment, and the probe/corpus branches (four
-    * consumers; without the checkpoint each re-runs scan + norms).
+  /** `vs` (vec_id, v, then any extra columns) with its squared norm `nrm`
+    * appended, materialized once per query — shared by the codebook, the
+    * coarse assignment, and the probe/corpus branches (four consumers;
+    * without the checkpoint each re-runs scan + norms).
     */
-  private def withNorms(s: SparkSession, d: String): DataFrame = {
-    val all = vecs(s, d)
-    val norms = all.select(col("vec_id"),
-      Dot(col("v"), col("v")).as("nrm"))
-    all.join(norms, "vec_id").select("vec_id", "v", "nrm").localCheckpoint()
+  private def withNorms(vs: DataFrame): DataFrame = {
+    val norms = vs.select(col("vec_id"), Dot(col("v"), col("v")).as("nrm"))
+    vs.join(norms, "vec_id").localCheckpoint()
   }
 
   private def ivfCells(withN: DataFrame): (DataFrame, DataFrame) = {
@@ -290,7 +284,7 @@ object Ann {
     * ∝ N/CENT_COUNT per probe) independently of wall-clock noise.
     */
   private[graft] def ivfCandidates(s: SparkSession, d: String): DataFrame = {
-    val withN = withNorms(s, d)
+    val withN = withNorms(vecs(s, d))
     val (assignment, probeCells) = ivfCells(withN)
     val corpus = withN.join(assignment, "vec_id")
       .toDF("neighbor_id", "cv2", "cnrm2", "cell")
@@ -361,7 +355,7 @@ object Ann {
   }
 
   def pq(s: SparkSession, d: String): DataFrame = {
-    val withN = withNorms(s, d)
+    val withN = withNorms(vecs(s, d))
     val cents = pqCents(withN)
     val subs = explode(sequence(lit(0), lit(PQ_S - 1))).as("sub")
     // encode: per (vector, subspace) the centroid with the best sub-dot
@@ -481,7 +475,7 @@ object Ann {
     * PQ recipe (left-fold dots, 1e9-floored longs, long sums).
     */
   def ivfpq(s: SparkSession, d: String): DataFrame = {
-    val withN = withNorms(s, d)
+    val withN = withNorms(vecs(s, d))
     val (assignment, probeCells) = ivfCells(withN)
     val cents = withN.join(broadcast(panel(withN, "cent:", CENT_COUNT)), "vec_id")
       .toDF("cell", "cv", "cnrm").drop("cnrm")
@@ -588,7 +582,7 @@ object Ann {
     // by ann_incremental and ann_cell_drift: publish once, read twice
     graft.core.ArtifactCache.getOrBuild(s, "ivf_incremental_merged",
       s"v1 k=$CENT_COUNT", Seq(s"$d/embeddings.parquet")) {
-      val withN = withNorms(s, d)
+      val withN = withNorms(vecs(s, d))
       val old = withN.filter(!isNewBatch)
       val batch = withN.filter(isNewBatch)
       val cents = old.join(broadcast(panel(old, "cent:", CENT_COUNT)), "vec_id")
@@ -621,7 +615,7 @@ object Ann {
     */
   private[graft] def incrementalParts(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val withN = withNorms(s, d)
+    val withN = withNorms(vecs(s, d))
     val old = withN.filter(!isNewBatch)
     val batch = withN.filter(isNewBatch)
     val cents = old.join(broadcast(panel(old, "cent:", CENT_COUNT)), "vec_id")
@@ -660,7 +654,7 @@ object Ann {
     * the quantizer provenance differs.
     */
   private def incrementalSearch(s: SparkSession, d: String): DataFrame = {
-    val withN = withNorms(s, d)
+    val withN = withNorms(vecs(s, d))
     val old = withN.filter(!isNewBatch)
     val cents = old.join(broadcast(panel(old, "cent:", CENT_COUNT)), "vec_id")
       .toDF("cent_id", "cv", "cnrm")
@@ -1138,7 +1132,7 @@ object Ann {
     * partially-aggregated shuffle of (cell, dim) keys.
     */
   def kmeansStep(s: SparkSession, d: String): DataFrame = {
-    val withN = withNorms(s, d)
+    val withN = withNorms(vecs(s, d))
     val (assignment, _) = ivfCells(withN)
     val elems = vecs(s, d)
       .select(col("vec_id"), posexplode(col("v")).as(Seq("dim", "x")))
@@ -1162,7 +1156,7 @@ object Ann {
     * subdim) — PQ_S·PQ_K·PQ_SUBDIM = 1024 output rows at any corpus size.
     */
   def pqTrain(s: SparkSession, d: String): DataFrame = {
-    val withN = withNorms(s, d)
+    val withN = withNorms(vecs(s, d))
     val codes = pqCodes(withN)
       .select(col("neighbor_id").as("vec_id"), col("sub"), col("code"))
     val subElems = vecs(s, d)

@@ -274,7 +274,7 @@ object Ingest {
     val ns = stagedNs(s, d)
     src.writeTo(s"graft_staged.$ns.customer_prod").createOrReplace()
     // read back through the catalog's V2 scan (StagedScan), so the oracle
-    // gates the hand-rolled parquet READ path as well as the staged write
+    // gates the staged parquet READ path as well as the staged write
     s.table(s"graft_staged.$ns.customer_prod")
       .orderBy("c_custkey")
   }

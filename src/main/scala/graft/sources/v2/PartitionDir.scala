@@ -26,6 +26,12 @@ object PartitionDir {
   /** The segment of a null value. */
   val Null = "__HIVE_DEFAULT_PARTITION__"
 
+  /** The types a directory name can carry — the ones [[partValue]] parses. */
+  def dirValueType(dt: DataType): Boolean = dt match {
+    case StringType | IntegerType | LongType | DateType => true
+    case _                                              => false
+  }
+
   /** Typed (internal-representation) value of an identity segment —
     * inverse of [[PartSpec.partEvaluators]].
     */

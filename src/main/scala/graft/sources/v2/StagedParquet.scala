@@ -151,21 +151,25 @@ object StagedParquet {
       f.metadata.getStringArray(AliasesKey).toSeq
     else Nil
 
-  private[graft] def columnAliases(schema: StructType, name: String): Seq[String] =
-    schema.fields.find(_.name == name).map(aliasesOf).getOrElse(Nil)
+  /** The physical names `f`'s bytes may live under in a file: its declared
+    * name, then its pre-RENAME aliases.
+    */
+  private[graft] def readNames(f: StructField): Seq[String] = f.name +: aliasesOf(f)
 
-  /** RENAME-aware raw parquet reads, the pair every rewrite path uses:
+  /** RENAME-aware raw parquet reads, the pair every read path uses:
     * [[widenForAliases]] extends the declared data schema by each renamed
     * column's historical names (nullable, same type), and
     * [[coalesceAliases]] folds them back — a field with aliases becomes
-    * coalesce(current, aliases…), so a mixed batch of pre- and
-    * post-rename files reconstitutes every row (Spark's by-name parquet
-    * resolution alone would null the renamed column in pre-rename files;
-    * compaction and COW rewrites run through this pair so a rewrite can
-    * never null history). Split in two because [[StagedRewrite.scan]]
-    * attaches the source file and row index between the read and the
-    * fold. Alias collisions are rejected at rename time, so the widened
-    * schema is unambiguous; on tables never renamed both are identity.
+    * coalesce(current, aliases…) over its [[readNames]], so a mixed batch
+    * of pre- and post-rename files reconstitutes every row (Spark's
+    * by-name parquet resolution alone would null the renamed column in
+    * pre-rename files; compaction and COW rewrites run through this pair
+    * so a rewrite can never null history, and the V2 scan's
+    * [[StagedRead]] folds the same names per row). Split in two because
+    * [[StagedRewrite.scan]] attaches the source file and row index
+    * between the read and the fold. Alias collisions are rejected at
+    * rename time, so the widened schema is unambiguous; on tables never
+    * renamed both are identity.
     */
   private[v2] def widenForAliases(dataSchema: StructType): StructType =
     if (!dataSchema.fields.exists(f => aliasesOf(f).nonEmpty)) dataSchema
@@ -178,9 +182,8 @@ object StagedParquet {
     import org.apache.spark.sql.functions.{coalesce, col}
     dataSchema.fields.filter(f => aliasesOf(f).nonEmpty).foldLeft(df) {
       (d2, f) =>
-        val als = aliasesOf(f)
-        d2.withColumn(f.name, coalesce((f.name +: als).map(col): _*))
-          .drop(als: _*)
+        d2.withColumn(f.name, coalesce(readNames(f).map(col): _*))
+          .drop(aliasesOf(f): _*)
     }
   }
 
@@ -212,9 +215,10 @@ object StagedParquet {
   }
 
   /** The one writer setting every staged-table file is encoded under:
-    * INT64 UTC-micros timestamps, the encoding [[FlatRowReadSupport]]
-    * decodes on its hot path (Spark's default is INT96, Impala-era
-    * compat). The sink's prepared writer
+    * INT64 UTC-micros timestamps (Spark's default is INT96, Impala-era
+    * compat), whose footer statistics the zone map and the aggregate
+    * pushdown read as micros — INT96 columns carry no usable min/max. The
+    * sink's prepared writer
     * ([[StagedParquetWriterFactory.prepare]]), the catalog session
     * ([[ensureCatalog]]) and [[withMicrosTimestamps]] all take it from
     * here.
@@ -226,9 +230,8 @@ object StagedParquet {
     * [[MicrosTimestamps]], restoring the session conf after. Compaction
     * and copy-on-write rewrites write through `DataFrameWriter` on the
     * session; without this a rewritten table's timestamp columns would be
-    * INT96 ([[FlatRowReadSupport]] keeps an INT96 fallback for
-    * externally-written files, but the engine's own rewrites must produce
-    * canonical files, not rely on it).
+    * INT96 (they would still read back — the scan decodes INT96 for
+    * externally-written files — but lose their zone-map statistics).
     */
   private[graft] def withMicrosTimestamps[T](s: SparkSession)(body: => T): T = {
     val (key, micros) = MicrosTimestamps
@@ -4214,6 +4217,20 @@ private[v2] case class StagedParquetWriterFactory(
 }
 
 object StagedParquetWriterFactory {
+  /** The column types a staged table stores: the scalars below, decimals
+    * of precision ≤ 18 (INT32/INT64-backed), and arrays, structs and maps
+    * of them.
+    */
+  private[v2] def storable(dt: DataType): Boolean = dt match {
+    case BooleanType | IntegerType | DateType | LongType | TimestampType |
+         FloatType | DoubleType | StringType | BinaryType => true
+    case d: DecimalType       => d.precision <= 18
+    case ArrayType(el, _)     => storable(el)
+    case st: StructType       => st.fields.forall(f => storable(f.dataType))
+    case MapType(kt, vt, _)   => storable(kt) && storable(vt)
+    case _                    => false
+  }
+
   /** queryId → filesystem-safe token (Spark's queryIds are UUIDs; keep it
     * bounded but unique enough that two applications' concurrent writes
     * cannot collide — 12 hex chars of UUID).
@@ -4225,10 +4242,9 @@ object StagedParquetWriterFactory {
     }
 
   /** Driver side, once per write, before any task launches. First the
-    * gate: the write accepts exactly the stored column types the V2 scan
-    * decodes ([[FlatRowReadSupport.converterFor]]) — Spark's encoder
-    * would also write e.g. tinyint or decimal(38,0), leaving files no
-    * staged read can open. Then Spark's parquet writer is prepared for
+    * gate: the write accepts only the stored column types staged tables
+    * define ([[storable]]) — Spark's encoder would also write e.g. tinyint
+    * or decimal(38,0). Then Spark's parquet writer is prepared for
     * the data columns (identity-partition columns live in the directory
     * names) with snappy — the `.snappy.parquet` file names promise it —
     * [[StagedParquet.MicrosTimestamps]], and `graft.staged.rowgroup.bytes`
@@ -4240,13 +4256,10 @@ object StagedParquetWriterFactory {
                           partSpec: Seq[PartField], token: String,
                           keyShare: Option[(Int, DataType, Int)] = None): StagedParquetWriterFactory = {
     val dataSchema = StructType(PartSpec.dataFields(schema, partSpec).map(_._1))
-    dataSchema.foreach { f =>
-      try FlatRowReadSupport.converterFor(f.dataType, _ => ()): Unit
-      catch { case e: UnsupportedOperationException =>
-        throw new UnsupportedOperationException(
-          s"staged table $targetDir: column ${f.name} has type " +
-            s"${f.dataType.sql}, which staged tables cannot store", e)
-      }
+    dataSchema.find(f => !storable(f.dataType)).foreach { f =>
+      throw new UnsupportedOperationException(
+        s"staged table $targetDir: column ${f.name} has type " +
+          s"${f.dataType.sql}, which staged tables cannot store")
     }
     val session = SparkSession.active
     val sqlConf = session.sessionState.conf.clone()

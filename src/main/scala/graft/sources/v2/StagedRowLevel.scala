@@ -120,7 +120,7 @@ class StagedRowLevelScan(prodDir: String, tableSchema: StructType,
     val rootPath = new Path(prodDir).toUri.getPath
     val dirs = parts.map { ip =>
       val p = ip.asInstanceOf[StagedInputPartition]
-      new Path(p.files.head).getParent.toUri.getPath
+      new Path(p.file).getParent.toUri.getPath
         .stripPrefix(rootPath).stripPrefix("/")
     }.filter(_.nonEmpty).distinct.toSeq
     op.scannedDirs.set(dirs)

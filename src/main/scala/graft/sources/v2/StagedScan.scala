@@ -4,21 +4,21 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
-import org.apache.parquet.schema.MessageType
 
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Coalesce, Expression, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.connector.expressions.Expressions
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 READ path for the staged catalog — the scan-side twin of
   * the staged write, built so the catalog's partitioned tables participate
@@ -56,13 +56,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * (what etl_zorder_layout/etl_compact_bins lay files out FOR), same
   * conservative rule as above: only a provably-empty group is skipped.
   *
-  * Decoding goes through a hand-rolled parquet-hadoop [[ReadSupport]]
-  * (public API only) that decodes Spark's own non-legacy parquet encoding,
-  * the one every staged-table file is written in — scalars plus the nested
-  * encodings (3-level LIST, struct groups, MAP key_value groups), so every
+  * Decoding goes through Spark's own parquet reader ([[StagedRead]]), the
+  * decoder of the writer every staged-table file comes from, so every
   * table the sink writes reads back through the scan with SPJ/pruning/DPP
-  * intact. It stays hand-rolled because the scan needs each row's file
-  * position (deletion vectors, equality-delete probes). One input
+  * intact; it also supplies each row's file-absolute position, which
+  * deletion vectors are keyed by. One input
   * split per FILE with the partition values attached — and per ROW GROUP
   * within large files — so an unpartitioned or hot-partition table reads
   * with real parallelism, and Spark's key-grouped planner re-groups
@@ -85,18 +83,14 @@ class StagedScanBuilder(tableName: String, prodDir: String,
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     partPruning = filters.filter(PartitionDir.decides(_, partSpec))
     // ZONE-MAP data skipping: comparison predicates on stored DATA columns
-    // whose parquet statistics are trustworthy bounds (the same numeric/
-    // temporal set the aggregate pushdown trusts — binary/decimal stats
-    // can be truncated in the format, never used). These prune ROW GROUPS
-    // at plan time from footer min/max ([[StagedScan.blockSurvives]]);
+    // whose parquet statistics are trustworthy bounds. These prune ROW
+    // GROUPS at plan time from footer min/max ([[StagedScan.blockSurvives]]);
     // identity columns are excluded (not stored in files — they prune
     // directories above), days SOURCE columns participate in both (the
     // dir prunes whole days, the zone map cuts row groups of boundary
     // days when the write was time-ordered)
-    val statTypes: Set[DataType] =
-      Set(IntegerType, LongType, FloatType, DoubleType, DateType, TimestampType)
     val statCols: Set[String] = tableSchema.fields
-      .filter(f => statTypes(f.dataType)).map(_.name).toSet --
+      .filter(f => StagedScan.StatTypes(f.dataType)).map(_.name).toSet --
       partSpec.filter(_.kind == "identity").map(_.name)
     dataSkip = filters.filter {
       case EqualTo(a, v)            => statCols(a) && v != null
@@ -151,14 +145,12 @@ class StagedScanBuilder(tableName: String, prodDir: String,
     if (StagedParquet.hasOldLayouts(prodDir) &&
         StagedParquet.oldLayoutsHoldData(prodDir)) return false
     val identityCols = partSpec.filter(_.kind == "identity").map(_.name)
-    val statTypes: Set[DataType] =
-      Set(IntegerType, LongType, FloatType, DoubleType, DateType, TimestampType)
     def dataCol(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
       e match {
         case f: NamedReference if f.fieldNames().length == 1 &&
             !identityCols.contains(f.fieldNames()(0)) &&
             tableSchema.fieldNames.contains(f.fieldNames()(0)) &&
-            statTypes(tableSchema(f.fieldNames()(0)).dataType) &&
+            StagedScan.StatTypes(tableSchema(f.fieldNames()(0)).dataType) &&
             // a RENAMED column's pre-rename files keep stats under the
             // old physical name — the footer-agg reader resolves by
             // current name only, so the pushdown stands down for it
@@ -308,40 +300,32 @@ class StagedScan(tableName: String, prodDir: String, tableSchema: StructType,
         if (dirIdentity.isEmpty) dataSkip
         else dataSkip.filterNot(_.references.exists(dirIdentity))
       files.flatMap { case (f, len) =>
-        val dv = dirDv.getOrElse(new Path(f).getName, Nil)
-        val eqf = eqOf(f)
-        def whole = { bytes += len
-          StagedInputPartition(vals, Seq(f), tableSchema.json,
-            spec, required.fieldNames.toSeq, None, dv, 0L, eqf) }
-        def ranged(r: (Long, Long), row0: Long) = { bytes += r._2 - r._1
-          StagedInputPartition(vals, Seq(f),
-            tableSchema.json, spec, required.fieldNames.toSeq,
-            Some(r), dv, row0, eqf) }
-        if (len <= splitBytes && dirSkip.isEmpty) Seq(whole)
+        def split(range: Option[(Long, Long)]) = {
+          bytes += range.fold(len)(r => r._2 - r._1)
+          StagedInputPartition(vals, f, tableSchema.json, spec, range,
+            dirDv.getOrElse(new Path(f).getName, Nil), eqOf(f))
+        }
+        if (len <= splitBytes && dirSkip.isEmpty) Seq(split(None))
         else {
           // one footer read decides both row-group splitting and the
           // zone-map cut; a file whose every row group is excluded plans
-          // ZERO splits — never listed, never opened. Each block carries
-          // its cumulative ROW offset: DV positions are file-absolute, so
-          // a range split must know the row index it starts at.
+          // ZERO splits — never listed, never opened. DV positions need no
+          // per-split offset: the reader reports file-absolute row indexes
+          // under a range split too.
           val blocks = StagedScan.blockRanges(f, len)
-          val rowOffsets = blocks.scanLeft(0L)(_ + _._3.getRowCount)
-          val withRow = blocks.zip(rowOffsets)
-            .map { case ((s0, e0, b), row0) => (s0, e0, b, row0) }
-          val kept = withRow.filter { case (_, _, b, _) =>
+          val kept = blocks.filter { case (_, _, b) =>
             StagedScan.blockSurvives(b, tableSchema, dirSkip) }
           if (kept.isEmpty) Seq.empty
           else if (kept.length == blocks.length &&
-            (len <= splitBytes || blocks.length == 1)) Seq(whole)
+            (len <= splitBytes || blocks.length == 1)) Seq(split(None))
           else if (len <= splitBytes)
             // small file, some groups cut: adjacent survivors merge into
             // one range split (skipping trims I/O, not parallelism here)
-            kept.foldLeft(List.empty[(Long, Long, Long)]) {
-              case ((ps, pe, pr) :: tail, (s0, e0, _, _)) if pe == s0 =>
-                (ps, e0, pr) :: tail
-              case (acc, (s0, e0, _, r0)) => (s0, e0, r0) :: acc
-            }.reverse.map { case (s0, e0, r0) => ranged((s0, e0), r0) }
-          else kept.map { case (s0, e0, _, r0) => ranged((s0, e0), r0) }
+            kept.foldLeft(List.empty[(Long, Long)]) {
+              case ((ps, pe) :: tail, (s0, e0, _)) if pe == s0 => (ps, e0) :: tail
+              case (acc, (s0, e0, _)) => (s0, e0) :: acc
+            }.reverse.map(r => split(Some(r)))
+          else kept.map { case (s0, e0, _) => split(Some((s0, e0))) }
         }
       }
     }.toArray
@@ -378,8 +362,11 @@ class StagedScan(tableName: String, prodDir: String, tableSchema: StructType,
     planned.filter(p => PartitionDir.mayMatch(runtime, p.rawValues,
       p.partSpec, tableSchema)).toArray[InputPartition]
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    StagedReaderFactory(tableSchema.json, partSpec, required.fieldNames.toSeq)
+  // one reader per scan: Spark asks for the factory more than once per
+  // query, and each StagedRead broadcasts the Hadoop conf
+  private lazy val read = new StagedRead(tableSchema, required,
+    StagedEqSets.keysOf(tableEqState._1.map(_._1)))
+  override def createReaderFactory(): PartitionReaderFactory = StagedReaderFactory(read)
 
   /** Key-grouped over ALL transforms — identity AND days — the SPJ
     * contract. Spark resolves the days transform through the catalog's
@@ -511,27 +498,34 @@ class StagedMicroBatchStream(tableName: String, prodDir: String,
             (specOfGen(segs.take(2).mkString("/")), segs.drop(2).dropRight(1))
           else (partSpec, segs.dropRight(1))
         val vals = dirSegs.map(_.split("=", 2)(1))
-        StagedInputPartition(vals, Seq(p.toString),
-          tableSchema.json, entrySpec, required.fieldNames.toSeq)
+        StagedInputPartition(vals, p.toString, tableSchema.json, entrySpec)
       }
     }.toArray[InputPartition]
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    StagedReaderFactory(tableSchema.json, partSpec, required.fieldNames.toSeq)
+  // one reader for the query's every micro-batch (see StagedScan.read)
+  private lazy val read = new StagedRead(tableSchema, required, Map.empty)
+  override def createReaderFactory(): PartitionReaderFactory = StagedReaderFactory(read)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
 object StagedScan {
+  /** Stored column types whose parquet footer statistics are exact bounds,
+    * the only ones the zone map ([[blockSurvives]]) and the footer
+    * aggregate pushdown consult: binary/decimal statistics can be
+    * truncated in the format and are never used.
+    */
+  private[v2] val StatTypes: Set[DataType] =
+    Set(IntegerType, LongType, FloatType, DoubleType, DateType, TimestampType)
+
   /** Hadoop defaults parsed ONCE per JVM: every `new Configuration()` walks
     * the core-default/core-site XML (several ms of driver or task time),
     * and the scan paths were allocating one per footer open / per file —
     * the profiled XML-parse frames in the lifecycle queries (optimization
     * round r13). The copy constructor clones the property map without
-    * re-parsing, so per-reader isolation stays (parquet read-supports may
-    * set keys on their conf).
+    * re-parsing, so each footer read gets its own conf.
     */
   private[graft] lazy val baseHadoopConf = new Configuration()
   private[graft] def freshConf(): Configuration = new Configuration(baseHadoopConf)
@@ -611,7 +605,7 @@ object StagedScan {
       }
       // stats may live under a historical (pre-RENAME) physical name —
       // the bytes are the column's, so its bounds are equally valid
-      val physNames = name +: StagedParquet.columnAliases(schema, name)
+      val physNames = StagedParquet.readNames(schema(name))
       b.getColumns.asScala.find(c => physNames.contains(c.getPath.toDotString)) match {
         case None => false // pre-evolution file: all null, comparison can't match
         case Some(cc) =>
@@ -693,8 +687,8 @@ object StagedScan {
   * statistics folded across the partition's files. Partial-mode contract:
   * Spark's final aggregate merges these per-split rows (sums the counts,
   * re-mins the mins), so correctness never depends on one-split-per-group.
-  * Statistics gaps fall back to scanning JUST that column through the flat
-  * reader — slower, never wrong.
+  * Statistics gaps fall back to scanning the file's MIN/MAX columns
+  * through the scan's reader ([[StagedRead]]) — slower, never wrong.
   */
 class StagedAggScan(tableName: String, prodDir: String,
                     tableSchema: StructType, partSpec: Seq[PartField],
@@ -716,12 +710,18 @@ class StagedAggScan(tableName: String, prodDir: String,
     StagedScan.planPartitions(prodDir, tableSchema, partSpec, pruning)
       .flatMap { case (_, vals, files) =>
         // per-file splits: footer reads parallelize; partial mode merges
-        files.map { case (f, _) => StagedInputPartition(vals, Seq(f),
-          tableSchema.json, partSpec, groups) }
+        files.map { case (f, _) =>
+          StagedInputPartition(vals, f, tableSchema.json, partSpec) }
       }.toArray[InputPartition]
 
+  // a COUNT(*)-only scan reads no column, so builds no reader
+  private lazy val read = {
+    val cols = funcs.collect { case StagedAggScan.Mn(c) => c; case StagedAggScan.Mx(c) => c }
+    Option.when(cols.nonEmpty)(
+      new StagedRead(tableSchema, StructType(cols.distinct.map(tableSchema(_))), Map.empty))
+  }
   override def createReaderFactory(): PartitionReaderFactory =
-    StagedAggReaderFactory(tableSchema.json, partSpec, groups, funcs)
+    StagedAggReaderFactory(tableSchema.json, partSpec, groups, funcs, read)
 
   override def description(): String =
     s"StagedAggScan(table=$tableName, pushed=[${funcs.mkString(",")}], " +
@@ -735,8 +735,12 @@ object StagedAggScan {
   case class Mx(col: String) extends Func { override def toString = s"MAX($col)" }
 }
 
+/** @param read the MIN/MAX columns (None without any), for a file whose
+  *             footer lacks their statistics
+  */
 case class StagedAggReaderFactory(schemaJson: String, partSpec: Seq[PartField],
-                                  groups: Seq[String], funcs: Seq[StagedAggScan.Func])
+                                  groups: Seq[String], funcs: Seq[StagedAggScan.Func],
+                                  read: Option[StagedRead])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[StagedInputPartition]
@@ -750,33 +754,31 @@ case class StagedAggReaderFactory(schemaJson: String, partSpec: Seq[PartField],
         // per Mn/Mx func: folded (value, sawAnyNonNull)
         val acc = new Array[Any](funcs.length)
         val needStats = funcs.exists(_ != StagedAggScan.Cnt)
-        for (file <- p.files) {
-          StagedScan.withFooter(file, conf) { fr =>
-            count += fr.getRecordCount
-            if (needStats) {
-              val blocks = fr.getFooter.getBlocks.asScala
-              funcs.zipWithIndex.foreach {
-                case (StagedAggScan.Cnt, _) => ()
-                case (f, i) =>
-                  val (col, isMin) = f match {
-                    case StagedAggScan.Mn(c) => (c, true)
-                    case StagedAggScan.Mx(c) => (c, false)
-                    case StagedAggScan.Cnt   => throw new IllegalStateException
+        StagedScan.withFooter(p.file, conf) { fr =>
+          count += fr.getRecordCount
+          if (needStats) {
+            val blocks = fr.getFooter.getBlocks.asScala
+            funcs.zipWithIndex.foreach {
+              case (StagedAggScan.Cnt, _) => ()
+              case (f, i) =>
+                val (col, isMin) = f match {
+                  case StagedAggScan.Mn(c) => (c, true)
+                  case StagedAggScan.Mx(c) => (c, false)
+                  case StagedAggScan.Cnt   => throw new IllegalStateException
+                }
+                for (b <- blocks if b.getRowCount > 0) {
+                  b.getColumns.asScala.find(_.getPath.toDotString == col) match {
+                    case Some(cc) =>
+                      val st = cc.getStatistics
+                      if (st == null || st.isEmpty)
+                        acc(i) = fallbackScan(col, isMin) // stats gap: exact fallback
+                      else if (st.hasNonNullValue) {
+                        val v = if (isMin) st.genericGetMin else st.genericGetMax
+                        acc(i) = merge(acc(i), v, isMin)
+                      } // all-null row group contributes nothing
+                    case None => () // pre-evolution file: column absent, all null
                   }
-                  for (b <- blocks if b.getRowCount > 0) {
-                    b.getColumns.asScala.find(_.getPath.toDotString == col) match {
-                      case Some(cc) =>
-                        val st = cc.getStatistics
-                        if (st == null || st.isEmpty)
-                          acc(i) = fallbackScan(col, isMin) // stats gap: exact fallback
-                        else if (st.hasNonNullValue) {
-                          val v = if (isMin) st.genericGetMin else st.genericGetMax
-                          acc(i) = merge(acc(i), v, isMin)
-                        } // all-null row group contributes nothing
-                      case None => () // pre-evolution file: column absent, all null
-                    }
-                  }
-              }
+                }
             }
           }
         }
@@ -809,18 +811,11 @@ case class StagedAggReaderFactory(schemaJson: String, partSpec: Seq[PartField],
         * never answer MIN/MAX from incomplete metadata.
         */
       private def fallbackScan(col: String, isMin: Boolean): Any = {
+        val value = read.get.column(col)
         var best: Any = null
-        for (file <- p.files) {
-          val r = ParquetReader.builder(
-            new FlatRowReadSupport(Seq(schema(col))), new Path(file))
-            .withConf(StagedScan.freshConf()).build()
-          try {
-            var rec = r.read()
-            while (rec != null) {
-              if (rec(0) != null) best = merge(best, rec(0), isMin)
-              rec = r.read()
-            }
-          } finally r.close()
+        read.get.foreach(p.file) { r =>
+          val v = value.eval(r)
+          if (v != null) best = merge(best, v, isMin)
         }
         best
       }
@@ -833,32 +828,28 @@ case class StagedAggReaderFactory(schemaJson: String, partSpec: Seq[PartField],
   }
 }
 
-/** @param rawValues    identity partition dir values, partSpec order
-  * @param files        absolute paths of this partition's committed files
-  * @param schemaJson   full DECLARED table schema (evolution-aware)
-  * @param requiredCols scan output columns, output order
-  * @param range        optional byte range restricting the (single) file to
-  *                     the row groups whose midpoint falls inside it — the
-  *                     row-group split; None reads whole files
+/** One input split: a committed file, whole or one row-group byte range.
+  * @param rawValues  the file's directory values, `partSpec` order
+  * @param file       absolute path of the file
+  * @param schemaJson full DECLARED table schema (evolution-aware)
+  * @param partSpec   the spec of the file's layout generation
+  * @param range      optional byte range restricting the file to the row
+  *                   groups whose midpoint falls inside it — the row-group
+  *                   split; None reads the whole file
+  * @param dv         sorted coalesced DELETED row-position ranges of the
+  *                   file, file-absolute ([[StagedParquet.readDvs]]);
+  *                   empty on tables without deletion vectors
+  * @param eq         absolute paths of the EQUALITY-DELETE files whose
+  *                   boundary covers this split's file (planner-side
+  *                   applicability test — see StagedParquet.eqPlanState);
+  *                   the reader hash-probes each row's key against their
+  *                   loaded (executor-cached) key sets. Empty on tables
+  *                   without live equality deletes.
   */
-/** @param dv       sorted coalesced DELETED row-position ranges of the
-  *                  split's (single) file — [[StagedParquet.readDvs]];
-  *                  empty on tables without deletion vectors
-  * @param rowStart  FILE-absolute row index where this split begins (0 for
-  *                  whole-file splits; a range split's first block offset)
-  * @param eq       absolute paths of the EQUALITY-DELETE files whose
-  *                  boundary covers this split's file (planner-side
-  *                  applicability test — see StagedParquet.eqPlanState);
-  *                  the reader hash-probes each row's key against their
-  *                  loaded (executor-cached) key sets. Empty on tables
-  *                  without live equality deletes.
-  */
-case class StagedInputPartition(rawValues: Seq[String], files: Seq[String],
+case class StagedInputPartition(rawValues: Seq[String], file: String,
                                 schemaJson: String, partSpec: Seq[PartField],
-                                requiredCols: Seq[String],
                                 range: Option[(Long, Long)] = None,
                                 dv: Seq[(Long, Long)] = Nil,
-                                rowStart: Long = 0L,
                                 eq: Seq[String] = Nil)
     extends InputPartition with HasPartitionKey {
 
@@ -883,15 +874,94 @@ case class StagedInputPartition(rawValues: Seq[String], files: Seq[String],
   override def partitionKey(): InternalRow = key
 }
 
-case class StagedReaderFactory(schemaJson: String, partSpec: Seq[PartField],
-                               requiredCols: Seq[String])
-    extends PartitionReaderFactory {
+/** One staged scan's parquet read, built on the driver and shipped to its
+  * tasks: Spark's own reader ([[ParquetFileFormat]] in row mode, the
+  * session's Hadoop conf broadcast once per scan) over ONE read schema
+  * for every split —
+  *   - each of [[cols]] under its declared name and its pre-RENAME
+  *     aliases ([[StagedParquet.widenForAliases]]), all nullable: a
+  *     column a file lacks (added later, renamed, or stored in the
+  *     directory name) reads null;
+  *   - the file row index, file-absolute under a row-group range split
+  *     too — what deletion vectors are keyed by;
+  *   - as Spark partition values, each of [[cols]] whose type a directory
+  *     name can carry ([[PartitionDir.dirValueType]]), set per split from
+  *     the split's own spec and null where that spec stores the column in
+  *     the file.
+  * Each column is then one coalesce(name, aliases…, partition value)
+  * over the raw row ([[column]]), whatever rename, layout generation or
+  * spec the file comes from.
+  *
+  * @param schema the declared table schema
+  * @param out    the scan's output schema: its columns, with the types the
+  *               scan reports (Spark may have pruned nested fields)
+  * @param eqKeys live equality-delete file → its key column
+  */
+final class StagedRead(schema: StructType, out: StructType,
+                       val eqKeys: Map[String, String]) extends Serializable {
+  /** The output columns, then the eq key columns the output lacks. */
+  private val cols: Seq[String] =
+    (out.fieldNames.toSeq ++ eqKeys.values.toSeq.sorted).distinct
+  private def typeOf(c: String): DataType =
+    if (out.fieldNames.contains(c)) out(c).dataType else schema(c).dataType
+  private val data = StructType(StagedParquet.widenForAliases(StructType(
+    cols.map(c => schema(c).copy(dataType = typeOf(c))))).map(_.copy(nullable = true)))
+  private val partCols = cols.filter(c => PartitionDir.dirValueType(typeOf(c)))
+  /** Ordinal of the file row index in a raw row. */
+  val rowIndex: Int = data.length
+
+  private val fn: PartitionedFile => Iterator[InternalRow] = {
+    val read = data.add(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType)
+    val part = StructType(partCols.map(c => StructField(c, typeOf(c))))
+    val s = SparkSession.active
+    new ParquetFileFormat().buildReaderWithPartitionValues(s, read, part, read, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), s.sessionState.newHadoopConf())
+  }
+
+  /** The raw rows of `file` (of its row groups whose midpoint falls in
+    * `range`, when set), with `spec`'s identity values `vals` as partition
+    * values. Rows are reused: copy what outlives the next row. The
+    * caller closes the iterator ([[close]]).
+    */
+  def rows(file: String, range: Option[(Long, Long)],
+           spec: Seq[PartField] = Nil, vals: Seq[String] = Nil): Iterator[InternalRow] = {
+    val part = new GenericInternalRow(partCols.map { c =>
+      val pi = spec.indexWhere(pf => pf.kind == "identity" && pf.name == c)
+      if (pi < 0) null else PartitionDir.partValue(typeOf(c), vals(pi))
+    }.toArray[Any])
+    // a whole file: every row group's midpoint lies in [0, Long.MaxValue)
+    val (start, len) = range.fold((0L, Long.MaxValue))(r => (r._1, r._2 - r._1))
+    fn(PartitionedFile(part, SparkPath.fromPathString(file), start, len))
+  }
+
+  def close(rows: Iterator[InternalRow]): Unit = rows match {
+    case c: java.io.Closeable => c.close()
+    case _                    => ()
+  }
+
+  /** `f` over every raw row of the whole `file`. */
+  def foreach(file: String)(f: InternalRow => Unit): Unit = {
+    val it = rows(file, None)
+    try it.foreach(f) finally close(it)
+  }
+
+  /** The output columns over a raw row. */
+  def output: Seq[Expression] = out.fieldNames.toSeq.map(column)
+
+  /** Column `c` over a raw row: coalesce(name, aliases…, partition value). */
+  def column(c: String): Expression = {
+    val dt = typeOf(c)
+    val pi = partCols.indexOf(c)
+    Coalesce(StagedParquet.readNames(schema(c))
+      .map(n => BoundReference(data.fieldIndex(n), dt, nullable = true)) ++
+      Option.when(pi >= 0)(BoundReference(rowIndex + 1 + pi, dt, nullable = true)))
+  }
+}
+
+case class StagedReaderFactory(read: StagedRead) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     StagedReaderFactory.readersCreated.incrementAndGet(): Unit
-    val p = partition.asInstanceOf[StagedInputPartition]
-    // the SPLIT's spec, not the factory's: under partition-spec evolution
-    // each generation's identity columns reconstitute from ITS dir values
-    new StagedPartitionReader(p, schemaJson, p.partSpec, requiredCols)
+    new StagedPartitionReader(partition.asInstanceOf[StagedInputPartition], read)
   }
 }
 
@@ -903,15 +973,14 @@ object StagedReaderFactory {
   val readersCreated = new java.util.concurrent.atomic.AtomicLong(0L)
 }
 
-/** Executor-local cache of equality-delete key sets: eq-file path ->
-  * (key column name, key values as Spark internal reps). An eq file is
-  * immutable once published (nonce-named; retirement MOVES it, so the
-  * path is never re-pointed at new bytes) — load once per executor, share
-  * across every split of every query in the JVM. The key column name is
-  * read from the eq parquet itself (self-describing schema); values load
-  * through the same FlatRowReadSupport the data path uses, so set probes
-  * compare identical representations (UTF8String vs UTF8String, boxed
-  * primitives vs boxed primitives).
+/** Equality-delete key sets. An eq file is immutable once published
+  * (nonce-named; retirement MOVES it, so the path is never re-pointed at
+  * new bytes). Its one column IS the key: [[keysOf]] reads the name from
+  * each file's footer on the driver, and [[load]] reads the values once
+  * per executor through the scan's own [[StagedRead]], shared across every
+  * split of every query in the JVM. Values keep Spark's internal
+  * representation (UTF8String, boxed primitives), copied out of the
+  * reader's reused rows, so set probes compare like with like.
   */
 object StagedEqSets {
   /** Eq-set loads that hit parquet (cache misses) — spec observability:
@@ -919,80 +988,49 @@ object StagedEqSets {
     */
   val loads = new java.util.concurrent.atomic.AtomicLong(0L)
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, java.util.HashSet[Any])]()
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.HashSet[Any]]()
 
-  def load(path: String, tableSchema: StructType): (String, java.util.HashSet[Any]) = {
+  def keysOf(paths: Seq[String]): Map[String, String] =
+    paths.map(p => p -> StagedScan.withFooter(p)(
+      _.getFooter.getFileMetaData.getSchema.getFields.get(0).getName)).toMap
+
+  def load(path: String, read: StagedRead): java.util.HashSet[Any] = {
     val got = cache.get(path)
     if (got != null) return got
     loads.incrementAndGet(): Unit
-    val p = new Path(path)
-    val conf = StagedScan.freshConf()
-    val key = StagedScan.withFooter(path, conf)(
-      _.getFooter.getFileMetaData.getSchema.getFields.get(0).getName)
-    val field = tableSchema(key)
+    val key = read.column(read.eqKeys(path))
     val set = new java.util.HashSet[Any]()
-    val reader = ParquetReader
-      .builder(new FlatRowReadSupport(Seq(field)), p).withConf(conf).build()
-    try {
-      var rec = reader.read()
-      while (rec != null) {
-        if (rec(0) != null) set.add(rec(0)): Unit
-        rec = reader.read()
-      }
-    } finally reader.close()
+    read.foreach(path) { r =>
+      val v = key.eval(r)
+      if (v != null) set.add(InternalRow.copyValue(v)): Unit
+    }
     // live eq files are bounded by epochs-between-maintenance; the crude
     // cap only guards a JVM that outlives many maintenance cycles
     if (cache.size > 256) cache.clear()
-    val v = (key, set)
-    cache.putIfAbsent(path, v)
-    v
+    cache.putIfAbsent(path, set)
+    set
   }
 }
 
-/** Streams this partition's files through the hand-rolled parquet
-  * [[ReadSupport]]; identity partition columns are reconstituted from the
-  * directory values as per-partition constants (they are not stored in the
-  * files — same contract as the writer).
+/** Streams this split's file through the scan's [[StagedRead]], dropping
+  * the rows its deletion vector or a live equality delete removes; each
+  * output column is its [[StagedRead.column]] coalesce, so identity
+  * partition columns reconstitute from the directory values (they are
+  * not stored in the files — same contract as the writer).
   */
-class StagedPartitionReader(p: StagedInputPartition, schemaJson: String,
-                            partSpec: Seq[PartField], requiredCols: Seq[String])
+class StagedPartitionReader(p: StagedInputPartition, read: StagedRead)
     extends PartitionReader[InternalRow] {
 
-  private val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-  private val identity = partSpec.filter(_.kind == "identity").map(_.name)
-  // equality deletes applying to this split's file: (key column, key set)
-  // per eq file, loaded once per executor (StagedEqSets)
-  private val eqLoaded: Seq[(String, java.util.HashSet[Any])] =
-    p.eq.map(StagedEqSets.load(_, schema))
-  // requested DATA fields (everything not reconstituted from the dir
-  // name), EXTENDED by any eq key column the projection didn't ask for —
-  // the probe needs the value; the slots below never expose the extras
-  private val dataFields: Seq[StructField] = {
-    val base = requiredCols.filterNot(identity.contains)
-    val extra = eqLoaded.map(_._1).distinct
-      .filterNot(base.contains).filterNot(identity.contains)
-    (base ++ extra).map(n => schema(n))
-  }
-  // output ordinal -> Left(constant) | Right(index into the data array)
-  private val slots: Array[Either[Any, Int]] = requiredCols.map { n =>
-    val pi = partSpec.indexWhere(pf => pf.kind == "identity" && pf.name == n)
-    if (pi >= 0) Left(PartitionDir.partValue(schema(n).dataType, p.rawValues(pi)))
-    else Right(dataFields.indexWhere(_.name == n))
-  }.toArray
-
-  private val fileIter = p.files.iterator
-  private var reader: ParquetReader[Array[Any]] = _
-  private var current: Array[Any] = _
-  // count-star / partition-columns-only scans project ZERO data columns;
-  // parquet cannot decode an empty projection, so emit footer row counts
-  private var pendingRows: Long = 0L
-  // deletion-vector skip state: `pos` is the FILE-absolute row index of
-  // the NEXT record the reader will return; ranges are sorted and pos is
-  // monotonic, so one forward pointer suffices. A split carrying a DV is
-  // single-file by construction (batch splits are per-file; multi-file
-  // stream partitions always pass dv = Nil — the tail is an append feed).
+  // equality deletes applying to this split's file: (key set, key column)
+  // per eq file, the sets loaded once per executor (StagedEqSets)
+  private val eqProbes: Array[(java.util.HashSet[Any], Expression)] =
+    p.eq.map(e => (StagedEqSets.load(e, read), read.column(read.eqKeys(e)))).toArray
+  private val project = UnsafeProjection.create(read.output)
+  private val rows = read.rows(p.file, p.range, p.partSpec, p.rawValues)
+  private var current: InternalRow = _
+  // deletion-vector skip state: ranges are sorted and the row index is
+  // monotonic, so one forward pointer suffices
   private val dvRanges: Array[(Long, Long)] = p.dv.toArray
-  private var pos: Long = 0L
   private var dvIdx: Int = 0
 
   private def dvDeleted(x: Long): Boolean = {
@@ -1000,272 +1038,28 @@ class StagedPartitionReader(p: StagedInputPartition, schemaJson: String,
     dvIdx < dvRanges.length && dvRanges(dvIdx)._1 <= x
   }
 
-  // equality-delete probes: key set + accessor (identity keys are
-  // per-split constants — the write guard keeps upsert keys data-stored,
-  // but the reader stays general)
-  private val eqProbes: Array[(java.util.HashSet[Any], Either[Any, Int])] =
-    eqLoaded.map { case (k, set) =>
-      val pi = partSpec.indexWhere(pf => pf.kind == "identity" && pf.name == k)
-      val acc: Either[Any, Int] =
-        if (pi >= 0) Left(PartitionDir.partValue(schema(k).dataType, p.rawValues(pi)))
-        else Right(dataFields.indexWhere(_.name == k))
-      (set, acc)
-    }.toArray
-  // a constant-key probe that matches deletes the WHOLE split — also the
-  // only correct answer for the footer-count (zero-data-column) path
-  private val eqWholeSplitDeleted: Boolean = eqProbes.exists {
-    case (set, Left(c)) => c != null && set.contains(c)
-    case _              => false
-  }
-  private def eqDeleted(rec: Array[Any]): Boolean = {
+  private def eqDeleted(r: InternalRow): Boolean = {
     var i = 0
     while (i < eqProbes.length) {
-      val v = eqProbes(i)._2 match {
-        case Left(c)   => c
-        case Right(ix) => rec(ix)
-      }
+      val v = eqProbes(i)._2.eval(r)
       if (v != null && eqProbes(i)._1.contains(v)) return true
       i += 1
     }
     false
   }
 
-  private def openNext(): Boolean = {
-    if (reader != null) { reader.close(); reader = null }
-    if (!fileIter.hasNext) false
-    else if (dataFields.isEmpty) {
-      // a range split counts only its own row groups (midpoint rule —
-      // the same criterion parquet-hadoop's range filter applies); DV'd
-      // positions subtract per block so footer counts stay exact
-      StagedScan.withFooter(fileIter.next())(f => p.range match {
-        case None =>
-          val n = f.getRecordCount
-          pendingRows += n - StagedParquet.deletedWithin(p.dv, 0L, n)
-        case Some((s0, e0)) =>
-          var off = 0L
-          f.getFooter.getBlocks.asScala.foreach { b =>
-            val mid = b.getStartingPos + b.getCompressedSize / 2
-            if (mid >= s0 && mid < e0)
-              pendingRows += b.getRowCount -
-                StagedParquet.deletedWithin(p.dv, off, off + b.getRowCount)
-            off += b.getRowCount
-          }
-      })
-      true
-    } else {
-      val builder = ParquetReader
-        .builder(new FlatRowReadSupport(dataFields), new Path(fileIter.next()))
-        .withConf(StagedScan.freshConf())
-      reader = p.range
-        .map { case (s0, e0) => builder.withFileRange(s0, e0) }
-        .getOrElse(builder)
-        .build()
-      pos = p.rowStart
-      dvIdx = 0
-      true
-    }
-  }
-
   override def next(): Boolean = {
-    if (eqWholeSplitDeleted) return false
-    if (dataFields.isEmpty) {
-      while (pendingRows == 0L && fileIter.hasNext) openNext(): Unit
-      if (pendingRows == 0L) return false
-      pendingRows -= 1
-      return true
-    }
-    while (true) {
-      if (reader == null && !openNext()) return false
-      val rec = reader.read()
-      if (rec != null) {
-        val x = pos; pos += 1
-        if ((dvRanges.isEmpty || !dvDeleted(x)) &&
-            (eqProbes.isEmpty || !eqDeleted(rec))) { current = rec; return true }
-      } else { reader.close(); reader = null }
+    while (rows.hasNext) {
+      val r = rows.next()
+      if ((dvRanges.isEmpty || !dvDeleted(r.getLong(read.rowIndex))) &&
+          (eqProbes.isEmpty || !eqDeleted(r))) { current = r; return true }
     }
     false
   }
 
-  override def get(): InternalRow =
-    new GenericInternalRow(slots.map {
-      case Left(const) => const
-      case Right(i)    => current(i)
-    })
+  override def get(): InternalRow = project(current)
 
-  override def close(): Unit = if (reader != null) reader.close()
-}
-
-// ---------------------------------------------------------------------------
-// parquet -> values, via public parquet-hadoop API only
-// ---------------------------------------------------------------------------
-
-/** Materializes each record as an Array[Any] in `requested` order using
-  * Spark internal value representations (UTF8String, epoch-day ints, UTC
-  * micros, Decimal, GenericArrayData / GenericInternalRow /
-  * ArrayBasedMapData for nested types). Fields absent from the file
-  * (pre-evolution files) stay null. The nested converters decode Spark's
-  * non-legacy writer encodings: 3-level LIST groups (`list` repetition
-  * wrapper, `element` field), plain struct groups, MAP `key_value` groups
-  * with required keys — so every table the staged sink can write reads
-  * back through the V2 scan (and keeps SPJ / pruning / DPP / agg
-  * pushdown), not just flat-scalar ones. The types [[converterFor]]
-  * accepts are also the only ones a staged write accepts
-  * ([[StagedParquetWriterFactory.prepare]]).
-  */
-private[v2] class FlatRowReadSupport(requested: Seq[StructField])
-    extends ReadSupport[Array[Any]] {
-
-  // a requested field resolves to its declared name, or — files written
-  // before a RENAME COLUMN — to a historical alias present in the file
-  // (StructField metadata rides in through `requested`); validation at
-  // rename time keeps names and aliases disjoint, so the reverse lookup
-  // below is unambiguous
-  private def ordinalOf(physical: String): Int =
-    requested.indexWhere(f => f.name == physical ||
-      StagedParquet.aliasesOf(f).contains(physical))
-
-  override def init(ctx: InitContext): ReadSupport.ReadContext = {
-    val fileSchema = ctx.getFileSchema
-    val tps: java.util.List[org.apache.parquet.schema.Type] =
-      requested.flatMap { f =>
-        (f.name +: StagedParquet.aliasesOf(f))
-          .find(fileSchema.containsField)
-          .map(n => fileSchema.getType(Seq(n): _*))
-      }.asJava
-    new ReadSupport.ReadContext(new MessageType("spark_schema", tps))
-  }
-
-  override def prepareForRead(conf: Configuration,
-                              keyValueMetaData: java.util.Map[String, String],
-                              fileSchema: MessageType,
-                              readContext: ReadSupport.ReadContext): RecordMaterializer[Array[Any]] = {
-    val projected = readContext.getRequestedSchema
-    // projected field i -> ordinal in the requested (output) array
-    val target: Array[Int] = projected.getFields.asScala.toArray
-      .map(t => ordinalOf(t.getName))
-    val types: Array[DataType] = projected.getFields.asScala.toArray
-      .map(t => requested(ordinalOf(t.getName)).dataType)
-    new RecordMaterializer[Array[Any]] {
-      private val row = new Array[Any](requested.length)
-
-      // ONE stable converter tree: parquet binds column readers to the
-      // tree returned here and drives assembly through the same instance,
-      // so this must be a val (a fresh tree per call would receive values
-      // in one instance and assemble records from another)
-      private val root: GroupConverter = new GroupConverter {
-        private val convs: Array[Converter] = types.indices.map { i =>
-          val out = target(i)
-          FlatRowReadSupport.converterFor(types(i), v => row(out) = v)
-        }.toArray
-        override def getConverter(i: Int): Converter = convs(i)
-        override def start(): Unit = java.util.Arrays.fill(
-          row.asInstanceOf[Array[AnyRef]], null)
-        override def end(): Unit = ()
-      }
-
-      override def getCurrentRecord: Array[Any] = row.clone()
-      override def getRootConverter: GroupConverter = root
-    }
-  }
-}
-
-private[v2] object FlatRowReadSupport {
-  import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-
-  /** Converter for a VALUE of type `dt` delivering through `update` —
-    * recursive for nested types. Parquet calls converters only on
-    * NON-NULL values; absent optional fields keep whatever the enclosing
-    * start() reset their slot to (null), which is exactly parquet's
-    * encoding of nulls.
-    */
-  private[v2] def converterFor(dt: DataType, update: Any => Unit): Converter = dt match {
-    case BooleanType => new PrimitiveConverter {
-      override def addBoolean(v: Boolean): Unit = update(v) }
-    case IntegerType | DateType => new PrimitiveConverter {
-      override def addInt(v: Int): Unit = update(v) }
-    case LongType => new PrimitiveConverter {
-      override def addLong(v: Long): Unit = update(v) }
-    case TimestampType => new PrimitiveConverter {
-      // staged tables store INT64 UTC micros; addBinary is the INT96 fallback
-      // for files a legacy Spark writer produced (12 bytes little-endian:
-      // 8-byte nanos-of-day + 4-byte Julian day; 2440588 = epoch day 0)
-      override def addLong(v: Long): Unit = update(v)
-      override def addBinary(v: Binary): Unit = {
-        val bb = java.nio.ByteBuffer.wrap(v.getBytes)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        val nanos = bb.getLong
-        val julianDay = bb.getInt
-        update((julianDay - 2440588L) * 86400000000L + nanos / 1000L)
-      }
-    }
-    case FloatType => new PrimitiveConverter {
-      override def addFloat(v: Float): Unit = update(v) }
-    case DoubleType => new PrimitiveConverter {
-      override def addDouble(v: Double): Unit = update(v) }
-    case StringType => new PrimitiveConverter {
-      override def addBinary(v: Binary): Unit =
-        update(UTF8String.fromBytes(v.getBytes)) }
-    case BinaryType => new PrimitiveConverter {
-      override def addBinary(v: Binary): Unit = update(v.getBytes) }
-    case d: DecimalType if d.precision <= 9 => new PrimitiveConverter {
-      override def addInt(v: Int): Unit =
-        update(Decimal(v.toLong, d.precision, d.scale)) }
-    case d: DecimalType if d.precision <= 18 => new PrimitiveConverter {
-      override def addLong(v: Long): Unit =
-        update(Decimal(v, d.precision, d.scale)) }
-
-    // 3-level LIST group: outer group -> repeated "list" group -> "element"
-    case ArrayType(el, _) => new GroupConverter {
-      private val buf = scala.collection.mutable.ArrayBuffer.empty[Any]
-      private val repeated: GroupConverter = new GroupConverter {
-        private var pending: Any = null
-        private val elConv = converterFor(el, v => pending = v)
-        override def getConverter(i: Int): Converter = elConv
-        override def start(): Unit = pending = null
-        override def end(): Unit = buf += pending
-      }
-      override def getConverter(i: Int): Converter = repeated
-      override def start(): Unit = buf.clear()
-      override def end(): Unit = update(new GenericArrayData(buf.toArray))
-    }
-
-    // plain struct group: one child converter per field, slots reset per row
-    case st: StructType => new GroupConverter {
-      private val n = st.fields.length
-      private val slots = new Array[Any](n)
-      private val convs: Array[Converter] = st.fields.zipWithIndex.map {
-        case (f, i) => converterFor(f.dataType, v => slots(i) = v)
-      }
-      override def getConverter(i: Int): Converter = convs(i)
-      override def start(): Unit = java.util.Arrays.fill(
-        slots.asInstanceOf[Array[AnyRef]], null)
-      override def end(): Unit =
-        update(new GenericInternalRow(slots.clone()))
-    }
-
-    // MAP group: outer group -> repeated "key_value" group -> key, value
-    case MapType(kt, vt, _) => new GroupConverter {
-      private val keys = scala.collection.mutable.ArrayBuffer.empty[Any]
-      private val vals = scala.collection.mutable.ArrayBuffer.empty[Any]
-      private val repeated: GroupConverter = new GroupConverter {
-        private var k: Any = null
-        private var v: Any = null
-        private val kConv = converterFor(kt, x => k = x)
-        private val vConv = converterFor(vt, x => v = x)
-        override def getConverter(i: Int): Converter =
-          if (i == 0) kConv else vConv
-        override def start(): Unit = { k = null; v = null }
-        override def end(): Unit = { keys += k; vals += v }
-      }
-      override def getConverter(i: Int): Converter = repeated
-      override def start(): Unit = { keys.clear(); vals.clear() }
-      override def end(): Unit = update(new ArrayBasedMapData(
-        new GenericArrayData(keys.toArray), new GenericArrayData(vals.toArray)))
-    }
-
-    case other => throw new UnsupportedOperationException(
-      s"staged scan: unsupported column type $other")
-  }
+  override def close(): Unit = read.close(rows)
 }
 
 /** Read-only table over a reconstructed historical version
@@ -1295,21 +1089,20 @@ class StagedSnapshotTable(tableName: String,
       override def pruneColumns(requiredSchema: StructType): Unit =
         required = requiredSchema
       override def build(): Scan = new Scan with Batch {
+        private lazy val read = new StagedRead(snap.schema, required,
+          StagedEqSets.keysOf(snap.dirs.flatMap(_.eq.values.flatten).distinct))
         override def readSchema(): StructType = required
         override def toBatch: Batch = this
         override def planInputPartitions(): Array[InputPartition] =
           snap.dirs.flatMap { sd =>
             sd.files.map { f =>
               val n = new Path(f).getName
-              StagedInputPartition(sd.vals, Seq(f),
-                snap.schema.json, sd.spec, required.fieldNames.toSeq,
-                None, sd.deleted.getOrElse(n, Nil), 0L,
-                sd.eq.getOrElse(n, Nil))
+              StagedInputPartition(sd.vals, f, snap.schema.json, sd.spec,
+                None, sd.deleted.getOrElse(n, Nil), sd.eq.getOrElse(n, Nil))
             }
           }.toArray[InputPartition]
         override def createReaderFactory(): PartitionReaderFactory =
-          StagedReaderFactory(snap.schema.json, snap.partSpec,
-            required.fieldNames.toSeq)
+          StagedReaderFactory(read)
         override def description(): String =
           s"StagedSnapshotScan(table=$tableName, files=${snap.dirs.map(_.files.length).sum})"
       }

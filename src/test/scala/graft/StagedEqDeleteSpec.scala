@@ -217,4 +217,37 @@ class StagedEqDeleteSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("equality-delete"), s"got: $e")
   }
+
+  test("a string-keyed eq epoch reads back through the V2 scan, latest per key") {
+    import spark.implicits._
+    val src = tbl("src6")
+    val dst = tbl("dst6")
+    val d = StagedParquet.tableDir(spark, dst)
+    def df(ids: Range, tag: String) =
+      ids.map(i => (f"k-$i%05d", s"$tag$i")).toDF("k", "s")
+    def drain(ckpt: String): Unit = spark.readStream.table(src)
+      .writeStream.option("checkpointLocation", ckpt)
+      .option("graft.upsert.key", "k")
+      .option("graft.upsert.eq", "true")
+      .trigger(Trigger.AvailableNow()).toTable(dst).awaitTermination()
+    df(0 until 0, "x").writeTo(dst).createOrReplace()
+    val ckpt = java.nio.file.Files.createTempDirectory("eq_ckpt6").toString
+    df(0 until 12000, "a").writeTo(src).createOrReplace()
+    drain(ckpt)
+    // 9000 updated keys span several of the reader's columnar batches
+    // (4096 rows each): the key set must hold copies of the strings, not
+    // views into a batch the next one overwrites
+    df(1000 until 10000, "b").writeTo(src).append()
+    drain(ckpt)
+    assert(rootEqFiles(d).length == 1)
+    val got = spark.table(dst).as[(String, String)].collect()
+    val rows = got.length
+    assert(rows == 12000, "every updated key must be deleted once")
+    val byKey = got.toMap
+    assert((0 until 12000).forall { i =>
+      byKey(f"k-$i%05d") == (if (i >= 1000 && i < 10000) s"b$i" else s"a$i")
+    })
+    // a projection without the key still probes it
+    assert(spark.table(dst).filter($"s".startsWith("a")).count() == 3000L)
+  }
 }

@@ -173,6 +173,29 @@ class StagedSpjSpec extends AnyFunSuite {
     assert(smm.head.getString(0) == "L0")
   }
 
+  test("MIN/MAX over a file whose footer lacks statistics fold that file exactly") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val t = tbl("spj_nostats")
+    (0L until 100L).map(i => (i, i * 1.5)).toDF("id", "v").writeTo(t).createOrReplace()
+    // a file written without column statistics joins the table
+    val foreign = java.nio.file.Files.createTempDirectory("nostats").toString
+    (100L until 140L).map(i => (i, -i * 1.0)).toDF("id", "v").repartition(1)
+      .write.option("parquet.column.statistics.enabled", "false")
+      .mode("overwrite").parquet(foreign)
+    val pf = new java.io.File(foreign).listFiles
+      .filter(_.getName.endsWith(".parquet")).head
+    assert(graft.sources.v2.StagedScan.withFooter(pf.getPath)(
+      _.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        .forall(c => c.getStatistics == null || c.getStatistics.isEmpty)))
+    java.nio.file.Files.copy(pf.toPath, new java.io.File(
+      graft.sources.v2.StagedParquet.tableDir(spark, t), "foreign-nostats.snappy.parquet").toPath)
+    val df = spark.table(t).agg(min("v"), max("v"), min("id"), max("id"))
+    assert(df.queryExecution.executedPlan.toString.contains("StagedAggScan"))
+    assert(df.head == org.apache.spark.sql.Row(-139.0, 148.5, 0L, 139L))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(foreign))
+  }
+
   test("days-partition range pruning: ts bounds close day directories, conservatively") {
     import spark.implicits._
     val t = tbl("spj_days")
