@@ -692,13 +692,14 @@ object Ingest {
     * sink, and the profile of WHAT THE STREAM DELIVERED is gated against
     * the oracle's recomputation from raw events — any file the tail
     * missed, replayed, or half-read breaks the count or the sum. The
-    * offset is the last commit-MANIFEST id — O(1) in the checkpoint, and
-    * a trigger lists only the `_manifests` directory, never the table's
-    * file tree, so tailing a million-file table costs O(new commits);
+    * offset is the last consumed VERSION id — O(1) in the checkpoint,
+    * and a trigger reads only the commit log's new version deltas, never
+    * the table's file tree, so tailing a million-file table costs O(new
+    * commits);
     * committed files are immutable (task files rename in at commit), so
     * the tail needs no writer coordination — the CDC-tail shape on a
     * 100 TB ingest table. StagedStreamTailSpec additionally pins
-    * checkpoint RESUME (a restart reads only manifests appended since),
+    * checkpoint RESUME (a restart reads only versions committed since),
     * the O(1) offset encoding, and loud failure on non-append changes.
     */
   def streamTableTail(s: SparkSession, d: String): DataFrame = {
@@ -733,11 +734,11 @@ object Ingest {
   /** STREAMING write into a staged table
     * ([[graft.sources.v2.StagedStreamingWrite]], `writeStream.toTable`):
     * the full 100 TB ingest LOOP — a staged source table is tailed by
-    * manifest id, filtered and enriched in flight, and appended
+    * version id, filtered and enriched in flight, and appended
     * epoch-by-epoch into a staged destination with per-epoch two-phase
-    * commits and txn-marked manifests (a crash-replayed epoch is
-    * discarded, StagedStreamIngestSpec pins it; each epoch is one offset
-    * increment for any downstream tail). The DESTINATION's contents are
+    * commits and txn-marked adds versions (a crash-replayed epoch is
+    * discarded, StagedStreamIngestSpec pins it; each epoch is one adds
+    * version for any downstream tail). The DESTINATION's contents are
     * gated against the oracle's recomputation from raw orders, so a
     * dropped, duplicated, or half-committed epoch breaks the profile.
     */
@@ -747,7 +748,7 @@ object Ingest {
     val dst = s"graft_staged.$ns.ingest_dst"
     val o = orders(s, d).select(
       col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
-    // three commits = three source manifests feeding the stream
+    // three commits = three source versions feeding the stream
     o.filter(col("o_orderkey") % 3 === 0).writeTo(src).createOrReplace()
     o.filter(col("o_orderkey") % 3 === 1).writeTo(src).append()
     o.filter(col("o_orderkey") % 3 === 2).writeTo(src).append()
@@ -933,7 +934,7 @@ object Ingest {
     * interrogates it with plain SQL, and `CALL
     * graft_staged.system.publish_appends` renames every audited file
     * into the destination as ONE append commit: zero bytes copied, one
-    * version delta, one commit manifest (`#txn=wap:`), crash-resumable
+    * version delta (claim-once by its `!wap=` mark), crash-resumable
     * via an intent file. At 100 TB the publish is O(files) metadata
     * renames — audit cost never doubles write cost. The query gates BOTH
     * sides: phase 1 (collected BEFORE the publish) proves isolation —
@@ -1173,7 +1174,7 @@ object Ingest {
     * upsert-stream semantics; reference: postgres.py:1092-1180 ON
     * CONFLICT upsert, now as a continuous stream): a snapshot epoch and
     * two update waves tail in from a staged source, and before each
-    * epoch's manifest lands the engine DELETES the pre-existing rows the
+    * epoch's adds land the engine DELETES the pre-existing rows the
     * epoch replaces — through the tiered COW core with the epoch's own
     * files excluded, so on this merge-on-read bucket(8, key) destination
     * each wave costs one tiny deletion vector per touched bucket plus
@@ -1191,7 +1192,7 @@ object Ingest {
     * itself — tailing a staged source into the destination — not the
     * production of the source epochs, which a real CDC pipeline's
     * upstream writer pays. One source table per epoch, each carrying
-    * exactly its wave's single manifest, so each drain consumes exactly
+    * exactly its wave's single REPLACE version, so each drain consumes exactly
     * one epoch — identical epoch boundaries, key sets, and destination
     * state to the old interleaved staging; only the 3 per-run source
     * writes leave the timed region). Epoch 1: the full snapshot; epochs
@@ -1214,7 +1215,7 @@ object Ingest {
 
   /** Tail each pre-staged epoch source into `dst` through the streaming
     * upsert sink — one AvailableNow query per epoch on its own fresh
-    * checkpoint (each source holds exactly one manifest, so each query
+    * checkpoint (each source holds exactly one REPLACE version, so each query
     * processes exactly one micro-batch; the per-wave epoch boundaries are
     * unchanged from the interleaved-append formulation).
     */

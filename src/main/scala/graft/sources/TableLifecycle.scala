@@ -32,7 +32,6 @@ object TableLifecycle {
                     expectRows: Option[Long] = None): Long = {
     val spark = df.sparkSession
     val staging = tablePath + "__staging"
-    val old = tablePath + "__old"
     df.write.mode("overwrite").parquet(staging)
     // reference asserts staged count == source count before swapping
     val staged = spark.read.parquet(staging).count()
@@ -41,25 +40,9 @@ object TableLifecycle {
       throw new IllegalStateException(
         s"rename-replace aborted: staged $staged rows, expected ${expectRows.get}")
     }
-    val f = fs(spark, tablePath)
-    val prodPath = new Path(tablePath)
-    val oldPath = new Path(old)
-    // FileSystem.rename/delete report failure by RETURNING FALSE, not by
-    // throwing — every step must be checked or a failed swap could delete
-    // the only copy of prod.
-    if (f.exists(oldPath) && !f.delete(oldPath, true))
-      throw new java.io.IOException(s"rename-replace: cannot clear $old")
-    val hadProd = f.exists(prodPath)
-    if (hadProd && !f.rename(prodPath, oldPath))
-      throw new java.io.IOException(
-        s"rename-replace: cannot move prod aside ($tablePath -> $old); prod untouched")
-    if (!f.rename(new Path(staging), prodPath)) {
-      // restore prod before failing — never leave the table missing
-      if (hadProd) f.rename(oldPath, prodPath)
-      throw new java.io.IOException(
-        s"rename-replace: cannot promote staging ($staging -> $tablePath); prod restored")
-    }
-    f.delete(oldPath, true) // best-effort cleanup; prod is already live
+    // the checked prod -> old -> staging -> prod rename sequence: a failed
+    // swap restores prod and never deletes its only copy
+    graft.sources.v2.StagedParquet.swapDirs(staging, tablePath, retainTo = None): Unit
     staged
   }
 }

@@ -37,9 +37,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *     scans, no driver materialization. `row_count` is live rows
   *     (footer count minus DV-deleted positions), so it agrees with
   *     `SELECT count(*)` at any point of the mutation lifecycle.
-  *   - `history` / `manifests` read the O(versions) / O(commits)
-  *     metadata logs only — a million-file table answers them without
-  *     listing a single data directory.
+  *   - `history` / `manifests` read the O(versions) commit log only
+  *     (`manifests`: the versions a new stream tail reads) — a
+  *     million-file table answers them without listing a single data
+  *     directory.
   */
 object StagedMetaTables {
   val Kinds: Set[String] =
@@ -163,35 +164,27 @@ private[v2] class StagedMetaScan(kind: String, tableName: String,
           }
       }.toArray
     case "history" =>
-      val d = prodDir
-      val md = StagedParquet.metaDir(d)
-      val f = StagedParquet.fs(md)
-      val times = StagedParquet.commitTimeline(d).toMap
-      val rows: Seq[Seq[Any]] =
-        if (!f.exists(md)) Seq.empty
-        else f.listStatus(md).toSeq.filter(_.isFile)
-          .map(_.getPath.getName).filter(_.startsWith("s-"))
-          .map(_.stripPrefix("s-").toLong).sorted
-          .map { v =>
-            val body = StagedParquet.readString(new Path(md, s"s-$v")).getOrElse("")
-            val lines = body.split("\n").toSeq.filter(_.nonEmpty)
-            val adds = lines.filter(_.startsWith("+")).map(_.stripPrefix("+"))
-            val swaps = lines.filter(_.startsWith("~")).map(_.stripPrefix("~"))
-            val marks = lines.filter(_.startsWith("!"))
-            val (dvAdds, fileAdds) =
-              adds.partition(_.split('/').last.startsWith(StagedParquet.DvPrefix))
-            Seq[Any](v, StagedMetaTables.classify(adds, swaps, marks),
-              fileAdds.length.toLong, dvAdds.length.toLong,
-              swaps.length.toLong,
-              times.getOrElse(v, 0L) * 1000L) // TimestampType micros
-          }
+      val log = StagedParquet.deltaLog(prodDir)
+      val times = StagedParquet.timeline(log).toMap
+      val rows: Seq[Seq[Any]] = log.map { dl =>
+        val (dvAdds, fileAdds) =
+          dl.adds.partition(_.split('/').last.startsWith(StagedParquet.DvPrefix))
+        Seq[Any](dl.v, StagedMetaTables.classify(dl.adds, dl.swaps, dl.marks),
+          fileAdds.length.toLong, dvAdds.length.toLong,
+          dl.swaps.length.toLong,
+          times.getOrElse(dl.v, 0L) * 1000L) // TimestampType micros
+      }
       Array(MetaRowsPartition(rows))
     case "manifests" =>
-      val root = new Path(prodDir)
-      val rows: Seq[Seq[Any]] = StagedParquet.manifestIds(root).map { id =>
-        val (txn, files) = StagedParquet.readManifest(root, id)
-        Seq[Any](id, files.length.toLong, txn.orNull)
-      }
+      // the versions a new stream tail reads, with the files each delivers
+      // and its writer's marker (a stream epoch's txn, a publish's source)
+      val rows: Seq[Seq[Any]] = StagedParquet
+        .tailRange(StagedParquet.deltaLog(prodDir), -1L, Long.MaxValue, tableName)
+        .filter(_.tailFiles.nonEmpty).map { dl =>
+          val txn = dl.values("txn").headOption
+            .orElse(dl.values("wap").headOption.map("wap:" + _))
+          Seq[Any](dl.v, dl.tailFiles.length.toLong, txn.orNull)
+        }
       Array(MetaRowsPartition(rows))
     case "refs" =>
       val times = StagedParquet.commitTimeline(prodDir).toMap

@@ -5,7 +5,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.ParquetOutputFormat
@@ -70,7 +70,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * dynamic-overwrite contract).
   *
   * At 100 TB this is precisely the object-store pattern: writers upload
-  * under a staging prefix, the commit manifest lists the surviving files,
+  * under a staging prefix, the commit log lists the surviving files,
   * and the swap is a metadata operation whose cost is independent of
   * table size (full-table swap: one rename; dynamic overwrite: one rename
   * per TOUCHED partition, independent of the untouched ones).
@@ -82,8 +82,6 @@ object StagedParquet {
   val PartitionFile = "_partition.json"
   /** Tombstoned (dropped) column names — see alterTable's re-add guard. */
   val DroppedFile = "_dropped.txt"
-  /** Commit manifests — see [[appendManifest]]. */
-  val ManifestDir = "_manifests"
   /** Persisted table properties (`key=value` per line) — TBLPROPERTIES /
     * `tableProperty(...)`, surviving through staged replaces. The engine
     * reads `delete.mode` here (copy-on-write | merge-on-read).
@@ -278,7 +276,7 @@ object StagedParquet {
     * window (comfortably above the longest write — the same contract as
     * any object-store lifecycle sweep); pass 0 explicitly to sweep
     * everything regardless of age (tests, known-quiet tables). Pure
-    * metadata work — one recursive listing, deletes proportional to
+    * metadata work — one walk of the table tree, deletes proportional to
     * debris, never to table size.
     * Returns (relative path, kind) per deleted entry, sorted.
     */
@@ -311,36 +309,29 @@ object StagedParquet {
       }
     }
     val deleted = mutable.Buffer[(String, String)]()
-    if (f.exists(p)) {
-      val it = f.listFiles(p, true)
-      while (it.hasNext) {
-        val st = it.next()
-        val name = st.getPath.getName
-        if (name.startsWith("_tmp-") && st.getModificationTime <= cutoff) {
-          f.delete(st.getPath, false): Unit
-          val rel = st.getPath.toUri.getPath.stripPrefix(
-            new Path(d).toUri.getPath).stripPrefix("/")
-          deleted += ((rel, "orphan_tmp"))
+    def rel(st: FileStatus): String =
+      st.getPath.toUri.getPath.stripPrefix(p.toUri.getPath).stripPrefix("/")
+    // ONE walk of the table tree sweeps both in-table classes: `_tmp-`
+    // task files, and partition-level `<dir>__old` leftovers (a dynamic
+    // overwrite or compaction swap whose best-effort old-delete failed —
+    // without this sweep the scan must, and does, skip them by name, but
+    // the bytes stay forever). A stale `__old` is walked for its `_tmp-`
+    // files first, then deleted whole.
+    def walk(dir: Path, doomed: Boolean): Unit = f.listStatus(dir).foreach { st =>
+      val name = st.getPath.getName
+      if (st.isDirectory) {
+        val stale = !doomed && name.endsWith("__old") && st.getModificationTime <= cutoff
+        walk(st.getPath, doomed || stale)
+        if (stale) {
+          f.delete(st.getPath, true): Unit
+          deleted += ((rel(st), "stale_old"))
         }
+      } else if (name.startsWith("_tmp-") && st.getModificationTime <= cutoff) {
+        f.delete(st.getPath, false): Unit
+        deleted += ((rel(st), "orphan_tmp"))
       }
     }
-    // partition-level `<dir>__old` leftovers INSIDE the table (a dynamic
-    // overwrite or compaction swap whose best-effort old-delete failed):
-    // without this sweep the scan must — and does — skip them by name,
-    // but the bytes stay forever
-    def innerOld(dir: Path): Unit = if (f.exists(dir))
-      f.listStatus(dir).foreach { st =>
-        if (st.isDirectory) {
-          if (st.getPath.getName.endsWith("__old") &&
-              st.getModificationTime <= cutoff) {
-            f.delete(st.getPath, true): Unit
-            val rel = st.getPath.toUri.getPath.stripPrefix(
-              new Path(d).toUri.getPath).stripPrefix("/")
-            deleted += ((rel, "stale_old"))
-          } else innerOld(st.getPath)
-        }
-      }
-    innerOld(p)
+    if (f.exists(p)) walk(p, doomed = false)
     val parent = p.getParent
     val base = p.getName
     if (f.exists(parent)) f.listStatus(parent).foreach { st =>
@@ -391,11 +382,9 @@ object StagedParquet {
     // rewrite resets file add versions, which parameterize eq
     // applicability
     materializeEqDeletes(s, d)
-    val sj = readString(new Path(root, SchemaFile)).getOrElse(
+    val schema = schemaOf(root).getOrElse(
       throw new IllegalArgumentException(s"no committed table at $d"))
-    val schema = DataType.fromJson(sj).asInstanceOf[StructType]
-    val partSpec: Seq[PartField] = readString(new Path(root, PartitionFile))
-      .map(PartSpec.deserialize).getOrElse(Seq.empty)
+    val partSpec = specOf(root)
     // every layout generation folds its own small-file debt IN PLACE
     // (compaction is layout-preserving; migrateLayouts is the
     // cross-layout rewrite)
@@ -517,14 +506,8 @@ object StagedParquet {
       else f.listStatus(ld).toSeq
         .filter(st => st.isDirectory && st.getPath.getName.startsWith("g-"))
         .sortBy(_.getPath.getName.stripPrefix("g-").toLong)
-        .map { st =>
-          val spec = readString(new Path(st.getPath, PartitionFile))
-            .map(PartSpec.deserialize).getOrElse(Seq.empty)
-          (st.getPath, s"$LayoutsDir/${st.getPath.getName}", spec)
-        }
-    val cur = readString(new Path(root, PartitionFile))
-      .map(PartSpec.deserialize).getOrElse(Seq.empty)
-    gens :+ ((root, "", cur))
+        .map(st => (st.getPath, s"$LayoutsDir/${st.getPath.getName}", specOf(st.getPath)))
+    gens :+ ((root, "", specOf(root)))
   }
 
   /** Does the table carry pre-evolution layout generations? (One probe —
@@ -555,7 +538,7 @@ object StagedParquet {
     * rewrite-data-files-to-current-spec): each generation's rows are read
     * with ITS spec (identity columns reconstituted from dir names),
     * appended through the table's own engine write (current-layout
-    * routing, distribution, declared sort, manifest, version delta), and
+    * routing, distribution, declared sort, version delta), and
     * the generation's data directories then swap to retained trees in one
     * version. Cost ∝ old-generation bytes, never the table. After it the
     * generations are empty shells (their `_partition.json` stays for time
@@ -585,9 +568,8 @@ object StagedParquet {
     val d = tableDir(s, table)
     val root = new Path(d)
     val f = fs(root)
-    val sj = readString(new Path(root, SchemaFile)).getOrElse(
+    val schema = schemaOf(root).getOrElse(
       throw new IllegalArgumentException(s"no committed table at $d"))
-    val schema = DataType.fromJson(sj).asInstanceOf[StructType]
     val out = mutable.Buffer[(String, Long)]()
     // RESUME pass: any generation a prior run left mid-swap finishes first
     // — even one whose directory vanished between the whole-root rename
@@ -775,14 +757,10 @@ object StagedParquet {
     */
   private def recordMigrateSwaps(d: String, v: Long, swaps: Seq[String]): Long = {
     if (currentVersion(d) < v) return recordVersion(d, v, Nil, swaps)
-    val expected = swaps.sorted.map("~" + _).mkString("\n")
     val md = metaDir(d)
     val f = fs(md)
-    val mine = f.listStatus(md).toSeq.filter(_.isFile)
-      .map(_.getPath).filter(_.getName.startsWith("s-"))
-      .filter(_.getName.stripPrefix("s-").toLong >= v)
-      .filter(p => readString(p).contains(expected))
-      .map(_.getName.stripPrefix("s-").toLong).maxOption
+    val mine = deltaLog(d).filter(dl => dl.v >= v && dl.swaps == swaps.sorted)
+      .map(_.v).maxOption
     mine.getOrElse {
       val v2 = currentVersion(d) + 1
       for (rel <- swaps) {
@@ -838,9 +816,7 @@ object StagedParquet {
         if (!f.exists(shellSpec)) {
           f.mkdirs(src): Unit
           writeString(src, PartitionFile,
-            newestRetained(d, v - 1, rel)
-              .flatMap(k => readString(new Path(k, PartitionFile)))
-              .getOrElse(PartSpec.serialize(Seq.empty)))
+            PartSpec.serialize(newestRetained(d, v - 1, rel).map(specOf).getOrElse(Nil)))
         }
       }
     }
@@ -849,11 +825,10 @@ object StagedParquet {
   /** EVOLVE the table's partition spec — metadata-only (O(directories)
     * renames, zero data bytes): the current layout moves whole under
     * `_layouts/g-<n>/` with its spec pinned beside it, the root takes the
-    * new spec, the commit-manifest log is TRANSLATED 1:1 to the moved
-    * paths (a lagging or fresh stream tail keeps reading — every consumed
-    * offset stays consumed, every unconsumed entry resolves at its new
-    * path), and the version delta records one `!evolve=g-<n>` line so
-    * time travel reconstructs pre-evolution versions at the old layout.
+    * new spec, and the version delta records one `!evolve=g-<n>` line so
+    * time travel reconstructs pre-evolution versions at the old layout
+    * and a lagging or fresh stream tail resolves every earlier add under
+    * the generation (the log itself is never rewritten).
     * Returns the new generation's id.
     */
   def evolvePartitioning(s: SparkSession, table: String,
@@ -865,11 +840,9 @@ object StagedParquet {
     // add-version bookkeeping (what parameterizes equality-delete
     // applicability) doesn't survive the move, so settle eq files first
     materializeEqDeletes(s, d)
-    val sj = readString(new Path(root, SchemaFile)).getOrElse(
+    val schema = schemaOf(root).getOrElse(
       throw new IllegalArgumentException(s"no committed table at $d"))
-    val schema = DataType.fromJson(sj).asInstanceOf[StructType]
-    val curSpec: Seq[PartField] = readString(new Path(root, PartitionFile))
-      .map(PartSpec.deserialize).getOrElse(Seq.empty)
+    val curSpec = specOf(root)
     require(newSpec != curSpec,
       s"evolvePartitioning: the new spec equals the current one ($curSpec)")
     newSpec.foreach { pf =>
@@ -923,54 +896,9 @@ object StagedParquet {
     if (newSpec.nonEmpty)
       writeString(root, PartitionFile, PartSpec.serialize(newSpec))
     else f.delete(new Path(root, PartitionFile), false): Unit
-    translateManifests(root, gid)
     recordVersion(d, currentVersion(d) + 1, Nil, Nil,
       marks = Seq(s"!evolve=g-$gid")): Unit
     gid
-  }
-
-  /** Rewrite every manifest's entries to their post-evolution paths.
-    * Per-manifest atomic: write the translated body to a `_tmp-` sibling,
-    * then rename over — a crash mid-log leaves each manifest either fully
-    * old or fully new, and an old entry's path either still resolves (not
-    * yet moved) or fails LOUDLY, never silently skips.
-    *
-    * Entries already under [[LayoutsDir]] are LEFT ALONE (ADVICE r11): a
-    * second evolution does not move `_layouts/g-0/...` data, so blindly
-    * prefixing every line would durably rewrite those entries to
-    * `_layouts/g-1/_layouts/g-0/...` — paths that never exist — failing a
-    * lagging stream tail and confusing the stream's per-generation spec
-    * resolution. Root-relative entries prefix into the NEW generation;
-    * an entry whose file is under neither (a prior evolve crashed after
-    * its renames but before translating) resolves against the existing
-    * generations so the rerun heals the log instead of compounding it.
-    */
-  private def translateManifests(root: Path, gid: Long): Unit = {
-    val f = fs(root)
-    val newPrefix = s"$LayoutsDir/g-$gid/"
-    val olderGens = layoutRoots(root.toString).dropRight(1).reverse
-      .collect { case (_, rel, _) if rel.nonEmpty && rel != s"$LayoutsDir/g-$gid" => rel }
-    def translate(l: String): String = {
-      val preferred = newPrefix + l
-      if (f.exists(new Path(root, preferred))) preferred
-      else olderGens.collectFirst {
-        case rel if f.exists(new Path(root, s"$rel/$l")) => s"$rel/$l"
-      }.getOrElse(preferred)
-    }
-    manifestIds(root).foreach { id =>
-      val p = manifestPath(root, id)
-      val content = readString(p).getOrElse("")
-      val out = content.split("\n").map { l =>
-        if (l.isEmpty || l.startsWith("#") || l.startsWith(LayoutsDir + "/")) l
-        else translate(l)
-      }.mkString("\n")
-      val tmp = new Path(p.getParent, s"_tmp-${p.getName}")
-      val o = f.create(tmp, true)
-      try o.write(out.getBytes("UTF-8")) finally o.close()
-      f.delete(p, false): Unit
-      if (!f.rename(tmp, p))
-        throw new java.io.IOException(s"evolvePartitioning: cannot publish $p")
-    }
   }
 
   /** DELETE WHERE — the row-removal rung of the lake-table contract,
@@ -1047,7 +975,7 @@ object StagedParquet {
     *
     * @param excludeNames data-file NAMES the statement must not touch —
     *        the streaming upsert's just-committed epoch files (visible in
-    *        the tree before their manifest lands, but semantically the
+    *        the tree and the log before the delete runs, but semantically the
     *        NEW rows the delete half must not see)
     * @param keySet WIDE-EPOCH delete form (DELETE only): the effective
     *        predicate becomes AND(filters) && key IN (keyDf) with the key
@@ -1105,11 +1033,9 @@ object StagedParquet {
 
     private val root = new Path(d)
     private val f = fs(root)
-    private val schema = DataType.fromJson(readString(new Path(root, SchemaFile))
-      .getOrElse(throw new IllegalArgumentException(s"no committed table at $d")))
-      .asInstanceOf[StructType]
-    private val partSpec: Seq[PartField] = readString(new Path(root, PartitionFile))
-      .map(PartSpec.deserialize).getOrElse(Seq.empty)
+    private val schema = schemaOf(root).getOrElse(
+      throw new IllegalArgumentException(s"no committed table at $d"))
+    private val partSpec = specOf(root)
     private val conjuncts = flattenAnd(filters)
     require(canDelete(conjuncts), s"unsupported DELETE/UPDATE predicate: $filters")
     require(keySet.isEmpty || update.isEmpty,
@@ -1468,7 +1394,7 @@ object StagedParquet {
     */
   def readTable(s: SparkSession, table: String): org.apache.spark.sql.DataFrame = {
     val d = tableDir(s, table)
-    val sj = readString(new Path(d, SchemaFile)).getOrElse(
+    val declared = schemaOf(new Path(d)).getOrElse(
       throw new IllegalArgumentException(s"no committed table at $d"))
     // a table with deletion vectors must read through the V2 scan (the
     // only reader that applies them); the built-in parquet source would
@@ -1480,7 +1406,6 @@ object StagedParquet {
     // renamed column's pre-rename files; the V2 reader resolves aliases).
     // Un-flagged, un-evolved tables keep the built-in path (identical
     // results, zero behavior change).
-    val declared = DataType.fromJson(sj).asInstanceOf[StructType]
     if (hasDvFlag(new Path(d)) || hasEqFlag(new Path(d)) ||
         declared.fields.exists(f => aliasesOf(f).nonEmpty) ||
         (hasOldLayouts(d) && oldLayoutsHoldData(d))) s.table(table)
@@ -1533,60 +1458,13 @@ object StagedParquet {
       .unionByName(staging)
   }
 
-  // ---- commit manifests -------------------------------------------------
-  // Every commit that ADDS visible data files appends `_manifests/m-<id>`
-  // (monotonic id, zero-padded for lexical order) listing the relative
-  // paths it added, one per line; `#`-prefixed lines carry metadata (the
-  // streaming sink's `#txn=` epoch marker). The manifest log is what
-  // makes tailing a 100 TB table O(new data) instead of O(table): the
-  // streaming offset is just the last manifest id, a trigger lists ONLY
-  // the manifest directory, and a batch reads only the manifests in its
-  // (start, end] range — never the table's file tree. Rewrites (COW,
-  // compaction) do not append manifests: they change no logical rows, and
-  // a tail that has not yet consumed a rewritten file fails LOUDLY when
-  // the manifest's path vanishes (run maintenance behind the stream's
-  // committed offset, or restart the stream — the documented
-  // no-concurrent-rewrite contract). A full-table REPLACE resets the
-  // manifest generation to m-0; a running tail sees the id regress and
-  // fails loudly rather than replaying the table as duplicates.
-
-  private[v2] def manifestPath(root: Path, id: Long): Path =
-    new Path(new Path(root, ManifestDir), f"m-$id%010d")
-
-  private[graft] def manifestIds(root: Path): Seq[Long] = {
-    val f = fs(root)
-    val md = new Path(root, ManifestDir)
-    if (!f.exists(md)) Seq.empty
-    else f.listStatus(md).toSeq.filter(_.isFile)
-      .map(_.getPath.getName).filter(_.startsWith("m-"))
-      .map(_.stripPrefix("m-").toLong).sorted
-  }
-
-  /** (txn marker, relative data-file paths) of one manifest; a MISSING
-    * manifest in a stream's range is a hard error (the table was replaced
-    * or its manifest log vacuumed past the stream's offset).
-    */
-  private[graft] def readManifest(root: Path, id: Long): (Option[String], Seq[String]) = {
-    val content = readString(manifestPath(root, id)).getOrElse(
-      throw new IllegalStateException(
-        s"staged stream: manifest m-$id missing under $root/$ManifestDir — " +
-          "the table was replaced or rewritten past this stream's offset; " +
-          "restart the stream from a fresh checkpoint"))
-    val lines = content.split("\n").toSeq.filter(_.nonEmpty)
-    (lines.find(_.startsWith("#txn=")).map(_.stripPrefix("#txn=")),
-      lines.filterNot(_.startsWith("#")))
-  }
-
-  /** Append the next manifest atomically (create-no-overwrite claims the
-    * id; a concurrent committer's collision just moves to the next id) and
-    * return the id it landed on.
-    */
-  // ---- snapshot versioning / time travel ---------------------------------
+  // ---- the commit log: snapshot versioning, time travel, stream tails ----
   // Every visible-data commit claims the table's next VERSION and records
   // a delta in the sibling `<table>__meta/` tree (`s-<v>`, one line per
   // change): `+<rel>` for an added file, `~<dirRel>` ("." = the root) for
   // a directory swap whose pre-state was RETAINED at
-  // `<table>__meta/v<v-1>/<dirRel>` instead of deleted. `VERSION AS OF x`
+  // `<table>__meta/v<v-1>/<dirRel>` instead of deleted, `!<mark>` for
+  // commit metadata. `VERSION AS OF x`
   // reconstructs the version-x file set by walking the current tree and
   // undoing deltas v..x+1 — O(changes since x) metadata work, zero data
   // copies (retention is a rename; an object store serves it as a
@@ -1596,10 +1474,24 @@ object StagedParquet {
   // destroy its own history. VACUUM prunes retained trees past the
   // retention window (the delta files are tiny and kept; a reconstruction
   // that needs a pruned tree fails loudly as "version expired").
+  // The same log is the table's ONLY commit log: a stream tail's offset is
+  // a version id and a trigger reads only the deltas past it (never the
+  // table's file tree), taking each delta's data-file adds
+  // ([[Delta.tailFiles]]). Rewrites ([[DirCommit]]: compaction, COW and
+  // merge-on-read DELETE/UPDATE, SQL UPDATE/MERGE) carry the
+  // [[RewriteMark]] — they change no logical rows, so a tail skips them,
+  // and one that has not yet read a rewritten file fails LOUDLY when its
+  // path vanishes (run maintenance behind the stream's committed offset,
+  // the documented no-concurrent-rewrite contract). A root REPLACE
+  // carries the [[ReplaceMark]] and lists the new root's files: a new
+  // tail starts at the newest one, a running tail fails loudly on one
+  // rather than replaying the table as duplicates. The streaming sink's
+  // epoch marker (`!txn=<queryId>:e<epoch>`) rides the epoch's adds
+  // version, so the files and the marker land in one create.
   // CONCURRENCY (optimistic, CAS on the version file): the s-<v> claim is
   // a create-no-overwrite — the commit lock IS the version file.
   //   - APPENDS are fully multi-writer: disjoint files never conflict; a
-  //     claim loser retries the next id, manifests claim ids the same way
+  //     claim loser retries the next id
   //     (StagedConcurrencySpec: N racing appenders all land, versions
   //     linearize, every file recorded exactly once).
   //   - REPLACE re-keys its retained root and linearizes AFTER any append
@@ -1611,15 +1503,76 @@ object StagedParquet {
   //     exact=true and FAIL LOUDLY on collision (two interleaved
   //     mutations would interleave retained trees).
 
+  /** Marks a root REPLACE's delta (see the commit-log notes above). */
+  private[v2] val ReplaceMark = "!replace"
+  /** Marks a rewrite's delta: its adds are not new rows. */
+  private[v2] val RewriteMark = "!rewrite"
+
   private[v2] def metaDir(prodDir: String): Path = new Path(prodDir + "__meta")
 
-  private[graft] def currentVersion(prodDir: String): Long = {
+  /** One version delta `s-<v>`, read on first use of its lines. */
+  private[graft] final class Delta(val v: Long, path: Path, mtime: Long) {
+    lazy val lines: Seq[String] = {
+      val f = fs(path)
+      val in = f.open(path)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        .split("\n").toSeq.filter(_.nonEmpty)
+      finally in.close()
+    }
+    def adds: Seq[String] = entries("+")
+    def swaps: Seq[String] = entries("~")
+    def marks: Seq[String] = lines.filter(_.startsWith("!"))
+    /** The values of this delta's `!<key>=<value>` marks. */
+    def values(key: String): Seq[String] = entries(s"!$key=")
+    def has(mark: String): Boolean = lines.contains(mark)
+    /** The commit instant: the `!ts=` mark, else the delta file's mtime. */
+    def ts: Long = values("ts").headOption.map(_.toLong).getOrElse(mtime)
+    /** The data files a stream tail delivers: every add but a rewrite's. */
+    def tailFiles: Seq[String] =
+      if (has(RewriteMark)) Nil else adds.filter(rel => isDataFile(rel.split('/').last))
+    private def entries(prefix: String): Seq[String] =
+      lines.collect { case l if l.startsWith(prefix) => l.substring(prefix.length) }
+  }
+
+  /** The table's commit log, oldest first: one listing; a delta is read
+    * only when its lines are used.
+    */
+  private[graft] def deltaLog(prodDir: String): Seq[Delta] = {
     val md = metaDir(prodDir)
-    val f = fs(md)
-    if (!f.exists(md)) 0L
-    else f.listStatus(md).toSeq.filter(_.isFile)
-      .map(_.getPath.getName).filter(_.startsWith("s-"))
-      .map(_.stripPrefix("s-").toLong).maxOption.getOrElse(0L)
+    val listed =
+      try fs(md).listStatus(md).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    listed.filter(st => st.isFile && st.getPath.getName.startsWith("s-"))
+      .map(st => new Delta(st.getPath.getName.stripPrefix("s-").toLong,
+        st.getPath, st.getModificationTime))
+      .sortBy(_.v)
+  }
+
+  private[graft] def currentVersion(prodDir: String): Long =
+    deltaLog(prodDir).lastOption.map(_.v).getOrElse(0L)
+
+  /** The deltas since the newest REPLACE, newest first, each read only
+    * when reached — the span a writer's claim-once mark can live in (a
+    * REPLACE swaps out every earlier commit's files).
+    */
+  private[graft] def sinceReplace(log: Seq[Delta]): Iterator[Delta] =
+    log.reverseIterator.takeWhile(!_.has(ReplaceMark))
+
+  /** The deltas a stream tail reads for its offsets (a, b]: a new tail
+    * (a < 0) starts at the newest REPLACE at or below b — the table's
+    * current generation; a running tail fails loudly on a REPLACE.
+    */
+  private[graft] def tailRange(log: Seq[Delta], a: Long, b: Long,
+                               table: String): Seq[Delta] = {
+    val range = log.filter(dl => dl.v > a && dl.v <= b)
+    if (a < 0) range.drop(range.lastIndexWhere(_.has(ReplaceMark)).max(0))
+    else {
+      range.find(_.has(ReplaceMark)).foreach(dl => throw new IllegalStateException(
+        s"staged stream: $table was replaced at version ${dl.v}, past this " +
+          s"stream's offset $a — the table regressed under the stream; " +
+          "restart from a fresh checkpoint"))
+      range
+    }
   }
 
   /** A directory's table-relative rel with the root as "." — the form
@@ -1707,9 +1660,7 @@ object StagedParquet {
   private[graft] def stampCreation(prodDir: String): Unit = {
     val md = metaDir(prodDir)
     val f = fs(md)
-    val has = f.exists(md) && f.listStatus(md).exists(st =>
-      st.isFile && st.getPath.getName.startsWith("s-"))
-    if (!has) {
+    if (deltaLog(prodDir).isEmpty) {
       f.mkdirs(md): Unit
       try {
         val out = f.create(new Path(md, "s-0"), false)
@@ -1722,24 +1673,16 @@ object StagedParquet {
   /** (version, monotonized commit millis) ascending — the table's commit
     * timeline. O(versions) tiny-file metadata reads, never O(data).
     */
-  private[graft] def commitTimeline(prodDir: String): Seq[(Long, Long)] = {
-    val md = metaDir(prodDir)
-    val f = fs(md)
-    if (!f.exists(md)) return Seq.empty
-    val raw = f.listStatus(md).toSeq.filter(_.isFile)
-      .map(_.getPath).filter(_.getName.startsWith("s-"))
-      .map { p =>
-        val v = p.getName.stripPrefix("s-").toLong
-        val ts = readString(p).getOrElse("").split("\n")
-          .find(_.startsWith("!ts=")).map(_.stripPrefix("!ts=").toLong)
-          .getOrElse(f.getFileStatus(p).getModificationTime)
-        (v, ts)
-      }.sortBy(_._1)
+  private[graft] def commitTimeline(prodDir: String): Seq[(Long, Long)] =
+    timeline(deltaLog(prodDir))
+
+  private[v2] def timeline(log: Seq[Delta]): Seq[(Long, Long)] = {
     var prev = Long.MinValue
-    raw.map { case (v, t) =>
+    log.map { dl =>
+      val t = dl.ts
       val m = if (prev == Long.MinValue) t else math.max(t, prev + 1)
       prev = m
-      (v, m)
+      (dl.v, m)
     }
   }
 
@@ -1809,9 +1752,8 @@ object StagedParquet {
     * is the WAP branch, publish is the fast-forward). Two-phase: an
     * intent file (`__meta/_wapintent` on dst, tmp+rename) records the
     * full rename map BEFORE any file moves; the version delta carries a
-    * `!wap=` mark and the commit manifest a `#txn=wap:` marker, both
-    * claim-once — a crash at ANY point resumes by re-calling publish
-    * (renames skip-if-done, recorded markers short-circuit). The audit
+    * claim-once `!wap=` mark — a crash at ANY point resumes by re-calling
+    * publish (renames skip-if-done, a recorded mark short-circuits). The audit
     * table is dropped last (its files now belong to dst), then the
     * intent, so every crash window leaves a resumable state.
     *
@@ -1847,11 +1789,12 @@ object StagedParquet {
             s"(${lines.headOption.getOrElse("?")}) — finish it first")
         lines.tail.map { l => val kv = l.split("\t", 2); (kv(0), kv(1)) }
       } else {
-        val srcSpec = readString(new Path(sp, PartitionFile)).getOrElse("")
-        val dstSpec = readString(new Path(dp, PartitionFile)).getOrElse("")
+        val srcSpec = specOf(sp)
+        val dstSpec = specOf(dp)
         require(srcSpec == dstSpec,
           s"publish_appends: partition specs differ ($srcTable: " +
-            s"'$srcSpec' vs $dstTable: '$dstSpec') — publish renames 1:1 " +
+            s"'${PartSpec.serialize(srcSpec)}' vs $dstTable: " +
+            s"'${PartSpec.serialize(dstSpec)}') — publish renames 1:1 " +
             "by partition path and requires identical specs")
         require(!hasDvFlag(sp),
           s"publish_appends: $srcTable has merge-on-read deletes — an " +
@@ -1861,12 +1804,8 @@ object StagedParquet {
         require(!f.listStatus(sp).exists(st => st.isFile &&
             st.getPath.getName.startsWith(EqPrefix)),
           s"publish_appends: $srcTable has equality-delete files")
-        val srcSchema = readString(new Path(sp, SchemaFile))
-          .map(DataType.fromJson(_).asInstanceOf[StructType])
-          .getOrElse(StructType(Nil))
-        val dstSchema = readString(new Path(dp, SchemaFile))
-          .map(DataType.fromJson(_).asInstanceOf[StructType])
-          .getOrElse(StructType(Nil))
+        val srcSchema = schemaOf(sp).getOrElse(StructType(Nil))
+        val dstSchema = schemaOf(dp).getOrElse(StructType(Nil))
         srcSchema.fields.foreach { sf0 =>
           require(dstSchema.fields.exists(df0 =>
             df0.name == sf0.name && df0.dataType == sf0.dataType),
@@ -1916,20 +1855,11 @@ object StagedParquet {
       }
     }
 
-    // phase 3: ONE version delta (claim-once by its !wap mark) + ONE
-    // commit manifest (claim-once by its #txn marker)
-    val adds = mapping.map(_._2)
-    val mark = s"!wap=$srcName"
-    val md = metaDir(dd)
-    val recorded = f.exists(md) && f.listStatus(md).exists(st =>
-      st.isFile && st.getPath.getName.startsWith("s-") &&
-        readString(st.getPath).exists(_.split("\n").contains(mark)))
-    if (!recorded)
-      recordVersion(dd, currentVersion(dd) + 1, adds, Nil, exact = false,
-        marks = Seq(mark)): Unit
-    val txn = s"wap:$srcName"
-    if (!manifestIds(dp).exists(id => readManifest(dp, id)._1.contains(txn)))
-      appendManifest(dp, adds, Some(txn)): Unit
+    // phase 3: ONE version delta, claim-once by its !wap mark
+    val log = deltaLog(dd)
+    if (!sinceReplace(log).exists(_.values("wap").contains(srcName)))
+      recordVersion(dd, log.lastOption.map(_.v).getOrElse(0L) + 1,
+        mapping.map(_._2), Nil, exact = false, marks = Seq(s"!wap=$srcName")): Unit
 
     // phase 4: the audit table's files belong to dst now — drop it, THEN
     // the intent (a crash between leaves intent + no src: fully resumable)
@@ -1975,14 +1905,12 @@ object StagedParquet {
 
   private[v2] def snapshotOfDir(d: String, version: Long): Snapshot = {
     val f = fs(new Path(d))
-    val cur = currentVersion(d)
+    val log = deltaLog(d)
+    val cur = log.lastOption.map(_.v).getOrElse(0L)
     require(version >= 0 && version <= cur,
       s"$d has no version $version (current: $cur)")
-    def specOf(dir: String): Seq[PartField] =
-      readString(new Path(dir, PartitionFile))
-        .map(PartSpec.deserialize).getOrElse(Seq.empty)
     var baseRoot = d
-    var baseSpec = specOf(d)
+    var baseSpec = specOf(new Path(d))
     // full rel (any `_layouts/g-<n>/` prefix included) ->
     //   (physical dir path, file names, the dir's spec)
     val state = mutable.Map.empty[String, (Path, mutable.Set[String], Seq[PartField])]
@@ -2004,7 +1932,7 @@ object StagedParquet {
     def rebase(): Unit = {
       state.clear()
       reseedEq()
-      baseSpec = specOf(baseRoot)
+      baseSpec = specOf(new Path(baseRoot))
       val dvFlagged = hasDvFlag(new Path(baseRoot))
       // every layout generation, each under its own spec — a snapshot of
       // an evolved table is a MIXED-layout state
@@ -2032,19 +1960,15 @@ object StagedParquet {
     def specFor(dirRel: String): Seq[PartField] =
       if (dirRel == LayoutsDir || dirRel.startsWith(LayoutsDir + "/")) {
         val segs = dirRel.split('/')
-        specOf(new Path(new Path(baseRoot), segs.take(2).mkString("/")).toString)
+        specOf(new Path(new Path(baseRoot), segs.take(2).mkString("/")))
       } else baseSpec
     rebase()
-    for (v <- cur to (version + 1) by -1) {
-      val sv = readString(new Path(metaDir(d), s"s-$v")).getOrElse("")
-      val lines = sv.split("\n").toSeq.filter(_.nonEmpty)
-      lines.filter(_.startsWith("+")).foreach { l =>
-        val rel = l.stripPrefix("+")
+    for (dl <- log.filter(_.v > version).reverse; v = dl.v) {
+      dl.adds.foreach { rel =>
         val dirRel = sentinel(rel.split('/').dropRight(1).mkString("/"))
         state.get(dirRel).foreach(_._2 -= rel.split('/').last)
       }
-      lines.filter(_.startsWith("~")).foreach { l =>
-        val dirRel = l.stripPrefix("~")
+      dl.swaps.foreach { dirRel =>
         val retained = retainedPath(d, v, dirRel)
         if (!f.exists(retained)) throw new IllegalStateException(
           s"$d version ${v - 1} expired: retained state $retained was " +
@@ -2066,26 +1990,23 @@ object StagedParquet {
       // WERE the root layout. Keys re-root (strip the prefix) and the
       // base spec reverts to the generation's pinned spec; entry specs
       // already carry it.
-      lines.filter(_.startsWith("!evolve=")).foreach { l =>
-        val prefix = s"$LayoutsDir/${l.stripPrefix("!evolve=")}"
+      dl.values("evolve").foreach { g =>
+        val prefix = s"$LayoutsDir/$g"
         val moved = state.keys
           .filter(k => k == prefix || k.startsWith(prefix + "/")).toSeq
         for (k <- moved) {
           val nk = sentinel(k.stripPrefix(prefix).stripPrefix("/"))
           state(nk) = state.remove(k).get
         }
-        baseSpec = specOf(new Path(new Path(baseRoot), prefix).toString)
+        baseSpec = specOf(new Path(new Path(baseRoot), prefix))
       }
       // equality-delete lifecycle, undone in version order: an eq created
       // above the target wasn't active yet; one materialized above the
       // target still was
-      lines.filter(_.startsWith("!eqdel=")).foreach(l =>
-        eqActive -= l.stripPrefix("!eqdel="))
-      lines.filter(_.startsWith("!eqmat=")).foreach(l =>
-        eqActive += l.stripPrefix("!eqmat="))
+      eqActive --= dl.values("eqdel")
+      eqActive ++= dl.values("eqmat")
     }
-    val schema = readString(new Path(baseRoot, SchemaFile))
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
+    val schema = schemaOf(new Path(baseRoot))
       .getOrElse(throw new IllegalStateException(
         s"$d version $version: no schema at $baseRoot"))
     // resolve the active eq names: live at the reconstructed root, else
@@ -2222,19 +2143,16 @@ object StagedParquet {
     // full rewrite of every directory — reject loudly instead (checked
     // FIRST: an evolution also changes the spec, and this message names
     // the actual cause)
-    require(!((fromV + 1) to toV).exists(v =>
-      readString(new Path(metaDir(d), s"s-$v"))
-        .exists(_.split("\n").exists(_.startsWith("!evolve=")))),
+    val range = deltaLog(d).filter(dl => dl.v > fromV && dl.v <= toV)
+    require(!range.exists(_.values("evolve").nonEmpty),
       "changesBetween: the range crosses a partition-spec evolution — " +
         "diff up to the evolution version and from it separately")
     // an equality-delete commit (or its materialization) changes rows with
     // no per-dir file diff to read them from — the feed would misreport
     // the eq-deleted rows as unchanged. Materialize, then diff across the
     // materialization from its retained trees.
-    require(!((fromV + 1) to toV).exists(v =>
-      readString(new Path(metaDir(d), s"s-$v"))
-        .exists(_.split("\n").exists(l =>
-          l.startsWith("!eqdel=") || l.startsWith("!eqmat=")))),
+    require(!range.exists(dl =>
+      dl.values("eqdel").nonEmpty || dl.values("eqmat").nonEmpty),
       "changesBetween: the range crosses an equality-delete commit — " +
         "materialize (compact) first, or diff around the eq versions")
     require(a.schema.json == b.schema.json && a.partSpec == b.partSpec,
@@ -2299,46 +2217,27 @@ object StagedParquet {
           .withColumn("_change_type", lit("delete")))
   }
 
-  /** Carry the manifest log across a ROOT swap (compaction / COW on an
-    * unpartitioned table): the log is table metadata like the schema —
-    * losing it would regress every tail's offset.
-    */
-  private[v2] def copyManifests(root: Path, stagePart: Path): Unit = {
-    val f = fs(root)
-    val md = new Path(root, ManifestDir)
-    if (f.exists(md))
-      FileUtil.copy(f, md, f, new Path(stagePart, ManifestDir),
-        false, hadoopConf): Unit
-  }
+  // ---- table metadata files ----------------------------------------------
 
-  private[v2] def appendManifest(root: Path, files: Seq[String],
-                                 txn: Option[String] = None): Long = {
-    val f = fs(root)
-    f.mkdirs(new Path(root, ManifestDir)): Unit
-    val body = (txn.map("#txn=" + _).toSeq ++ files.sorted).mkString("\n")
-    var id = manifestIds(root).lastOption.map(_ + 1).getOrElse(0L)
-    var done = false
-    while (!done) {
-      try {
-        val out = f.create(manifestPath(root, id), false)
-        try out.write(body.getBytes("UTF-8")) finally out.close()
-        done = true
-      } catch { case _: java.io.IOException => id += 1 }
-    }
-    id
-  }
+  /** The schema pinned at `dir` (`_schema.json`), if any. */
+  private[graft] def schemaOf(dir: Path): Option[StructType] =
+    readString(new Path(dir, SchemaFile)).map(DataType.fromJson(_).asInstanceOf[StructType])
 
-  // ---- table properties ---------------------------------------------------
+  /** The partition spec pinned at `dir` (`_partition.json`); none = unpartitioned. */
+  private[graft] def specOf(dir: Path): Seq[PartField] =
+    readString(new Path(dir, PartitionFile)).map(PartSpec.deserialize).getOrElse(Seq.empty)
 
   private[graft] def tableProperties(root: Path): Map[String, String] =
     readString(new Path(root, PropertiesFile)).map(_.split("\n").toSeq
       .filter(_.contains("=")).map { l =>
         val kv = l.split("=", 2); (kv(0), kv(1)) }.toMap).getOrElse(Map.empty)
 
+  /** Pin `props` at `root`, an empty map included (unsetting the last
+    * property must clear the file).
+    */
   private[v2] def writeProperties(root: Path, props: Map[String, String]): Unit =
-    if (props.nonEmpty)
-      writeString(root, PropertiesFile,
-        props.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("\n"))
+    writeString(root, PropertiesFile,
+      props.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("\n"))
 
   /** Keys Spark injects on CREATE/REPLACE that are catalog bookkeeping,
     * not user table properties.
@@ -2489,15 +2388,9 @@ object StagedParquet {
     * above fromV applies to them.
     */
   private[graft] def addVersionsSince(d: String, fromV: Long,
-                                      toV: Long): Map[String, Long] = {
-    val md = metaDir(d)
-    val m = mutable.Map.empty[String, Long]
-    for (v <- (fromV + 1) to toV;
-         sv <- readString(new Path(md, s"s-$v")).toSeq;
-         l <- sv.split("\n") if l.startsWith("+"))
-      m(l.stripPrefix("+")) = v
-    m.toMap
-  }
+                                      toV: Long): Map[String, Long] =
+    deltaLog(d).filter(dl => dl.v > fromV && dl.v <= toV)
+      .flatMap(dl => dl.adds.map(_ -> dl.v)).toMap
 
   /** Write one equality-delete file at the table root: the incoming
     * (already-distinct, non-null) key values in `keyDf`, single column
@@ -2713,18 +2606,18 @@ object StagedParquet {
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
 
-  /** Atomic-swap promotion of a fully-written staging dir over prod —
-    * same checked-rename contract as TableLifecycle.renameReplace
-    * (FileSystem.rename/delete signal failure by returning FALSE; every
-    * step is checked so a failed swap can never delete the only copy of
-    * prod).
+  /** Atomic-swap promotion of a fully-written staging dir over prod,
+    * through [[swapDirs]]'s checked renames (FileSystem.rename/delete
+    * signal failure by returning FALSE; every step is checked so a failed
+    * swap can never delete the only copy of prod).
     */
   private[v2] def promote(stagingDir: String, prodDir: String): Unit = {
     if (!fs(new Path(stagingDir)).exists(new Path(stagingDir, SuccessFile)))
       throw new IllegalStateException(
         s"promote: staging $stagingDir has no $SuccessFile — write not committed")
     // a full-table replace is one version: the old root retains wholesale
-    // (`~.`); a first-ever promote (no prod yet) records the new files
+    // (`~.`, none on a first-ever promote) and the new root's files record
+    // under the REPLACE mark, where a new stream tail starts
     val v = currentVersion(prodDir) + 1
     val hadProd = swapDirs(stagingDir, prodDir,
       Some(retainedPath(prodDir, v, ".")))
@@ -2737,15 +2630,13 @@ object StagedParquet {
     // (An append whose files landed in the pre-swap root rode the
     // retention rename — last-writer-wins is the REPLACE contract; the
     // rows stay reachable through time travel at the re-keyed version.)
-    val adds: Seq[String] =
-      if (hadProd) Nil
-      else listRelative(new Path(prodDir)).filter(rel => isDataFile(rel.split('/').last))
+    val adds = listRelative(new Path(prodDir)).filter(rel => isDataFile(rel.split('/').last))
     var id = v
     var done = false
     while (!done) {
       try {
-        recordVersion(prodDir, id,
-          if (hadProd) Nil else adds, if (hadProd) Seq(".") else Nil): Unit
+        recordVersion(prodDir, id, adds, if (hadProd) Seq(".") else Nil,
+          marks = Seq(ReplaceMark)): Unit
         done = true
       } catch {
         case _: IllegalStateException =>
@@ -2766,14 +2657,15 @@ object StagedParquet {
   }
 
   /** The checked prod→old / staging→prod / drop-old rename dance, shared by
-    * the full-table promote and the per-partition dynamic-overwrite swap.
+    * the full-table promote, the per-partition dynamic-overwrite swap and
+    * TableLifecycle's rename-replace.
     * With `retainTo`, the swapped-out state is RENAMED into the version
     * tree instead of deleted (time travel's data retention — a metadata
     * move, no bytes copied); returns whether a pre-state existed (callers
-    * record `~dir` only for real swaps, `+file`s for fresh dirs).
+    * record `~dir` only for real swaps).
     */
-  private[v2] def swapDirs(stagingDir: String, prodDir: String,
-                           retainTo: Option[Path] = None): Boolean = {
+  private[sources] def swapDirs(stagingDir: String, prodDir: String,
+                                retainTo: Option[Path] = None): Boolean = {
     val staging = new Path(stagingDir)
     val prod = new Path(prodDir)
     val old = new Path(prodDir + "__old")
@@ -3129,14 +3021,10 @@ class StagedCatalog extends TableCatalog with StagingTableCatalog
       fs(new Path(d)).exists(new Path(d, SuccessFile))
 
   private def loadSchema(d: String): StructType =
-    readString(new Path(d, SchemaFile)) match {
-      case Some(json) => DataType.fromJson(json).asInstanceOf[StructType]
-      case None => SparkSession.active.read.parquet(d).schema
-    }
+    StagedParquet.schemaOf(new Path(d))
+      .getOrElse(SparkSession.active.read.parquet(d).schema)
 
-  private def loadPartSpec(d: String): Seq[PartField] =
-    readString(new Path(d, PartitionFile))
-      .map(PartSpec.deserialize).getOrElse(Seq.empty)
+  private def loadPartSpec(d: String): Seq[PartField] = StagedParquet.specOf(new Path(d))
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val nsDir = new Path((root +: namespace.toSeq).mkString("/"))
@@ -3222,7 +3110,7 @@ class StagedCatalog extends TableCatalog with StagingTableCatalog
     fs(p).mkdirs(p)
     writeString(p, SchemaFile, schema.json)
     if (spec.nonEmpty) writeString(p, PartitionFile, PartSpec.serialize(spec))
-    StagedParquet.writeProperties(p, props)
+    if (props.nonEmpty) StagedParquet.writeProperties(p, props)
     writeString(p, SuccessFile, "")
     // the created-empty base state gets a creation instant (s-0), so
     // TIMESTAMP AS OF before the first commit resolves version 0
@@ -3357,21 +3245,15 @@ class StagedCatalog extends TableCatalog with StagingTableCatalog
         rProps.get(StagedParquet.SortOrderProp).foreach { so =>
           val cols = so.split(",").map(_.trim)
           if (cols.contains(from))
-            writeString(new Path(d), PropertiesFile,
-              (rProps + (StagedParquet.SortOrderProp ->
-                cols.map(c => if (c == from) to else c).mkString(","))).toSeq
-                .sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("\n"))
+            StagedParquet.writeProperties(new Path(d), rProps + (StagedParquet.SortOrderProp ->
+              cols.map(c => if (c == from) to else c).mkString(",")))
         }
       case set: TableChange.SetProperty =>
-        val cur = StagedParquet.tableProperties(new Path(d))
-        writeString(new Path(d), PropertiesFile,
-          (cur + (set.property() -> set.value())).toSeq.sortBy(_._1)
-            .map { case (k, v) => s"$k=$v" }.mkString("\n"))
+        StagedParquet.writeProperties(new Path(d),
+          StagedParquet.tableProperties(new Path(d)) + (set.property() -> set.value()))
       case rm: TableChange.RemoveProperty =>
-        val cur = StagedParquet.tableProperties(new Path(d))
-        writeString(new Path(d), PropertiesFile,
-          (cur - rm.property()).toSeq.sortBy(_._1)
-            .map { case (k, v) => s"$k=$v" }.mkString("\n"))
+        StagedParquet.writeProperties(new Path(d),
+          StagedParquet.tableProperties(new Path(d)) - rm.property())
       case c => throw new UnsupportedOperationException(
         s"staged catalog: unsupported table change $c; replace the table")
     }
@@ -3860,21 +3742,13 @@ class StagedParquetBatchWrite(targetDir: String, promoteTo: Option[String],
       writeString(p, SchemaFile, schema.json)
     if (partSpec.nonEmpty) writeString(p, PartitionFile, PartSpec.serialize(partSpec))
     writeString(p, SuccessFile, "")
-    // the commit manifest: in a fresh staging dir this lands at m-0 (a
-    // promoted REPLACE starts a new manifest generation); an append claims
-    // the table's next id. Row-level rewrites opt out — they change rows
-    // in place, they don't append them.
-    if (writeCommitManifest && committed.nonEmpty)
-      appendManifest(p, committed.toSeq): Unit
     // version delta: a direct append records its adds (staging targets
     // don't — their version is claimed by the promote/swap on PROD)
-    if (writeCommitManifest && !isStagingTarget && committed.nonEmpty)
+    if (!isStagingTarget && committed.nonEmpty)
       recordVersion(targetDir, currentVersion(targetDir) + 1,
         committed.toSeq, Nil, exact = false): Unit
     promoteTo.foreach(prod => promote(targetDir, prod))
   }
-
-  protected def writeCommitManifest: Boolean = true
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val p = new Path(targetDir)
@@ -3909,18 +3783,20 @@ class StagedParquetBatchWrite(targetDir: String, promoteTo: Option[String],
   * 100 TB ingest path: each micro-batch epoch appends files with the SAME
   * two-phase protocol as a batch append (task files under
   * `_tmp-<epoch-token>-`, renamed to final names only at task commit;
-  * driver commit sweeps only its own epoch's strays) and lands ONE commit
-  * manifest per epoch, so a downstream [[StagedMicroBatchStream]] tail
-  * sees exactly one offset increment per upstream trigger.
+  * driver commit sweeps only its own epoch's strays) and records ONE adds
+  * version per epoch, so a downstream [[StagedMicroBatchStream]] tail
+  * reads each epoch's files exactly once.
   *
   * EXACTLY-ONCE across crashes, the two halves:
   *   - REPLAYED EPOCH (the sink committed but the engine's own commit log
-  *     didn't — restart re-runs the epoch): the epoch's manifest carries a
-  *     `#txn=<queryId>:e<epoch>` marker and a `_stream-<qid>.txt` cursor
-  *     at the table root records (last epoch, last manifest id); a commit
-  *     for an epoch at or below the cursor — or whose txn already appears
-  *     in a manifest above the cursor (the cursor-write crash window) —
-  *     DELETES its freshly written files instead of manifesting them.
+  *     didn't — restart re-runs the epoch): the epoch's adds version
+  *     carries a `!txn=<queryId>:e<epoch>` mark and a `_stream-<qid>.txt`
+  *     cursor at the table root records (last epoch, its adds version); a
+  *     commit for an epoch at or below the cursor DELETES its freshly
+  *     written files, and one whose mark already appears in a version
+  *     above the cursor (a crash after the adds landed) deletes them too,
+  *     then finishes what the first attempt may not have: the upsert half
+  *     and the cursor.
   *   - NAME COLLISIONS on replay: a restarted run's task ids restart, so
   *     final names could collide with the first attempt's; every run
   *     salts its token with a per-run nonce, making replayed files
@@ -3932,16 +3808,17 @@ class StagedParquetBatchWrite(targetDir: String, promoteTo: Option[String],
   */
 /** @param upsertKey STREAMING UPSERT mode (`graft.upsert.key` write
   *        option — the CDC sink shape, Flink/Iceberg upsert-stream
-  *        semantics): before each epoch's manifest lands, rows whose key
+  *        semantics): right after each epoch's adds land, rows whose key
   *        matches an epoch row are DELETED through the tiered COW core
   *        (merge-on-read tables pay one tiny deletion vector per touched
   *        directory; a bucket(key) layout prunes the match to the keys'
   *        buckets, the zone map to overlapping files — a 100 TB CDC
   *        target absorbs an epoch at cost ∝ touched keys). The epoch's
   *        own files are excluded from the delete, and the whole pair is
-  *        replay-idempotent: a replayed epoch short-circuits on the txn
-  *        marker, and a crash between the delete and the manifest redoes
-  *        a delete that matches nothing new (prior deletions anti-join).
+  *        replay-idempotent: a replay found by its txn mark drops the
+  *        re-run's files and redoes the delete with the RECORDED adds
+  *        excluded — a delete that already ran matches nothing new (prior
+  *        deletions anti-join).
   *        The INPUT must be key-unique per micro-batch (the standard
   *        upsert-stream contract — pre-aggregate latest-per-key).
   *        The epoch's keys come from its WRITE TASKS: each data writer
@@ -4013,62 +3890,59 @@ class StagedStreamingWrite(prodDir: String, schema: StructType,
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val p = new Path(prodDir)
     val f = fs(p)
-    val committed = messages.flatMap(_.asInstanceOf[StagedFilesCommit].files).toSet
+    val written = messages.flatMap(_.asInstanceOf[StagedFilesCommit].files).toSet
     val cursor = readString(cursorPath(p)).map { s0 =>
-      val Array(e, m) = s0.trim.split(":")
-      (e.toLong, m.toLong)
+      val Array(e, v) = s0.trim.split(":")
+      (e.toLong, v.toLong)
     }.getOrElse((-1L, -1L))
-    val replayed = epochId <= cursor._1 ||
-      manifestIds(p).filter(_ > cursor._2)
-        .exists(id => readManifest(p, id)._1.contains(txnOf(epochId)))
-    if (replayed) {
-      // this epoch's rows are already in the table — discard the re-run's
-      // freshly written (nonce-named, collision-free) files
-      committed.foreach(rel => f.delete(new Path(p, rel), false): Unit)
-      return
-    }
+    // a re-run's files are fresh-named (nonce) — a replay discards them
+    def drop(): Unit = written.foreach(rel => f.delete(new Path(p, rel), false): Unit)
+    if (epochId <= cursor._1) { drop(); return }
+    val log = deltaLog(prodDir)
+    // the adds version a crashed attempt of this epoch already recorded
+    val recorded = sinceReplace(log).takeWhile(_.v > cursor._2)
+      .find(_.values("txn").contains(txnOf(epochId)))
     val token = epochToken(epochId)
     val allRel = listRelative(p)
     allRel.foreach { rel =>
       if (rel.split('/').last.startsWith(s"_tmp-$token-"))
         f.delete(new Path(p, rel), true): Unit
     }
+    val (vAdd, committed) = recorded match {
+      case Some(dl) => drop(); (dl.v, dl.adds.toSet)
+      case None =>
+        written.foreach { rel =>
+          if (!f.exists(new Path(p, rel)))
+            throw new IllegalStateException(
+              s"stream commit: committed file $rel missing in $prodDir")
+        }
+        if (!f.exists(new Path(p, SchemaFile))) writeString(p, SchemaFile, schema.json)
+        if (partSpec.nonEmpty && !f.exists(new Path(p, PartitionFile)))
+          writeString(p, PartitionFile, PartSpec.serialize(partSpec))
+        writeString(p, SuccessFile, "")
+        // The epoch's adds record BEFORE the key-delete (ADVICE r11): the
+        // delete's version then sits ABOVE the adds, so time travel to any
+        // version at or below the delete undoes the adds and restores the
+        // retained pre-delete trees in the right order — with the old
+        // delete-first ordering a COW-dense epoch delete retained
+        // directories that already contained the epoch's files at a
+        // version BELOW their own add, and snapshots at that version
+        // resurrected them. The txn mark rides the same create.
+        (if (written.isEmpty) -1L
+         else recordVersion(prodDir, log.lastOption.map(_.v).getOrElse(0L) + 1,
+           written.toSeq, Nil, exact = false, marks = Seq(s"!txn=${txnOf(epochId)}")),
+         written)
+    }
     // does the table hold any PRE-EXISTING data file (one not written by
     // this epoch)? The initial CDC snapshot load lands in an empty table —
     // its key-delete would match nothing, so skip the whole upsert half
     // (reusing the listing the tmp sweep already paid for): the 100 TB
     // initial load must never scan itself for keys it cannot find.
-    val hasPreexisting = {
-      val epochNames = committed.map(_.split('/').last)
-      allRel.exists { rel =>
-        val n = rel.split('/').last
-        isDataFile(n) && !epochNames(n)
-      }
+    val excl = (committed ++ written).map(_.split('/').last)
+    val hasPreexisting = allRel.exists { rel =>
+      val n = rel.split('/').last
+      isDataFile(n) && !excl(n)
     }
-    committed.foreach { rel =>
-      if (!f.exists(new Path(p, rel)))
-        throw new IllegalStateException(
-          s"stream commit: committed file $rel missing in $prodDir")
-    }
-    if (!f.exists(new Path(p, SchemaFile))) writeString(p, SchemaFile, schema.json)
-    if (partSpec.nonEmpty && !f.exists(new Path(p, PartitionFile)))
-      writeString(p, PartitionFile, PartSpec.serialize(partSpec))
-    writeString(p, SuccessFile, "")
-    // The epoch's file adds record BEFORE the key-delete (ADVICE r11): the
-    // delete's version then sits ABOVE the adds, so time travel to any
-    // version at or below the delete undoes the adds and restores the
-    // retained pre-delete trees in the right order — with the old
-    // delete-first ordering a COW-dense epoch delete retained directories
-    // that already contained the epoch's files at a version BELOW their
-    // own add, and snapshots at that version resurrected them. The
-    // manifest append stays AFTER the delete (replay semantics: a crash
-    // between the delete and the manifest redoes a delete that matches
-    // nothing new).
-    val vAdd: Long =
-      if (committed.nonEmpty)
-        recordVersion(prodDir, currentVersion(prodDir) + 1,
-          committed.toSeq, Nil, exact = false)
-      else -1L
     // UPSERT half: delete the PRE-EXISTING rows this epoch replaces, the
     // delete tiered as usual with the epoch files excluded. NARROW epochs
     // (every write task reported its keys and they union to at most
@@ -4088,7 +3962,6 @@ class StagedStreamingWrite(prodDir: String, schema: StructType,
         .parquet(committed.toSeq.map(rel => new Path(p, rel).toString): _*)
         .filter(org.apache.spark.sql.functions.col(key).isNotNull)
         .distinct()
-      val excl = committed.map(_.split('/').last)
       if (upsertEq) {
         // EQUALITY-DELETE epoch (`graft.upsert.eq`, r12 VERDICT #3): the
         // epoch's keys publish as one `_eq-` file with boundary = the
@@ -4097,15 +3970,18 @@ class StagedStreamingWrite(prodDir: String, schema: StructType,
         // position-delete path pays per epoch never runs). Epoch cost is
         // O(written bytes) at ANY destination size; the scan-side
         // anti-probe and the maintenance-time materialization carry the
-        // deferred work. Replay stays idempotent one level up (the txn
-        // marker short-circuits before this half); a crash between the eq
-        // write and the manifest redoes the epoch, and the redo's eq file
-        // covers the first attempt's orphaned adds exactly like the redone
-        // position delete used to.
-        StagedParquet.upsertEqEpochs.incrementAndGet(): Unit
-        val name = writeEqFile(s, prodDir, keyDf, vAdd)
-        recordVersion(prodDir, currentVersion(prodDir) + 1, Nil, Nil,
-          exact = false, marks = Seq(s"!eqdel=$name")): Unit
+        // deferred work. A replay whose eq file is already live only
+        // records its mark, if the crash beat that.
+        val live = if (recorded.isEmpty) None
+          else liveEqFiles(prodDir).map(e => new Path(e._1).getName)
+            .find(eqBoundary(_) == vAdd)
+        val name = live.getOrElse {
+          StagedParquet.upsertEqEpochs.incrementAndGet(): Unit
+          writeEqFile(s, prodDir, keyDf, vAdd)
+        }
+        if (live.isEmpty || !log.exists(dl => dl.v > vAdd && dl.values("eqdel").contains(name)))
+          recordVersion(prodDir, currentVersion(prodDir) + 1, Nil, Nil,
+            exact = false, marks = Seq(s"!eqdel=$name")): Unit
       } else epochKeys(messages, key, keyInMax(s)) match {
         case Some(vals) =>
           if (vals.nonEmpty)
@@ -4124,10 +4000,8 @@ class StagedStreamingWrite(prodDir: String, schema: StructType,
             None, excludeNames = excl, keySet = Some((key, keyDf))): Unit
       }
     }
-    val mid =
-      if (committed.nonEmpty) appendManifest(p, committed.toSeq, Some(txnOf(epochId)))
-      else cursor._2
-    writeString(p, cursorPath(p).getName, s"$epochId:$mid")
+    writeString(p, cursorPath(p).getName,
+      s"$epochId:${if (vAdd >= 0) vAdd else cursor._2}")
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -4159,10 +4033,9 @@ class DynamicOverwriteBatchWrite(stagingDir: String, prodDir: String,
     super.commit(messages) // staging dir now holds exactly the committed files
     val prod = new Path(prodDir)
     val f = fs(prod)
-    // a swapped-in partition's files carry no add-version record, so a
-    // live equality delete would wrongly apply to the OVERWRITTEN rows —
-    // settle first (full-root promote below swaps the eq files away with
-    // the rest of the old root, which is already the right semantics)
+    // live equality deletes settle first, as before every other verb that
+    // moves data files (full-root promote below swaps the eq files away
+    // with the rest of the old root, which is already the right semantics)
     if (partSpec.nonEmpty) materializeEqDeletes(SparkSession.active, prodDir)
     if (partSpec.isEmpty) { promote(stagingDir, prodDir); return }
     val committed = messages.flatMap(_.asInstanceOf[StagedFilesCommit].files)
@@ -4171,15 +4044,14 @@ class DynamicOverwriteBatchWrite(stagingDir: String, prodDir: String,
       segs.dropRight(1).mkString("/")
     }.distinct.filter(_.nonEmpty)
     // one version for the whole overwrite: swapped dirs retain (`~dir`),
-    // files landing in FRESH dirs record as adds
+    // and every written file records as an add — a stream tail delivers
+    // the overwrite's rows, those of the swapped dirs included
     val v = currentVersion(prodDir) + 1
     val swapped = parts.filter { part =>
       swapDirs(s"$stagingDir/$part", s"$prodDir/$part",
         Some(retainedPath(prodDir, v, part)))
     }
-    val freshAdds = committed.toSeq.filterNot(rel =>
-      swapped.contains(rel.split('/').dropRight(1).mkString("/")))
-    recordVersion(prodDir, v, freshAdds, swapped.toSeq): Unit
+    recordVersion(prodDir, v, committed.toSeq, swapped.toSeq): Unit
     // metadata refresh on prod (schema/spec unchanged by an overwrite, but
     // a first-ever dynamic write onto a created-empty table publishes them)
     writeString(prod, SchemaFile, schema.json)
@@ -4187,8 +4059,7 @@ class DynamicOverwriteBatchWrite(stagingDir: String, prodDir: String,
     writeString(prod, SuccessFile, "")
     // an overwritten partition's OLD rows vanished in the swap — a tail
     // that already consumed them will see these as fresh rows (the
-    // standard ignore-changes caveat); the manifest records the adds
-    if (committed.nonEmpty) appendManifest(prod, committed.toSeq): Unit
+    // standard ignore-changes caveat)
     f.delete(new Path(stagingDir), true): Unit
   }
 

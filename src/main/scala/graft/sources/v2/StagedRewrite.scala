@@ -122,9 +122,7 @@ final class DirCommit(d: String) {
     *     deletion vectors) in one carried vector; rewritten files
     *     materialized theirs;
     *   - the ROOT of an unpartitioned table hands on the table's catalog
-    *     files and manifest log (a caught-up tail survives the swap; a
-    *     lagging one fails loudly on the renamed files), and the vector
-    *     flag rides the staged root;
+    *     files, and the vector flag rides the staged root;
     *   - an unpartitioned GENERATION root (the only generation dir a rel
     *     without `=` names) re-pins its empty spec.
     * Returns whether `dir` existed (a fresh one records no swap).
@@ -144,7 +142,6 @@ final class DirCommit(d: String) {
       for (n <- Seq(SchemaFile, PartitionFile, DroppedFile, PropertiesFile);
            body <- readString(new Path(root, n))) writeString(stage, n, body)
       writeString(stage, SuccessFile, "")
-      copyManifests(root, stage)
     } else if (!rel.contains("=")) writeString(stage, PartitionFile, PartSpec.serialize(Nil))
     val existed = swapDirs(stage.toString, dir.toString,
       Some(retainedPath(d, version, rel)))
@@ -176,5 +173,10 @@ final class DirCommit(d: String) {
 
   def isEmpty: Boolean = swaps.isEmpty && adds.isEmpty
 
-  def record(): Unit = recordVersion(d, version, adds.toSeq, swaps.toSeq): Unit
+  /** One version for the statement, under the rewrite mark: a stream
+    * tail delivers none of its files (a caught-up tail survives the swap;
+    * a lagging one fails loudly on the renamed files).
+    */
+  def record(): Unit =
+    recordVersion(d, version, adds.toSeq, swaps.toSeq, marks = Seq(RewriteMark)): Unit
 }

@@ -41,9 +41,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * OptimizeMetadataOnlyDeleteFromTable folds the rewrite back into
   * `SupportsDelete` when `canDeleteWhere` accepts — so the row-level
   * machinery only pays for statements the cheap tiers cannot express.
-  * No commit manifests are appended (rows change in place, they are not
-  * appended), so a streaming tail behind the offset fails loudly rather
-  * than replaying — the same maintenance contract as COW/compaction.
+  * The commit is a [[DirCommit]] rewrite (rows change in place, they are
+  * not appended): a stream tail delivers none of its files, inserts into
+  * fresh directories included, and a tail behind the offset fails loudly
+  * rather than replaying — the same maintenance contract as
+  * COW/compaction.
   */
 class StagedRowLevelOperation(prodDir: String, tableSchema: StructType,
                               partSpec: Seq[PartField],
@@ -139,8 +141,6 @@ class RowLevelReplaceBatchWrite(staging: String, prodDir: String,
                                 queryId: String, scanned: () => Seq[String])
     extends StagedParquetBatchWrite(staging, None, schema, partSpec, queryId) {
   import StagedParquet._
-
-  override protected def writeCommitManifest: Boolean = false
 
   /** UPDATE/MERGE rewrites prepend a `__row_operation` column to every
     * physical row (RowDeltaUtils.OPERATION_COLUMN); Spark only strips it

@@ -398,9 +398,9 @@ class StagedScan(tableName: String, prodDir: String, tableSchema: StructType,
       s"zonemap=[${dataSkip.mkString(",")}])"
 
   /** STREAMING read — `spark.readStream.table("graft_staged.ns.t")` tails
-    * the table's commit MANIFESTS ([[StagedMicroBatchStream]]): each
-    * micro-batch reads exactly the files the manifests in its (start,
-    * end] id range added. Committed files are immutable (the sink renames
+    * the table's commit log ([[StagedMicroBatchStream]]): each micro-batch
+    * reads exactly the data files the version deltas in its (start, end]
+    * range added. Committed files are immutable (the sink renames
     * task files to final names only at commit), so the tail is consistent
     * without any coordination with appenders — the CDC-tail shape on the
     * 100 TB ingest table, at O(new data) cost per trigger.
@@ -409,39 +409,40 @@ class StagedScan(tableName: String, prodDir: String, tableSchema: StructType,
     new StagedMicroBatchStream(tableName, prodDir, tableSchema, partSpec, required)
 }
 
-/** Offset = the last consumed commit-manifest id (-1 before the first).
+/** Offset = the last consumed version id (-1 before the first).
   * O(1) in the offset log regardless of table size; every (start, end]
-  * range replays from the manifest files alone, so a checkpoint restart
+  * range replays from the version deltas alone, so a checkpoint restart
   * needs no driver-memory source state.
   */
-case class StagedManifestOffset(last: Long)
+case class StagedVersionOffset(last: Long)
     extends org.apache.spark.sql.connector.read.streaming.Offset {
   override def json(): String = last.toString
 }
 
-/** Manifest-tail micro-batch stream over a staged table: `latestOffset`
-  * lists ONLY the `_manifests` directory (never the table's file tree —
-  * on a million-file table a trigger stays a one-directory listing), and
-  * `planInputPartitions` reads the files named by manifests (start, end]
-  * — one split per new file with its partition-directory values parsed
-  * from the relative path, through the same [[StagedReaderFactory]] as
-  * the batch path, so identity columns reconstitute and evolution
-  * null-fills identically in both.
+/** Commit-log tail micro-batch stream over a staged table: `latestOffset`
+  * lists ONLY the table's version deltas (never its file tree — on a
+  * million-file table a trigger stays a one-directory listing), and
+  * `planInputPartitions` reads the data-file adds of the deltas in
+  * (start, end] ([[StagedParquet.Delta.tailFiles]]) — one split per new
+  * file with its partition-directory values parsed from the relative
+  * path, through the same [[StagedReaderFactory]] as the batch path, so
+  * identity columns reconstitute and evolution null-fills identically in
+  * both. A new stream starts at the table's newest REPLACE.
   *
   * Non-append changes fail LOUDLY instead of corrupting the tail: a
-  * full-table REPLACE resets the manifest generation, so the id regresses
-  * below the checkpoint and the next batch throws; a rewrite (COW,
-  * compaction) that renamed a not-yet-consumed file throws when the
-  * manifest's path is missing. Run maintenance behind the stream's
+  * full-table REPLACE past the checkpoint throws at the next batch; a
+  * rewrite (COW, compaction) that renamed a not-yet-consumed file throws
+  * when the file's path is missing. Run maintenance behind the stream's
   * committed offset — the same contract Delta's `readChangeFeed`-less
   * stream documents as ignoreChanges/failOnDataLoss.
   *
-  * Merge-on-read DELETEs are the one mutation the tail deliberately does
-  * NOT observe: a `_dv-*` write renames no data file, so the stream keeps
-  * its append-feed semantics (rows as committed; deletes never retract a
-  * delivered row — standard CDC-append behavior). Tail partitions carry
-  * `dv = Nil` by construction; a consumer that needs deletes reads the
-  * change feed ([[StagedParquet.changesBetween]]) instead.
+  * Rewrites are the mutations the tail deliberately does NOT observe: a
+  * rewrite's delta carries [[StagedParquet.RewriteMark]], so the stream
+  * keeps its append-feed semantics (rows as committed; deletes never
+  * retract a delivered row, and a MERGE's or UPDATE's rewritten rows are
+  * not re-delivered — standard CDC-append behavior). Tail partitions
+  * carry `dv = Nil` by construction; a consumer that needs deletes reads
+  * the change feed ([[StagedParquet.changesBetween]]) instead.
   */
 class StagedMicroBatchStream(tableName: String, prodDir: String,
                              tableSchema: StructType, partSpec: Seq[PartField],
@@ -451,54 +452,72 @@ class StagedMicroBatchStream(tableName: String, prodDir: String,
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 
   private val root = new Path(prodDir)
-  // Trigger.AvailableNow: the last manifest at query start bounds every
+  // Trigger.AvailableNow: the newest version at query start bounds every
   // batch of the run, so a restart re-runs an uncommitted batch and then
-  // still reads every manifest committed before the query started
+  // still reads every version committed before the query started
   @volatile private var availableNowEnd = Long.MaxValue
 
-  private def lastManifest: Long =
-    StagedParquet.manifestIds(root).lastOption.getOrElse(-1L)
-  override def prepareForTriggerAvailableNow(): Unit = availableNowEnd = lastManifest
+  private def lastVersion: Long =
+    StagedParquet.deltaLog(prodDir).lastOption.map(_.v).getOrElse(-1L)
+  override def prepareForTriggerAvailableNow(): Unit = availableNowEnd = lastVersion
   override def latestOffset(): Offset =
-    StagedManifestOffset(math.min(lastManifest, availableNowEnd))
+    StagedVersionOffset(math.min(lastVersion, availableNowEnd))
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = latestOffset()
-  override def initialOffset(): Offset = StagedManifestOffset(-1L)
+  override def initialOffset(): Offset = StagedVersionOffset(-1L)
   override def deserializeOffset(json: String): Offset =
-    StagedManifestOffset(json.trim.toLong)
+    StagedVersionOffset(json.trim.toLong)
+
+  // Spark asks for a micro-batch's splits once per copy of its physical
+  // plan (about a dozen per batch): the last range's splits are kept
+  @volatile private var planned: ((Long, Long), Array[InputPartition]) = ((-2L, -2L), Array.empty)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val a = start.asInstanceOf[StagedManifestOffset].last
-    val b = end.asInstanceOf[StagedManifestOffset].last
+    val range = (start.asInstanceOf[StagedVersionOffset].last,
+      end.asInstanceOf[StagedVersionOffset].last)
+    if (planned._1 != range) planned = (range, plan(range._1, range._2))
+    planned._2
+  }
+
+  private def plan(a: Long, b: Long): Array[InputPartition] = {
     if (b < a) throw new IllegalStateException(
-      s"staged stream: manifest id regressed from $a to $b on $tableName — " +
-        "the table was replaced or truncated under this stream; restart " +
+      s"staged stream: version regressed from $a to $b on $tableName — " +
+        "the table was dropped or recreated under this stream; restart " +
         "from a fresh checkpoint")
     val f = StagedParquet.fs(root)
-    // partition-spec evolution moved committed files under
-    // `_layouts/g-<n>/` and TRANSLATED the manifest log 1:1, so a lagging
-    // or fresh tail keeps reading — each translated entry resolves its
-    // GENERATION's spec (one tiny read per generation per batch) and its
-    // dir values from the k=v segments only
-    val genSpecs = scala.collection.mutable.Map.empty[String, Seq[PartField]]
-    def specOfGen(genRel: String): Seq[PartField] =
-      genSpecs.getOrElseUpdate(genRel,
-        StagedParquet.readString(
-          new Path(new Path(root, genRel), StagedParquet.PartitionFile))
-          .map(PartSpec.deserialize).getOrElse(Seq.empty))
-    ((a + 1) to b).flatMap { id =>
-      StagedParquet.readManifest(root, id)._2.map { rel =>
-        val p = new Path(root, rel)
-        if (!f.exists(p)) throw new IllegalStateException(
-          s"staged stream: $rel (manifest m-$id) no longer exists in " +
+    val log = StagedParquet.deltaLog(prodDir)
+    val range = StagedParquet.tailRange(log, a, b, tableName)
+    // partition-spec evolution moves committed files under
+    // `_layouts/g-<n>/` and leaves the log alone: an add recorded before
+    // an `!evolve=g-<n>` mark resolves under the first such generation. A
+    // crashed evolve's moves carry no mark, so a file found at neither
+    // place is looked up in every generation. A generation entry parses
+    // under ITS spec (one tiny read per generation per batch) and its dir
+    // values from the k=v segments only.
+    val evolves = range.headOption.toSeq
+      .flatMap(first => log.filter(_.v > first.v))
+      .flatMap(dl => dl.values("evolve").map(g => (dl.v, s"${StagedParquet.LayoutsDir}/$g")))
+    lazy val gens = StagedParquet.layoutRoots(prodDir).dropRight(1).map(_._2)
+    def resolve(v: Long, rel: String): String =
+      (evolves.find(_._1 > v).map(e => s"${e._2}/$rel").iterator ++
+        Iterator(rel) ++ gens.iterator.map(g => s"$g/$rel"))
+        .find(r => f.exists(new Path(root, r)))
+        .getOrElse(throw new IllegalStateException(
+          s"staged stream: $rel (version $v) no longer exists in " +
             s"$tableName — a rewrite (DELETE/UPDATE/compact) ran ahead of " +
-            "this stream's offset; rewrites must stay behind the tail")
+            "this stream's offset; rewrites must stay behind the tail"))
+    val genSpecs = scala.collection.mutable.Map.empty[String, Seq[PartField]]
+    range.flatMap { dl =>
+      dl.tailFiles.map { added =>
+        val rel = resolve(dl.v, added)
         val segs = rel.split('/').toSeq
         val (entrySpec, dirSegs) =
-          if (segs.length >= 2 && segs.head == StagedParquet.LayoutsDir)
-            (specOfGen(segs.take(2).mkString("/")), segs.drop(2).dropRight(1))
-          else (partSpec, segs.dropRight(1))
+          if (segs.length >= 2 && segs.head == StagedParquet.LayoutsDir) {
+            val genRel = segs.take(2).mkString("/")
+            (genSpecs.getOrElseUpdate(genRel, StagedParquet.specOf(new Path(root, genRel))),
+              segs.drop(2).dropRight(1))
+          } else (partSpec, segs.dropRight(1))
         val vals = dirSegs.map(_.split("=", 2)(1))
-        StagedInputPartition(vals, p.toString, tableSchema.json, entrySpec)
+        StagedInputPartition(vals, new Path(root, rel).toString, tableSchema.json, entrySpec)
       }
     }.toArray[InputPartition]
   }

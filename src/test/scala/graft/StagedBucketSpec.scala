@@ -27,7 +27,7 @@ class StagedBucketSpec extends AnyFunSuite {
     df.repartition(4).writeTo(t).partitionedBy(bucket(8, col("id"))).createOrReplace()
     val dir = StagedParquet.tableDir(spark, t)
     val dirs = new java.io.File(dir).listFiles.filter(_.isDirectory)
-      .map(_.getName).filterNot(_ == "_manifests").sorted
+      .map(_.getName).sorted
     assert(dirs.forall(_.startsWith("id_bucket=")), dirs.mkString(","))
     assert(dirs.length <= 8 && dirs.length >= 6, s"8-way fan-out, got ${dirs.length}")
     // the layout IS the hash: spot-check a directory holds exactly its ids

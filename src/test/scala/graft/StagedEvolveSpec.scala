@@ -19,7 +19,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *     old generation;
   *   - DELETE / UPDATE / compaction reach every generation with its own
   *     spec and tiering; the statement stays bounded-jobs;
-  *   - the streaming tail SURVIVES evolution (manifest translation): a
+  *   - the streaming tail SURVIVES evolution (adds recorded before an
+  *     `!evolve` mark resolve under its generation): a
   *     checkpointed stream resumes across an evolve with no replay and no
   *     loss;
   *   - time travel reconstructs pre-evolution versions at the old layout;
@@ -215,7 +216,7 @@ class StagedEvolveSpec extends AnyFunSuite {
     drain()
     assert(spark.read.parquet(out).count() == 100L)
     // evolve, then append under the new spec: the SAME checkpoint must
-    // deliver exactly the new rows (manifest ids kept, paths translated)
+    // deliver exactly the new rows (versions kept, paths resolved)
     StagedParquet.evolvePartitioning(spark, t,
       Seq(PartField("id", "bucket", 4))): Unit
     (100L until 140L).map(i => (i % 4, i)).toDF("k", "id").writeTo(t).append()
@@ -223,7 +224,7 @@ class StagedEvolveSpec extends AnyFunSuite {
     val ids = spark.read.parquet(out).select("id").as[Long].collect().sorted
     assert(ids.length == 140, s"resume across evolve must add only the 40 new rows, got ${ids.length}")
     assert(ids.toSeq == (0L until 140L).toSeq)
-    // a FRESH stream replays the whole table through translated manifests
+    // a FRESH stream replays the whole table, old adds resolved under g-0
     val ckpt2 = java.nio.file.Files.createTempDirectory("evo_ckpt2").toString
     val out2 = java.nio.file.Files.createTempDirectory("evo_out2").toString
     val q2 = spark.readStream.table(t)
@@ -260,7 +261,7 @@ class StagedEvolveSpec extends AnyFunSuite {
     assert(spark.table(t).filter($"prio" === "p2").count() == 250L)
     assert(spark.table(t).filter($"prio" === "p1").count() == 250L)
     // rerun (the documented recovery): the stragglers move into a FRESH
-    // generation, the root takes the new spec, and the manifest log heals
+    // generation and the root takes the new spec
     // (entries for files the crashed attempt moved resolve against g-0)
     StagedParquet.evolvePartitioning(spark, t,
       Seq(PartField("grp", "identity"))): Unit
@@ -271,7 +272,7 @@ class StagedEvolveSpec extends AnyFunSuite {
       (0L until 1300L).count(_ % 4 == 2).toLong)
     assert(spark.table(t).filter($"grp" === 1L).count() ==
       (0L until 1300L).count(_ % 3 == 1).toLong)
-    // a fresh stream replays the whole healed table (every manifest entry
+    // a fresh stream replays the whole table (every recorded add
     // resolves at its actual location)
     val ckpt = java.nio.file.Files.createTempDirectory("evoc_ckpt").toString
     val out = java.nio.file.Files.createTempDirectory("evoc_out").toString
@@ -304,20 +305,16 @@ class StagedEvolveSpec extends AnyFunSuite {
     (120L until 160L).map(i => (i % 4, i, i % 3)).toDF("k", "id", "grp")
       .writeTo(t).append()
     // the stream is deliberately LAGGING across the second evolve: rows
-    // 120..160 are unconsumed when evolution #2 runs, so their manifest
-    // entries — already `_layouts/g-1/...` — must NOT be re-prefixed
-    // (the pre-fix bug rewrote them to `_layouts/g-1/_layouts/g-0/...`,
+    // 120..160 are unconsumed when evolution #2 runs, so their recorded
+    // adds must resolve under g-1, and no log entry may carry a doubled
+    // prefix (a former bug rewrote them to `_layouts/g-1/_layouts/g-0/...`,
     // paths that never exist, and the tail failed its exists check)
     StagedParquet.evolvePartitioning(spark, t,
       Seq(PartField("grp", "identity"))): Unit
-    val manifests = new java.io.File(d, "_manifests")
-    val doubled = Option(manifests.listFiles).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".txt"))
-      .flatMap(f => new String(java.nio.file.Files.readAllBytes(f.toPath),
-        "UTF-8").split("\n"))
+    val doubled = StagedParquet.deltaLog(d).flatMap(_.adds)
       .filter(l => l.sliding("_layouts/".length).count(_ == "_layouts/") > 1 ||
         l.contains("_layouts/g-1/_layouts"))
-    assert(doubled.isEmpty, s"double-prefixed manifest entries: ${doubled.toSeq}")
+    assert(doubled.isEmpty, s"double-prefixed commit-log entries: ${doubled.toSeq}")
     (160L until 200L).map(i => (i % 4, i, i % 3)).toDF("k", "id", "grp")
       .writeTo(t).append()
     // the lagging tail resumes across BOTH evolutions: exactly the 80

@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - `files`: one row per committed data file with footer-exact counts;
   *   - `history`: one row per version, STRUCTURAL classification
   *     (append / delete / rewrite / replace) straight from the delta log;
-  *   - `manifests`: the commit-manifest log (id, file count, txn marker);
+  *   - `manifests`: the versions a new stream tail reads (version id, file
+  *     count, txn marker);
   *   - the inspection NEVER reads data pages: the flat row reader
   *     (StagedReaderFactory) is not invoked at all;
   *   - a metadata suffix on a missing table still errors.

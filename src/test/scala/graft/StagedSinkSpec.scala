@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,9 +26,7 @@ class StagedSinkSpec extends AnyFunSuite {
   private def listDirsIn(t: String): Seq[String] = {
     val d = new java.io.File(prodDir(t))
     Option(d.listFiles()).getOrElse(Array.empty)
-      .filter(_.isDirectory).map(_.getName)
-      // the commit-manifest log is table metadata, not a partition
-      .filterNot(_ == "_manifests").toSeq
+      .filter(_.isDirectory).map(_.getName).toSeq
   }
   private def filesIn(t: String, sub: String): Set[String] = {
     val d = new java.io.File(prodDir(t), sub)
@@ -505,6 +505,26 @@ class StagedSinkSpec extends AnyFunSuite {
     spark.range(0, 8).select((col("id") % 2).as("k"), col("id"))
       .writeTo(pt).partitionedBy(col("k")).createOrReplace()
     intercept[Exception] { spark.sql(s"ALTER TABLE $pt DROP COLUMN k") }
+  }
+
+  test("ALTER TABLE SET / UNSET TBLPROPERTIES persist, the last UNSET included") {
+    dropAll("tprops")
+    val tbl = s"graft_staged.$ns.tprops"
+    spark.sql(s"CREATE TABLE $tbl (id BIGINT)")
+    def reloaded(): Map[String, String] = {
+      // a fresh catalog instance reads the table's files, no cached state
+      val c = new graft.sources.v2.StagedCatalog()
+      c.initialize("graft_staged", new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Collections.singletonMap("root", root)))
+      c.loadTable(org.apache.spark.sql.connector.catalog.Identifier.of(Array(ns), "tprops"))
+        .properties().asScala.toMap
+    }
+    spark.sql(s"ALTER TABLE $tbl SET TBLPROPERTIES ('a' = '1', 'b' = '2')")
+    assert(reloaded() == Map("a" -> "1", "b" -> "2"))
+    spark.sql(s"ALTER TABLE $tbl UNSET TBLPROPERTIES ('a')")
+    assert(reloaded() == Map("b" -> "2"))
+    spark.sql(s"ALTER TABLE $tbl UNSET TBLPROPERTIES ('b')")
+    assert(reloaded().isEmpty, s"the last UNSET must clear it: ${reloaded()}")
   }
 
   test("engine write distribution: partitioned writes land one file per dir, opt-out preserves shape") {

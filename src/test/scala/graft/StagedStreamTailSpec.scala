@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `spark.readStream.table("graft_staged.ns.t")` through
   * [[graft.sources.v2.StagedMicroBatchStream]]. Contracts under test: an
   * AvailableNow pass drains exactly the committed files; the offset is the
-  * last commit-MANIFEST id (O(1) in the checkpoint regardless of table
-  * size), so a RESTART reads only the manifests appended since (no
+  * last consumed VERSION id (O(1) in the checkpoint regardless of table
+  * size), so a RESTART reads only the versions committed since (no
   * replay, no loss — driver memory holds no source state, and a trigger
   * never walks the table's file tree); identity partition values
   * reconstitute in streamed rows exactly as in batch reads; non-append
@@ -58,16 +58,18 @@ class StagedStreamTailSpec extends AnyFunSuite {
     drain()
     assert(spark.read.parquet(out).count() == 150L)
 
-    // the checkpointed source offset is a manifest ID — O(1) bytes, not a
-    // file list: at 3 commits the table holds many files but the offset
-    // log's source entry is just "2"
+    // the checkpointed source offset is a version ID — O(1) bytes, not a
+    // file list: the table holds many files but the offset log's source
+    // entry is just its current version
     val offsetsDir = new java.io.File(ckpt, "offsets")
     val lastBatch = offsetsDir.listFiles.filter(_.getName.forall(_.isDigit))
       .maxBy(_.getName.toInt)
     val offLines = scala.io.Source.fromFile(lastBatch)
     val srcOffset = try offLines.getLines().toSeq.last.trim finally offLines.close()
-    assert(srcOffset == "2",
-      s"offset must be the last manifest id (3 commits -> 2), got: $srcOffset")
+    val cur = graft.sources.v2.StagedParquet.currentVersion(
+      graft.sources.v2.StagedParquet.tableDir(spark, t))
+    assert(srcOffset == cur.toString,
+      s"offset must be the last version id ($cur), got: $srcOffset")
   }
 
   test("availableNow after an uncommitted batch reads every manifest in one run") {
@@ -115,7 +117,7 @@ class StagedStreamTailSpec extends AnyFunSuite {
     val full = drain()
     assert(full >= 6L, s"first drain reads the whole table, opened $full")
     // one small append -> the resumed tail opens exactly its files, not
-    // the table's (manifest range (0, 1], never a tree walk)
+    // the table's (version range (1, 2], never a tree walk)
     Seq((0L, 1000L)).toDF("k", "id").repartition(1).writeTo(t).append()
     val delta = drain()
     assert(delta == 1L,
@@ -136,8 +138,8 @@ class StagedStreamTailSpec extends AnyFunSuite {
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
-    drain() // offset now at manifest 1
-    // full replace: fresh generation at m-0 < checkpointed 1
+    drain() // offset now at version 2
+    // full replace: a REPLACE version past the checkpointed offset
     (0L until 10L).map(i => (i, i)).toDF("id", "v").writeTo(t).createOrReplace()
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](drain())
     assert(e.getMessage.contains("regressed") ||
@@ -151,7 +153,7 @@ class StagedStreamTailSpec extends AnyFunSuite {
     (0L until 50L).map(i => (i, i * 1.0)).toDF("id", "v")
       .writeTo(t).createOrReplace()
     // the tail has consumed NOTHING yet; a COW delete renames the file
-    // its first manifest references
+    // its first version references
     graft.sources.v2.StagedParquet.deleteWhere(spark, t,
       Seq(org.apache.spark.sql.sources.EqualTo("id", 7L)))
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -164,6 +166,47 @@ class StagedStreamTailSpec extends AnyFunSuite {
     assert(e.getMessage.contains("no longer exists") ||
       Option(e.getCause).exists(_.getMessage.contains("no longer exists")),
       e.getMessage)
+  }
+
+  test("a tail delivers appends and overwrites, never a rewrite's files") {
+    import spark.implicits._
+    val t = tbl("s6")
+    val ckpt = java.nio.file.Files.createTempDirectory("tail_ckpt6").toString
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, id BIGINT) PARTITIONED BY (k) " +
+      "TBLPROPERTIES ('delete.mode' = 'merge-on-read')")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+    def drain(): Unit = {
+      val q = spark.readStream.table(t).writeStream
+        .foreachBatch((df: org.apache.spark.sql.DataFrame, _: Long) =>
+          df.select($"k", $"id").as[(Long, Long)].collect().foreach(seen.add))
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+    }
+    drain()
+    val appended = (0L until 40L).map(i => (i % 4, i))
+    appended.toDF("k", "id").writeTo(t).append()
+    drain()
+    // a dynamic overwrite of k=0 plus a fresh k=4
+    val overwritten = (100L until 110L).map(i => (0L, i)) ++ (110L until 120L).map(i => (4L, i))
+    overwritten.toDF("k", "id").writeTo(t).overwritePartitions()
+    drain()
+    // a MERGE whose insert lands in a fresh partition
+    (500L until 505L).map(i => (9L, i)).toDF("k", "id").createOrReplaceTempView("s6_src")
+    spark.sql(
+      s"""MERGE INTO $t AS t USING s6_src AS s ON t.id = s.id
+          WHEN MATCHED THEN UPDATE SET id = s.id
+          WHEN NOT MATCHED THEN INSERT (k, id) VALUES (s.k, s.id)""")
+    drain()
+    spark.sql(s"DELETE FROM $t WHERE id = 5")
+    drain()
+    graft.sources.v2.StagedParquet.compact(spark, t): Unit
+    drain()
+    assert(spark.table(t).count() == 30L + 10L + 10L + 5L - 1L)
+    val got = seen.toArray.map(_.asInstanceOf[(Long, Long)]).sorted.toSeq
+    assert(got == (appended ++ overwritten).sorted,
+      s"the tail must deliver exactly the append and the overwrite, got $got")
   }
 
   test("streamed rows match the batch read exactly (schema and content)") {
