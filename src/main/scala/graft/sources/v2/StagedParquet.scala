@@ -2602,9 +2602,15 @@ object StagedParquet {
   private[v2] def fs(p: Path): FileSystem = p.getFileSystem(hadoopConf)
 
   private[v2] def hadoopConf: Configuration =
-    SparkSession.getActiveSession
+    sessionHadoopConf.getOrElse(new Configuration())
+
+  /** The session's Hadoop conf, `spark.hadoop.*` settings included: the
+    * thread's active session, else the default one; None inside a running
+    * task (Spark reports no session there) or with no session at all.
+    */
+  private[v2] def sessionHadoopConf: Option[Configuration] =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new Configuration())
 
   /** Atomic-swap promotion of a fully-written staging dir over prod,
     * through [[swapDirs]]'s checked renames (FileSystem.rename/delete

@@ -547,7 +547,15 @@ object StagedScan {
     * re-parsing, so each footer read gets its own conf.
     */
   private[graft] lazy val baseHadoopConf = new Configuration()
-  private[graft] def freshConf(): Configuration = new Configuration(baseHadoopConf)
+
+  /** A footer read's own conf: on the driver a copy of the session's
+    * Hadoop conf, so a `spark.hadoop.*` filesystem, endpoint or credential
+    * reaches the zone map, `blockRanges` (compaction, the DELETE verdict)
+    * and `StagedEqSets.keysOf`; in a task, where Spark reports no session,
+    * a copy of the parse-once defaults.
+    */
+  private[graft] def freshConf(): Configuration =
+    new Configuration(StagedParquet.sessionHadoopConf.getOrElse(baseHadoopConf))
 
   /** `f` over an open footer reader of the parquet file at `path`,
     * closed after.

@@ -2,6 +2,7 @@ package graft.tools
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -15,8 +16,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   * A leg's [[Record]] says where its wall time went: Spark jobs (the union
   * of their intervals, so AQE's concurrent stage jobs count once), the
   * driver gap around them (fixture checks, commits, stream start/stop,
-  * planning), completed stages and tasks, and shuffle bytes. Stages belong
-  * to the job whose `SparkListenerJobStart.stageIds` first listed them.
+  * planning), completed stages and tasks, shuffle and spill bytes, and the
+  * generated classes compiled meanwhile. Stages belong to the job whose
+  * `SparkListenerJobStart.stageIds` first listed them.
   *
   * Usage: runMain graft.tools.Leg <outDir> <query>[,<query>...|all]
   *   writes `<outDir>/<query>.json` (the best sample's record plus one row
@@ -31,22 +33,30 @@ object Leg {
   final case class Job(id: Int, startMs: Long, endMs: Long = -1L,
                        stages: Int = 0, tasks: Int = 0,
                        shuffleRead: Long = 0L, shuffleWrite: Long = 0L,
-                       desc: String = "") {
+                       spill: Long = 0L, desc: String = "") {
     def wallMs: Long = math.max(0L, endMs - startMs)
     def json: String = obj(Seq("id" -> id, "wall_sec" -> fmt(wallMs / 1e3),
       "stages" -> stages, "tasks" -> tasks, "shuffle_read_bytes" -> shuffleRead,
-      "shuffle_write_bytes" -> shuffleWrite, "desc" -> q(desc)))
+      "shuffle_write_bytes" -> shuffleWrite, "spill_bytes" -> spill, "desc" -> q(desc)))
   }
 
   /** One sample: wall seconds and the body's result (both -1 when it
-    * failed, with `error` naming the cause), and the jobs it ran.
+    * failed, with `error` naming the cause), the jobs it ran, and the
+    * generated classes Janino compiled while it ran (`codegenCompiles`, a
+    * cache miss of Spark's generated-code cache each). The compile count
+    * is read from this JVM's `CodegenMetrics`: it covers the driver and,
+    * in local mode, the tasks, but under `local-cluster` or a real cluster
+    * it misses the executors' compiles, and it also counts compiles of
+    * any other work this JVM ran meanwhile.
     */
   final case class Record(seconds: Double, rows: Long, jobs: Seq[Job],
-                          error: Option[String] = None) {
+                          codegenCompiles: Long = 0L, error: Option[String] = None) {
     def stages: Int = jobs.map(_.stages).sum
     def tasks: Int = jobs.map(_.tasks).sum
     def shuffleRead: Long = jobs.map(_.shuffleRead).sum
     def shuffleWrite: Long = jobs.map(_.shuffleWrite).sum
+    /** Bytes spilled, in memory and on disk, by the completed stages. */
+    def spill: Long = jobs.map(_.spill).sum
 
     /** Seconds during which at least one job ran. */
     def jobWallS: Double = {
@@ -62,7 +72,8 @@ object Leg {
     def fields: Seq[(String, Any)] = Seq("sec" -> fmt(seconds), "rows" -> rows,
       "jobs" -> jobs.size, "job_wall_sec" -> fmt(jobWallS),
       "driver_gap_sec" -> fmt(driverGapS), "stages" -> stages, "tasks" -> tasks,
-      "shuffle_read_bytes" -> shuffleRead, "shuffle_write_bytes" -> shuffleWrite) ++
+      "shuffle_read_bytes" -> shuffleRead, "shuffle_write_bytes" -> shuffleWrite,
+      "spill_bytes" -> spill, "codegen_compiles" -> codegenCompiles) ++
       error.map(e => "error" -> q(e))
     def json: String = obj(fields)
   }
@@ -89,7 +100,8 @@ object Leg {
       for (id <- owner.get(info.stageId); j <- jobs.get(id))
         jobs(id) = j.copy(stages = j.stages + 1, tasks = j.tasks + info.numTasks,
           shuffleRead = j.shuffleRead + m.fold(0L)(_.shuffleReadMetrics.totalBytesRead),
-          shuffleWrite = j.shuffleWrite + m.fold(0L)(_.shuffleWriteMetrics.bytesWritten))
+          shuffleWrite = j.shuffleWrite + m.fold(0L)(_.shuffleWriteMetrics.bytesWritten),
+          spill = j.spill + m.fold(0L)(t => t.memoryBytesSpilled + t.diskBytesSpilled))
     }
     def seen: Seq[Job] = synchronized(jobs.values.toSeq)
   }
@@ -133,15 +145,19 @@ object Leg {
     var secs = -1.0
     val rec =
       try {
+        val compiled = compiles
         val (rows, jobs) = observe(spark) {
           val t0 = System.nanoTime()
           try body finally secs = (System.nanoTime() - t0) / 1e9
         }
-        Record(secs, rows, jobs)
-      } catch { case e: Throwable => Record(-1.0, -1L, Nil, Some(cause(e))) }
+        Record(secs, rows, jobs, compiles - compiled)
+      } catch { case e: Throwable => Record(-1.0, -1L, Nil, error = Some(cause(e))) }
     clearState(spark)
     rec
   }
+
+  /** Generated classes this JVM has compiled so far. */
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** The exception's class and the first line of its message. */
   private def cause(e: Throwable): String =

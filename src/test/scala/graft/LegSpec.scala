@@ -14,7 +14,8 @@ object LegLatches {
 
 /** The profiled run loop (`graft.tools.Leg`): what one leg's record holds
   * for a fixed-shape body, a body that starts no job and a failing body,
-  * and that a stage is counted under the job that ran it.
+  * that a stage is counted under the job that ran it, and the record's
+  * generated-code compiles and spill.
   */
 class LegSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -69,5 +70,30 @@ class LegSpec extends AnyFunSuite {
       Await.result(a, 60.seconds)
     }
     assert(jobs.map(j => (j.stages, j.tasks)) == Seq((1, 1), (1, 2)), jobs)
+  }
+
+  // an integral literal is inlined into the generated source, so each new
+  // factor is a new expression shape and a cache miss
+  private def weighted(factor: Long): Long =
+    spark.range(100).selectExpr(s"sum(id * $factor) as s").head().getLong(0)
+
+  test("a body with a new expression shape records a compile") {
+    var factor = System.nanoTime()
+    val r = Leg.run(spark, 2) { factor += 1; weighted(factor) }
+    assert(r.error.isEmpty && r.codegenCompiles >= 1L, r.json)
+    assert(r.json.contains(s""""codegen_compiles":${r.codegenCompiles}"""), r.json)
+  }
+
+  test("the same body run again records no compile") {
+    val factor = System.nanoTime()
+    val r = Leg.run(spark, 2)(weighted(factor))
+    assert(r.error.isEmpty && r.codegenCompiles == 0L, r.json)
+  }
+
+  test("a small body records no spill") {
+    val r = Leg.run(spark, 1)(spark.range(1000).repartition(4).count())
+    assert(r.error.isEmpty && r.spill == 0L, r.json)
+    assert(r.json.contains(""""spill_bytes":0,"""), r.json)
+    assert(r.jobs.forall(_.json.contains(""""spill_bytes":0,""")), r.jobs)
   }
 }

@@ -1,7 +1,16 @@
 package graft
 
+import org.apache.hadoop.fs.RawLocalFileSystem
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+/** The local filesystem under its own scheme, `skipfs:`, known only to the
+  * configurations that name it as `fs.skipfs.impl`.
+  */
+class SkipSchemeFs extends RawLocalFileSystem {
+  override def getScheme: String = "skipfs"
+  override def getUri: java.net.URI = java.net.URI.create("skipfs:///")
+}
 
 /** Zone-map data skipping in the V2 read path
   * ([[graft.sources.v2.StagedScan.blockSurvives]]): comparison predicates
@@ -174,5 +183,22 @@ class StagedSkipSpec extends AnyFunSuite {
     val one = scanSize(spark.table(t).filter(col("k") === 2L))
     assert(one * 2 < full,
       s"one-dir estimate $one should be well under the full-table $full")
+  }
+
+  test("footer reads on the driver see the session's Hadoop settings") {
+    val dir = java.nio.file.Files.createTempDirectory("skip_scheme").resolve("t").toString
+    spark.range(100).coalesce(1).write.parquet(dir)
+    val file = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.skipfs.impl", classOf[SkipSchemeFs].getName)
+    conf.setBoolean("fs.skipfs.impl.disable.cache", true)
+    try {
+      val ranges = graft.sources.v2.StagedScan.blockRanges(
+        "skipfs://" + file.getAbsolutePath, file.length())
+      assert(ranges.map(_._3.getRowCount).sum == 100L, ranges)
+    } finally {
+      conf.unset("fs.skipfs.impl")
+      conf.unset("fs.skipfs.impl.disable.cache")
+    }
   }
 }

@@ -6,17 +6,17 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
 
-/** One shared local session for all suites (sbt forks one test JVM). */
+/** One shared local session for all suites (sbt forks one test JVM), built
+  * from graft's session defaults (`GraftSession.builder`) plus the
+  * test-only geometry, UI and warehouse settings.
+  */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = graft.core.GraftSession.builder("graft-test")
       .master("local[4]")
-      .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
